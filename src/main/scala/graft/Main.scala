@@ -71,9 +71,12 @@ object Main {
         else spark.read.format("binaryFile").load(in)
           .selectExpr("monotonically_increasing_id() AS doc_id",
             "CAST(content AS STRING) AS text")
-      val idx = IndexBuild.build(docs, "doc_id", "text", chunkLen.toInt, embedderOf(rest))
-      if (out.endsWith(".vdb")) Vdb.writeSingle(idx, "chunk", "embedding", out)
-      else idx.write.mode("overwrite").parquet(out)
+      // the .vdb file keeps document order, so it builds without the
+      // shuffle that spreads a parquet index over every core
+      if (out.endsWith(".vdb"))
+        Vdb.writeSingle(IndexBuild.build(docs, "doc_id", "text", chunkLen.toInt, embedderOf(rest)),
+          "chunk", "embedding", out)
+      else IndexBuild.run(docs, "doc_id", "text", chunkLen.toInt, embedderOf(rest), out)
       spark.stop()
 
     case "rag" :: index :: k :: query :: rest =>

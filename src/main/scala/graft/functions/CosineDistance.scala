@@ -39,6 +39,12 @@ case class CosineDistance(left: Expression, right: Expression,
     * -identical by construction: `bb` is an independent accumulator
     * summed in the same index order, and the final expression is
     * unchanged.
+    *
+    * Generated code reads both hoisted values through
+    * `ctx.addReferenceObj`, never as literals in the Java source. A
+    * literal would make each query vector its own class: every RAG turn
+    * would pay a fresh compile of its scan stage, and the scan would run
+    * in a loop the JIT has not compiled yet.
     */
   private lazy val constRight: Option[(Array[Double], Double)] =
     if (!right.foldable) None
@@ -103,10 +109,7 @@ case class CosineDistance(left: Expression, right: Expression,
       constRight match {
         case Some((arr, sqrtBb)) =>
           val arrRef = ctx.addReferenceObj("qvec", arr, "double[]")
-          // embed the precomputed norm by its exact bit pattern — a
-          // decimal rendering could perturb the last ulp
-          val sqrtBbLit =
-            s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToLongBits(sqrtBb)}L)"
+          val normRef = ctx.addReferenceObj("qnorm", Array(sqrtBb), "double[]")
           // the hoisted norm is only valid when dims match; the else
           // branch is the generic truncated loop (same result as the
           // non-foldable path for mismatched inputs)
@@ -118,7 +121,7 @@ case class CosineDistance(left: Expression, right: Expression,
              |    double $xi = $a.getDouble($i);
              |    $ab += $xi * $arrRef[$i]; $aa += $xi * $xi;
              |  }
-             |  ${ev.value} = ${if (asDistance) "1.0 - " else ""}$ab / (java.lang.Math.sqrt($aa) * $sqrtBbLit);
+             |  ${ev.value} = ${if (asDistance) "1.0 - " else ""}$ab / (java.lang.Math.sqrt($aa) * $normRef[0]);
              |} else {
              |  double $bb = 0.0;
              |  for (int $i = 0; $i < $n; $i++) {

@@ -154,8 +154,7 @@ object CorpusMerge {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket").parquet(dir)
-    val remaining: Set[Long] = Option(obs.get.getOrElse("buckets", null))
-      .map(_.asInstanceOf[scala.collection.Seq[Long]].toSet).getOrElse(Set.empty)
+    val remaining = survivingBuckets(obs.get)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     touched.filterNot(remaining).foreach { b =>
@@ -163,4 +162,16 @@ object CorpusMerge {
     }
     touched
   }
+
+  /** The surviving-bucket set from the write's observed metrics. Fails
+    * closed: without the observation every touched bucket would look
+    * fully tombstoned and be deleted, so a missing one is an error.
+    */
+  private[graft] def survivingBuckets(observed: Map[String, Any]): Set[Long] =
+    observed.get("buckets") match {
+      case Some(bs: scala.collection.Seq[_]) => bs.map(_.asInstanceOf[Long]).toSet
+      case other => throw new IllegalStateException(
+        s"merge wrote its buckets but observed no surviving-bucket set ($other); " +
+          "no stale bucket was deleted, re-run the merge")
+    }
 }

@@ -155,8 +155,18 @@ object IvfIndex {
     // (same quantized-L2 argmin, ties to the lower cluster id) and be
     // already materialized (this function consumes it twice)
     val asg = precomputedAssign.getOrElse(assign(emb, seeds).localCheckpoint())
-    emb.join(asg, "vec_id")
+    // an assignment that misses a vector (a supplied one can) would
+    // publish a short version: the coverage check rides the index write
+    // as an observe() metric (no extra job, as in `CorpusMerge.merge`),
+    // and a failed check stops before the manifest swap; a re-run
+    // overwrites the partial version directory
+    val obs = new org.apache.spark.sql.Observation()
+    emb.join(asg, Seq("vec_id"), "left")
+      .observe(obs, count_if(col("cluster").isNull).as("unassigned"))
       .write.mode("overwrite").partitionBy("cluster").parquet(s"$root/$version/index")
+    val missing = obs.get("unassigned").asInstanceOf[Long]
+    require(missing == 0,
+      s"the assignment has no cluster for $missing vec_id(s) of emb; version not published")
     seeds.write.mode("overwrite").parquet(s"$root/$version/centroids")
     // cast: seeds built from ids are long already, but the histogram
     // schema is PINNED to long regardless of the caller's cluster type

@@ -9,11 +9,15 @@ import graft.operators.{Prompt, TopK}
   * The LLM call itself stays outside the engine (`multirag.c:440-451` is
   * transport, not analytics).
   *
-  * Per turn this is one Spark job: the k winners are tiny and collected
-  * implicitly by the final single-row aggregation; the index itself is
-  * never collected and should be `.persist`ed by the caller across REPL
-  * turns (the scalable analog of the reference's all-in-RAM table,
-  * `multirag.c:359`).
+  * Per turn this is one Spark job of two stages: the scan stage keeps a
+  * per-partition top-k, and the second merges the k winners and folds
+  * them into the single prompt row (an index of one partition needs
+  * only the first). Embedding the query with the mock embedder runs no
+  * job. A warm turn compiles no code: the cosine kernel reads the query
+  * vector by reference, so every turn's scan reuses one generated class.
+  * The index itself is never collected and should be `.persist`ed by
+  * the caller across REPL turns (the scalable analog of the reference's
+  * all-in-RAM table, `multirag.c:359`).
   */
 object Rag {
 

@@ -113,4 +113,12 @@ class CorpusMergeSpec extends SparkSpec {
       CorpusMerge.merge(spark, dir, delta, "k", nBuckets = N))
     assert(e.getMessage.contains("multiple rows"))
   }
+
+  test("a missing surviving-bucket observation fails closed instead of deleting buckets") {
+    intercept[IllegalStateException](CorpusMerge.survivingBuckets(Map.empty))
+    intercept[IllegalStateException](CorpusMerge.survivingBuckets(Map("buckets" -> null)))
+    // an observed empty set is real: every touched bucket was tombstoned
+    assert(CorpusMerge.survivingBuckets(Map("buckets" -> Seq.empty[Long])) == Set.empty[Long])
+    assert(CorpusMerge.survivingBuckets(Map("buckets" -> Seq(2L, 5L))) == Set(2L, 5L))
+  }
 }

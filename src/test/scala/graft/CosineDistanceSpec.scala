@@ -12,18 +12,22 @@ class CosineDistanceSpec extends SparkSpec {
 
   test("codegen == HOF bitwise on all fixture embedding pairs vs vec 0") {
     val emb = Tables.embeddings(spark, sf0001)
-    val q = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val qlit = array(q.map(lit): _*)
-    val diff = emb.select(
-      cosineDistance(col("embedding"), qlit).as("fast"),
-      cosineDistanceHof(col("embedding"), qlit).as("hof"))
-      .filter(col("fast") =!= col("hof"))
-    assert(diff.count() == 0)
-    val diffSim = emb.select(
-      cosineSimilarity(col("embedding"), qlit).as("fast"),
-      cosineSimilarityHof(col("embedding"), qlit).as("hof"))
-      .filter(col("fast") =!= col("hof"))
-    assert(diffSim.count() == 0)
+    // the second query vector runs the class compiled for the first: the
+    // hoisted norm must come from its own reference, not the cached code
+    for (v <- Seq(0, 1)) {
+      val q = emb.filter(col("vec_id") === v).head().getSeq[Double](1)
+      val qlit = array(q.map(lit): _*)
+      val diff = emb.select(
+        cosineDistance(col("embedding"), qlit).as("fast"),
+        cosineDistanceHof(col("embedding"), qlit).as("hof"))
+        .filter(col("fast") =!= col("hof"))
+      assert(diff.count() == 0, s"query vec $v")
+      val diffSim = emb.select(
+        cosineSimilarity(col("embedding"), qlit).as("fast"),
+        cosineSimilarityHof(col("embedding"), qlit).as("hof"))
+        .filter(col("fast") =!= col("hof"))
+      assert(diffSim.count() == 0, s"query vec $v")
+    }
   }
 
   test("codegen path actually participates in WholeStageCodegen") {

@@ -39,6 +39,18 @@ class IvfIndexSpec extends SparkSpec {
     assert(probe.select("vec_id").as[Long].collect().sorted.toSeq == Seq(1L, 4L, 5L))
   }
 
+  test("publishVersion refuses a precomputed assignment that misses a vec_id") {
+    val root = java.nio.file.Files.createTempDirectory("ivfasg").toString
+    val partial = IvfIndex.assign(emb, seeds).filter(col("vec_id") =!= 4L).localCheckpoint()
+    val e = intercept[IllegalArgumentException](
+      IvfIndex.publishVersion(emb, seeds, root, "v1", Some(partial)))
+    assert(e.getMessage.contains("1 vec_id"))
+    assert(!new java.io.File(root, "MANIFEST").exists())
+    // a re-run with a complete one overwrites the partial version
+    IvfIndex.publishVersion(emb, seeds, root, "v1", Some(IvfIndex.assign(emb, seeds).localCheckpoint()))
+    assert(spark.read.parquet(s"$root/v1/index").count() == 6L)
+  }
+
   test("pruneVersions keeps current + previous; an in-flight read on the previous pointer survives") {
     val root = java.nio.file.Files.createTempDirectory("ivfprune").toString
     for (v <- Seq("v1", "v2", "v3")) {
