@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection utility: dumps the formatted physical plan of one,
   * several, or all registered queries.
   * `runMain graft.Explain <sfDir> [queryName ...]`.
@@ -10,14 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = Option(args.drop(1).toSet).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     // GRAFT_EXPLAIN_RUN=1: execute the dataset's own QueryExecution
     // first (collect — Dataset.collect drives df.queryExecution, unlike
     // count()/write which build a fresh one), so the printed plan is the

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipelines.{Completion, Embedder, HttpEmbedder, IndexBuild, MockEmbedder, Rag}
 import graft.sources.Vdb
 
@@ -22,19 +21,6 @@ import graft.sources.Vdb
   * egress); with them, the llama.cpp HTTP embedder.
   */
 object Main {
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def embedderOf(rest: List[String]): Embedder = rest match {
     case host :: port :: _ => new HttpEmbedder(host, port.toInt)
@@ -65,7 +51,7 @@ object Main {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "build-index" :: in :: out :: chunkLen :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       val docs =
         if (in.endsWith(".parquet")) spark.read.parquet(in).selectExpr("doc_id", "text")
         else spark.read.format("binaryFile").load(in)
@@ -80,7 +66,7 @@ object Main {
       spark.stop()
 
     case "rag" :: index :: k :: query :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       val idx =
         (if (index.endsWith(".vdb") || new java.io.File(index).isDirectory &&
           new java.io.File(index).list().exists(_.endsWith(".vdb")))
@@ -98,7 +84,7 @@ object Main {
       // the reference REPL (multirag.c:394-456): conversation threads
       // through turns; without an LLM server the assembled prompt is
       // echoed (and recorded as the "answer") so the loop is testable
-      val spark = session()
+      val spark = GraftSession()
       val idx = spark.read.parquet(index)
         .selectExpr("doc_id * 1000 + chunk_idx AS chunk_id", "chunk", "embedding")
         .persist()
@@ -166,7 +152,7 @@ object Main {
       }
 
     case "embed" :: text :: rest =>
-      val spark = session()
+      val spark = GraftSession()
       Rag.embedQuery(spark, embedderOf(rest), text)
         .foreach(x => println(f"$x%10.8f"))
       spark.stop()

@@ -69,15 +69,19 @@ object IvfIndex {
 
   /** Nearest-seed assignment for every vector: (vec_id, cluster).
     * Same partial-aggregated argmin as [[twoLevelAssign]] — the
-    * N·k fan-out collapses map-side; no window shuffle.
+    * N·k fan-out collapses map-side; no window shuffle. `by` names seed
+    * columns that tag several codebooks in one seed table: the argmin
+    * then runs per (vec_id, tag) and the tags ride along in the output,
+    * so one corpus pass assigns against every codebook.
     */
-  def assign(emb: DataFrame, seeds: DataFrame): DataFrame =
+  def assign(emb: DataFrame, seeds: DataFrame, by: Seq[String] = Nil): DataFrame = {
+    val keys = col("vec_id") +: by.map(col)
     emb.crossJoin(broadcast(seeds))
-      .select(col("vec_id"),
-        struct(QuantizedL2Expr.column(col("embedding"), col("cv"), 45).as("d2"),
-          col("cluster").as("cell")).as("dc"))
-      .groupBy("vec_id").agg(min("dc").as("m"))
-      .select(col("vec_id"), col("m.cell").as("cluster"))
+      .select(keys :+ struct(QuantizedL2Expr.column(col("embedding"), col("cv"), 45).as("d2"),
+        col("cluster").as("cell")).as("dc"): _*)
+      .groupBy(keys: _*).agg(min("dc").as("m"))
+      .select(keys :+ col("m.cell").as("cluster"): _*)
+  }
 
   /** Build the physical index: vectors + assignment, partitioned by
     * cluster. One broadcast assignment + one partitioned write.
@@ -223,10 +227,10 @@ object IvfIndex {
     * embedding, ...). SCALE: one broadcast-codebook argmin + one
     * append write — Θ(new rows), regardless of index size.
     *
-    * WHEN TO COMPACT (measured, `tools.HotAddProbe`, PLANS.md round
-    * 15): the trigger is DRIFT, not append fraction. I.i.d. appends
-    * are recall-neutral at any measured fraction (stale vs fresh
-    * codebook within ±5 recall points at 10/50/100% appends), but
+    * WHEN TO COMPACT (measured by the HotAddProbe of commit 91adee5,
+    * PLANS.md round 15): the trigger is DRIFT, not append fraction.
+    * I.i.d. appends are recall-neutral at any measured fraction (stale
+    * vs fresh codebook within ±5 recall points at 10/50/100% appends), but
     * DRIFTED appends cost 25–55 recall@10 points on drift-region
     * queries already at 10% — the stale codebook has no cells where
     * the new mode lives. The trigger is ENFORCED here, not just
@@ -284,9 +288,9 @@ object IvfIndex {
     * was appended. I.i.d. appends route like the corpus routed at build
     * time (TV ≈ sampling noise); a drifted ingest mode crowds into the
     * few cells nearest the new mode and TV rises immediately — the
-    * regime where `tools.HotAddProbe` measured 25–55 recall@10 points
-    * lost already at 10% appended fraction. Both histograms are
-    * Θ(nlist) rows (codebook-sized at any corpus size), so the compare
+    * regime where the HotAddProbe of commit 91adee5 measured 25–55
+    * recall@10 points lost already at 10% appended fraction. Both
+    * histograms are Θ(nlist) rows (codebook-sized at any corpus size), so the compare
     * is a driver-side fold over two artifact reads — no job touches the
     * index data.
     */

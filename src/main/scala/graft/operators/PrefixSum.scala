@@ -303,7 +303,7 @@ object PrefixSum {
     * — the distributed replacement for (a) an UNPARTITIONED
     * `row_number()` window (serial corpus-scale sort through one task)
     * and (b) the hand-rolled `df.rdd.zipWithIndex()` idiom, which pays
-    * a per-row Row encode/decode the PackProbe receipts measured at
+    * a per-row Row encode/decode the PackProbe of commit aafd41a measured at
     * ~1.6× (5.19 vs 3.18 s at the 5M-doc replica — the exact overhead
     * [[byShardOrdered]] avoids via `GraftShim.internalRdd`).
     *

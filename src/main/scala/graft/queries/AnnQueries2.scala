@@ -284,7 +284,6 @@ object AnnQueries2 {
        |SELECT 'v2', qid, rank, nid, dist FROM rkd_v2 WHERE rank <= 5""".stripMargin) {
     (spark, dir) =>
       import graft.operators.IvfIndex
-      import graft.functions.QuantizedL2Expr
       val base = s"/tmp/graft_artifacts/${spark.sparkContext.applicationId}/" +
         dir.replaceAll("[^A-Za-z0-9.]", "_") + "/rotate"
       // ROUND 17 (guide §2.4, duplicate-subtree elimination): the
@@ -301,21 +300,14 @@ object AnnQueries2 {
         .select(col("vec_id").as("qid"),
           col("embedding").cast("array<double>").as("qv"))
       // ONE argmin fan-out for BOTH versions (round 17): the two
-      // codebooks differ only in seed set, so one crossJoin over the 16
-      // version-tagged seeds + a (vec_id, ver)-grouped argmin computes
-      // both assignments in a single corpus pass — identical values to
-      // the per-version assign (same quantized-L2 struct-min, ties to
-      // the lower cluster id, evaluated per version tag).
+      // codebooks differ only in seed set, so one assign over the 16
+      // version-tagged seeds, grouped by (vec_id, ver), computes both
+      // assignments in a single corpus pass — identical values to the
+      // per-version assign (same kernel, evaluated per version tag).
       val taggedSeeds = emb.filter(col("vec_id") < 16)
         .select(when(col("vec_id") < 8, lit("v1")).otherwise(lit("v2")).as("ver"),
           col("vec_id").as("cluster"), col("embedding").as("cv"))
-      val asgBoth = emb.crossJoin(broadcast(taggedSeeds))
-        .select(col("vec_id"), col("ver"),
-          struct(QuantizedL2Expr.column(col("embedding"), col("cv"), 45).as("d2"),
-            col("cluster").as("cell")).as("dc"))
-        .groupBy("vec_id", "ver").agg(min("dc").as("m"))
-        .select(col("vec_id"), col("ver"), col("m.cell").as("cluster"))
-        .localCheckpoint()
+      val asgBoth = IvfIndex.assign(emb, taggedSeeds, by = Seq("ver")).localCheckpoint()
       def asgFor(ver: String) = asgBoth.filter(col("ver") === ver).drop("ver")
       // serve through the POINTER, never a hard-coded version path —
       // the read-back is the thing under test

@@ -49,8 +49,9 @@ object CurationQueries13 {
     * so the join adds no posting-mass exchange of its own (only the
     * ~20%-mass prefix side shuffles for the join).
     *
-    * MEASURED VARIANT SELECTION (tools.OverlapProbe, warm min-of-2 at
-    * both 100x replicas, receipts in PLANS.md round 13): a rank-window
+    * MEASURED VARIANT SELECTION (the OverlapProbe of commit 1465801,
+    * warm min-of-2 at both 100x replicas, receipts in PLANS.md round
+    * 13): a rank-window
     * prefix (row_number over (doc_id ORDER BY df,h), no arrays) was
     * tried and REJECTED by its own measurement — the doc-keyed double
     * window costs a full sort of the posting frame where the hash-based

@@ -95,11 +95,8 @@ object CurationQueries33 {
     * linear-model ceiling; the gap to 1.0 is the model class, not
     * the optimizer.
     */
-  /** One batch-gradient step: w → w′. Exposed graft-private so the
-    * third-decade probe (tools.QualityProbe) can time exactly the pass
-    * the training loop runs, against persisted vs recomputed frames.
-    */
-  private[graft] def gradientStep(feats: DataFrame, w: Array[Long]): Array[Long] = {
+  /** One batch-gradient step: w → w′. */
+  private def gradientStep(feats: DataFrame, w: Array[Long]): Array[Long] = {
     val wc = typedLit(graft.GraftLimits.requireBoundedWeights(w.toSeq,
       "CurationQueries33"))
     val scored = feats
@@ -155,8 +152,8 @@ object CurationQueries33 {
     *
     * PERSIST DECISION, third-decade receipt (round 11, verdict item 3):
     * the 66-column frame persist is shape-identical to the BPE cache
-    * whale, so it was re-probed at 1000x (tools.QualityProbe on the
-    * 15 GB replica, warm min-of-2): fill 9.4 s / read 1.83 s /
+    * whale, so it was re-probed at 1000x (the QualityProbe of commit
+    * 58cde93, on the 15 GB replica, warm min-of-2): fill 9.4 s / read 1.83 s /
     * recompute 10.1 s per pass at 5M docs — persist path
     * fill + 16·read = 38.6 s vs 16·recompute = 161.6 s, decades all
     * sublinear (fill 0.54, read 0.30, recompute 0.59). Unlike the BPE

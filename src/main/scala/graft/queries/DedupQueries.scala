@@ -911,8 +911,8 @@ object DedupQueries {
     * buckets + row_number partitioned by bucket. Two adversaries break
     * it (round-13 measurements, PLANS.md): the histogram is keyed by
     * the 3-token document prefix, so a vocab-growing corpus grows the
-    * broadcast linearly (the CapProbe caveat: the synthetic corpus'
-    * bounded template vocab read 1.00x there — the perturbed replica
+    * broadcast linearly (the caveat of commit 20df2cc's CapProbe: the
+    * synthetic corpus' bounded template vocab read 1.00x there — the perturbed replica
     * reads exactly 10.00x across a 10x step, 473 → 4,730 distinct
     * prefixes), and a HOT prefix (the mega-dup boilerplate page)
     * funnels its whole cluster through one row_number task (the

@@ -913,10 +913,6 @@ object TextStatsQueries {
           l2 != l1 && l2 != r1 && r2 != l1 && r2 != r1 && s.getLong(3) > bound
         }
         merges += ((iter.toLong, l1, r1, cnt1))
-        if (sys.env.contains("GRAFT_BPE_DEBUG"))
-          System.err.println(s"[bpe] t=${System.nanoTime() / 1000000}ms iter=$iter fuse=$fuse top=($l1,$r1,$cnt1) " +
-            s"second=${second.map(s => (s.getString(1), s.getString(2), s.getLong(3)))} " +
-            s"bound=$bound mcnt=$mcnt")
         // REBUILD the frame from the scan: all previously-observed
         // merges as one nested-kernel projection (collapsible, computed
         // once per row), then this round's merge(s) with fresh observe

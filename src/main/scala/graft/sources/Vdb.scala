@@ -77,16 +77,28 @@ object Vdb {
   }
 
   /** Deserialize one .vdb blob → rows (text, vector). Magic mismatch is
-    * warn-only, matching `vector-db.c:102-105`.
+    * warn-only, matching `vector-db.c:102-105`. Every count the blob
+    * declares (`n`, `dim`, each text length) must be non-negative and
+    * its bytes must fit in what remains; otherwise the blob is corrupt
+    * or truncated and an `IllegalArgumentException` names the field.
     */
   def deserialize(bytes: Array[Byte]): Seq[(String, Array[Double])] = {
+    require(bytes.length >= 21,
+      s"corrupt .vdb: ${bytes.length} bytes is shorter than the 21-byte header")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val magic = new Array[Byte](4); bb.get(magic)
     if (!magic.sameElements(Magic))
       System.err.println("[vdb] warning: bad magic, attempting read anyway")
     val tpe = bb.get()
-    val n = bb.getLong.toInt
-    val dim = bb.getLong.toInt
+    val rawN = bb.getLong
+    val rawDim = bb.getLong
+    require(rawDim >= 0 && rawDim <= Int.MaxValue, s"corrupt .vdb: dim = $rawDim")
+    val dim = rawDim.toInt
+    // each entry holds its vector plus at least an 8-byte text length
+    val entryBytes = (if (tpe == TypeDouble) 8L * dim else dim / 8 + 1L) + 8L
+    require(rawN >= 0 && rawN <= bb.remaining / entryBytes,
+      s"corrupt .vdb: n = $rawN entries of dim $dim need more than the ${bb.remaining} bytes left")
+    val n = rawN.toInt
     val vecs = Array.fill(n) {
       if (tpe == TypeDouble) Array.fill(dim)(bb.getDouble)
       else { // binary: dim/8+1 bytes, unpack to 0/1 doubles
@@ -95,9 +107,11 @@ object Vdb {
         Array.tabulate(dim)(i => if ((packed(i / 8) & (1 << (i % 8))) != 0) 1.0 else 0.0)
       }
     }
-    val texts = Array.fill(n) {
-      val len = bb.getLong.toInt
-      val t = new Array[Byte](len); bb.get(t)
+    val texts = Array.tabulate(n) { i =>
+      val len = bb.getLong
+      require(len >= 0 && len <= bb.remaining,
+        s"corrupt .vdb: text length of entry $i = $len, ${bb.remaining} bytes left")
+      val t = new Array[Byte](len.toInt); bb.get(t)
       new String(t, "UTF-8")
     }
     texts.zip(vecs).toSeq

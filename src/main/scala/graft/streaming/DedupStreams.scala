@@ -17,9 +17,9 @@ import graft.functions.HashExpressions.shingleHashesFast
   * That leaves the band-bucket state as the query's ONLY stateful
   * operator, so the whole pipeline runs in plain append mode.
   *
-  * State per occupied bucket = one long: the first doc to claim an LSH
-  * band bucket anchors it; every later doc landing in the bucket emits
-  * a candidate pair (doc, anchor). This is the unbounded-stream analog
+  * State per occupied bucket = its anchor id and last-arrival time: the
+  * first doc to claim an LSH band bucket anchors it; every later doc
+  * landing in the bucket emits a candidate pair (doc, anchor). This is the unbounded-stream analog
   * of the batch banded equi-join — candidates only within buckets,
   * never all-pairs. Both ledgers here are CONTENT-IDENTITY class under
   * the repo state-retention policy ([[StateTtl]]): unbounded on an
@@ -57,10 +57,13 @@ object DedupStreams {
     * STATE BOUND: the anchor ledger is Θ(occupied band buckets) — the
     * LARGEST content-identity ledger in the engine (four band keys per
     * distinct document), unbounded on a 100-TB crawl with `idleTtl =
-    * None`. `idleTtl = Some("30 minutes")` switches to
+    * None`. State per bucket is (anchor, last-arrival time).
+    * `idleTtl = Some("30 minutes")` switches to
     * `ProcessingTimeTimeout`: a bucket no arrival has touched within
-    * the TTL drops its anchor at the next micro-batch. The CONTRACT
-    * CHANGE ([[StateTtl]] class 1, identical shape to
+    * the TTL drops its anchor at the next micro-batch, and an arrival
+    * that finds its bucket idle past the TTL treats it as expired even
+    * when no timer batch ran (after a restart, [[StateTtl]]). The
+    * CONTRACT CHANGE ([[StateTtl]] class 1, identical shape to
     * [[exactDedupDocs]]): after a bucket expires, the next document
     * landing in it becomes the NEW anchor and emits nothing — so a
     * near-dup pair is detected only when the two documents hit a
@@ -78,9 +81,9 @@ object DedupStreams {
     import docs.sparkSession.implicits._
     bandKeys(docs).as[BandHit]
       .groupByKey(h => (h.band, h.x, h.y))
-      .flatMapGroupsWithState[Long, DupCandidate](
+      .flatMapGroupsWithState[(Long, Long), DupCandidate](
         OutputMode.Append, StateTtl.conf(idleTtl)) {
-        (key: (Int, Long, Long), hits: Iterator[BandHit], state: GroupState[Long]) =>
+        (key: (Int, Long, Long), hits: Iterator[BandHit], state: GroupState[(Long, Long)]) =>
           if (state.hasTimedOut) {
             // bucket idle past the TTL: drop the anchor. No emit — the
             // bucket's NEXT occupant re-anchors it below.
@@ -88,8 +91,12 @@ object DedupStreams {
             Iterator.empty
           } else {
             val ids = hits.map(_.doc_id).toSeq.distinct.sorted
-            val anchor = state.getOption.getOrElse { val a = ids.head; state.update(a); a }
-            idleTtl.foreach(state.setTimeoutDuration) // any arrival refreshes the clock
+            val now = state.getCurrentProcessingTimeMs()
+            val anchor = state.getOption
+              .filterNot { case (_, seen) => StateTtl.lapsed(seen, now, idleTtl) }
+              .fold(ids.head)(_._1)
+            state.update((anchor, now)) // any arrival refreshes the clock
+            idleTtl.foreach(state.setTimeoutDuration)
             ids.filter(_ != anchor).map(d => DupCandidate(d, anchor, key._1)).iterator
           }
       }
@@ -111,7 +118,8 @@ object DedupStreams {
     *
     * Keyed on the batch [[graft.operators.Dedup.contentKey]] fields
     * (xxhash64 + md5 + length — never the raw text), computed map-side;
-    * state per distinct content key is one boolean.
+    * state per distinct content key is its last-arrival processing
+    * time.
     *
     * STATE BOUND: with `idleTtl = None` the standing state is
     * Θ(distinct texts) — content-identity class under the repo
@@ -121,7 +129,9 @@ object DedupStreams {
     * operator to `ProcessingTimeTimeout`: a content key whose last
     * arrival (first copy OR later duplicate — every arrival refreshes
     * the clock) is older than the TTL is DROPPED from state at the
-    * next micro-batch. The CONTRACT CHANGE is explicit, not
+    * next micro-batch, and a copy that finds its key idle past the TTL
+    * is re-admitted even when no timer batch ran (after a restart,
+    * [[StateTtl]]). The CONTRACT CHANGE is explicit, not
     * hand-waved: once a key expires, the next copy of that text is
     * re-admitted and re-emitted — the output is then "distinct within
     * any TTL-wide window", not globally distinct, and equality with
@@ -138,23 +148,25 @@ object DedupStreams {
         length(col("text")).as("len"))
       .as[CkDoc]
       .groupByKey(d => (d.h64, d.h128, d.len))
-      .flatMapGroupsWithState[Boolean, DocRow](
+      .flatMapGroupsWithState[Long, DocRow](
         OutputMode.Append, StateTtl.conf(idleTtl)) {
-        (_: (Long, String, Int), rows: Iterator[CkDoc], state: GroupState[Boolean]) =>
+        (_: (Long, String, Int), rows: Iterator[CkDoc], state: GroupState[Long]) =>
           if (state.hasTimedOut) {
             // idle past the TTL: drop the ledger entry. No emit — the
             // NEXT copy of this text re-enters the branch below and is
             // re-admitted (the documented TTL contract).
             state.remove()
             Iterator.empty
-          } else if (state.exists) {
-            idleTtl.foreach(state.setTimeoutDuration) // arrival refreshes the clock
-            Iterator.empty
           } else {
-            state.update(true)
+            val now = state.getCurrentProcessingTimeMs()
+            val admit = state.getOption.forall(StateTtl.lapsed(_, now, idleTtl))
+            state.update(now) // every arrival refreshes the clock
             idleTtl.foreach(state.setTimeoutDuration)
-            val first = rows.minBy(_.doc_id)
-            Iterator.single(DocRow(first.lang, first.doc_id, first.text))
+            if (!admit) Iterator.empty
+            else {
+              val first = rows.minBy(_.doc_id)
+              Iterator.single(DocRow(first.lang, first.doc_id, first.text))
+            }
           }
       }
   }

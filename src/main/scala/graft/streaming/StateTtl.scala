@@ -1,6 +1,9 @@
 package graft.streaming
 
+import java.util.concurrent.TimeUnit
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.unsafe.types.UTF8String
 
 /** REPO-WIDE STATE-RETENTION POLICY for every stateful streaming
   * ledger (the one scaladoc place the round-15 verdict asked for —
@@ -34,8 +37,18 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
   * condition-polling harness (StreamingSpec "exact-dedup TTL"):
   * `processAllAvailable`/`Trigger.AvailableNow` NEVER settle under
   * `ProcessingTimeTimeout` because the engine keeps scheduling empty
-  * batches to serve future timeouts — those empty batches ARE the
-  * eviction mechanism.
+  * batches to serve future timeouts — on a live stream those empty
+  * batches are the eviction mechanism.
+  *
+  * RESTART CONTRACT: a restarted query runs no micro-batch until input
+  * arrives, so timers that lapsed while the stream was down do not
+  * fire on their own. Each class-1 ledger with a TTL leg therefore
+  * holds its key's last-arrival processing time, and an arrival that finds it older
+  * than the TTL ([[lapsed]]) treats the key as expired: it re-admits
+  * (or re-anchors) and refreshes the time. Expiry is decided by
+  * arrival, never by whether an empty batch happened to run; the
+  * other lapsed keys leave the state store in the first batch that
+  * runs after the restart.
   *
   * '''2. Domain-bounded ledgers — NoTimeout is correct, not a
   * compromise.''' State size is bounded by a config- or
@@ -71,4 +84,16 @@ object StateTtl {
   def conf(idleTtl: Option[String]): GroupStateTimeout =
     if (idleTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
     else GroupStateTimeout.NoTimeout
+
+  /** Whether a key last seen at `seenMs` has been idle past `idleTtl` at
+    * processing time `nowMs` — the timer's own rule (a timeout fires
+    * once `seen + ttl < now`), checked by the arrival itself. Never
+    * true without a TTL.
+    */
+  def lapsed(seenMs: Long, nowMs: Long, idleTtl: Option[String]): Boolean =
+    idleTtl.exists { ttl =>
+      val ms = IntervalUtils.getDuration(
+        IntervalUtils.stringToInterval(UTF8String.fromString(ttl)), TimeUnit.MILLISECONDS)
+      seenMs + ms < nowMs
+    }
 }

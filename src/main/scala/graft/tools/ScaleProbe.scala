@@ -192,17 +192,11 @@ object ScaleProbe {
         (if (zipfVocab) "_zf" else if (perturbText) "_pt" else "") +
         (if (skewPermille > 0) s"_sk$skewPermille" else "") +
         (if (dupPermille > 0) s"_dup$dupPermille" else ""))
-    // partitions sized like a cluster would size them (∝ data), not like
-    // the 1x bench: a 100x replica through 16 shuffle partitions measures
-    // single-box spill, not the plan (GRAFT_PROBE_PARTITIONS to override)
-    val cpus = sys.env.getOrElse("GRAFT_PROBE_CPUS", "16")
-    val parts = sys.env.getOrElse("GRAFT_PROBE_PARTITIONS", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // shuffle partitions default to cores; GRAFT_PROBE_PARTITIONS sizes
+    // them like a cluster would (∝ data): a 100x replica through 16
+    // shuffle partitions measures single-box spill, not the plan
+    val spark = graft.GraftSession(
+      shufflePartitions = sys.env.get("GRAFT_PROBE_PARTITIONS").map(_.toInt))
 
     buildReplica(spark, src, dst, factor, perturbText, idStep, zipfVocab,
       skewPermille, dupPermille)

@@ -22,7 +22,7 @@ class CliSpec extends SparkSpec {
   /** Run `graft.Main args...` with `input` on stdin; (exit, stdout). */
   private def runMain(input: String, args: String*): (Int, String) = {
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx4g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+      "-Xmx4g",
       "-cp", sys.props("java.class.path"), "graft.Main") ++ args
     val out = new StringBuilder
     val io = new ProcessIO(

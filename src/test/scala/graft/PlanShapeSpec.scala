@@ -325,8 +325,9 @@ class PlanShapeSpec extends SparkSpec {
     // table (the isnotnull-constraint canonicalization mismatch, see
     // containmentEdges scaladoc); >3 shuffles means a posting-mass
     // exchange crept back. (The collect_list array prefix build is the
-    // MEASURED keeper over a rank-window form — OverlapProbe receipts
-    // in PLANS.md round 13 — so no array assertion here.)
+    // MEASURED keeper over a rank-window form — receipts of commit
+    // 1465801's OverlapProbe in PLANS.md round 13 — so no array
+    // assertion here.)
     for ((name, q) <- Seq(
       "q_overlap_join" -> graft.queries.CurationQueries13.overlapJoin)) {
       val plan = staticPlan(q.fn(spark, sf0001))

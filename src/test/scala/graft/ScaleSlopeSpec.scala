@@ -201,7 +201,8 @@ class ScaleSlopeSpec extends SparkSpec {
     // pinned: the replica copies customer names verbatim, so every
     // copy-pair is a TRUE dist-0 match and the output itself grows
     // quadratically — an output-bound measurement, not a mechanism one;
-    // the LinkageProbe block histogram is its scale receipt instead.)
+    // the block histogram of commit a7bc420's LinkageProbe is its scale
+    // receipt instead.)
     "q_skyline_select" -> 1.5,
     "q_scd2_history" -> 1.5)
 

@@ -3,19 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one per JVM). */
+/** Shared local session for all suites (one per JVM), on 4 cores
+  * whatever `SPARK_GRAFT_CPUS` says, so plan-shape assertions see the
+  * same partition counts on every box. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cores = 4)
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -1439,8 +1439,9 @@ class StreamingSpec extends SparkSpec {
     // stream; this proves the CHECKPOINT contract — (a) ledger state
     // recovers across a restart (an in-TTL duplicate arriving after
     // the restart is still dropped), (b) timeout TIMERS recover too:
-    // keys whose TTL lapsed while the stream was DOWN are dropped by
-    // the first post-restart batches, and a later copy re-admits.
+    // a restarted query runs no batch until input arrives, so keys whose
+    // TTL lapsed while the stream was DOWN are dropped by the first
+    // post-restart batch, and the copy that triggers it re-admits.
     import graft.streaming.DedupStreams
     import org.apache.spark.sql.streaming.Trigger
     val base = Files.createTempDirectory("dedup-ttl-restart").toString
@@ -1487,12 +1488,13 @@ class StreamingSpec extends SparkSpec {
     Thread.sleep(17000)
     val q3 = start()
     try {
-      // (b) timers recovered: the first post-restart batches expire the
-      // ledger rows that timed out during downtime
+      put(2, ("en", 6L, "beta text")) // copy of a downtime-expired key
+      // (b) timers recovered: the first post-restart batch expires the
+      // ledger rows that timed out during downtime; only the re-admitted
+      // key stands
       waitUntil("downtime-expired keys leave the state store")(
         q3.recentProgress.lastOption.flatMap(_.stateOperators.headOption)
-          .exists(_.numRowsTotal == 0L))
-      put(2, ("en", 6L, "beta text")) // copy of a downtime-expired key
+          .exists(_.numRowsTotal == 1L))
       waitUntil("downtime-expired key re-admits its copy")(
         emitted() == Seq(1L, 2L, 6L))
     } finally q3.stop()

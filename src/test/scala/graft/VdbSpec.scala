@@ -65,6 +65,32 @@ class VdbSpec extends SparkSpec {
     assert(Vdb.deserialize(bytes).head._1 == "t")
   }
 
+  test("a truncated blob is refused with the field that overruns") {
+    val bytes = Vdb.serialize(Seq(("first", Array(1.0, 2.0)), ("second", Array(3.0, 4.0))).iterator)
+    // cut inside the second text: its declared length overruns the blob
+    val cut = intercept[IllegalArgumentException](
+      Vdb.deserialize(bytes.take(bytes.length - 3)))
+    assert(cut.getMessage.contains("text length of entry 1"))
+    // cut inside the vectors: n no longer fits
+    val short = intercept[IllegalArgumentException](Vdb.deserialize(bytes.take(30)))
+    assert(short.getMessage.contains("n = 2"))
+    val header = intercept[IllegalArgumentException](Vdb.deserialize(bytes.take(10)))
+    assert(header.getMessage.contains("header"))
+  }
+
+  test("an oversized or negative n is refused before any allocation") {
+    val bytes = Vdb.serialize(Seq(("t", Array(1.0))).iterator)
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    for (n <- Seq(Int.MaxValue.toLong, Long.MaxValue, -1L)) {
+      bb.putLong(5, n)
+      val e = intercept[IllegalArgumentException](Vdb.deserialize(bytes))
+      assert(e.getMessage.contains(s"n = $n"))
+    }
+    bb.putLong(5, 1L); bb.putLong(13, -4L)
+    assert(intercept[IllegalArgumentException](Vdb.deserialize(bytes))
+      .getMessage.contains("dim = -4"))
+  }
+
   test("writeDir/readDir round-trip through Spark") {
     val dir = Files.createTempDirectory("vdbspec").toString
     val df = Seq((0L, "alpha", Seq(0.5, 1.5)), (1L, "beta", Seq(-0.5, 2.0)))
