@@ -16,7 +16,10 @@ import graft.operators.ChunkGenerator
   */
 object GraftFunctions {
 
-  private val fns: Seq[(String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+  /** The one function table: `register` and [[GraftExtensions]] both
+    * install every entry, each builder checking its own arity.
+    */
+  private[graft] val fns: Seq[(String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
       org.apache.spark.sql.catalyst.expressions.Expression)] = Seq(
     "graft_cosine_distance" -> (es => { arity(es, 2, 2, "graft_cosine_distance")
       CosineDistance(es(0), es(1)) }),
@@ -127,19 +130,17 @@ object GraftFunctions {
 }
 
 /** Session-extensions entry point (`spark.sql.extensions=graft.GraftExtensions`):
-  * injects the same functions at session build time, the deployment-wide
-  * path that needs no per-session register() call.
+  * injects the whole [[GraftFunctions]] table at session build time, the
+  * deployment-wide path that needs no per-session register() call.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    ext.injectFunction((FunctionIdentifier("graft_cosine_distance"),
-      new ExpressionInfo(classOf[CosineDistance].getName, "graft_cosine_distance"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => CosineDistance(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_polyhash"),
-      new ExpressionInfo(classOf[PolyHashExpr].getName, "graft_polyhash"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => PolyHashExpr(es(0))))
+    GraftFunctions.fns.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
     // optimizer rule: put the foldable cosine argument on the hoisted
     // side regardless of how the user wrote the call
     ext.injectOptimizerRule(_ => graft.plans.CosineArgSwapRule)

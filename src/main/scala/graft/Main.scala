@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.pipelines.{Completion, Embedder, HttpEmbedder, IndexBuild, MockEmbedder, Rag}
 import graft.sources.Vdb
 
@@ -18,13 +19,39 @@ import graft.sources.Vdb
   * }}}
   *
   * Without host/port the deterministic mock embedder runs (CI has no
-  * egress); with them, the llama.cpp HTTP embedder.
+  * egress); with them, the llama.cpp HTTP embedder. `rag` and `rag-repl`
+  * serve either index `build-index` writes: a parquet directory, or a
+  * `.vdb` file or directory of `.vdb` parts.
   */
 object Main {
 
   private def embedderOf(rest: List[String]): Embedder = rest match {
     case host :: port :: _ => new HttpEmbedder(host, port.toInt)
     case _ => MockEmbedder
+  }
+
+  /** The index at `path` as cached (chunk_id, chunk, embedding) rows: a
+    * `.vdb` file or directory of parts through the `.vdb` DataSource V2
+    * source, anything else as `build-index`'s parquet.
+    */
+  private def openIndex(spark: SparkSession, path: String): DataFrame = {
+    val f = new java.io.File(path)
+    val vdb = path.endsWith(".vdb") || f.isDirectory && f.list().exists(_.endsWith(".vdb"))
+    (if (vdb) spark.read.format("graft.sources.VdbDataSource").load(path)
+      .selectExpr("monotonically_increasing_id() AS chunk_id", "text AS chunk", "embedding")
+    else spark.read.parquet(path)
+      .selectExpr("doc_id * 1000 + chunk_idx AS chunk_id", "chunk", "embedding"))
+      .persist()
+  }
+
+  /** The REPLs' answer to `prompt`: streamed token by token to stdout
+    * from the server in `rest` (`host :: port :: [nPredict]`, like the
+    * reference argv), or, without a server, the prompt itself echoed.
+    */
+  private def complete(rest: List[String], prompt: String): String = rest match {
+    case host :: port :: n :: Nil => streamedCompletion(host, port.toInt, prompt, n.toInt)
+    case host :: port :: Nil => streamedCompletion(host, port.toInt, prompt, -1)
+    case _ => println(prompt); prompt
   }
 
   /** Streamed `/completion` call: tee each token to stdout as it arrives
@@ -67,14 +94,7 @@ object Main {
 
     case "rag" :: index :: k :: query :: rest =>
       val spark = GraftSession()
-      val idx =
-        (if (index.endsWith(".vdb") || new java.io.File(index).isDirectory &&
-          new java.io.File(index).list().exists(_.endsWith(".vdb")))
-          Vdb.readDir(spark, index).selectExpr("monotonically_increasing_id() AS chunk_id",
-            "text AS chunk", "embedding")
-        else spark.read.parquet(index)
-          .selectExpr("doc_id * 1000 + chunk_idx AS chunk_id", "chunk", "embedding"))
-          .persist()
+      val idx = openIndex(spark, index)
       val prompt = Rag.answer(spark, idx, "chunk_id", "chunk", "embedding",
         embedderOf(rest), query, "", k.toInt)
       println(prompt.head().getString(0))
@@ -85,9 +105,7 @@ object Main {
       // through turns; without an LLM server the assembled prompt is
       // echoed (and recorded as the "answer") so the loop is testable
       val spark = GraftSession()
-      val idx = spark.read.parquet(index)
-        .selectExpr("doc_id * 1000 + chunk_idx AS chunk_id", "chunk", "embedding")
-        .persist()
+      val idx = openIndex(spark, index)
       idx.count() // warm the cache once, like the reference's startup read
       var conversation = ""
       val stdin = scala.io.Source.stdin.getLines()
@@ -99,15 +117,7 @@ object Main {
         if (line.nonEmpty) try {
           val prompt = Rag.answer(spark, idx, "chunk_id", "chunk", "embedding",
             embedderOf(rest), line, conversation, k.toInt).head().getString(0)
-          val answer = rest match {
-            // streamed, token-by-token to stdout (S2 tee parity);
-            // optional trailing n_tokens like the reference argv
-            case host :: port :: n :: Nil =>
-              streamedCompletion(host, port.toInt, prompt, n.toInt)
-            case host :: port :: Nil =>
-              streamedCompletion(host, port.toInt, prompt, -1)
-            case _ => println(prompt); prompt
-          }
+          val answer = complete(rest, prompt)
           conversation = Completion.addLlmResponse(
             graft.operators.Prompt.conversationWithUserTurn(conversation, line), answer)
         } catch {
@@ -137,11 +147,7 @@ object Main {
         // a transient HTTP failure leaves the conversation unchanged
         if (line.nonEmpty) try {
           val newPrompt = graft.operators.Prompt.updateConversationOnlyPrompt(line, response, prompt)
-          val answer = rest match {
-            case host :: port :: n :: Nil => streamedCompletion(host, port.toInt, newPrompt, n.toInt)
-            case host :: port :: Nil => streamedCompletion(host, port.toInt, newPrompt, -1)
-            case _ => println(newPrompt); newPrompt
-          }
+          val answer = complete(rest, newPrompt)
           prompt = newPrompt
           response = Some(answer)
         } catch {

@@ -109,15 +109,4 @@ object TextFunctions {
 
   def minhashPermSql(hExpr: String, a: Long, b: Long): String =
     s"(($hExpr * $a + $b) % $MinhashMod)"
-
-  /** Number of simhash bits (kept modest so generated oracle SQL stays
-    * readable; pairs-blocking uses 4 bands of 8 bits → guaranteed to
-    * catch every pair with hamming distance <= 3).
-    */
-  val SimhashBits = 32
-
-  /** ASCII punctuation count (codepoint classes, identical cross-engine). */
-  def punctCount(text: Column): Column =
-    size(filter(split(text, ""), c =>
-      c.isin(".", ",", ";", ":", "!", "?", "'", "\"", "-", "(", ")")))
 }

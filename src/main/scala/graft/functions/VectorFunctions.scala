@@ -41,10 +41,6 @@ object VectorFunctions {
   def cosineDistanceHof(a: Column, b: Column): Column =
     lit(1.0) - cosineSimilarityHof(a, b)
 
-  /** Squared Euclidean distance Σ (aᵢ−bᵢ)². */
-  def l2Squared(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-
   /** A Scala-side cosine distance with Kahan-compensated accumulation,
     * matching the reference's scalar fallback (`vector-db.c:223-269`).
     * Used only as a high-precision oracle in tests, never in plans.

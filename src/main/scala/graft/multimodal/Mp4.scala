@@ -26,8 +26,6 @@ object Mp4 {
       tracks.find(_.handler == "vide").orElse(tracks.headOption).map(_.codec).getOrElse("")
   }
 
-  private def u16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
   private def u32(b: Array[Byte], o: Int): Long =
     ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
       ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)

@@ -27,15 +27,6 @@ object Multimodal {
 
   val FeatureDim = 16
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("bytes", BinaryType, nullable = false),
-    StructField("meta", StructType(Seq(
-      StructField("n_bytes", LongType, nullable = false),
-      StructField("declared_width", IntegerType, nullable = true),
-      StructField("declared_height", IntegerType, nullable = true))), nullable = false)))
-
   /** A pluggable media decoder: bytes → fixed-dim float features. */
   trait Decoder extends Serializable {
     def decode(mediaType: String, bytes: Array[Byte]): Array[Float]

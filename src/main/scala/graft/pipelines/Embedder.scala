@@ -2,7 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions.{polyHash, polyHashSql, HashMod}
+import graft.functions.TextFunctions.polyHash
 
 /** Embedding provider for the index-build pipeline — the reference's R3
   * (`get_embedding_from_server`, `embedding-from-server.c:106-171`),
@@ -33,13 +33,6 @@ object MockEmbedder extends Embedder {
   /** The same per-dimension value as a DuckDB fragment over `hExpr`. */
   def dimSql(hExpr: String, d: Int): String =
     s"(CAST((($hExpr * ${2 * d + 3} + ${17L * d}) % $P) AS DOUBLE) / $P.0 - 0.5)"
-
-  /** Full-vector DuckDB fragment from a text expression. */
-  def embedSql(textExpr: String): String = {
-    val h = s"h_${textExpr.hashCode.abs}"
-    val dims = (0 until dim).map(d => dimSql(polyHashSql(textExpr), d)).mkString(", ")
-    s"[$dims]"
-  }
 }
 
 /** HTTP embedder for a llama.cpp `/embedding` server. One HTTP client per

@@ -98,7 +98,6 @@ object TimeSeriesQueries {
       |FROM iv LEFT JOIN events e
       |  ON epoch_us(e.ts) >= iv.lo AND epoch_us(e.ts) < iv.hi
       |GROUP BY 1""".stripMargin) { (spark, dir) =>
-    val HourUs = 3600L * 1000000L
     val e = Tables.events(spark, dir)
       .select(col("event_id"), col("value"), unix_micros(col("ts")).as("us"))
     val iv = e.sparkSession.range(0, 15).toDF("k")

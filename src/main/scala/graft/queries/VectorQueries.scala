@@ -39,7 +39,7 @@ object VectorQueries {
     * (`vector-db.h:1` type tag; no binary distance kernel exists in the
     * C). Pure integer algebra end to end: pack (sign-LSH bits), xor,
     * popcount — hash-identical across engines by construction. Pairs with
-    * the binary `.vdb` write path in [[graft.sources.Vdb.serialize]].
+    * the binary `.vdb` write path in [[graft.sources.Vdb.Encoder]].
     */
   val hammingTopk: QueryDef = QueryDef.sql(
     "q_hamming_topk",

@@ -1,10 +1,10 @@
 package graft.sources
 
-import java.io.{DataOutputStream, FileOutputStream}
+import java.io.{BufferedOutputStream, File, FileOutputStream, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** `.vdb` codec — byte-compatible with the reference's on-disk format
   * (`vector-db.c:42-79` write, `:81-146` read; layout in SURVEY §1.3):
@@ -20,14 +20,15 @@ import org.apache.spark.sql.types._
   * ("host-endian" in the reference = little-endian on any machine it
   * realistically ran on.)
   *
-  * Scale posture: a `.vdb` file is a single sequential blob with no
-  * footer or row groups — inherently one reader/one writer. The engine
-  * therefore treats it as an interchange codec, not native storage:
-  * `readDir` scans a *directory* of part files in parallel
-  * (`binaryFile` source + flatMap-deserialize per file), `writeDir`
-  * writes one part per partition via `foreachPartition`, and
-  * `writeSingle` produces a reference-compatible single file from the
-  * driver for hand-off to the C tools. Native storage stays parquet.
+  * A `.vdb` file is one sequential blob with no footer or row groups, so
+  * the engine treats it as an interchange codec, not native storage
+  * (that stays parquet). There is one encoder, [[Encoder]], and one
+  * decoder, [[deserialize]]. Directories of part files are read and
+  * written only through the DataSource V2 source
+  * ([[VdbDataSource]]: one input partition per part, one part per write
+  * task, committed by rename); [[writeSingle]] streams a whole
+  * DataFrame through the driver into one reference-compatible file for
+  * hand-off to the C tools.
   */
 object Vdb {
 
@@ -40,40 +41,82 @@ object Vdb {
     */
   val TypeAuto: Byte = -1
 
-  // ---- serialization ----------------------------------------------------
+  private val Format = "graft.sources.VdbDataSource"
 
-  /** Serialize rows (text, vector) into one .vdb byte stream. Both type
-    * tags are written (`vector-db.c:55-60`): double vectors verbatim;
-    * binary vectors bit-packed at dim/8+1 bytes per row, bit i set iff
-    * v(i) > 0 — the same sign convention as
-    * [[graft.functions.VectorFunctions.packSignBits]], and the exact
+  // ---- codec ------------------------------------------------------------
+
+  /** Streaming `.vdb` encoder. The header needs the row count, and the
+    * vector block precedes the text block, so [[add]] appends each row
+    * to two spool files and [[writeTo]] writes the header and then both
+    * blocks: O(1) rows in memory and no 2 GiB cap on the output. Both
+    * type tags are written (`vector-db.c:55-60`): double vectors
+    * verbatim; binary vectors bit-packed at dim/8+1 bytes per row, bit i
+    * set iff v(i) > 0 — the sign convention of
+    * [[graft.functions.VectorFunctions.packSignBits]] and the exact
     * inverse of the 0/1-double unpack in [[deserialize]].
+    *
+    * [[writeTo]] deletes the spool files once it has copied them;
+    * [[close]] deletes them on any path (abort included) and is
+    * idempotent.
     */
-  def serialize(rows: Iterator[(String, Array[Double])],
-                tpe: Byte = TypeDouble): Array[Byte] = {
-    val buf = rows.toArray
-    val dim = if (buf.isEmpty) 0 else buf.head._2.length
-    require(buf.forall(_._2.length == dim), "non-uniform vector dimension")
-    val texts = buf.map(_._1.getBytes("UTF-8"))
-    val vecBytes = if (tpe == TypeDouble) 8 * dim else dim / 8 + 1
-    val total = 21 + buf.length * vecBytes + texts.map(8 + _.length).sum
-    val bb = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-    bb.put(Magic); bb.put(tpe)
-    bb.putLong(buf.length.toLong); bb.putLong(dim.toLong)
-    buf.foreach { case (_, v) =>
-      if (tpe == TypeDouble) v.foreach(bb.putDouble)
+  final class Encoder(tpe: Byte) extends java.io.Closeable {
+    private val vecSpool = File.createTempFile("graft-vdb-", ".vec")
+    private val textSpool = File.createTempFile("graft-vdb-", ".txt")
+    private val vecOut = new BufferedOutputStream(new FileOutputStream(vecSpool))
+    private val textOut = new BufferedOutputStream(new FileOutputStream(textSpool))
+    private val long8 = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
+    private var vec: ByteBuffer = _
+    private var dim = -1
+    private var n = 0L
+
+    /** Rows added so far. */
+    def rows: Long = n
+
+    def add(text: String, v: Array[Double]): Unit = {
+      if (dim < 0) {
+        dim = v.length
+        vec = ByteBuffer.allocate(if (tpe == TypeDouble) 8 * dim else dim / 8 + 1)
+          .order(ByteOrder.LITTLE_ENDIAN)
+      }
+      require(v.length == dim, "non-uniform vector dimension")
+      vec.clear()
+      if (tpe == TypeDouble) v.foreach(vec.putDouble)
       else {
-        val packed = new Array[Byte](dim / 8 + 1)
+        val packed = vec.array()
+        java.util.Arrays.fill(packed, 0.toByte)
         var i = 0
         while (i < dim) {
           if (v(i) > 0.0) packed(i / 8) = (packed(i / 8) | (1 << (i % 8))).toByte
           i += 1
         }
-        bb.put(packed)
       }
+      vecOut.write(vec.array())
+      val t = text.getBytes("UTF-8")
+      putLong(textOut, t.length.toLong)
+      textOut.write(t)
+      n += 1
     }
-    texts.foreach { t => bb.putLong(t.length.toLong); bb.put(t) }
-    bb.array()
+
+    /** Write the header and both blocks to `out` (which the caller
+      * closes), then delete the spools.
+      */
+    def writeTo(out: OutputStream): Unit = {
+      vecOut.close(); textOut.close()
+      out.write(Magic); out.write(tpe)
+      putLong(out, n); putLong(out, math.max(dim, 0).toLong)
+      java.nio.file.Files.copy(vecSpool.toPath, out)
+      java.nio.file.Files.copy(textSpool.toPath, out)
+      close()
+    }
+
+    override def close(): Unit = {
+      vecOut.close(); textOut.close()
+      vecSpool.delete(); textSpool.delete()
+    }
+
+    private def putLong(out: OutputStream, x: Long): Unit = {
+      long8.clear(); long8.putLong(x); out.write(long8.array(), 0, 8)
+    }
   }
 
   /** Deserialize one .vdb blob → rows (text, vector). Magic mismatch is
@@ -119,36 +162,6 @@ object Vdb {
 
   // ---- Spark surface ----------------------------------------------------
 
-  private val schema = StructType(Seq(
-    StructField("text", StringType, nullable = false),
-    StructField("embedding", ArrayType(DoubleType, containsNull = false), nullable = false)))
-
-  /** Parallel scan of a directory of .vdb part files. */
-  def readDir(spark: SparkSession, path: String): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    spark.read.format("binaryFile").load(path)
-      .select(col("content"))
-      .flatMap(r => deserialize(r.getAs[Array[Byte]](0))
-        .map { case (t, v) => Row(t, v.toSeq) })(enc)
-  }
-
-  /** Parallel write: one .vdb part file per partition. */
-  def writeDir(df: DataFrame, textCol: String, embCol: String, dir: String,
-               tpe: Byte = TypeDouble): Unit = {
-    new java.io.File(dir).mkdirs()
-    val ti = df.schema.fieldIndex(textCol)
-    val ei = df.schema.fieldIndex(embCol)
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.nonEmpty) {
-        val data = serialize(rows.map(r =>
-          (r.getString(ti), r.getSeq[Double](ei).toArray)), tpe)
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val out = new FileOutputStream(s"$dir/part-$pid.vdb")
-        try out.write(data) finally out.close()
-      }
-    }
-  }
-
   /** Compact N `.vdb` index directories into one: union the part files,
     * drop exact-duplicate entries, and rewrite at a chosen part count.
     * This is the index-maintenance half the reference workflow implies —
@@ -165,46 +178,37 @@ object Vdb {
     * repartitions before the write (compaction's point is fewer,
     * bigger parts); 0 keeps the dedup output partitioning.
     *
-    * Two guard rails (round-11 ADVICE): the output dir must hold no
-    * `.vdb` parts — a rewrite at a lower part count over leftover parts
-    * would leave stale files that `readDir` happily unions back in,
-    * silently reintroducing the duplicates compaction just removed —
-    * and the output TYPE TAG defaults to [[TypeAuto]]: detected from
-    * the input part headers (which must agree), so compacting a binary
+    * Inputs are read and the output written through [[VdbDataSource]].
+    * Two guard rails: the output dir must hold no `.vdb` parts — the
+    * scan unions every part in a directory, so leftover parts would
+    * silently bring back the duplicates compaction just removed — and
+    * the output TYPE TAG defaults to [[TypeAuto]]: detected from the
+    * input part headers (which must agree), so compacting a binary
     * index can't silently inflate it 64x to doubles or lossy-binarize a
     * double index. Passing an explicit tag is an intentional RE-ENCODE
     * (e.g. double → binary quantization at compaction time) and is
-    * honored as such.
+    * honored as such. Both guards list parts with
+    * [[VdbDataSource.listFiles]] over the session's Hadoop conf, so they
+    * see the files the scan does on any path scheme; a missing
+    * directory counts as empty.
     */
-  /** `.vdb` parts under `dir`, via the Hadoop FileSystem API so the
-    * guards below see the SAME files `readDir`'s binaryFile scan does
-    * on any path scheme — a `java.io.File` listing silently returns
-    * empty on hdfs://-style paths, which would skip the stale-part
-    * guard and fail type detection with a misleading message (the
-    * round-11 ADVICE finding).
-    */
-  private def listVdbParts(spark: SparkSession,
-                           dir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".vdb"))
-      .map(_.getPath)
-  }
-
   def compact(spark: SparkSession, inDirs: Seq[String], outDir: String,
               targetParts: Int = 0, tpe: Byte = TypeAuto): Unit = {
-    val stale = listVdbParts(spark, outDir)
+    val conf = spark.sessionState.newHadoopConf()
+    def parts(dir: String): Seq[String] = {
+      val p = new Path(dir)
+      if (p.getFileSystem(conf).exists(p)) VdbDataSource.listFiles(dir, conf) else Seq.empty
+    }
+    val stale = parts(outDir)
     require(stale.isEmpty,
       s"compact: $outDir already contains ${stale.length} .vdb part(s); " +
-        "a partial overwrite would leave stale parts that readDir unions back in — " +
+        "a partial overwrite would leave stale parts that the scan unions back in — " +
         "compact into an empty directory")
     val outType = if (tpe != TypeAuto) tpe else {
-      val hconf = spark.sparkContext.hadoopConfiguration
       val inTypes = inDirs.flatMap { d =>
-        listVdbParts(spark, d).map { f =>
-          val in = f.getFileSystem(hconf).open(f)
+        parts(d).map { f =>
+          val p = new Path(f)
+          val in = p.getFileSystem(conf).open(p)
           // exactly 5 header bytes — readFully loops over short reads
           // and throws EOFException on a truncated part instead of
           // leaving h(4)=0 (= TypeBinary) from an unchecked read
@@ -217,66 +221,36 @@ object Vdb {
           "mixed or absent; pass an explicit tpe to re-encode")
       inTypes.head
     }
-    val all = inDirs.map(readDir(spark, _)).reduce(_ unionByName _)
-      .withColumn("ck", graft.operators.Dedup.contentKey(col("text")))
-      .dropDuplicates("ck")
+    // dropDuplicates' own plan, written out: `first` is nullable from
+    // analysis on, so the write plans its not-null check; behind
+    // dropDuplicates the columns turn nullable only in the optimizer,
+    // after the write has resolved, and plan validation fails
+    val all = inDirs.map(spark.read.format(Format).load(_)).reduce(_ unionByName _)
+      .groupBy(graft.operators.Dedup.contentKey(col("text")).as("ck"))
+      .agg(first(col("text")).as("text"), first(col("embedding")).as("embedding"))
       .drop("ck")
     val sized = if (targetParts > 0) all.repartition(targetParts) else all
-    writeDir(sized, "text", "embedding", outDir, outType)
+    sized.write.format(Format)
+      .option("vdbtype", if (outType == TypeDouble) "double" else "binary")
+      .mode("append").save(outDir)
   }
 
   /** Reference-compatible single file (for hand-off to the C tools only
-    * — a `.vdb` file is inherently single-writer interchange, not a scale
-    * path). Rows STREAM through the driver: the format is header (which
-    * needs the row count) then a vector block then a text block, so the
-    * two blocks spool to temp files during the single pass and are
-    * concatenated at the end — no whole-dataset buffer, no 2 GiB
-    * `Array[Byte]` cap, O(1) driver memory.
+    * — a `.vdb` file is single-writer interchange, not a scale path).
+    * Rows stream through the driver into one [[Encoder]]: O(1) driver
+    * memory and no 2 GiB cap.
     */
   def writeSingle(df: DataFrame, textCol: String, embCol: String, file: String,
                   tpe: Byte = TypeDouble): Unit = {
-    val rows = df.select(col(textCol), col(embCol)).toLocalIterator()
-    val tmpV = java.io.File.createTempFile("graft-vdb-", ".vec")
-    val tmpT = java.io.File.createTempFile("graft-vdb-", ".txt")
-    val scratch = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-    def putLong(out: java.io.OutputStream, v: Long): Unit = {
-      scratch.clear(); scratch.putLong(v); out.write(scratch.array(), 0, 8)
-    }
-    var n = 0L
-    var dim = -1
+    val enc = new Encoder(tpe)
     try {
-      val vOut = new java.io.BufferedOutputStream(new FileOutputStream(tmpV))
-      val tOut = new java.io.BufferedOutputStream(new FileOutputStream(tmpT))
-      try {
-        while (rows.hasNext) {
-          val r = rows.next()
-          val v = r.getSeq[Double](1)
-          if (dim < 0) dim = v.length
-          require(v.length == dim, "non-uniform vector dimension")
-          if (tpe == TypeDouble) v.foreach { x =>
-            scratch.clear(); scratch.putDouble(x); vOut.write(scratch.array(), 0, 8)
-          } else {
-            val packed = new Array[Byte](dim / 8 + 1)
-            var i = 0
-            while (i < dim) {
-              if (v(i) > 0.0) packed(i / 8) = (packed(i / 8) | (1 << (i % 8))).toByte
-              i += 1
-            }
-            vOut.write(packed)
-          }
-          val t = r.getString(0).getBytes("UTF-8")
-          putLong(tOut, t.length.toLong)
-          tOut.write(t)
-          n += 1
-        }
-      } finally { vOut.close(); tOut.close() }
-      val out = new java.io.BufferedOutputStream(new FileOutputStream(file))
-      try {
-        out.write(Magic); out.write(tpe)
-        putLong(out, n); putLong(out, math.max(dim, 0).toLong)
-        java.nio.file.Files.copy(tmpV.toPath, out)
-        java.nio.file.Files.copy(tmpT.toPath, out)
-      } finally out.close()
-    } finally { tmpV.delete(); tmpT.delete() }
+      val rows = df.select(col(textCol), col(embCol)).toLocalIterator()
+      while (rows.hasNext) {
+        val r = rows.next()
+        enc.add(r.getString(0), r.getSeq[Double](1).toArray)
+      }
+      val out = new BufferedOutputStream(new FileOutputStream(file))
+      try enc.writeTo(out) finally out.close()
+    } finally enc.close()
   }
 }

@@ -25,16 +25,24 @@ import org.apache.spark.unsafe.types.UTF8String
   *   .mode("overwrite").save(dir)
   * }}}
   *
-  * One input partition per part file — a `.vdb` file has no internal
-  * row-group structure (header then two sequential column blocks), so a
-  * file is the natural split unit; parallelism comes from writing many
-  * part files (one per task on write, mirroring `Vdb.writeDir`). Column
-  * pruning falls out of Catalyst's projection over the returned rows;
-  * the format has no statistics to push filters into (the reference
-  * reads the whole table too, `vector-db.c:119-144`).
+  * This is the engine's one reader and one writer for `.vdb` files and
+  * directories of part files; [[Vdb.compact]] and the CLI go through it,
+  * and every part is encoded by [[Vdb.Encoder]] and decoded by
+  * [[Vdb.deserialize]].
   *
-  * Write protocol: each task spools its part to `_temp-<jobId>/`, and the
-  * driver's `BatchWrite.commit` renames the winners into place — so task
+  * Read: one input partition per part file — a `.vdb` file has no
+  * internal row-group structure (header then two sequential column
+  * blocks), so a file is the natural split unit, and parallelism comes
+  * from writing many parts. A part is read whole into one byte array,
+  * so a part must be under 2 GiB ([[VdbDataSource.MaxPartBytes]]); a
+  * larger one is refused by name and length. Column pruning falls out
+  * of Catalyst's projection over the returned rows; the format has no
+  * statistics to push filters into (the reference reads the whole table
+  * too, `vector-db.c:119-144`).
+  *
+  * Write: one part per task. Each task streams its rows through a
+  * [[Vdb.Encoder]] into `_temp-<jobId>/`, and the driver's
+  * `BatchWrite.commit` renames the winners into place — so task
   * retries/speculation never race on a final filename, an aborted job
   * leaves existing data untouched, and part names carry the job id
   * (`part-<jobId>-<partitionId>.vdb`), so `mode("append")` adds files
@@ -88,13 +96,21 @@ object VdbDataSource {
     else Seq(path)
   }
 
+  /** Largest part [[readFile]] holds: the JDK's largest safe array length. */
+  val MaxPartBytes: Long = Int.MaxValue - 8
+
+  /** The whole part file at `path`. A part over [[MaxPartBytes]] is
+    * refused before anything is allocated.
+    */
   def readFile(path: String, conf: Configuration): Array[Byte] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
+    val len = fs.getFileStatus(p).getLen
+    require(len <= MaxPartBytes,
+      s"$path is $len bytes; a .vdb part is read whole and must be at most $MaxPartBytes bytes")
     val in = fs.open(p)
     try {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
+      val buf = new Array[Byte](len.toInt)
       in.readFully(0, buf)
       buf
     } finally in.close()
@@ -113,10 +129,10 @@ class VdbTable(path: String) extends Table with SupportsRead with SupportsWrite 
     new VdbWriteBuilder(path, info)
 }
 
-/** Write side: one `.vdb` part file per task (the parallel layout
-  * `readDir`/the DSv2 scan expect); `mode("overwrite")` replaces the
-  * target directory's part files atomically at commit. `option("vdbtype",
-  * "binary")` selects the bit-packed type tag.
+/** Write side: one `.vdb` part file per task (the layout the scan
+  * reads); `mode("overwrite")` replaces the target directory's part
+  * files atomically at commit. `option("vdbtype", "binary")` selects the
+  * bit-packed type tag.
   */
 class VdbWriteBuilder(path: String, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
@@ -193,32 +209,29 @@ case class VdbWriterFactory(path: String, jobId: String, ti: Int, ei: Int,
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      // a .vdb file is header-then-two-blocks: rows must be buffered per
-      // task (same constraint Vdb.serialize documents — interchange
-      // codec, not native storage)
-      private val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Double])]
+      private val enc = new Vdb.Encoder(tpe)
       // attempt-unique spool file; only the committed attempt is renamed
       private val temp = new Path(new Path(path, s"_temp-$jobId"),
         s"part-$jobId-$partitionId-attempt-$taskId.vdb")
       override def write(r: InternalRow): Unit =
-        buf += ((r.getUTF8String(ti).toString, r.getArray(ei).toDoubleArray))
+        enc.add(r.getUTF8String(ti).toString, r.getArray(ei).toDoubleArray)
       override def commit(): WriterCommitMessage = {
-        if (buf.nonEmpty) {
-          val fs = temp.getFileSystem(conf.value)
-          val out = fs.create(temp, true)
-          try out.write(Vdb.serialize(buf.iterator, tpe)) finally out.close()
+        if (enc.rows > 0) {
+          val out = temp.getFileSystem(conf.value).create(temp, true)
+          try enc.writeTo(out) finally out.close()
         }
-        VdbCommitMessage(temp.toString, s"part-$jobId-$partitionId.vdb", buf.size)
+        VdbCommitMessage(temp.toString, s"part-$jobId-$partitionId.vdb", enc.rows)
       }
       override def abort(): Unit = {
+        enc.close()
         val fs = temp.getFileSystem(conf.value)
         if (fs.exists(temp)) fs.delete(temp, false)
       }
-      override def close(): Unit = ()
+      override def close(): Unit = enc.close()
     }
 }
 
-case class VdbCommitMessage(tempPath: String, finalName: String, rows: Int)
+case class VdbCommitMessage(tempPath: String, finalName: String, rows: Long)
     extends WriterCommitMessage
 
 class VdbScanBuilder(path: String, conf: SerializableHadoopConf)

@@ -57,4 +57,18 @@ class CliSpec extends SparkSpec {
     assert(out2.contains("Context 1:"))
     assert(out2.contains("key agg row scan"))
   }
+
+  test("CLI: rag over a .vdb index prints the same prompt as over parquet") {
+    val dir = Files.createTempDirectory("cli-vdb").toString
+    val docs = s"$sf0001/documents.parquet"
+    val prompts = for (idx <- Seq(s"$dir/idx.parquet", s"$dir/x.vdb")) yield {
+      val (c1, _) = runMain("", "build-index", docs, idx, "100")
+      assert(c1 == 0, idx)
+      val (c2, out) = runMain("", "rag", idx, "3", "key agg row scan")
+      assert(c2 == 0, out)
+      out
+    }
+    assert(prompts(0).contains("Context 1:"))
+    assert(prompts(1) == prompts(0))
+  }
 }

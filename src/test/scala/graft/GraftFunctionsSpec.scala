@@ -124,14 +124,23 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("extensions class registers functions at session build time") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[1]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .appName("ext-test")
-      .getOrCreate()
-    // note: getOrCreate may return the shared session; register covers both
-    GraftFunctions.register(s2)
+    import org.apache.spark.sql.{AnalysisException, SparkSession}
+    val shared = spark
+    // with no active or default session, getOrCreate builds a NEW session
+    // (on the shared SparkContext) and applies the extensions to it
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+    assert(s2 ne shared)
+    val names = GraftFunctions.fns.map(_._1)
+    assert(names.size == 12)
+    for (name <- names) assert(s2.catalog.functionExists(name), name)
     assert(s2.sql("SELECT graft_polyhash('a')").head().getLong(0) == 97L)
+    val e = intercept[AnalysisException](s2.sql("SELECT graft_cosine_distance(array(1.0d))"))
+    assert(e.getMessage.contains("wrong number of arguments"))
   }
 }

@@ -492,26 +492,24 @@ class StreamingSpec extends SparkSpec {
   test("streaming index maintenance: docs stream -> chunk+embed -> .vdb parts") {
     // the reference's build pipeline (R1->R2->R3->R4) as a stream: each
     // micro-batch of documents is chunked, mock-embedded, and APPENDED to
-    // a .vdb directory index via foreachBatch + Vdb.writeDir — continuous
-    // index maintenance, with the batch reader seeing every part
+    // one .vdb directory index via foreachBatch + the .vdb source —
+    // continuous index maintenance, with the batch reader seeing every part
     val srcDir = Files.createTempDirectory("docs-stream").toString
     val idxDir = Files.createTempDirectory("vdb-stream").toString
     val docs = Tables(spark, sf0001, "documents").select("doc_id", "text").limit(20)
     docs.write.mode("overwrite").parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema).parquet(srcDir)
-    var part = 0
     val q = graft.pipelines.IndexBuild
       .build(stream, "doc_id", "text", 64, graft.pipelines.MockEmbedder)
       .writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.sources.Vdb.writeDir(
-          batch.withColumn("chunk", col("chunk")), "chunk", "embedding", s"$idxDir/b$part")
-        part += 1
+        batch.select(col("chunk").as("text"), col("embedding"))
+          .write.format("graft.sources.VdbDataSource").mode("append").save(idxDir)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    val back = graft.sources.Vdb.readDir(spark, s"$idxDir/*")
+    val back = spark.read.format("graft.sources.VdbDataSource").load(idxDir)
     val want = graft.pipelines.IndexBuild
       .build(spark.read.parquet(srcDir), "doc_id", "text", 64, graft.pipelines.MockEmbedder)
     assert(back.count() == want.count())

@@ -1,15 +1,37 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.functions._
-import graft.sources.Vdb
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import graft.sources.{Vdb, VdbDataSource}
 
 class VdbSpec extends SparkSpec {
   import spark.implicits._
 
+  private val Format = "graft.sources.VdbDataSource"
+
+  /** One `.vdb` blob through the engine's encoder. */
+  private def encode(rows: Seq[(String, Array[Double])],
+                     tpe: Byte = Vdb.TypeDouble): Array[Byte] = {
+    val enc = new Vdb.Encoder(tpe)
+    rows.foreach { case (t, v) => enc.add(t, v) }
+    val out = new java.io.ByteArrayOutputStream()
+    enc.writeTo(out)
+    out.toByteArray
+  }
+
+  private def writeVdb(df: DataFrame, dir: String, tpe: Byte = Vdb.TypeDouble): Unit =
+    df.write.format(Format).option("vdbtype", if (tpe == Vdb.TypeBinary) "binary" else "double")
+      .mode("append").save(dir)
+
+  private def readVdb(path: String): Seq[(String, Seq[Double])] =
+    spark.read.format(Format).load(path).orderBy("text").as[(String, Seq[Double])].collect().toSeq
+
+  private def vdbParts(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".vdb")).sortBy(_.getName).toSeq
+
   test("serialize/deserialize round-trip preserves rows and layout") {
     val rows = Seq(("first chunk", Array(1.0, 2.5, -3.25)), ("second", Array(0.0, -1.0, 4.5)))
-    val bytes = Vdb.serialize(rows.iterator)
+    val bytes = encode(rows)
     // header: magic, type=double, n=2, dim=3
     assert(bytes.slice(0, 4).sameElements(Vdb.Magic))
     assert(bytes(4) == Vdb.TypeDouble)
@@ -39,7 +61,7 @@ class VdbSpec extends SparkSpec {
     val rows = Seq(
       ("bin a", Array(1.0, 0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 1.0)),
       ("bin b", Array(0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 1.0, 0.0)))
-    val bytes = Vdb.serialize(rows.iterator, Vdb.TypeBinary)
+    val bytes = encode(rows, Vdb.TypeBinary)
     assert(bytes(4) == Vdb.TypeBinary)
     assert(bytes.length == 21 + 2 * 2 + (8 + 5) + (8 + 5))
     // row 0 packs to exactly the hand-crafted layout of the read test
@@ -49,24 +71,67 @@ class VdbSpec extends SparkSpec {
     assert(back.map(_._2.toSeq) == rows.map(_._2.toSeq))
   }
 
-  test("binary writeDir/readDir round-trip through Spark") {
-    val dir = Files.createTempDirectory("vdbbin").toString
-    val df = Seq((0L, "pk a", Seq(1.0, 0.0, 1.0, 1.0)), (1L, "pk b", Seq(0.0, 1.0, 0.0, 0.0)))
-      .toDF("id", "text", "embedding")
-    Vdb.writeDir(df, "text", "embedding", dir, Vdb.TypeBinary)
-    val got = Vdb.readDir(spark, dir).orderBy("text")
-      .as[(String, Seq[Double])].collect().toSeq
-    assert(got == Seq(("pk a", Seq(1.0, 0.0, 1.0, 1.0)), ("pk b", Seq(0.0, 1.0, 0.0, 0.0))))
+  test("the encoder writes the reference layout byte for byte, both type tags") {
+    def le(n: Int) = java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def textBlock(texts: String*) = {
+      val bb = le(texts.map(8 + _.length).sum)
+      texts.foreach { t => bb.putLong(t.length.toLong); bb.put(t.getBytes("UTF-8")) }
+      bb.array()
+    }
+    def header(tpe: Byte, n: Long, dim: Long) = {
+      val bb = le(21); bb.put(Vdb.Magic); bb.put(tpe); bb.putLong(n); bb.putLong(dim)
+      bb.array()
+    }
+    // double: header, 2 x 2 little-endian doubles, then the text block
+    val dbl = Seq(("ab", Array(1.5, -2.0)), ("xyz", Array(0.25, 3.0)))
+    val dblVecs = le(4 * 8)
+    Seq(1.5, -2.0, 0.25, 3.0).foreach(dblVecs.putDouble)
+    assert(encode(dbl).toSeq ==
+      (header(Vdb.TypeDouble, 2, 2) ++ dblVecs.array() ++ textBlock("ab", "xyz")).toSeq)
+    // binary: dim 10 packs to 2 bytes per row, bit i of byte i/8 set iff v(i) > 0
+    val bin = Seq(
+      ("ab", Array(0.5, -1.0, 2.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 3.0)),  // bits 0, 2, 9
+      ("xyz", Array(-0.5, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 7.0, -2.0))) // bits 1, 8
+    assert(encode(bin, Vdb.TypeBinary).toSeq ==
+      (header(Vdb.TypeBinary, 2, 10) ++ Array[Byte](0x05, 0x02, 0x02, 0x01) ++
+        textBlock("ab", "xyz")).toSeq)
+  }
+
+  test("a one-partition DataSource V2 part and a writeSingle file are byte-identical") {
+    val df = Seq(("same a", Seq(1.0, -2.0, 0.5)), ("same b", Seq(-3.0, 4.0, 0.0)))
+      .toDF("text", "embedding").coalesce(1)
+    for (tpe <- Seq(Vdb.TypeDouble, Vdb.TypeBinary)) {
+      val dir = Files.createTempDirectory("vdbsame").toString
+      writeVdb(df, dir, tpe)
+      val single = Files.createTempFile("vdbsame", ".vdb").toString
+      Vdb.writeSingle(df, "text", "embedding", single, tpe)
+      val part = vdbParts(dir)
+      assert(part.size == 1)
+      assert(Files.readAllBytes(part.head.toPath).toSeq ==
+        Files.readAllBytes(Paths.get(single)).toSeq, s"type tag $tpe")
+    }
+  }
+
+  test("the reader refuses a part over 2 GiB by name and length, allocating nothing") {
+    val f = Files.createTempFile("vdbhuge", ".vdb")
+    try {
+      val raf = new java.io.RandomAccessFile(f.toFile, "rw")
+      try raf.setLength(3L << 30) finally raf.close() // sparse: no bytes on disk
+      val e = intercept[IllegalArgumentException](
+        VdbDataSource.readFile(f.toString, new org.apache.hadoop.conf.Configuration()))
+      assert(e.getMessage.contains(f.toString))
+      assert(e.getMessage.contains((3L << 30).toString))
+    } finally Files.delete(f)
   }
 
   test("bad magic is warn-only, read proceeds (vector-db.c:102-105)") {
-    val bytes = Vdb.serialize(Seq(("t", Array(1.0))).iterator)
+    val bytes = encode(Seq(("t", Array(1.0))))
     bytes(0) = 'X'.toByte
     assert(Vdb.deserialize(bytes).head._1 == "t")
   }
 
   test("a truncated blob is refused with the field that overruns") {
-    val bytes = Vdb.serialize(Seq(("first", Array(1.0, 2.0)), ("second", Array(3.0, 4.0))).iterator)
+    val bytes = encode(Seq(("first", Array(1.0, 2.0)), ("second", Array(3.0, 4.0))))
     // cut inside the second text: its declared length overruns the blob
     val cut = intercept[IllegalArgumentException](
       Vdb.deserialize(bytes.take(bytes.length - 3)))
@@ -79,7 +144,7 @@ class VdbSpec extends SparkSpec {
   }
 
   test("an oversized or negative n is refused before any allocation") {
-    val bytes = Vdb.serialize(Seq(("t", Array(1.0))).iterator)
+    val bytes = encode(Seq(("t", Array(1.0))))
     val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     for (n <- Seq(Int.MaxValue.toLong, Long.MaxValue, -1L)) {
       bb.putLong(5, n)
@@ -91,34 +156,22 @@ class VdbSpec extends SparkSpec {
       .getMessage.contains("dim = -4"))
   }
 
-  test("writeDir/readDir round-trip through Spark") {
-    val dir = Files.createTempDirectory("vdbspec").toString
-    val df = Seq((0L, "alpha", Seq(0.5, 1.5)), (1L, "beta", Seq(-0.5, 2.0)))
-      .toDF("id", "text", "embedding")
-    Vdb.writeDir(df, "text", "embedding", dir)
-    val back = Vdb.readDir(spark, dir)
-    assert(back.count() == 2)
-    val got = back.orderBy("text").as[(String, Seq[Double])].collect().toSeq
-    assert(got == Seq(("alpha", Seq(0.5, 1.5)), ("beta", Seq(-0.5, 2.0))))
-  }
-
   test("compact merges index dirs, drops exact duplicates, controls part count") {
     val dirA = Files.createTempDirectory("vdbcompactA").toString
     val dirB = Files.createTempDirectory("vdbcompactB").toString
-    val out = Files.createTempDirectory("vdbcompactOut").toString
+    // a missing output directory counts as empty
+    val out = Files.createTempDirectory("vdbcompactOut").toString + "/fresh"
     // two incremental indexes sharing one re-embedded chunk ("beta")
-    Vdb.writeDir(Seq(("alpha", Seq(0.5, 1.5)), ("beta", Seq(-0.5, 2.0)))
-      .toDF("text", "embedding").repartition(2), "text", "embedding", dirA)
-    Vdb.writeDir(Seq(("beta", Seq(-0.5, 2.0)), ("gamma", Seq(3.0, 4.0)))
-      .toDF("text", "embedding").repartition(2), "text", "embedding", dirB)
+    writeVdb(Seq(("alpha", Seq(0.5, 1.5)), ("beta", Seq(-0.5, 2.0)))
+      .toDF("text", "embedding").repartition(2), dirA)
+    writeVdb(Seq(("beta", Seq(-0.5, 2.0)), ("gamma", Seq(3.0, 4.0)))
+      .toDF("text", "embedding").repartition(2), dirB)
     Vdb.compact(spark, Seq(dirA, dirB), out, targetParts = 1)
-    assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".vdb")) == 1)
-    val got = Vdb.readDir(spark, out).orderBy("text")
-      .as[(String, Seq[Double])].collect().toSeq
-    assert(got == Seq(("alpha", Seq(0.5, 1.5)), ("beta", Seq(-0.5, 2.0)),
+    assert(vdbParts(out).size == 1)
+    assert(readVdb(out) == Seq(("alpha", Seq(0.5, 1.5)), ("beta", Seq(-0.5, 2.0)),
       ("gamma", Seq(3.0, 4.0))))
     // re-compacting into a dir that already holds parts must FAIL, not
-    // leave stale higher-numbered parts for readDir to union back in
+    // add parts next to the old ones for the scan to union back in
     val err = intercept[IllegalArgumentException] {
       Vdb.compact(spark, Seq(dirA, dirB), out, targetParts = 1)
     }
@@ -128,23 +181,21 @@ class VdbSpec extends SparkSpec {
   test("compact preserves the input type tag (TypeAuto detection)") {
     val dirBin = Files.createTempDirectory("vdbcompactBin").toString
     val out = Files.createTempDirectory("vdbcompactBinOut").toString
-    Vdb.writeDir(Seq(("sign test", Seq(0.5, -1.5, 2.0)))
-      .toDF("text", "embedding"), "text", "embedding", dirBin, Vdb.TypeBinary)
+    writeVdb(Seq(("sign test", Seq(0.5, -1.5, 2.0))).toDF("text", "embedding"),
+      dirBin, Vdb.TypeBinary)
     Vdb.compact(spark, Seq(dirBin), out, targetParts = 1)
     // output header carries the binary tag, not a silent 64x double inflation
-    val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".vdb")).head
+    val part = vdbParts(out).head
     val in = new java.io.FileInputStream(part)
     val head = try { val h = new Array[Byte](5); in.read(h); h } finally in.close()
     assert(head(4) == Vdb.TypeBinary)
-    val got = Vdb.readDir(spark, out).as[(String, Seq[Double])].collect().toSeq
-    assert(got == Seq(("sign test", Seq(1.0, 0.0, 1.0))))
+    assert(readVdb(out) == Seq(("sign test", Seq(1.0, 0.0, 1.0))))
   }
 
   test("DataSource V2: spark.read.format over a .vdb directory") {
-    val dir = java.nio.file.Files.createTempDirectory("vdbdsv2").toString
-    val df = Seq((0L, "dsv2 row a", Seq(1.0, 2.0)), (1L, "dsv2 row b", Seq(3.0, 4.0)))
-      .toDF("id", "text", "embedding")
-    Vdb.writeDir(df, "text", "embedding", dir)
+    val dir = Files.createTempDirectory("vdbdsv2").toString
+    writeVdb(Seq(("dsv2 row a", Seq(1.0, 2.0)), ("dsv2 row b", Seq(3.0, 4.0)))
+      .toDF("text", "embedding").repartition(2), dir)
     val back = spark.read.format("graft.sources.VdbDataSource").load(dir)
     assert(back.schema.fieldNames.toSeq == Seq("text", "embedding"))
     val got = back.orderBy("text").as[(String, Seq[Double])].collect().toSeq
@@ -176,7 +227,7 @@ class VdbSpec extends SparkSpec {
     val f = Files.createTempFile("one", ".vdb").toString
     val df = Seq(("only row", Seq(7.0, 8.0))).toDF("text", "embedding")
     Vdb.writeSingle(df, "text", "embedding", f)
-    val back = Vdb.deserialize(Files.readAllBytes(java.nio.file.Paths.get(f)))
+    val back = Vdb.deserialize(Files.readAllBytes(Paths.get(f)))
     assert(back.size == 1)
     assert(back.head._1 == "only row")
     assert(back.head._2.toSeq == Seq(7.0, 8.0))
