@@ -30,9 +30,10 @@ object Main {
     case _ => MockEmbedder
   }
 
-  /** The index at `path` as cached (chunk_id, chunk, embedding) rows: a
-    * `.vdb` file or directory of parts through the `.vdb` DataSource V2
-    * source, anything else as `build-index`'s parquet.
+  /** The index at `path` as (chunk_id, chunk, embedding) rows: a `.vdb`
+    * file or directory of parts through the `.vdb` DataSource V2 source,
+    * anything else as `build-index`'s parquet. Not cached: the one-shot
+    * `rag` scans it once, and `rag-repl` persists it itself.
     */
   private def openIndex(spark: SparkSession, path: String): DataFrame = {
     val f = new java.io.File(path)
@@ -41,7 +42,6 @@ object Main {
       .selectExpr("monotonically_increasing_id() AS chunk_id", "text AS chunk", "embedding")
     else spark.read.parquet(path)
       .selectExpr("doc_id * 1000 + chunk_idx AS chunk_id", "chunk", "embedding"))
-      .persist()
   }
 
   /** The REPLs' answer to `prompt`: streamed token by token to stdout
@@ -105,7 +105,7 @@ object Main {
       // through turns; without an LLM server the assembled prompt is
       // echoed (and recorded as the "answer") so the loop is testable
       val spark = GraftSession()
-      val idx = openIndex(spark, index)
+      val idx = openIndex(spark, index).persist()
       idx.count() // warm the cache once, like the reference's startup read
       var conversation = ""
       val stdin = scala.io.Source.stdin.getLines()

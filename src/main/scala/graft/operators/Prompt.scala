@@ -98,6 +98,20 @@ object Prompt {
         lit(conversationWithUserTurn(conversation, userInput))).as("prompt"))
   }
 
+  /** [[assembleByOrder]]'s prompt from texts already in rank order,
+    * folded on the driver: the byte-identical string for the same rows.
+    * Labels are 1-based positions in `texts`, and a NULL text adds
+    * nothing but keeps its position (as `array_join` skips the NULL
+    * element its `concat` yields).
+    */
+  def assembleRanked(texts: Seq[String], conversation: String, userInput: String): String = {
+    val sb = new StringBuilder(SystemMsgStart)
+    texts.iterator.zipWithIndex.foreach { case (t, i) =>
+      if (t != null) sb ++= "Context " ++= (i + 1).toString ++= ":\n" ++= t ++= ContextSep
+    }
+    (sb ++= conversationWithUserTurn(conversation, userInput)).result()
+  }
+
   /** Fold a (rank, text) relation into the single-row instruct prompt.
     * `rank` is 1-based ascending-distance rank (labels = positions in
     * rank order, identical for any gap-free 1-based ranking).

@@ -1,16 +1,27 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TextFunctions.polyHash
 
-/** Embedding provider for the index-build pipeline — the reference's R3
-  * (`get_embedding_from_server`, `embedding-from-server.c:106-171`),
-  * abstracted so tests and CI (zero egress) run on a deterministic mock.
+/** Embedding provider — the reference's R3 (`get_embedding_from_server`,
+  * `embedding-from-server.c:106-171`), abstracted so tests and CI (zero
+  * egress) run on a deterministic mock. [[embed]] is the index build's
+  * distributed column; [[embedText]] embeds one text on the driver, as
+  * the reference's client embeds a REPL query, and runs no Spark job.
+  * Both give the same vector for the same text.
   */
 trait Embedder {
   /** Adds `outCol: array<double>` computed from `textCol`. */
   def embed(df: DataFrame, textCol: String, outCol: String): DataFrame
+  /** The vector [[embed]] gives `text`, computed on the driver. */
+  def embedText(text: String): Seq[Double]
   def dim: Int
 }
 
@@ -30,6 +41,22 @@ object MockEmbedder extends Embedder {
     df.withColumn(outCol, array((0 until dim).map(d => dimCol(h, d)): _*))
   }
 
+  /** [[embed]]'s output expression, analyzed once over an empty
+    * one-string relation in the active session and bound to its column:
+    * the same expression tree the index build runs, evaluated per text.
+    */
+  private lazy val bound: Expression = {
+    val spark = SparkSession.active
+    val in = spark.createDataFrame(java.util.List.of[Row](), new StructType().add("t", StringType))
+    val plan = embed(in, "t", "e").queryExecution.analyzed.asInstanceOf[Project]
+    val e = plan.projectList.last match { case a: Alias => a.child; case other => other }
+    BindReferences.bindReference(e, plan.child.output)
+  }
+
+  def embedText(text: String): Seq[Double] =
+    bound.eval(InternalRow(UTF8String.fromString(text))).asInstanceOf[ArrayData]
+      .toDoubleArray().toSeq
+
   /** The same per-dimension value as a DuckDB fragment over `hExpr`. */
   def dimSql(hExpr: String, d: Int): String =
     s"(CAST((($hExpr * ${2 * d + 3} + ${17L * d}) % $P) AS DOUBLE) / $P.0 - 0.5)"
@@ -39,32 +66,36 @@ object MockEmbedder extends Embedder {
   * partition (never per-row), request/response JSON shapes per the
   * reference (`embedding-from-server.c:15-38`, response parsed at
   * `:40-104`: outer array → first object → `embedding` → first row).
-  * Untestable in CI (zero egress) — exercised only via its pure parser.
+  * [[embedText]] sends the same request once from the driver.
   */
 class HttpEmbedder(host: String, port: Int, val dim: Int = 768) extends Embedder {
+  private val url = s"http://$host:$port/embedding"
+
   def embed(df: DataFrame, textCol: String, outCol: String): DataFrame = {
-    val url = s"http://$host:$port/embedding"
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
+    val url = this.url // the closure captures the string, not the embedder
     val schema = df.schema.add(outCol, ArrayType(DoubleType, containsNull = false))
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
     val idx = df.schema.fieldIndex(textCol)
-    val out = df.mapPartitions { rows =>
+    df.mapPartitions { rows =>
       val client = java.net.http.HttpClient.newHttpClient()
-      rows.map { r =>
-        val body = s"""{"content": ${HttpEmbedder.jsonStr(r.getString(idx))}}"""
-        val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-          .header("Content-Type", "application/json")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build()
-        val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString()).body()
-        Row.fromSeq(r.toSeq :+ HttpEmbedder.parseEmbedding(resp))
-      }
+      rows.map(r => Row.fromSeq(r.toSeq :+ HttpEmbedder.request(client, url, r.getString(idx))))
     }(enc)
-    out
   }
+
+  def embedText(text: String): Seq[Double] =
+    HttpEmbedder.request(java.net.http.HttpClient.newHttpClient(), url, text)
 }
 
 object HttpEmbedder {
+  /** One `/embedding` POST of `text` to `url` on `client`, parsed. */
+  def request(client: java.net.http.HttpClient, url: String, text: String): Seq[Double] = {
+    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+      .header("Content-Type", "application/json")
+      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(s"""{"content": ${jsonStr(text)}}""")).build()
+    parseEmbedding(client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString()).body())
+  }
+
   def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""

@@ -71,4 +71,24 @@ class CliSpec extends SparkSpec {
     assert(prompts(0).contains("Context 1:"))
     assert(prompts(1) == prompts(0))
   }
+
+  test("CLI: rag-repl over a .vdb index threads two turns offline") {
+    import graft.operators.Prompt
+    val idx = Files.createTempDirectory("cli-repl").toString + "/x.vdb"
+    val (c1, _) = runMain("", "build-index", s"$sf0001/documents.parquet", idx, "100")
+    assert(c1 == 0)
+    val (turn1, turn2) = ("key agg row scan", "parquet footer statistics")
+    val (code, out) = runMain(s"$turn1\n$turn2\n", "rag-repl", idx, "3")
+    assert(code == 0, out)
+    // offline, each turn echoes its prompt after the "> " input marker
+    val sep = Prompt.AssistantMsgStart + "\n> "
+    assert(out.startsWith("> ") && out.endsWith(sep), out)
+    val prompts = out.stripPrefix("> ").split(java.util.regex.Pattern.quote(sep)).toSeq
+    assert(prompts.size == 2, out)
+    assert(prompts.forall(p => p.startsWith(Prompt.SystemMsgStart) && p.contains("Context 1:")))
+    assert(prompts(0).endsWith(Prompt.UserMsgStart + turn1))
+    assert(prompts(1).endsWith(Prompt.UserMsgStart + turn2))
+    assert(prompts(1).contains(Prompt.UserMsgStart + turn1 + Prompt.AssistantMsgStart),
+      "turn 1's user text not threaded into turn 2's prompt")
+  }
 }

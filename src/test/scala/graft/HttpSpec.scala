@@ -75,6 +75,8 @@ class HttpSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](2)).toMap
       assert(out(1L) == fakeEmbed("alpha beta"))
       assert(out(2L) == fakeEmbed("a much longer piece of text here"))
+      // the driver's one-request path parses the same reply
+      assert(new HttpEmbedder(host, port, dim = 4).embedText("alpha beta") == fakeEmbed("alpha beta"))
     }
   }
 

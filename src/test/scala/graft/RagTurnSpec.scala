@@ -4,8 +4,9 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructType}
 import graft.operators.{Prompt, TopK}
 import graft.pipelines.{IndexBuild, MockEmbedder, Rag}
 
@@ -36,6 +37,20 @@ class RagTurnSpec extends SparkSpec {
     Rag.answer(spark, index, "chunk_id", "chunk", "embedding", MockEmbedder,
       query, conversation, K).head().getString(0)
 
+  /** The turn's prompt the distributed way: the query embedded by
+    * `MockEmbedder.embed`'s column, `TopK.nearest` collected, and
+    * `Prompt.assembleByOrder` run over the collected rows.
+    */
+  private def operatorsPrompt(idx: DataFrame, query: String, conversation: String, k: Int): String = {
+    import spark.implicits._
+    val qv = MockEmbedder.embed(Seq(query).toDF("q"), "q", "e").head().getSeq[Double](1)
+    val rows = TopK.nearest(idx, "embedding", "chunk_id", qv, k).collect()
+    assert(rows.length == math.min(k, idx.count()))
+    val topk = spark.createDataFrame(rows.toSeq.asJava, idx.schema.add("dist", "double"))
+    Prompt.assembleByOrder(topk, Seq(col("dist"), col("chunk_id")), "chunk",
+      conversation, query).head().getString(0)
+  }
+
   /** Jobs started under `group`, counted once the listener bus drains. */
   private final class JobCounter(group: String) extends SparkListener {
     @volatile var jobs = 0
@@ -58,19 +73,52 @@ class RagTurnSpec extends SparkSpec {
       ("parquet footer statistics", Prompt.conversationWithUserTurn("", "key agg row scan") + "an answer"))
     val prompts = turns.map { case (query, conversation) =>
       val prompt = turn(query, conversation)
-      val qv = Rag.embedQuery(spark, MockEmbedder, query)
-      val rows = TopK.nearest(index, "embedding", "chunk_id", qv, K).collect()
-      assert(rows.length == K)
-      val topk = spark.createDataFrame(rows.toSeq.asJava, index.schema.add("dist", "double"))
-      val expected = Prompt.assembleByOrder(topk, Seq(col("dist"), col("chunk_id")), "chunk",
-        conversation, query).head().getString(0)
-      assert(prompt == expected, s"turn '$query' differs from its operators run one by one")
+      assert(prompt == operatorsPrompt(index, query, conversation, K),
+        s"turn '$query' differs from its operators run one by one")
       prompt
     }
     assert(prompts.distinct.size == 2)
   }
 
-  test("a warm turn runs 1 job of 2 stages and compiles no code") {
+  test("edge index: NULL chunk, NULL and zero embeddings, k past the row count, empty index") {
+    val schema = new StructType().add("chunk_id", LongType, nullable = false)
+      .add("chunk", StringType).add("embedding", ArrayType(DoubleType, containsNull = false))
+    def e(t: String) = MockEmbedder.embedText(t)
+    val rows = Seq(
+      Row(1L, "alpha", e("alpha")), Row(2L, null, e("beta")), Row(3L, "gamma", null),
+      Row(4L, "zero", Seq.fill(MockEmbedder.dim)(0.0)), Row(5L, "delta", e("delta")),
+      Row(6L, "alpha again", e("alpha")))
+    val edge = spark.createDataFrame(rows.asJava, schema)
+    val empty = spark.createDataFrame(java.util.List.of[Row](), schema)
+    val conversation = Prompt.conversationWithUserTurn("", "earlier") + "an answer"
+    for ((idx, name) <- Seq(edge -> "edge", empty -> "empty"); k <- Seq(3, 10);
+         query <- Seq("alpha", "beta")) {
+      val prompt = Rag.answer(spark, idx, "chunk_id", "chunk", "embedding", MockEmbedder,
+        query, conversation, k).head().getString(0)
+      assert(prompt == operatorsPrompt(idx, query, conversation, k), s"$name index, k=$k, '$query'")
+    }
+    // k past the row count: every row keeps a label, the NULL chunk adds no text
+    val all = Rag.answer(spark, edge, "chunk_id", "chunk", "embedding", MockEmbedder,
+      "beta", "", 10).head().getString(0)
+    assert((1 to rows.size).count(i => all.contains(s"Context $i:\n")) == rows.size - 1)
+    assert(Rag.answer(spark, empty, "chunk_id", "chunk", "embedding", MockEmbedder,
+      "beta", "", 10).head().getString(0) ==
+      Prompt.SystemMsgStart + Prompt.conversationWithUserTurn("", "beta"))
+  }
+
+  test("MockEmbedder.embedText equals embed's column bit for bit") {
+    import spark.implicits._
+    val texts = docs.select("text").as[String].collect().toSeq ++
+      Seq("", " ", "naïve café — 東京 \uD83D\uDE00", "xyz0123456789" * 770)
+    assert(texts.last.length > 10000)
+    val planned = MockEmbedder.embed(texts.toDF("t"), "t", "e").collect()
+      .map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
+    def bits(v: Seq[Double]) = v.map(java.lang.Double.doubleToRawLongBits)
+    for (t <- texts)
+      assert(bits(MockEmbedder.embedText(t)) == bits(planned(t)), s"text '${t.take(40)}'")
+  }
+
+  test("a warm turn runs 1 job of 1 stage and compiles no code") {
     turn("warm the planner and the code cache", "")
     val counter = new JobCounter("rag-turn-spec")
     spark.sparkContext.addSparkListener(counter)
@@ -82,7 +130,7 @@ class RagTurnSpec extends SparkSpec {
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       drainListenerBus()
       assert(counter.jobs == 1, s"${counter.jobs} jobs")
-      assert(counter.stages == 2, s"${counter.stages} stages")
+      assert(counter.stages == 1, s"${counter.stages} stages")
       assert(compiles == 0, s"$compiles codegen compiles")
     } finally spark.sparkContext.removeSparkListener(counter)
   }
