@@ -105,7 +105,7 @@ object GraftLimits {
     * only bounds a blocked self-join while distinct(key) grows with N;
     * a saturating key (low-order chars, small enums) silently turns
     * the "blocked" join quadratic. Until round 16 that precondition
-    * lived in scaladoc (`CurationQueries37.linkagePairs2`); this makes
+    * lived in scaladoc (`LinkageQueries.linkagePairs2`); this makes
     * the multi-pass blocking pattern self-policing like the vocab
     * collect gate above.
     *

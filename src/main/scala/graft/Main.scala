@@ -76,6 +76,24 @@ object Main {
     answer
   }
 
+  /** The stdin loop of `rag-repl` and `conversation`: one turn per
+    * non-empty line. A turn commits its state only after it succeeds,
+    * so one transient embed or completion failure is reported and the
+    * loop goes on with the conversation unchanged.
+    */
+  private def repl(turn: String => Unit): Unit = {
+    val stdin = scala.io.Source.stdin.getLines()
+    print("> "); Console.flush()
+    while (stdin.hasNext) {
+      val line = stdin.next()
+      if (line.nonEmpty) try turn(line) catch {
+        case scala.util.control.NonFatal(e) =>
+          Console.err.println(s"[graft] turn failed: ${e.getMessage}; conversation unchanged")
+      }
+      print("> "); Console.flush()
+    }
+  }
+
   def main(args: Array[String]): Unit = args.toList match {
     case "build-index" :: in :: out :: chunkLen :: rest =>
       val spark = GraftSession()
@@ -108,23 +126,12 @@ object Main {
       val idx = openIndex(spark, index).persist()
       idx.count() // warm the cache once, like the reference's startup read
       var conversation = ""
-      val stdin = scala.io.Source.stdin.getLines()
-      print("> "); Console.flush()
-      while (stdin.hasNext) {
-        val line = stdin.next()
-        // one transient embed/completion failure must not kill the REPL or
-        // lose the accumulated conversation: report, keep state, next turn
-        if (line.nonEmpty) try {
-          val prompt = Rag.answer(spark, idx, "chunk_id", "chunk", "embedding",
-            embedderOf(rest), line, conversation, k.toInt).head().getString(0)
-          val answer = complete(rest, prompt)
-          conversation = Completion.addLlmResponse(
-            graft.operators.Prompt.conversationWithUserTurn(conversation, line), answer)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            Console.err.println(s"[graft] turn failed: ${e.getMessage}; conversation unchanged")
-        }
-        print("> "); Console.flush()
+      repl { line =>
+        val prompt = Rag.answer(spark, idx, "chunk_id", "chunk", "embedding",
+          embedderOf(rest), line, conversation, k.toInt).head().getString(0)
+        val answer = complete(rest, prompt)
+        conversation = Completion.addLlmResponse(
+          graft.operators.Prompt.conversationWithUserTurn(conversation, line), answer)
       }
       spark.stop()
 
@@ -139,22 +146,11 @@ object Main {
       // echoed (and recorded as the answer) so the loop is testable.
       var prompt = ""
       var response: Option[String] = None
-      val stdin = scala.io.Source.stdin.getLines()
-      print("> "); Console.flush()
-      while (stdin.hasNext) {
-        val line = stdin.next()
-        // state (prompt, response) commits only after a successful turn —
-        // a transient HTTP failure leaves the conversation unchanged
-        if (line.nonEmpty) try {
-          val newPrompt = graft.operators.Prompt.updateConversationOnlyPrompt(line, response, prompt)
-          val answer = complete(rest, newPrompt)
-          prompt = newPrompt
-          response = Some(answer)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            Console.err.println(s"[graft] turn failed: ${e.getMessage}; conversation unchanged")
-        }
-        print("> "); Console.flush()
+      repl { line =>
+        val newPrompt = graft.operators.Prompt.updateConversationOnlyPrompt(line, response, prompt)
+        val answer = complete(rest, newPrompt)
+        prompt = newPrompt
+        response = Some(answer)
       }
 
     case "embed" :: text :: rest =>

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Queries are assembled from per-area registries under `graft.queries`.
+  * Queries are assembled from the domain modules under `graft.queries`.
   */
 object SparkEntry {
 
@@ -11,68 +11,13 @@ object SparkEntry {
   def registry: Seq[QueryDef] =
     queries_registry
 
-  private lazy val queries_registry: Seq[QueryDef] =
-    graft.queries.VectorQueries.all ++
-      graft.queries.TextQueries.all ++
-      graft.queries.PromptQueries.all ++
-      graft.queries.RelationalQueries.all ++
-      graft.queries.EventQueries.all ++
-      graft.queries.TextStatsQueries.all ++
-      graft.queries.TextStatsQueries2.all ++
-      graft.queries.DedupQueries.all ++
-      graft.queries.AnnQueries.all ++
-      graft.queries.PipelineQueries.all ++
-      graft.queries.MultimodalQueries.all ++
-      graft.queries.RelationalQueries2.all ++
-      graft.queries.RelationalQueries3.all ++
-      graft.queries.WindowQueries.all ++
-      graft.queries.AsOfQueries.all ++
-      graft.queries.SubqueryQueries.all ++
-      graft.queries.PivotQueries.all ++
-      graft.queries.TimeSeriesQueries.all ++
-      graft.queries.CorpusQueries.all ++
-      graft.queries.CurationQueries.all ++
-      graft.queries.CurationQueries2.all ++
-      graft.queries.CurationQueries3.all ++
-      graft.queries.CurationQueries4.all ++
-      graft.queries.CurationQueries5.all ++
-      graft.queries.CurationQueries6.all ++
-      graft.queries.CurationQueries7.all ++
-      graft.queries.CurationQueries8.all ++
-      graft.queries.CurationQueries9.all ++
-      graft.queries.CurationQueries10.all ++
-      graft.queries.CurationQueries11.all ++
-      graft.queries.CurationQueries12.all ++
-      graft.queries.CurationQueries13.all ++
-      graft.queries.CurationQueries14.all ++
-      graft.queries.CurationQueries15.all ++
-      graft.queries.CurationQueries16.all ++
-      graft.queries.CurationQueries17.all ++
-      graft.queries.CurationQueries18.all ++
-      graft.queries.CurationQueries19.all ++
-      graft.queries.CurationQueries20.all ++
-      graft.queries.CurationQueries21.all ++
-      graft.queries.CurationQueries22.all ++
-      graft.queries.CurationQueries23.all ++
-      graft.queries.CurationQueries24.all ++
-      graft.queries.CurationQueries25.all ++
-      graft.queries.CurationQueries26.all ++
-      graft.queries.CurationQueries27.all ++
-      graft.queries.CurationQueries28.all ++
-      graft.queries.AnnQueries2.all ++
-      graft.queries.CurationQueries29.all ++
-      graft.queries.EventQueries2.all ++
-      graft.queries.CurationQueries30.all ++
-      graft.queries.CurationQueries31.all ++
-      graft.queries.CurationQueries32.all ++
-      graft.queries.CurationQueries33.all ++
-      graft.queries.CurationQueries34.all ++
-      graft.queries.PqQueries.all ++
-      graft.queries.PerceptualQueries.all ++
-      graft.queries.CurationQueries35.all ++
-      graft.queries.CurationQueries36.all ++
-      graft.queries.CurationQueries37.all ++
-      graft.queries.CurationQueries38.all
+  private lazy val queries_registry: Seq[QueryDef] = {
+    import graft.queries._
+    Seq(RagQueries.all, VectorQueries.all, AnnQueries.all, DedupQueries.all, NearDupQueries.all,
+      DecontamQueries.all, TextStatsQueries.all, TokenizerQueries.all, QualityQueries.all,
+      MixingQueries.all, LinkageQueries.all, RelationalQueries.all, EventQueries.all,
+      MultimodalQueries.all).flatten
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -32,11 +32,8 @@ object Dedup {
     * keeps the reduce-side aggregation map comfortably inside a
     * default executor share even when the optimizer's estimate is a
     * few-x low (explode-stage stats are propagated, not recounted).
-    * Override per session via `spark.graft.agg.targetPartitionBytes`.
     */
-  private def targetAggBytesPerPartition(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.agg.targetPartitionBytes")
-      .map(_.toLong).getOrElse(64L << 20)
+  private val TargetAggBytesPerPartition: Long = 64L << 20
 
   /** Narrow CONTENT KEY for "group identical strings" operators:
     * (xxhash64, md5, length) — 192+ bits of independent evidence, so
@@ -243,6 +240,18 @@ object Dedup {
       .withColumn("jaccard",
         col("i").cast("double") / (col("ca") + col("cb") - col("i")))
 
+  /** The near-duplicate rule of every MinHash query: candidate pairs
+    * verified against the exact shingle sets, kept at Jaccard ≥ 0.2.
+    */
+  def verifiedPairs(pairs: DataFrame, sets: DataFrame, idCol: String): DataFrame =
+    jaccardForPairsSets(pairs, sets, idCol).filter(col("jaccard") >= 0.2)
+
+  /** MinHash → LSH band candidates → [[verifiedPairs]] over the per-id
+    * sorted sets (idCol, hset) of [[shingleSets]].
+    */
+  def minhashPairs(sets: DataFrame, idCol: String): DataFrame =
+    verifiedPairs(lshCandidates(minhashFromSets(sets, idCol), idCol), sets, idCol)
+
   /** Exact n-gram Jaccard pairs at/above a threshold, blocked on shared
     * shingle hashes (never a cross join). The intersection count falls
     * directly out of the blocking join — one self-join total, no
@@ -293,7 +302,7 @@ object Dedup {
     // "the exchanges were never the 1x cost").
     val sizeEst = hs.queryExecution.optimizedPlan.stats.sizeInBytes
     val minParts =
-      (sizeEst / targetAggBytesPerPartition(hs)).min(65536).toInt + 1
+      (sizeEst / TargetAggBytesPerPartition).min(65536).toInt + 1
     val sessionParts = hs.sparkSession.sessionState.conf.numShufflePartitions
     val keyed = if (minParts > sessionParts) hs.repartition(minParts, col("h"))
       else hs

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Persisted training artifacts — the CROSS-SESSION half of the
   * train-once story (round-11; the in-session half is the
-  * (dir, split)-keyed memo in [[graft.queries.CurationQueries33]] /
-  * [[graft.queries.TextStatsQueries]]). A real pipeline trains its
+  * (dir, split)-keyed memo in [[graft.queries.QualityQueries]] /
+  * [[graft.queries.TokenizerQueries]]). A real pipeline trains its
   * learned components once and ships them as small files; inference
   * sessions — batch or streaming — load them and never touch the
   * training corpus (the reference's pluggable-metric extension point,

@@ -1,38 +1,55 @@
 package graft.queries
 
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.QuantizedL2Expr
+import graft.operators.IvfIndex
 import graft.functions.VectorFunctions._
 
-/** Similarity search over the `embeddings` fixture.
+/** Approximate nearest-neighbour search and clustering over the
+  * `embeddings` fixture: batched exact top-k, centroids, IVF (in-session,
+  * physically partitioned, loaded from artifacts, batched serving and
+  * version rotation), k-means, filtered search, and the cluster and
+  * recall evals (silhouette, separation, drift, outliers, nDCG, LID).
   *
-  * - `q_ann_topk`: brute-force exact top-k for a *batch* of query vectors
-  *   — the tiny query side is broadcast against the (at scale,
-  *   partitioned) vector table; per-query ranking via window row_number.
-  * - `q_centroids` / `q_centroid_spread`: per-label centroids and mean
-  *   squared distance — k-means-style building blocks. Order-independence
-  *   across engines: each float-origin value is scaled by a power of two
-  *   (exact) and floored to BIGINT, so sums are exact integer arithmetic
-  *   (DECIMAL casts of full-precision doubles are NOT cross-engine safe:
-  *   DuckDB's cast rounds through double multiplication).
-  * - `q_ivf_topk`: IVF-style probe — assign the query to its nearest
-  *   centroid, then search only that partition. At 100 TB this is the
-  *   scale path: the vector table is bucketed by centroid id, a probe
-  *   touches 1/nlist of the data, and the centroid table is broadcast.
+  * Order independence across engines: each float-origin value is scaled
+  * by a power of two (exact) and floored to BIGINT before any sum, so
+  * aggregates are exact integer arithmetic (DECIMAL casts of
+  * full-precision doubles are not cross-engine safe: DuckDB's cast
+  * rounds through a double multiplication). Cluster assignment is the
+  * quantized-L2 argmin of [[graft.operators.IvfIndex]], ties to the
+  * lower id. At scale the vector table is bucketed by cluster, a probe
+  * reads only its cells' files, and the centroid table is broadcast.
   */
 object AnnQueries {
 
-  private val Dim = 64
+  /** The seed codebook every IVF query builds from: vectors 0..7 as
+    * clusters 0..7. */
+  private def seedCentroids(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cluster"), col("embedding").as("cv"))
 
-  /** 2^52: exact power-of-two scale for float-origin values (any |x| >=
-    * 2^-29 scales to an exact integer; fixture min |x| ~ 8e-6). */
-  private val S52 = "4503599627370496.0"
-  private val S52d = 4503599627370496.0
-  /** 2^45: scale for squared-term quantization (terms < 4, 32k-row sums
-    * stay far inside BIGINT). */
-  private val S45 = "35184372088832.0"
-  private val S45d = 35184372088832.0
+  /** The 5 rows nearest to `q` by cosine distance, vector 0 (the query
+    * itself) excluded, ties to the lower vec_id. */
+  private def nearest5(rows: DataFrame, q: Column): DataFrame =
+    rows.filter(col("vec_id") =!= 0)
+      .withColumn("dist", cosineDistance(col("embedding"), q))
+      .orderBy(col("dist").asc, col("vec_id").asc)
+      .limit(5)
+
+  /** Serve vector 0 from the IVF index at `indexDir`: only the files of
+    * the `nprobe` cells whose `centroids` are nearest to it are scanned
+    * (the literal `IN` on the partition column prunes at planning). */
+  private def probeTop5(spark: SparkSession, emb: DataFrame, centroids: DataFrame,
+      indexDir: String, nprobe: Int): DataFrame = {
+    val qvec = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
+    nearest5(IvfIndex.probe(spark, indexDir, IvfIndex.nearestClusters(centroids, qvec, nprobe)),
+        array(qvec.map(lit): _*))
+      .select(col("cluster").cast("long").as("probe_cluster"),
+        col("vec_id").as("nid"), col("dist"))
+  }
 
   val annTopk: QueryDef = QueryDef.sql(
     "q_ann_topk",
@@ -150,11 +167,7 @@ object AnnQueries {
       .groupBy("label").agg(sum(col("t")).as("d2"))
       .orderBy(col("d2").asc, col("label").asc).limit(1)
       .select(col("label").as("probe_label"))
-    emb.join(broadcast(best), emb("label") === col("probe_label"))
-      .filter(col("vec_id") =!= 0)
-      .withColumn("dist", cosineDistance(col("embedding"), qlit))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(5)
+    nearest5(emb.join(broadcast(best), emb("label") === col("probe_label")), qlit)
       .select(col("probe_label"), col("vec_id").as("nid"), col("dist"))
   }
 
@@ -195,26 +208,14 @@ object AnnQueries {
        |WHERE e.vec_id <> 0
        |ORDER BY dist, e.vec_id
        |LIMIT 5""".stripMargin) { (spark, dir) =>
-    import graft.operators.IvfIndex
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val seeds = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cluster"), col("embedding").as("cv"))
+    val seeds = seedCentroids(emb)
     // physical index: one assignment pass + partitioned write; the dir is
     // keyed by applicationId + sf dir so concurrent harness processes
     // never race on the same build/overwrite
     val indexDir = s"/tmp/graft_ivf/${spark.sparkContext.applicationId}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
     IvfIndex.build(emb, seeds, indexDir)
-    val qvec = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val best = IvfIndex.nearestCluster(seeds, qvec)
-    val qlit = array(qvec.map(lit): _*)
-    // pruned probe: only cluster=<best> files are scanned
-    IvfIndex.probe(spark, indexDir, Seq(best))
-      .filter(col("vec_id") =!= 0)
-      .withColumn("dist", cosineDistance(col("embedding"), qlit))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(5)
-      .select(col("cluster").cast("long").as("probe_cluster"),
-        col("vec_id").as("nid"), col("dist"))
+    probeTop5(spark, emb, seeds, indexDir, 1)
   }
 
   /** nprobe=2 variant of [[ivfPruned]]: the probe widens to the two
@@ -248,24 +249,28 @@ object AnnQueries {
        |WHERE e.vec_id <> 0
        |ORDER BY dist, e.vec_id
        |LIMIT 5""".stripMargin) { (spark, dir) =>
-    import graft.operators.IvfIndex
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val seeds = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cluster"), col("embedding").as("cv"))
+    val seeds = seedCentroids(emb)
     // own index dir: gate queries run concurrently, never share a sink
     val indexDir = s"/tmp/graft_ivf_np/${spark.sparkContext.applicationId}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
     IvfIndex.build(emb, seeds, indexDir)
-    val qvec = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val probed = IvfIndex.nearestClusters(seeds, qvec, 2)
-    val qlit = array(qvec.map(lit): _*)
-    IvfIndex.probe(spark, indexDir, probed)
-      .filter(col("vec_id") =!= 0)
-      .withColumn("dist", cosineDistance(col("embedding"), qlit))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(5)
-      .select(col("cluster").cast("long").as("probe_cluster"),
-        col("vec_id").as("nid"), col("dist"))
+    probeTop5(spark, emb, seeds, indexDir, 2)
   }
+
+  /** One Lloyd centroid UPDATE: exact per-dim means of each cluster's
+    * members (2^52 quantization), re-assembled into dim-ordered centroid
+    * arrays `(cluster, cv)`. Shared by [[kmeans]] and [[ivfKmeans]].
+    */
+  private[graft] def lloydUpdate(emb: org.apache.spark.sql.DataFrame,
+                                 asg: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    asg.join(emb, "vec_id")
+      .select(col("cluster"), posexplode(col("embedding")).as(Seq("i0", "x")))
+      .select(col("cluster"), col("i0"), floor(col("x") * S52d).cast("long").as("ix"))
+      .groupBy("cluster", "i0")
+      .agg((sum(col("ix").cast("decimal(38,0)")).cast("double") / S52d / count(lit(1))).as("c"))
+      .groupBy("cluster")
+      .agg(transform(array_sort(collect_list(struct(col("i0"), col("c")))),
+        e => e.getField("c")).as("cv"))
 
   /** k-means (Lloyd), 2 iterations, k=8, deterministic seeds (vec_id
     * 0..7) — the clustering step of corpus curation (topic balancing,
@@ -302,7 +307,6 @@ object AnnQueries {
        |  SELECT vec_id, cluster, d2,
        |         row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
        |  FROM a2) WHERE rn = 1""".stripMargin) { (spark, dir) =>
-    import graft.functions.QuantizedL2Expr
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     def assign(cents: org.apache.spark.sql.DataFrame) = {
       val w = Window.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cluster").asc)
@@ -313,26 +317,10 @@ object AnnQueries {
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("cluster"), col("d2"))
     }
-    val cent0 = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cluster"), col("embedding").as("cv"))
+    val cent0 = seedCentroids(emb)
     val asg1 = assign(cent0).drop("d2")
     assign(lloydUpdate(emb, asg1))
   }
-
-  /** One Lloyd centroid UPDATE: exact per-dim means of each cluster's
-    * members (2^52 quantization), re-assembled into dim-ordered centroid
-    * arrays `(cluster, cv)`. Shared by [[kmeans]] and [[ivfKmeans]].
-    */
-  private[graft] def lloydUpdate(emb: org.apache.spark.sql.DataFrame,
-                                 asg: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    asg.join(emb, "vec_id")
-      .select(col("cluster"), posexplode(col("embedding")).as(Seq("i0", "x")))
-      .select(col("cluster"), col("i0"), floor(col("x") * S52d).cast("long").as("ix"))
-      .groupBy("cluster", "i0")
-      .agg((sum(col("ix").cast("decimal(38,0)")).cast("double") / S52d / count(lit(1))).as("c"))
-      .groupBy("cluster")
-      .agg(transform(array_sort(collect_list(struct(col("i0"), col("c")))),
-        e => e.getField("c")).as("cv"))
 
   /** The `q_ivf_kmeans` trained codebook as a standalone frame — the
     * artifact a training session hands to [[graft.pipelines.ModelArtifacts
@@ -343,9 +331,8 @@ object AnnQueries {
   private[graft] def ivfCodebook(spark: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val seeds0 = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cluster"), col("embedding").as("cv"))
-    lloydUpdate(emb, graft.operators.IvfIndex.assign(emb, seeds0))
+    val seeds0 = seedCentroids(emb)
+    lloydUpdate(emb, IvfIndex.assign(emb, seeds0))
   }
 
   /** The full production ANN path in one query: TRAIN a codebook (one
@@ -393,10 +380,8 @@ object AnnQueries {
        |WHERE e.vec_id <> 0
        |ORDER BY dist, e.vec_id
        |LIMIT 5""".stripMargin) { (spark, dir) =>
-    import graft.operators.IvfIndex
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val seeds0 = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cluster"), col("embedding").as("cv"))
+    val seeds0 = seedCentroids(emb)
     // the trained codebook is k×dim (KB-sized at any corpus size) but its
     // LINEAGE is the whole Lloyd chain; localCheckpoint materializes the
     // training once so the index build and the probe-side collect don't
@@ -409,16 +394,7 @@ object AnnQueries {
     val cent1 = lloydUpdate(emb, IvfIndex.assign(emb, seeds0)).localCheckpoint()
     val indexDir = s"/tmp/graft_ivf_km/${spark.sparkContext.applicationId}/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
     IvfIndex.build(emb, cent1, indexDir)
-    val qvec = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val best = IvfIndex.nearestClusters(cent1, qvec, 1)
-    val qlit = array(qvec.map(lit): _*)
-    IvfIndex.probe(spark, indexDir, best)
-      .filter(col("vec_id") =!= 0)
-      .withColumn("dist", cosineDistance(col("embedding"), qlit))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(5)
-      .select(col("cluster").cast("long").as("probe_cluster"),
-        col("vec_id").as("nid"), col("dist"))
+    probeTop5(spark, emb, cent1, indexDir, 1)
   }
 
   /** Nearest-centroid classifier eval over the fixture's `label`
@@ -448,7 +424,6 @@ object AnnQueries {
        |           FROM a) WHERE rn = 1)
        |SELECT CAST(label AS BIGINT) AS label, CAST(pred AS BIGINT) AS pred, count(*) AS n
        |FROM pred GROUP BY 1, 2""".stripMargin) { (spark, dir) =>
-    import graft.functions.QuantizedL2Expr
     val emb = Tables.embeddings(spark, dir)
     // label centroids = one Lloyd update seeded by the true labels
     val cents = lloydUpdate(emb.select(col("vec_id"), col("embedding")),
@@ -498,11 +473,8 @@ object AnnQueries {
        |       CAST(sum(CASE WHEN s1.d2 > f.fence_d2 THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
        |FROM s1 JOIN f ON f.cluster = s1.cluster
        |GROUP BY f.cluster, f.n_vecs, f.fence_d2""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.QuantizedL2Expr
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val seeds = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cluster"), col("embedding").as("cv"))
+    val seeds = seedCentroids(emb)
     val wv = Window.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cluster").asc)
     val s1 = emb.crossJoin(broadcast(seeds))
       .select(col("vec_id"), col("cluster"),
@@ -663,6 +635,7 @@ object AnnQueries {
   private val DcgW = Seq(1099511627776L, 693714600361L, 549755813888L,
     473533883412L, 425349159792L, 391653944122L, 366503875925L,
     346857300180L, 330985980541L, 317830137717L)
+
   private val Idcg = DcgW.sum // 4995696323714
 
   /** RANKING-QUALITY eval of the 1-probe IVF search: nDCG@10 and MRR
@@ -772,7 +745,7 @@ object AnnQueries {
        |       CAST(max(s_q20) AS BIGINT) AS max_s_q20
        |FROM s GROUP BY 1""".stripMargin) { (spark, dir) =>
     // ed feeds the centroid build AND the distance join — one explode
-    // pass (round 16; durability: round-12 ledger class)
+    // pass (durability: lineage-severed, non-replicated)
     val ed = Tables.embeddings(spark, dir)
       .select(col("label"), col("vec_id"), posexplode(col("embedding")).as(Seq("i0", "x")))
       .select(col("label"), col("vec_id"), (col("i0") + 1).as("i"), col("x"))
@@ -857,7 +830,300 @@ object AnnQueries {
           * lit(1048576.0)).cast("long").as("lid_q20"))
   }
 
-  val all: Seq[QueryDef] = Seq(annTopk, annNdcg, centroids, centroidSpread, ivfTopk,
-    ivfPruned, ivfNprobe, ivfKmeans, kmeans, centroidClassify, embedOutliers,
-    clusterSeparation, embedDrift, silhouette, annLid)
+  /** FILTERED ANN — label-constrained top-5 for 10 queries, two ways:
+    * PRE-FILTER (restrict to the label, then rank — the correct
+    * answer, and at scale the reason metadata must live in the index
+    * as a partition/bucket key) vs POST-FILTER (take the global
+    * top-20, then keep the label — the cheap pattern that silently
+    * loses recall when the constraint is selective). Reported per
+    * query: candidate pool size, post-filter hits against the
+    * pre-filter truth, and recall in bp. The recall loss GROWS as the
+    * label's share of the corpus shrinks — and the fixture DEMONSTRATES
+    * the cliff: with ~10 labels (each ~10% of the corpus) the global
+    * top-20 holds few same-label vectors, and measured post-filter
+    * recall averages ~40% with one query at 0% — the number that
+    * forbids post-filtering for selective constraints. SCALE: one
+    * broadcast-queries cosine pass (the `q_ann_topk` shape) feeding
+    * three qid-keyed windows — no second scan for the second
+    * strategy.
+    */
+  val filteredAnn: QueryDef = QueryDef.sql(
+    "q_filtered_ann",
+    s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |q AS (SELECT vec_id AS qid, label AS tgt, v AS qv FROM e WHERE vec_id < 10),
+       |d AS (SELECT qid, tgt, e.vec_id AS nid, e.label AS lbl,
+       |             ${cosDistSql("e.v", "q.qv")} AS dist
+       |      FROM e, q WHERE e.vec_id <> q.qid),
+       |r AS (SELECT qid, tgt, nid, lbl, dist,
+       |             row_number() OVER (PARTITION BY qid ORDER BY dist, nid) AS rg,
+       |             row_number() OVER (PARTITION BY qid, lbl ORDER BY dist, nid) AS rl
+       |      FROM d),
+       |truth AS (SELECT qid, nid FROM r WHERE lbl = tgt AND rl <= 5),
+       |post AS (SELECT qid, nid FROM (
+       |           SELECT qid, nid,
+       |                  row_number() OVER (PARTITION BY qid ORDER BY rg) AS rp
+       |           FROM r WHERE rg <= 20 AND lbl = tgt) p WHERE rp <= 5),
+       |pool AS (SELECT qid, count(*) AS n_label FROM r WHERE lbl = tgt GROUP BY qid),
+       |hits AS (SELECT t.qid, count(p.nid) AS hits, count(*) AS n_truth
+       |         FROM truth t LEFT JOIN post p ON p.qid = t.qid AND p.nid = t.nid
+       |         GROUP BY t.qid)
+       |SELECT q.qid, q.tgt AS target_label,
+       |       CAST(pool.n_label AS BIGINT) AS n_label,
+       |       CAST(hits.n_truth AS BIGINT) AS n_truth,
+       |       CAST(hits.hits AS BIGINT) AS hits,
+       |       CAST(hits.hits * 10000 // hits.n_truth AS BIGINT) AS recall_bp
+       |FROM q JOIN pool ON pool.qid = q.qid JOIN hits ON hits.qid = q.qid""".stripMargin) { (spark, dir) =>
+    val emb = Tables.embeddings(spark, dir)
+    val qs = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("label").as("tgt"), col("embedding").as("qv"))
+    val d = emb.crossJoin(broadcast(qs))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("tgt"), col("vec_id").as("nid"), col("label").as("lbl"),
+        cosineDistance(col("embedding"), col("qv")).as("dist"))
+    val wg = Window.partitionBy("qid").orderBy(col("dist"), col("nid"))
+    val wl = Window.partitionBy("qid", "lbl").orderBy(col("dist"), col("nid"))
+    val r = d.withColumn("rg", row_number().over(wg))
+      .withColumn("rl", row_number().over(wl))
+    val truth = r.filter(col("lbl") === col("tgt") && col("rl") <= 5)
+      .select(col("qid"), col("nid"))
+    val post = r.filter(col("rg") <= 20 && col("lbl") === col("tgt"))
+      .withColumn("rp", row_number().over(Window.partitionBy("qid").orderBy("rg")))
+      .filter(col("rp") <= 5).select(col("qid").as("pqid"), col("nid").as("pnid"))
+    val pool = r.filter(col("lbl") === col("tgt"))
+      .groupBy("qid").agg(count(lit(1)).as("n_label"))
+    // recall denominator is the ACTUAL truth-set size per query (≤ 5):
+    // a label with fewer than 5 same-label neighbors would make a
+    // hardcoded /5 misreport recall as forever under 100% even when post-filter
+    // found every truth row
+    val hits = truth
+      .join(post, col("pqid") === col("qid") && col("pnid") === col("nid"), "left")
+      .groupBy("qid").agg(count(col("pnid")).as("hits"), count(lit(1)).as("n_truth"))
+    qs.select(col("qid"), col("tgt").as("target_label"))
+      .join(pool, "qid").join(hits, "qid")
+      .select(col("qid"), col("target_label"), col("n_label"), col("n_truth"),
+        col("hits"), expr("hits * 10000 DIV n_truth").as("recall_bp"))
+  }
+
+  /** ARTIFACT-BACKED IVF serving — `q_ivf_kmeans` split at
+    * the deployment seam: TRAIN the codebook, PERSIST it
+    * ([[graft.pipelines.ModelArtifacts.saveCentroids]]), then build the
+    * physical index AND answer the probe entirely from the LOADED
+    * artifact — the reference's build-once serve-many shape
+    * (multirag.c:359 reads the prebuilt index at startup;
+    * build-vector-db-from-server.c:69-75 is the build job). The oracle
+    * is `q_ivf_kmeans`'s SQL verbatim, so the driver's hash gate
+    * demands the artifact round-trip be EXACT (doubles through parquet
+    * — bit-preserving). Training executes exactly ONCE here: the
+    * artifact write is the materialization barrier (the role the
+    * localCheckpoint plays in `q_ivf_kmeans`), and both the probe-side
+    * collect and the index build read the parquet copy. SCALE: the
+    * artifact is k×dim at any corpus size; index build is one
+    * broadcast-assignment write; the probe scans only the matched
+    * partition (partition pruning — the `q_ivf_pruned` evidence).
+    */
+  val ivfProbeArtifact: QueryDef = QueryDef.sql(
+    "q_ivf_probe_artifact",
+    ivfKmeans.oracle.get) { (spark, dir) =>
+    val base = s"/tmp/graft_artifacts/${spark.sparkContext.applicationId}/" +
+      dir.replaceAll("[^A-Za-z0-9.]", "_")
+    graft.pipelines.ModelArtifacts.saveCentroids(spark,
+      ivfCodebook(spark, dir), s"$base/ivf_centroids.parquet")
+    val loaded = graft.pipelines.ModelArtifacts
+      .loadCentroids(spark, s"$base/ivf_centroids.parquet")
+    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    IvfIndex.build(emb, loaded, s"$base/ivf_idx")
+    probeTop5(spark, emb, loaded, s"$base/ivf_idx", 1)
+  }
+
+  /** nprobe>1 over the LOADED artifact:
+    * `q_ivf_probe_artifact` proved the persisted-codebook serve path at
+    * nprobe=1, but the knob users actually turn on a serving IVF is
+    * nprobe — this twin widens the loaded-centroid probe to the two
+    * nearest clusters, `IN`-pruned at the partition filter exactly like
+    * the in-session `q_ivf_nprobe` (whose oracle SQL it reuses
+    * verbatim, so the driver's hash gate proves save→load→nprobe-serve
+    * is bit-identical to training in-session). Uses the same seed
+    * centroids as `q_ivf_nprobe` (vec_id 0..7): the artifact under test
+    * is the PERSISTENCE seam, not a different codebook. SCALE: the
+    * loaded frame is k×dim at any corpus size; widening nprobe scans
+    * nprobe/k of the corpus files — the recall/latency trade stays
+    * file-pruned, never a full scan (reference contrast:
+    * vector-db.c:165-168 always scans everything).
+    */
+  val ivfNprobeArtifact: QueryDef = QueryDef.sql(
+    "q_ivf_nprobe_artifact",
+    ivfNprobe.oracle.get) { (spark, dir) =>
+    val base = s"/tmp/graft_artifacts/${spark.sparkContext.applicationId}/" +
+      dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    val seeds = seedCentroids(emb)
+    graft.pipelines.ModelArtifacts.saveCentroids(spark, seeds,
+      s"$base/ivf_np_centroids.parquet")
+    val loaded = graft.pipelines.ModelArtifacts
+      .loadCentroids(spark, s"$base/ivf_np_centroids.parquet")
+    IvfIndex.build(emb, loaded, s"$base/ivf_np_idx")
+    probeTop5(spark, emb, loaded, s"$base/ivf_np_idx", 2)
+  }
+
+  /** BATCHED IVF serving — the [[graft.streaming.AnnStreams]] per-batch
+    * kernel as an oracle-gated registry query: FOUR query vectors
+    * (vec_id 0..3) each routed to their nprobe=2 nearest clusters and
+    * served top-5 from the partition-pruned index in ONE plan (the
+    * single-query `q_ivf_nprobe` generalizes to a query BATCH — the
+    * shape a serving fleet actually runs: per-trigger batches, not one
+    * driver round-trip per query; reference contrast: one full-table
+    * scan per REPL query, vector-db.c:165-168). The DuckDB oracle
+    * replays assignment, routing, exclusion and ranking in SQL, so the
+    * driver's hash gate proves the whole serving algebra — quantized-L2
+    * routing, self-match exclusion, (dist, nid) tie-break — bit-exact
+    * cross-engine. SCALE: routing fans each query over the k-row
+    * broadcast codebook; the probe reads nprobe/nlist of the index
+    * files (StreamingSpec pins the literal partition filter); the
+    * per-query top-5 is rank-over-(dist,nid) = WindowGroupLimit, and
+    * every per-qid partition is one probed cluster's members, never
+    * the corpus.
+    */
+  val annServeBatch: QueryDef = QueryDef.sql(
+    "q_ann_serve_batch",
+    s"""WITH ed AS (SELECT vec_id, i, embedding[i] AS x
+       |           FROM embeddings, UNNEST(range(1, ${Dim + 1})) t(i)),
+       |c0 AS (SELECT vec_id AS cluster, i, x AS c FROM ed WHERE vec_id < 8),
+       |a1 AS (SELECT ed.vec_id, c0.cluster,
+       |              CAST(sum(CAST(floor((ed.x - c0.c) * (ed.x - c0.c) * $S45) AS BIGINT)) AS BIGINT) AS d2
+       |       FROM ed JOIN c0 ON c0.i = ed.i GROUP BY 1, 2),
+       |rk AS (SELECT vec_id, cluster,
+       |              row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
+       |       FROM a1),
+       |s1 AS (SELECT vec_id, cluster FROM rk WHERE rn = 1),
+       |qp AS (SELECT vec_id AS qid, cluster FROM rk WHERE rn <= 2 AND vec_id < 4),
+       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
+       |      FROM embeddings WHERE vec_id < 4),
+       |cand AS (SELECT q.qid, e.vec_id AS nid, ${cosDistSql("e.v", "q.qv")} AS dist
+       |         FROM e JOIN s1 ON s1.vec_id = e.vec_id
+       |                JOIN qp ON qp.cluster = s1.cluster
+       |                JOIN q ON q.qid = qp.qid
+       |         WHERE e.vec_id <> q.qid),
+       |rkd AS (SELECT qid, nid, dist,
+       |               CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, nid) AS BIGINT) AS rank
+       |        FROM cand)
+       |SELECT qid, rank, nid, dist FROM rkd WHERE rank <= 5""".stripMargin) {
+    (spark, dir) =>
+      val base = s"/tmp/graft_artifacts/${spark.sparkContext.applicationId}/" +
+        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+      val seeds = seedCentroids(emb)
+      IvfIndex.build(emb, seeds, s"$base/serve_idx")
+      val queries = emb.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("qid"),
+          col("embedding").cast("array<double>").as("qv"))
+      graft.streaming.AnnStreams.servedTopK(
+        queries, seeds, s"$base/serve_idx", 5, 2)
+  }
+
+  /** One serving pipeline per index version for the [[annRotate]]
+    * oracle: assignment (quantized L2 argmin over that version's seed
+    * set), nprobe=2 routing, self-match exclusion, (dist, nid) ranking
+    * — the `q_ann_serve_batch` algebra with version-suffixed CTEs.
+    */
+  private def rotateVersionCtes(tag: String): String =
+    s"""a_$tag AS (SELECT ed.vec_id, c_$tag.cluster,
+       |              CAST(sum(CAST(floor((ed.x - c_$tag.c) * (ed.x - c_$tag.c) * $S45) AS BIGINT)) AS BIGINT) AS d2
+       |       FROM ed JOIN c_$tag ON c_$tag.i = ed.i GROUP BY 1, 2),
+       |rk_$tag AS (SELECT vec_id, cluster,
+       |              row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
+       |       FROM a_$tag),
+       |s1_$tag AS (SELECT vec_id, cluster FROM rk_$tag WHERE rn = 1),
+       |qp_$tag AS (SELECT vec_id AS qid, cluster FROM rk_$tag WHERE rn <= 2 AND vec_id < 4),
+       |cand_$tag AS (SELECT q.qid, e.vec_id AS nid, ${cosDistSql("e.v", "q.qv")} AS dist
+       |         FROM e JOIN s1_$tag ON s1_$tag.vec_id = e.vec_id
+       |                JOIN qp_$tag ON qp_$tag.cluster = s1_$tag.cluster
+       |                JOIN q ON q.qid = qp_$tag.qid
+       |         WHERE e.vec_id <> q.qid),
+       |rkd_$tag AS (SELECT qid, nid, dist,
+       |               CAST(row_number() OVER (PARTITION BY qid ORDER BY dist, nid) AS BIGINT) AS rank
+       |        FROM cand_$tag)""".stripMargin
+
+  /** INDEX ROTATION, oracle-gated: the versioned-manifest
+    * serving path as a registry query — publish v1 (seeds = vec_id<8),
+    * serve a query batch THROUGH THE MANIFEST POINTER, publish v2 (a
+    * retrain with seeds = vec_id 8..15), serve the same batch again;
+    * output is both batches tagged with the version that served them.
+    * The pointer is read back via [[graft.operators.IvfIndex
+    * .currentVersion]] after each publish — so the driver's hash gate
+    * proves the atomic-swap read path AND both versions' full serving
+    * algebra (assignment, routing, pruned probe, ranking) bit-exact
+    * cross-engine. StreamingSpec proves the same swap on a LIVE
+    * stream; this makes it part of the 246-query oracle surface.
+    * SCALE: identical to `q_ann_serve_batch` per version — k-row
+    * codebook broadcasts, the probe reads nprobe/nlist of the files,
+    * WindowGroupLimit top-k; the manifest read is one tiny driver-side
+    * file per trigger. Old versions stay intact on disk, so in-flight
+    * plans against the previous pointer stay consistent.
+    */
+  val annRotate: QueryDef = QueryDef.sql(
+    "q_ann_rotate",
+    s"""WITH ed AS (SELECT vec_id, i, embedding[i] AS x
+       |           FROM embeddings, UNNEST(range(1, ${Dim + 1})) t(i)),
+       |c_v1 AS (SELECT vec_id AS cluster, i, x AS c FROM ed WHERE vec_id < 8),
+       |c_v2 AS (SELECT vec_id AS cluster, i, x AS c FROM ed
+       |         WHERE vec_id >= 8 AND vec_id < 16),
+       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
+       |      FROM embeddings WHERE vec_id < 4),
+       |${rotateVersionCtes("v1")},
+       |${rotateVersionCtes("v2")}
+       |SELECT 'v1' AS index_version, qid, rank, nid, dist FROM rkd_v1 WHERE rank <= 5
+       |UNION ALL
+       |SELECT 'v2', qid, rank, nid, dist FROM rkd_v2 WHERE rank <= 5""".stripMargin) {
+    (spark, dir) =>
+      val base = s"/tmp/graft_artifacts/${spark.sparkContext.applicationId}/" +
+        dir.replaceAll("[^A-Za-z0-9.]", "_") + "/rotate"
+      // duplicate-subtree elimination: the rotation runs TWO full
+      // publishes + serves over the same corpus, and every consumer
+      // (per-version assign fan-out, index-write join, seed filters,
+      // query frames) would replay the embedding scan; one
+      // materialization feeds them all (durability: lineage-severed —
+      // a failed publish restarts the query).
+      val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+        .localCheckpoint()
+      def seeds(pred: org.apache.spark.sql.Column) = emb.filter(pred)
+        .select(col("vec_id").as("cluster"), col("embedding").as("cv"))
+      val queries = emb.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("qid"),
+          col("embedding").cast("array<double>").as("qv"))
+      // ONE argmin fan-out for BOTH versions: the two
+      // codebooks differ only in seed set, so one assign over the 16
+      // version-tagged seeds, grouped by (vec_id, ver), computes both
+      // assignments in a single corpus pass — identical values to the
+      // per-version assign (same kernel, evaluated per version tag).
+      val taggedSeeds = emb.filter(col("vec_id") < 16)
+        .select(when(col("vec_id") < 8, lit("v1")).otherwise(lit("v2")).as("ver"),
+          col("vec_id").as("cluster"), col("embedding").as("cv"))
+      val asgBoth = IvfIndex.assign(emb, taggedSeeds, by = Seq("ver")).localCheckpoint()
+      def asgFor(ver: String) = asgBoth.filter(col("ver") === ver).drop("ver")
+      // serve through the POINTER, never a hard-coded version path —
+      // the read-back is the thing under test
+      def serveCurrent() = {
+        val ver = IvfIndex.currentVersion(spark, base)
+        val cents = spark.read.parquet(s"$base/$ver/centroids")
+        graft.streaming.AnnStreams.servedTopK(queries, cents, s"$base/$ver/index", 5, 2)
+          .withColumn("index_version", lit(ver))
+      }
+      IvfIndex.publishVersion(emb, seeds(col("vec_id") < 8), base, "v1",
+        Some(asgFor("v1")))
+      val r1 = serveCurrent()
+      // the "retrain": new codebook, full rebuild, atomic pointer swap
+      IvfIndex.publishVersion(emb,
+        seeds(col("vec_id") >= 8 && col("vec_id") < 16), base, "v2",
+        Some(asgFor("v2")))
+      val r2 = serveCurrent()
+      r1.unionByName(r2)
+        .select(col("index_version"), col("qid"), col("rank"), col("nid"), col("dist"))
+  }
+
+  val all: Seq[QueryDef] = Seq(
+    annTopk, centroids, centroidSpread, ivfTopk, ivfPruned, ivfNprobe, kmeans, ivfKmeans,
+    centroidClassify, embedOutliers, clusterSeparation, embedDrift, annNdcg, silhouette, annLid,
+    filteredAnn, ivfProbeArtifact, ivfNprobeArtifact, annServeBatch, annRotate)
 }

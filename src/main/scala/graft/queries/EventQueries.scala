@@ -1,13 +1,21 @@
 package graft.queries
 
-import org.apache.spark.sql.functions.{log => lnf, _}
+import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.operators.{AsOfJoin, Dedup}
+import graft.functions.TextFunctions.{polyHash, polyHashSql, shinglesSql, tokens}
+import org.apache.spark.sql.expressions.Window
 
-/** Time-series / event analytics over the `events` fixture: tumbling
-  * windows, JSON extraction, and sessionization. Timestamps are emitted as
-  * epoch seconds (BIGINT) so parquet timestamp encodings never enter the
-  * hash compare; event timestamps carry µs fractions which both engines
-  * preserve identically after ns→µs truncation.
+/** Event and time-series analytics over `events`: tumbling windows,
+  * JSON and map functions, sessions, funnels, retention, stickiness,
+  * outliers, autocorrelation, change points, PSI, itemsets, bursts,
+  * transitions, interval and as-of joins, gap-fill, range windows,
+  * EWMA and Holt smoothing.
+  *
+  * Timestamps are emitted as epoch seconds (BIGINT), so parquet
+  * timestamp encodings never enter the hash compare. The as-of join's
+  * oracle is DuckDB's native ASOF LEFT JOIN; the engine composes the same
+  * semantics from a union and one window pass.
   */
 object EventQueries {
 
@@ -298,7 +306,7 @@ object EventQueries {
     // LAST — a null value would otherwise shift which row each engine
     // picks as the nearest-rank median. Rank arithmetic is integral DIV,
     // never a truncated double quotient. Both rank passes ride
-    // PrefixSum.rowNumber (round 13): a row_number window partitioned
+    // PrefixSum.rowNumber: a row_number window partitioned
     // by the handful of event types is the packer-postmortem
     // parallelism ceiling; the segmented scan keeps the identical
     // NULLS-LAST total order at full parallelism.
@@ -413,7 +421,6 @@ object EventQueries {
       |       CAST(s // k AS BIGINT) AS pre_mean,
       |       CAST((tot - s) // (nd - k) AS BIGINT) AS post_mean
       |FROM best WHERE rn = 1""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val d = Tables.events(spark, dir)
       .groupBy(expr("unix_timestamp(date_trunc('day', ts)) DIV 86400").as("day"))
       .agg(count(lit(1)).as("n"))
@@ -460,7 +467,6 @@ object EventQueries {
       |       CAST(count(*) AS BIGINT) AS n_gaps,
       |       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
       |FROM b GROUP BY 1""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
     Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), unix_timestamp(col("ts")).as("t"))
@@ -543,7 +549,7 @@ object EventQueries {
       .join(cc.filter(col("period") === 1).select(col("bucket").as("bbucket"), col("c").as("cb")),
         col("bbucket") === col("bucket"))
       .crossJoin(broadcast(na)).crossJoin(broadcast(nb))
-      .select(floor((pa - pb) * lnf(pa / pb) * lit(1099511627776.0)).cast("long").as("tq"))
+      .select(floor((pa - pb) * log(pa / pb) * lit(1099511627776.0)).cast("long").as("tq"))
     t.agg(sum(col("tq")).cast("long").as("psi_q40"))
       .crossJoin(broadcast(na)).crossJoin(broadcast(nb))
       .select(col("na").as("n_a"), col("nb").as("n_b"), col("psi_q40"))
@@ -636,7 +642,6 @@ object EventQueries {
       |SELECT CAST(rank AS BIGINT) AS rank, hr * 3600 AS hour_ts, n, s24,
       |       CAST(ratio_q20 AS BIGINT) AS ratio_q20
       |FROM r WHERE rank <= 5""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val h = Tables.events(spark, dir)
       .groupBy(expr("unix_timestamp(date_trunc('hour', ts)) DIV 3600").as("hr"))
       .agg(count(lit(1)).as("n"))
@@ -654,7 +659,468 @@ object EventQueries {
         col("n"), col("s24"), col("ratio_q20"))
   }
 
-  val all: Seq[QueryDef] = Seq(hourly, jsonExtract, sessionize, mapFuncs, heavyHitters,
-    funnel, nullAudit, outliers, dauStickiness, madOutliers, autocorr, changepoint,
-    interarrival, psi, eventItemsets, burstHours)
+  /** EVENT TRANSITIONS — the first-order Markov matrix of user
+    * behavior: per (event_type -> next event_type within the same
+    * user's timeline), transition count and row-normalized probability
+    * in bp. `q_event_itemsets` counts UNORDERED co-occurrence within a
+    * session; this is the ORDERED complement (what follows what), the
+    * input to next-event prediction and to funnel-shape sanity checks
+    * (a purchase->view edge heavier than view->purchase flags timeline
+    * corruption). Ordering is (ts, event_id) so ties are deterministic
+    * on both engines. SCALE: one user-keyed lag window (co-partitioned
+    * with the user shuffle) into a (types x types)-bounded aggregate;
+    * probabilities come from a broadcast-sized row-total join.
+    */
+  val eventTransitions: QueryDef = QueryDef.sql(
+    "q_event_transitions",
+    """WITH s AS (SELECT user_id, event_type,
+      |                 lead(event_type) OVER (PARTITION BY user_id
+      |                                        ORDER BY ts, event_id) AS next_type
+      |           FROM events),
+      |t AS (SELECT event_type AS from_type, next_type AS to_type, count(*) AS n
+      |      FROM s WHERE next_type IS NOT NULL GROUP BY 1, 2),
+      |r AS (SELECT from_type, sum(n) AS tot FROM t GROUP BY 1)
+      |SELECT t.from_type, t.to_type, CAST(t.n AS BIGINT) AS n,
+      |       CAST(t.n * 10000 // r.tot AS BIGINT) AS p_bp
+      |FROM t JOIN r ON r.from_type = t.from_type""".stripMargin) { (spark, dir) =>
+    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+    val t = Tables.events(spark, dir)
+      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
+      .withColumn("next_type", lead(col("event_type"), 1).over(w))
+      .filter(col("next_type").isNotNull)
+      .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
+      .agg(count(lit(1)).as("n"))
+    val r = t.groupBy("from_type").agg(sum("n").as("tot"))
+    t.join(broadcast(r), "from_type")
+      .select(col("from_type"), col("to_type"), col("n"),
+        expr("n * 10000 DIV tot").as("p_bp"))
+  }
+
+  /** AUDIENCE OVERLAP — per event-type pair: shared distinct users,
+    * each side's audience size, and audience Jaccard in bp. The
+    * corpus-level complement of `q_event_itemsets` (which counts
+    * within-session baskets): this answers "do the people who do X
+    * also do Y at all", the segmentation number behind cross-feature
+    * funnels. SCALE: one distinct (user, type) shuffle; the pair join
+    * fans out <= C(|types|, 2) rows per user; everything after is a
+    * types^2-bounded aggregate.
+    */
+  val audienceOverlap: QueryDef = QueryDef.sql(
+    "q_audience_overlap",
+    """WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
+      |ts AS (SELECT event_type, count(*) AS n FROM ut GROUP BY 1),
+      |p AS (SELECT a.event_type AS type_a, b.event_type AS type_b, count(*) AS i
+      |      FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.event_type < b.event_type
+      |      GROUP BY 1, 2)
+      |SELECT p.type_a, p.type_b, CAST(p.i AS BIGINT) AS n_shared,
+      |       CAST(ta.n AS BIGINT) AS n_a, CAST(tb.n AS BIGINT) AS n_b,
+      |       CAST(p.i * 10000 // (ta.n + tb.n - p.i) AS BIGINT) AS jaccard_bp
+      |FROM p JOIN ts ta ON ta.event_type = p.type_a
+      |       JOIN ts tb ON tb.event_type = p.type_b""".stripMargin) { (spark, dir) =>
+    val ut = Tables.events(spark, dir)
+      .select("user_id", "event_type").distinct()
+    val ts = ut.groupBy("event_type").agg(count(lit(1)).as("n"))
+    val a = ut.select(col("user_id"), col("event_type").as("type_a"))
+    val b = ut.select(col("user_id"), col("event_type").as("type_b"))
+    val p = a.join(b, Seq("user_id"))
+      .filter(col("type_a") < col("type_b"))
+      .groupBy("type_a", "type_b").agg(count(lit(1)).as("i"))
+    p.join(broadcast(ts.withColumnRenamed("event_type", "type_a")
+        .withColumnRenamed("n", "n_a")), "type_a")
+      .join(broadcast(ts.withColumnRenamed("event_type", "type_b")
+        .withColumnRenamed("n", "n_b")), "type_b")
+      .select(col("type_a"), col("type_b"), col("i").as("n_shared"),
+        col("n_a"), col("n_b"),
+        expr("i * 10000 DIV (n_a + n_b - i)").as("jaccard_bp"))
+  }
+
+  /** EVENT INTERVAL JOIN — click→purchase pairs for the same user
+    * within ±1 hour: the batch twin of the streaming dual-watermark
+    * interval join ([[graft.streaming.EventStreams.intervalJoins]]),
+    * and the attribution primitive every event pipeline ships.
+    *
+    * SCALE: NOT a per-user non-equi join (per-user candidate mass is
+    * clicks×purchases — a hot user goes quadratic, and the range
+    * predicate alone plans a nested loop). Instead the `q_snm_blocking`
+    * band shape: purchases key by their hour bucket, clicks explode to
+    * the ≤3 buckets their ±1 h window can touch, the join is a pure
+    * (user, hour-bucket) EQUI-join — hash-partitioned, AQE-splittable —
+    * and the true |pts−cts| ≤ 1 h predicate runs as a residual filter.
+    * Each true pair matches in EXACTLY one bucket (the purchase's), so
+    * no dedup pass is needed. Gap is emitted in raw µs (no integer
+    * division — Spark DIV truncates toward zero while DuckDB floors,
+    * which diverges on negative gaps). The oracle states the same join
+    * as the plain range predicate.
+    */
+  val intervalJoin: QueryDef = QueryDef.sql(
+    "q_interval_join",
+    """WITH c AS (SELECT user_id, event_id AS click_id, epoch_us(ts) AS cus
+      |           FROM events WHERE event_type = 'click'),
+      |p AS (SELECT user_id, event_id AS purchase_id, epoch_us(ts) AS pus
+      |      FROM events WHERE event_type = 'purchase')
+      |SELECT c.user_id, c.click_id, p.purchase_id,
+      |       CAST(p.pus - c.cus AS BIGINT) AS gap_us
+      |FROM c JOIN p ON p.user_id = c.user_id
+      |  AND p.pus BETWEEN c.cus - 3600000000 AND c.cus + 3600000000""".stripMargin) {
+    (spark, dir) =>
+    val ev = Tables.events(spark, dir)
+    val c = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("event_id").as("click_id"),
+        unix_micros(col("ts")).as("cus"))
+      .withColumn("hb", explode(sequence(
+        expr("cus div 3600000000 - 1"), expr("cus div 3600000000 + 1"))))
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+        unix_micros(col("ts")).as("pus"))
+      .withColumn("hb", expr("pus div 3600000000"))
+    c.join(p, c("user_id") === p("p_user") && c("hb") === p("hb"))
+      .filter(col("pus") >= col("cus") - 3600000000L &&
+        col("pus") <= col("cus") + 3600000000L)
+      .select(col("user_id"), col("click_id"), col("purchase_id"),
+        (col("pus") - col("cus")).as("gap_us"))
+  }
+
+  /** INTERVAL ANTI-JOIN — clicks with NO purchase from the same user
+    * within ±1 hour: the attribution-gap report (what share of ad
+    * clicks never converted inside the window), and the batch twin of
+    * the null-padded rows the streaming LEFT OUTER interval join
+    * ([[graft.streaming.EventStreams.intervalJoinsLeftOuter]]) emits
+    * at state-eviction time.
+    *
+    * SCALE: the same (user, hour-bucket) EQUI-join blocking as
+    * `q_interval_join` — never a nested-loop range anti-join. A click
+    * is unmatched iff NONE of its ≤3 buckets matched, so the anti side
+    * is a distinct matched-click set (bare BIGINT ids across the
+    * shuffle) followed by a left_anti equi-join — both
+    * hash-partitioned, both AQE-splittable. The oracle states the
+    * same thing as a plain NOT EXISTS range predicate.
+    */
+  val intervalUnmatched: QueryDef = QueryDef.sql(
+    "q_interval_unmatched",
+    """WITH c AS (SELECT user_id, event_id AS click_id, epoch_us(ts) AS cus
+      |           FROM events WHERE event_type = 'click'),
+      |p AS (SELECT user_id, epoch_us(ts) AS pus
+      |      FROM events WHERE event_type = 'purchase')
+      |SELECT c.user_id, c.click_id, CAST(c.cus AS BIGINT) AS cus
+      |FROM c WHERE NOT EXISTS (
+      |  SELECT 1 FROM p WHERE p.user_id = c.user_id
+      |    AND p.pus BETWEEN c.cus - 3600000000 AND c.cus + 3600000000)""".stripMargin) {
+    (spark, dir) =>
+    val ev = Tables.events(spark, dir)
+    val c = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("event_id").as("click_id"),
+        unix_micros(col("ts")).as("cus"))
+    val cb = c.withColumn("hb", explode(sequence(
+      expr("cus div 3600000000 - 1"), expr("cus div 3600000000 + 1"))))
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), unix_micros(col("ts")).as("pus"))
+      .withColumn("hb", expr("pus div 3600000000"))
+    val matched = cb.join(p, cb("user_id") === p("p_user") && cb("hb") === p("hb"))
+      .filter(col("pus") >= col("cus") - 3600000000L &&
+        col("pus") <= col("cus") + 3600000000L)
+      .select("click_id").distinct()
+    c.join(matched, Seq("click_id"), "left_anti")
+      .select(col("user_id"), col("click_id"), col("cus"))
+  }
+
+  val clickLastPurchase: QueryDef = QueryDef.sql(
+    "q_asof_join",
+    """WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+      |p AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase')
+      |SELECT c.event_id AS click_id,
+      |       p.event_id AS purchase_id,
+      |       p.value AS purchase_value
+      |FROM c ASOF LEFT JOIN p
+      |  ON c.user_id = p.user_id AND c.ts >= p.ts""".stripMargin) { (spark, dir) =>
+    val ev = Tables.events(spark, dir)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
+    AsOfJoin.leftAsOf(clicks, purchases, "user_id", "ts", "ts",
+        rightTieCols = Seq("event_id"))
+      .select(col("event_id").as("click_id"),
+        col("asof_event_id").as("purchase_id"),
+        col("asof_value").as("purchase_value"))
+  }
+
+  /** Integer EWMA over per-type hourly event counts — the recursive
+    * smoother an alerting baseline runs (α = 1/8, the classic
+    * power-of-two choice): s₀ = c₀·2^20, sₜ = (7·sₜ₋₁ + cₜ·2^20) DIV 8.
+    * Integer floor division makes every step exact in both engines —
+    * recursion order is pinned by sorting hours, and the fold is a
+    * strict sequential `aggregate` HOF / `list_reduce` (the
+    * q_bpe_learn parity pattern for inherently-sequential state).
+    * SCALE: one hour-keyed count (map-side combine), then the fold
+    * runs per type over a HORIZON-bounded array (hours, not events) —
+    * the recursion never touches corpus-sized data.
+    */
+  val ewma: QueryDef = QueryDef.sql(
+    "q_ewma",
+    """WITH hc AS (SELECT event_type, date_trunc('hour', ts) AS h, count(*) AS c
+      |           FROM events GROUP BY 1, 2),
+      |arr AS (SELECT event_type, list(c ORDER BY h) AS cs, count(*) AS nh
+      |        FROM hc GROUP BY 1)
+      |SELECT event_type, CAST(nh AS BIGINT) AS n_hours,
+      |       CAST(cs[len(cs)] AS BIGINT) AS last_cnt,
+      |       CAST(list_reduce(list_prepend(CAST(cs[1] * 1048576 AS BIGINT), cs[2:]),
+      |                        (acc, c) -> (acc * 7 + c * 1048576) // 8) AS BIGINT)
+      |         AS ewma_q20
+      |FROM arr""".stripMargin) { (spark, dir) =>
+    val hc = Tables.events(spark, dir)
+      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
+      .agg(count(lit(1)).as("c"))
+    hc.groupBy("event_type")
+      .agg(array_sort(collect_list(struct(col("h"), col("c")))).as("hs"))
+      .select(col("event_type"), expr("transform(hs, x -> x.c)").as("cs"))
+      .select(col("event_type"),
+        size(col("cs")).cast("long").as("n_hours"),
+        expr("cs[size(cs) - 1]").as("last_cnt"),
+        expr("aggregate(slice(cs, 2, size(cs) - 1), cs[0] * CAST(1048576 AS BIGINT)," +
+          " (acc, c) -> (acc * 7 + c * 1048576) DIV 8)").as("ewma_q20"))
+  }
+
+  /** HOLT LINEAR SMOOTHING — per event_type over the hourly count
+    * series: level + trend double smoothing (alpha=0.3, beta=0.1) in
+    * Q20 fixed point, with a 3-hour-ahead forecast l + 3b. The same
+    * sequential-fold contract as `q_ewma`: the recursion runs over an
+    * array bounded by the TIME HORIZON, not the corpus, so scale only
+    * re-prices the hour-keyed count aggregate beneath it; the fold is
+    * integer arithmetic (DIV truncates toward zero on both engines,
+    * including for negative trends) so the oracle replays level and
+    * trend bit-for-bit. ORACLE NOTE: the natural `list_reduce` with a
+    * STRUCT accumulator is NONDETERMINISTICALLY WRONG in DuckDB on
+    * ~680-element lists (verified: same literal list, different folds
+    * across connections; scalar accumulators like q_ewma's are fine),
+    * so the oracle runs the coupled fold as a RECURSIVE CTE instead —
+    * one row per (event_type, step), plain column arithmetic, no
+    * lambda machinery. `EventStreams.holtLevels` maintains the same
+    * fold incrementally under a watermark; StreamingSpec pins
+    * batch==stream equality.
+    */
+  val holt: QueryDef = QueryDef.sql(
+    "q_holt",
+    """WITH RECURSIVE hc AS (SELECT event_type, date_trunc('hour', ts) AS h, count(*) AS c
+      |           FROM events GROUP BY 1, 2),
+      |arr AS (SELECT event_type, list(c ORDER BY h) AS cs, count(*) AS nh
+      |        FROM hc GROUP BY 1),
+      |fold AS (
+      |  SELECT event_type, cs, nh, 1 AS i, cs[1] * 1048576 AS l, CAST(0 AS BIGINT) AS b
+      |  FROM arr
+      |  UNION ALL
+      |  SELECT event_type, cs, nh, i + 1,
+      |         (3 * cs[i + 1] * 1048576 + 7 * (l + b)) // 10,
+      |         ((3 * cs[i + 1] * 1048576 + 7 * (l + b)) // 10 - l + 9 * b) // 10
+      |  FROM fold WHERE i < nh)
+      |SELECT event_type, CAST(nh AS BIGINT) AS n_hours,
+      |       CAST(cs[nh] AS BIGINT) AS last_cnt,
+      |       CAST(l AS BIGINT) AS level_q20,
+      |       CAST(b AS BIGINT) AS trend_q20,
+      |       CAST(l + 3 * b AS BIGINT) AS forecast3_q20
+      |FROM fold WHERE i = nh""".stripMargin) { (spark, dir) =>
+    Tables.events(spark, dir)
+      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
+      .agg(count(lit(1)).as("c"))
+      .groupBy("event_type")
+      .agg(array_sort(collect_list(struct(col("h"), col("c")))).as("hs"))
+      .select(col("event_type"), expr("transform(hs, x -> x.c)").as("cs"))
+      .select(col("event_type"),
+        size(col("cs")).cast("long").as("n_hours"),
+        expr("cs[size(cs) - 1]").as("last_cnt"),
+        expr("""aggregate(slice(cs, 2, size(cs) - 1),
+                named_struct('l', cs[0] * CAST(1048576 AS BIGINT), 'b', CAST(0 AS BIGINT)),
+                (acc, c) -> named_struct(
+                  'l', (3 * c * 1048576 + 7 * (acc.l + acc.b)) DIV 10,
+                  'b', ((3 * c * 1048576 + 7 * (acc.l + acc.b)) DIV 10 - acc.l + 9 * acc.b) DIV 10))
+             """).as("hb"))
+      .select(col("event_type"), col("n_hours"), col("last_cnt"),
+        col("hb.l").as("level_q20"), col("hb.b").as("trend_q20"),
+        (col("hb.l") + col("hb.b") * 3).as("forecast3_q20"))
+  }
+
+  /** Latest-version record dedup — keep each user's newest event (CDC
+    * compaction / "latest wins" upsert semantics, the keyed-dedup shape
+    * every incremental corpus ingest runs). One window per key with the
+    * (ts, event_id) total order; at scale this is a single shuffle on
+    * user_id with a per-partition top-1 heap (WindowGroupLimit caps
+    * state at one row per key). Timestamps exported as epoch-µs BIGINT
+    * (the ledger's cross-engine timestamp convention).
+    */
+  val latestEvent: QueryDef = QueryDef.sql(
+    "q_latest_event",
+    """SELECT user_id, event_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us,
+      |       event_type, value
+      |FROM (SELECT user_id, event_id, ts, event_type, value,
+      |             row_number() OVER (PARTITION BY user_id
+      |                                ORDER BY ts DESC, event_id DESC) AS rn
+      |      FROM events) WHERE rn = 1""".stripMargin) { (spark, dir) =>
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts").desc, col("event_id").desc)
+    Tables.events(spark, dir)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("ts_us"), col("event_type"), col("value"))
+  }
+
+  /** D1/D7 cohort retention over `events`: users grouped by first-seen
+    * day, retained = any activity exactly 1 / 7 days later. Two keyed
+    * aggregations on user_id (co-partitioned: the distinct-day table and
+    * the cohort table shuffle on the same key) and a date-sized final
+    * rollup. At 100 TB of events the per-user state is the distinct
+    * active-day set, which the first aggregation reduces map-side.
+    */
+  val retention: QueryDef = QueryDef.sql(
+    "q_retention",
+    """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
+      |c AS (SELECT user_id, min(d) AS d0 FROM ud GROUP BY user_id),
+      |r AS (SELECT c.user_id, c.d0,
+      |             max(CASE WHEN ud.d = c.d0 + 1 THEN 1 ELSE 0 END) AS r1,
+      |             max(CASE WHEN ud.d = c.d0 + 7 THEN 1 ELSE 0 END) AS r7
+      |      FROM c JOIN ud ON ud.user_id = c.user_id
+      |      GROUP BY 1, 2)
+      |SELECT d0 AS cohort_day, CAST(count(*) AS BIGINT) AS n_users,
+      |       CAST(sum(r1) AS BIGINT) AS d1_retained,
+      |       CAST(sum(r7) AS BIGINT) AS d7_retained,
+      |       CAST(floor(sum(r1) * 10000.0 / count(*)) AS BIGINT) AS d1_bp,
+      |       CAST(floor(sum(r7) * 10000.0 / count(*)) AS BIGINT) AS d7_bp
+      |FROM r GROUP BY d0""".stripMargin) { (spark, dir) =>
+    val ud = Tables.events(spark, dir)
+      .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
+    // SHAPE (guide §2.4): ONE per-user aggregate carries the
+    // cohort day and the active-day set (horizon-bounded, the
+    // HourRollup class — it grows with wall-clock days, not bytes), so
+    // the cohort-join replay of the distinct pass disappears.
+    val r = ud.groupBy("user_id")
+      .agg(min(col("d")).as("d0"), collect_set(col("d")).as("ds"))
+      .select(col("user_id"), col("d0"),
+        array_contains(col("ds"), date_add(col("d0"), 1)).cast("int").as("r1"),
+        array_contains(col("ds"), date_add(col("d0"), 7)).cast("int").as("r7"))
+    r.groupBy(col("d0").as("cohort_day"))
+      .agg(count(lit(1)).as("n_users"),
+        sum(col("r1")).cast("long").as("d1_retained"),
+        sum(col("r7")).cast("long").as("d7_retained"),
+        floor(sum(col("r1")) * 10000.0 / count(lit(1))).cast("long").as("d1_bp"),
+        floor(sum(col("r7")) * 10000.0 / count(lit(1))).cast("long").as("d7_bp"))
+  }
+
+  /** Zero-filled hourly series per event type. The spine
+    * (`sequence(lo, hi, 1 hour)` × distinct types) is generated, not
+    * scanned, so the only full-data operation is the one aggregation
+    * shuffle; the spine↔agg join runs entirely on post-aggregate (small)
+    * frames and AQE broadcasts it. Missing (hour, type) cells surface as
+    * explicit zero rows — the shape chart/model consumers need.
+    */
+  val gapFill: QueryDef = QueryDef.sql(
+    "q_gapfill",
+    """WITH b AS (SELECT date_trunc('hour', min(ts)) AS lo,
+      |                  date_trunc('hour', max(ts)) AS hi FROM events),
+      |hours AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM b),
+      |types AS (SELECT DISTINCT event_type FROM events),
+      |agg AS (SELECT date_trunc('hour', ts) AS h, event_type, count(*) AS n,
+      |               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+      |        FROM events GROUP BY 1, 2)
+      |SELECT CAST(epoch(hours.h) AS BIGINT) AS hour_ts, types.event_type,
+      |       coalesce(agg.n, 0) AS n,
+      |       coalesce(agg.sum_value, 0.0) AS sum_value
+      |FROM hours CROSS JOIN types
+      |LEFT JOIN agg ON agg.h = hours.h AND agg.event_type = types.event_type""".stripMargin) {
+    (spark, dir) =>
+    val e = Tables.events(spark, dir)
+    val bounds = e.agg(date_trunc("hour", min(col("ts"))).as("lo"),
+      date_trunc("hour", max(col("ts"))).as("hi"))
+    val hours = bounds.select(
+      explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("h"))
+    val types = e.select("event_type").distinct()
+    val agg = e
+      .groupBy(date_trunc("hour", col("ts")).as("h"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        // exact decimal internally, DOUBLE in the output schema
+        sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
+    hours.crossJoin(types)
+      .join(agg, Seq("h", "event_type"), "left")
+      .select(unix_timestamp(col("h")).as("hour_ts"), col("event_type"),
+        coalesce(col("n"), lit(0L)).as("n"),
+        coalesce(col("sum_value"), lit(0.0)).as("sum_value"))
+  }
+
+  /** Trailing-1-hour count/sum per user at every event — a value-based
+    * RANGE frame over epoch microseconds (`unix_micros` ≡ DuckDB
+    * `epoch_us`, both exactly the ns→µs truncation of the source). RANGE
+    * frames are peer-inclusive in both engines, so equal-timestamp rows
+    * agree by definition; no tie-break is needed for determinism.
+    */
+  val rollingHour: QueryDef = QueryDef.sql(
+    "q_rolling_time",
+    """SELECT event_id, user_id,
+      |       count(*) OVER w AS n_1h,
+      |       CAST(sum(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE) AS sum_1h
+      |FROM events
+      |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
+      |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin) {
+    (spark, dir) =>
+    val w = Window.partitionBy(col("user_id")).orderBy(unix_micros(col("ts")))
+      .rangeBetween(-3600000000L, Window.currentRow)
+    Tables.events(spark, dir)
+      .select(col("event_id"), col("user_id"),
+        count(lit(1)).over(w).as("n_1h"),
+        sum(col("value").cast("decimal(18,6)")).over(w).cast("double").as("sum_1h"))
+  }
+
+  /** Range (interval-containment) join, executed the scale-safe way:
+    * each interval explodes to the hour buckets it overlaps, events
+    * equi-join on their hour bucket (the tiny exploded interval table
+    * broadcasts), and the true `lo ≤ ts < hi` predicate runs as a
+    * residual filter. A naive non-equi join would plan as a
+    * nested-loop over every (event, interval) pair; bucketing makes the
+    * candidate set |events| × overlap(≤3) instead. All boundary
+    * arithmetic is epoch-µs BIGINT, so no interval-type semantics enter
+    * the comparison. The oracle states the same join as the plain range
+    * predicate. Intervals (93 min every 48 h, offset 17 min from the
+    * first hour) deliberately straddle bucket boundaries.
+    */
+  val rangeJoin: QueryDef = QueryDef.sql(
+    "q_range_join",
+    """WITH b AS (SELECT epoch_us(date_trunc('hour', min(ts))) AS t0 FROM events),
+      |iv AS (SELECT k, t0 + (17 + k*2880) * CAST(60000000 AS BIGINT) AS lo,
+      |              t0 + (110 + k*2880) * CAST(60000000 AS BIGINT) AS hi
+      |       FROM b, (SELECT unnest(range(0, 15)) AS k))
+      |SELECT CAST(iv.k AS BIGINT) AS interval_id,
+      |       count(e.event_id) AS n,
+      |       CAST(coalesce(sum(CAST(e.value AS DECIMAL(18,6))), 0) AS DOUBLE) AS sum_value
+      |FROM iv LEFT JOIN events e
+      |  ON epoch_us(e.ts) >= iv.lo AND epoch_us(e.ts) < iv.hi
+      |GROUP BY 1""".stripMargin) { (spark, dir) =>
+    val e = Tables.events(spark, dir)
+      .select(col("event_id"), col("value"), unix_micros(col("ts")).as("us"))
+    val iv = e.sparkSession.range(0, 15).toDF("k")
+      .crossJoin(Tables.events(spark, dir)
+        .agg(unix_micros(date_trunc("hour", min(col("ts")))).as("t0")))
+      .select(col("k"),
+        (col("t0") + (lit(17L) + col("k") * 2880L) * 60000000L).as("lo"),
+        (col("t0") + (lit(110L) + col("k") * 2880L) * 60000000L).as("hi"))
+    // bucketize: each interval → the hour buckets it overlaps (integer
+    // `div`, not double division — exact at any epoch)
+    val ivb = iv.select(col("k"), col("lo"), col("hi"),
+      explode(sequence(expr("lo div 3600000000"),
+        expr("(hi - 1) div 3600000000"))).as("hb"))
+    val matched = e.withColumn("hb", expr("us div 3600000000"))
+      .join(broadcast(ivb), "hb")
+      .filter(col("us") >= col("lo") && col("us") < col("hi"))
+      .groupBy("k")
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
+    // matched is post-aggregate (≤ |intervals| rows) — broadcast it so
+    // the spine join never sorts/shuffles
+    iv.select("k").join(broadcast(matched), Seq("k"), "left")
+      .select(col("k").cast("long").as("interval_id"),
+        coalesce(col("n"), lit(0L)).as("n"),
+        coalesce(col("sum_value"), lit(0.0)).as("sum_value"))
+  }
+
+  val all: Seq[QueryDef] = Seq(
+    hourly, jsonExtract, sessionize, mapFuncs, heavyHitters, funnel, nullAudit, outliers,
+    dauStickiness, madOutliers, autocorr, changepoint, interarrival, psi, eventItemsets,
+    burstHours, eventTransitions, audienceOverlap, intervalJoin, intervalUnmatched,
+    clickLastPurchase, ewma, holt, latestEvent, retention, gapFill, rollingHour, rangeJoin)
 }

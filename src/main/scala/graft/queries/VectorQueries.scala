@@ -2,13 +2,31 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.TextFunctions.{polyHashSql, shinglesSql}
+import graft.operators.{Dedup, TopK}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import graft.functions.QuantizedL2Expr
 import graft.functions.VectorFunctions._
-import graft.operators.TopK
 
-/** Vector-search queries over the `embeddings` fixture: the reference's
-  * retrieval surface (brute-force cosine top-k, `vector-db.c:148-177`)
-  * re-expressed Spark-first. Distances are emitted unrounded: the oracle
-  * replays the identical sequential fold, so doubles match bit-for-bit.
+/** Exact vector search, its compressed forms, and embedding QA over the
+  * `embeddings` fixture.
+  *
+  * - The reference's retrieval surface (brute-force cosine top-k,
+  *   `vector-db.c:148-177`) Spark-first. Distances are emitted unrounded:
+  *   the oracle replays the identical sequential fold, so doubles match
+  *   bit for bit.
+  * - Quantization (int8, random projection, Matryoshka prefixes) and
+  *   product quantization (PQ): IVF narrows where to look, PQ shrinks
+  *   what is stored (64 doubles → 4 byte-sized codes). Every distance is
+  *   the quantized-L2 integer sum Σ floor((aᵢ−bᵢ)²·2^45), codebooks are
+  *   seeded from fixed row ids, and every argmin ties to the lower code
+  *   or id. The codebook is KB-sized at any corpus size, so it is always
+  *   broadcast; ADC serving broadcasts the per-query lookup table
+  *   against the codes, never touching full-precision vectors.
+  * - Embedding QA (per-dimension stats, anisotropy, dimension
+  *   correlation): means and variances ride the 2^52 / 2^45 fixed-point
+  *   grids, so the aggregations are exact integer sums in both engines.
   */
 object VectorQueries {
 
@@ -418,6 +436,378 @@ object VectorQueries {
       .limit(20)
   }
 
-  val all: Seq[QueryDef] = Seq(topkCosine, hammingTopk, sqlSurface, quantizeInt8,
-    int8Recall, randomProj, projRecall, matryoshkaRecall, dimCorr)
+  /** EMBED ANISOTROPY — ||E[v]||^2 against E[||v||^2], in Q45 fixed
+    * point and basis points: the share of the space's energy sitting
+    * in ONE common direction. Healthy embedding spaces score low;
+    * an anisotropy ratio creeping toward 10000 bp means vectors share
+    * a dominant component (the "embedding collapse" failure mode) and
+    * cosine similarity degenerates toward a constant — the upstream
+    * cause of ANN recall cliffs that `q_knn_recall` only measures
+    * downstream. Integer discipline: per-dim sums on the 2^52 grid
+    * (exact), per-dim mean-square and norm terms floor-quantized to
+    * Q45 BEFORE the 64-term sums, and the per-dim norm energy is
+    * normalized by n PER DIM before summing — keeping every integer
+    * far from 2^63 at ANY corpus size (a global Q45 energy sum would
+    * overflow a long near 10^7 vectors; the oracle's HUGEINT would
+    * not, and the engines would silently diverge). The per-dim sums
+    * themselves accumulate as DECIMAL(38,0) on the Spark side: DuckDB
+    * sums BIGINT into HUGEINT (128-bit, exact) while Spark's
+    * sum(long) wraps silently at 2^63 — which a Q52-scaled term
+    * reaches near 10^6-10^7 vectors. Decimal sums are exact to 38
+    * digits (~2^126) in Spark, so both engines stay exact at any
+    * realistic corpus size and every downstream value is unchanged.
+    * SCALE: one (dim x stats) reduce — 64 groups,
+    * corpus-size-invariant algebra after.
+    */
+  val embedAnisotropy: QueryDef = QueryDef.sql(
+    "q_embed_anisotropy",
+    s"""WITH ed AS (SELECT vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
+       |            FROM embeddings, UNNEST(range(1, 65)) t(i)),
+       |per AS (SELECT i, count(*) AS n,
+       |               sum(CAST(floor(x * $S52) AS BIGINT)) AS s,
+       |               sum(CAST(floor(x * x * $S45) AS BIGINT)) AS sx2
+       |        FROM ed GROUP BY i),
+       |m AS (SELECT max(n) AS n,
+       |             sum(CAST(floor((CAST(s AS DOUBLE) / $S52 / n) *
+       |                            (CAST(s AS DOUBLE) / $S52 / n) * $S45) AS BIGINT)) AS a,
+       |             sum(sx2 // n) AS b
+       |      FROM per)
+       |SELECT CAST(n AS BIGINT) AS n_vecs,
+       |       CAST(a AS BIGINT) AS mean_norm2_q45,
+       |       CAST(b AS BIGINT) AS avg_norm2_q45,
+       |       CAST(a * 10000 // greatest(b, 1) AS BIGINT) AS anisotropy_bp
+       |FROM m""".stripMargin) { (spark, dir) =>
+    val per = Tables.embeddings(spark, dir)
+      .select(posexplode(col("embedding")).as(Seq("i0", "x0")))
+      .select((col("i0") + 1).cast("long").as("i"), col("x0").cast("double").as("x"))
+      .groupBy("i")
+      .agg(count(lit(1)).as("n"),
+        // decimal(38,0) accumulators: exact to ~2^126 like DuckDB's
+        // HUGEINT sum, where sum(long) would wrap near 10^6-10^7 vectors
+        sum(floor(col("x") * S52d).cast("decimal(38,0)")).as("s"),
+        sum(floor(col("x") * col("x") * S45d).cast("decimal(38,0)")).as("sx2"))
+    per.agg(max("n").as("n"),
+        sum(floor((col("s").cast("double") / S52d / col("n")) *
+          (col("s").cast("double") / S52d / col("n")) * S45d).cast("long")).as("a"),
+        sum(expr("sx2 DIV n")).as("b"))
+      .select(col("n").as("n_vecs"),
+        col("a").as("mean_norm2_q45"),
+        col("b").as("avg_norm2_q45"),
+        expr("a * 10000 DIV greatest(b, 1)").as("anisotropy_bp"))
+  }
+
+  /** Per-dimension embedding distribution profile: n, mean, variance,
+    * min, max for each of the 64 dimensions — the embedding-QA pass that
+    * catches dead dimensions, saturation, and scale drift before any
+    * index is built on top. Means ride the 2^52 grid and squares the
+    * 2^45 grid (exact integer sums, order-independent), divided by the
+    * same constants in both engines so the emitted doubles are
+    * bit-identical. One posexplode plus a 64-group aggregation with
+    * map-side partials: at any corpus size the shuffle carries 64 rows
+    * per partition.
+    */
+  val embedDimStats: QueryDef = QueryDef.sql(
+    "q_embed_dim_stats",
+    s"""WITH ed AS (SELECT vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
+       |            FROM embeddings, UNNEST(range(1, 65)) t(i)),
+       |g AS (SELECT i, count(*) AS n,
+       |             CAST(sum(CAST(floor(x * $S52) AS BIGINT)) AS DOUBLE) / $S52 / count(*) AS mean,
+       |             CAST(sum(CAST(floor(x * x * $S45) AS BIGINT)) AS DOUBLE) / $S45 / count(*) AS ex2,
+       |             min(x) AS vmin, max(x) AS vmax
+       |      FROM ed GROUP BY i)
+       |SELECT i, CAST(n AS BIGINT) AS n_vecs, mean, ex2 - mean * mean AS var, vmin, vmax
+       |FROM g""".stripMargin) { (spark, dir) =>
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i0", "x")))
+      .select((col("i0") + 1).cast("long").as("i"), col("x"))
+      .groupBy("i")
+      .agg(count(lit(1)).as("n_vecs"),
+        (sum(floor(col("x") * S52d).cast("long")).cast("double") / S52d / count(lit(1)))
+          .as("mean"),
+        (sum(floor(col("x") * col("x") * S45d).cast("long")).cast("double") / S45d
+          / count(lit(1))).as("ex2"),
+        min(col("x")).as("vmin"), max(col("x")).as("vmax"))
+      .select(col("i"), col("n_vecs"), col("mean"),
+        (col("ex2") - col("mean") * col("mean")).as("var"), col("vmin"), col("vmax"))
+  }
+
+  private val M = 4 // subspaces
+
+  private val SubDim = Dim / M
+
+  private val K = 8 // codewords per subspace
+
+  /** Shared oracle CTEs: per-dim explode, subspace split, seeded codebook,
+    * per-(vector, subspace, code) quantized distances, and the argmin
+    * code assignment.
+    */
+  private val CodesCte =
+    s"""ed AS (SELECT vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
+       |       FROM embeddings, UNNEST(range(1, ${Dim + 1})) t(i)),
+       |sub AS (SELECT vec_id, CAST((i - 1) // $SubDim AS BIGINT) AS m, i, x FROM ed),
+       |cb AS (SELECT vec_id AS code, m, i, x AS c FROM sub WHERE vec_id < $K),
+       |d AS (SELECT s.vec_id, s.m, cb.code,
+       |             CAST(sum(CAST(floor((s.x - cb.c) * (s.x - cb.c) * $S45) AS BIGINT)) AS BIGINT) AS d2
+       |      FROM sub s JOIN cb ON cb.m = s.m AND cb.i = s.i
+       |      GROUP BY 1, 2, 3),
+       |codes AS (SELECT vec_id, m, code, d2 FROM (
+       |            SELECT vec_id, m, code, d2,
+       |                   row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn
+       |            FROM d) WHERE rn = 1)""".stripMargin
+
+  /** (vec_id, subspace) rows with the subvector slice, Spark side. */
+  private[graft] def subspaces(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), explode(transform(sequence(lit(0), lit(M - 1)),
+      m => struct(m.cast("long").as("m"),
+        slice(col("embedding"), m * SubDim + 1, lit(SubDim)).as("sv")))).as("s"))
+      .select(col("vec_id"), col("s.m").as("m"), col("s.sv").as("sv"))
+
+  /** The seeded PQ codebook `(code, cm, cv)` as a standalone frame —
+    * the artifact [[graft.pipelines.ModelArtifacts.savePqCodebook]]
+    * persists so encode/ADC sessions skip re-deriving it
+    * (ModelArtifactsSpec pins the loaded-artifact encode against
+    * `q_pq_codes` bit-for-bit).
+    */
+  private[graft] def codebookOf(sub: DataFrame): DataFrame =
+    sub.filter(col("vec_id") < K)
+      .select(col("vec_id").as("code"), col("m").as("cm"), col("sv").as("cv"))
+
+  /** [[pqAssign]] against an EXPLICIT codebook frame — the loaded-
+    * artifact encode path (codebook schema: code, cm, cv).
+    */
+  private[graft] def pqAssignWith(sub: DataFrame, cb: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("vec_id"), col("m"))
+      .orderBy(col("d2").asc, col("code").asc)
+    sub.join(broadcast(cb), col("cm") === col("m"))
+      .select(col("vec_id"), col("m"), col("code"),
+        QuantizedL2Expr.column(col("sv"), col("cv"), 45).as("d2"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("vec_id"), col("m"), col("code"), col("d2"))
+  }
+
+  /** Argmin code per (vec_id, subspace) against the broadcast codebook. */
+  private def pqAssign(sub: DataFrame): DataFrame =
+    pqAssignWith(sub, codebookOf(sub))
+
+  /** PQ ENCODE: each vector's 4 subspace codes plus the quantized
+    * residual distance to its codeword — the compressed representation a
+    * 100 TB vector store actually persists.
+    */
+  val pqCodes: QueryDef = QueryDef.sql(
+    "q_pq_codes",
+    s"""WITH $CodesCte
+       |SELECT vec_id, m, code, d2 FROM codes""".stripMargin) { (spark, dir) =>
+    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    pqAssign(subspaces(emb))
+  }
+
+  /** PQ SERVING-FIDELITY eval: recall@10 of asymmetric-distance (ADC)
+    * top-10 against exact top-10, per query (vec_id < 10, self excluded).
+    * ADC(q, v) = Σ_m lut[m, code_{v,m}] where `lut` is the query's
+    * quantized distance to every codeword — the codes table is the big
+    * side; the 10×4×8-row lookup table is broadcast. Exact ground truth
+    * uses the same quantized-L2 metric on the raw vectors, so the metric
+    * mismatch (approximation error) is ONLY the PQ compression, which is
+    * what this query measures. The eval twin of `q_pq_codes`, in the
+    * `q_int8_recall` / `q_proj_recall` / `q_minhash_est` tradition: every
+    * sketch ships with a query measuring its error.
+    */
+  val pqRecall: QueryDef = QueryDef.sql(
+    "q_pq_recall",
+    s"""WITH $CodesCte,
+       |qd AS (SELECT s.vec_id AS qid, s.m, cb.code,
+       |              CAST(sum(CAST(floor((s.x - cb.c) * (s.x - cb.c) * $S45) AS BIGINT)) AS BIGINT) AS d2
+       |       FROM sub s JOIN cb ON cb.m = s.m AND cb.i = s.i
+       |       WHERE s.vec_id < 10 GROUP BY 1, 2, 3),
+       |adc AS (SELECT qd.qid, c.vec_id AS nid, CAST(sum(qd.d2) AS BIGINT) AS ad2
+       |        FROM codes c JOIN qd ON qd.m = c.m AND qd.code = c.code
+       |        WHERE c.vec_id <> qd.qid GROUP BY 1, 2),
+       |atop AS (SELECT qid, nid FROM (
+       |           SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY ad2, nid) AS rn
+       |           FROM adc) WHERE rn <= 10),
+       |ex AS (SELECT qa.vec_id AS qid, xb.vec_id AS nid,
+       |              CAST(sum(CAST(floor((qa.x - xb.x) * (qa.x - xb.x) * $S45) AS BIGINT)) AS BIGINT) AS d2
+       |       FROM ed qa JOIN ed xb ON xb.i = qa.i AND xb.vec_id <> qa.vec_id
+       |       WHERE qa.vec_id < 10 GROUP BY 1, 2),
+       |etop AS (SELECT qid, nid FROM (
+       |           SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY d2, nid) AS rn
+       |           FROM ex) WHERE rn <= 10)
+       |SELECT a.qid, CAST(count(e.nid) AS BIGINT) AS hits
+       |FROM atop a LEFT JOIN etop e ON e.qid = a.qid AND e.nid = a.nid
+       |GROUP BY a.qid""".stripMargin) { (spark, dir) =>
+    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    val sub = subspaces(emb)
+    val codes = pqAssign(sub).drop("d2")
+    val cb = sub.filter(col("vec_id") < K)
+      .select(col("vec_id").as("code"), col("m").as("cm"), col("sv").as("cv"))
+    // per-query codeword lookup table: M×K rows per query — broadcast side
+    val qd = sub.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("m").as("qm"), col("sv").as("qv"))
+      .join(cb, col("cm") === col("qm"))
+      .select(col("qid"), col("qm"), col("code").as("qcode"),
+        QuantizedL2Expr.column(col("qv"), col("cv"), 45).as("qd2"))
+    val adc = codes.join(broadcast(qd),
+        col("qm") === col("m") && col("qcode") === col("code"))
+      .filter(col("vec_id") =!= col("qid"))
+      .groupBy(col("qid"), col("vec_id"))
+      .agg(sum(col("qd2")).cast("long").as("ad2"))
+    val wa = Window.partitionBy(col("qid")).orderBy(col("ad2").asc, col("vec_id").asc)
+    val atop = adc.withColumn("rn", row_number().over(wa))
+      .filter(col("rn") <= 10).select(col("qid"), col("vec_id").as("nid"))
+    val queries = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("eqid"), col("embedding").as("qv"))
+    val ex = emb.crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("eqid"))
+      .select(col("eqid"), col("vec_id").as("enid"),
+        QuantizedL2Expr.column(col("embedding"), col("qv"), 45).as("d2"))
+    val we = Window.partitionBy(col("eqid")).orderBy(col("d2").asc, col("enid").asc)
+    val etop = ex.withColumn("rn", row_number().over(we))
+      .filter(col("rn") <= 10)
+      .select(col("eqid").as("qid"), col("enid").as("nid"), lit(1).as("hit"))
+    atop.join(etop, Seq("qid", "nid"), "left")
+      .groupBy("qid")
+      .agg(count(col("hit")).as("hits"))
+  }
+
+  /** Hard-negative mining — for each query (vec_id < 10), the 3 nearest
+    * neighbors whose label DIFFERS from the query's: the contrastive-
+    * training sampling step (close in embedding space, wrong class).
+    * Same broadcast-query brute-force shape as `q_ann_topk` plus the
+    * label anti-predicate; at scale the label filter pushes into the
+    * scan before any distance is computed.
+    */
+  val hardNegatives: QueryDef = QueryDef.sql(
+    "q_hard_negatives",
+    s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |q AS (SELECT vec_id AS qid, label AS qlabel, v AS qv FROM e WHERE vec_id < 10),
+       |d AS (SELECT qid, vec_id AS nid, label AS nlabel,
+       |             ${graft.functions.VectorFunctions.cosDistSql("v", "qv")} AS dist
+       |      FROM e, q WHERE vec_id <> qid AND label <> qlabel),
+       |r AS (SELECT qid, nid, nlabel, dist,
+       |             row_number() OVER (PARTITION BY qid ORDER BY dist, nid) AS rank
+       |      FROM d)
+       |SELECT qid, rank, nid, CAST(nlabel AS BIGINT) AS nlabel, dist
+       |FROM r WHERE rank <= 3""".stripMargin) { (spark, dir) =>
+    val emb = Tables.embeddings(spark, dir)
+    val qs = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
+        col("embedding").as("qv"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("dist").asc, col("vec_id").asc)
+    emb.crossJoin(broadcast(qs))
+      .filter(col("vec_id") =!= col("qid") && col("label") =!= col("qlabel"))
+      .withColumn("dist", cosineDistance(col("embedding"), col("qv")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 3)
+      .select(col("qid"), col("rank").cast("long").as("rank"),
+        col("vec_id").as("nid"), col("label").cast("long").as("nlabel"), col("dist"))
+  }
+
+  /** IVF+PQ combined serving — the full large-scale ANN read path in one
+    * oracle-checked query: a coarse quantizer (seed centroids vec_id 0..7,
+    * the `q_ivf_pruned` convention) narrows each query (vec_id < 5) to
+    * its nprobe=2 nearest inverted lists, and ONLY those lists' PQ codes
+    * are scored by asymmetric distance (ADC) — the raw vectors are never
+    * touched at serve time. Top-5 per query by (ad2, id).
+    *
+    * Scale shape: the coarse assignment and the per-query LUT are both
+    * broadcast-sized (k×dim and M×K per query); the codes table is the
+    * single big side and the probe join prunes it to nprobe/k of the
+    * corpus before any distance math. This is the FAISS IVFADC layout
+    * re-expressed as a declarative plan — at 100 TB the codes table is
+    * additionally partitioned by cluster on disk (`q_ivf_pruned` proves
+    * the file-pruning half separately).
+    */
+  val ivfPq: QueryDef = QueryDef.sql(
+    "q_ivfpq",
+    s"""WITH $CodesCte,
+       |c0 AS (SELECT vec_id AS cluster, i, x AS c FROM ed WHERE vec_id < $K),
+       |a1 AS (SELECT ed.vec_id, c0.cluster,
+       |              CAST(sum(CAST(floor((ed.x - c0.c) * (ed.x - c0.c) * $S45) AS BIGINT)) AS BIGINT) AS d2
+       |       FROM ed JOIN c0 ON c0.i = ed.i GROUP BY 1, 2),
+       |s1 AS (SELECT vec_id, cluster FROM (
+       |         SELECT vec_id, cluster,
+       |                row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
+       |         FROM a1) WHERE rn = 1),
+       |probe AS (SELECT vec_id AS qid, cluster FROM (
+       |            SELECT vec_id, cluster,
+       |                   row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
+       |            FROM a1 WHERE vec_id < 5) WHERE rn <= 2),
+       |qd AS (SELECT s.vec_id AS qid, s.m, cb.code,
+       |              CAST(sum(CAST(floor((s.x - cb.c) * (s.x - cb.c) * $S45) AS BIGINT)) AS BIGINT) AS d2
+       |       FROM sub s JOIN cb ON cb.m = s.m AND cb.i = s.i
+       |       WHERE s.vec_id < 5 GROUP BY 1, 2, 3),
+       |adc AS (SELECT p.qid, c.vec_id AS nid, CAST(sum(qd.d2) AS BIGINT) AS ad2
+       |        FROM codes c
+       |        JOIN s1 ON s1.vec_id = c.vec_id
+       |        JOIN probe p ON p.cluster = s1.cluster
+       |        JOIN qd ON qd.qid = p.qid AND qd.m = c.m AND qd.code = c.code
+       |        WHERE c.vec_id <> p.qid GROUP BY 1, 2)
+       |SELECT qid, CAST(rank AS BIGINT) AS rank, nid, ad2 FROM (
+       |  SELECT qid, nid, ad2,
+       |         row_number() OVER (PARTITION BY qid ORDER BY ad2, nid) AS rank
+       |  FROM adc) WHERE rank <= 5""".stripMargin) { (spark, dir) =>
+    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    val sub = subspaces(emb)
+    val codes = pqAssign(sub).drop("d2")
+    // coarse quantizer: k×dim seed table, always broadcast
+    val seeds = emb.filter(col("vec_id") < K)
+      .select(col("vec_id").as("cluster"), col("embedding").as("cv"))
+    val a1 = emb.crossJoin(broadcast(seeds))
+      .select(col("vec_id"), col("cluster"),
+        QuantizedL2Expr.column(col("embedding"), col("cv"), 45).as("d2"))
+    val wv = Window.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cluster").asc)
+    val ranked = a1.withColumn("rn", row_number().over(wv))
+    val s1 = ranked.filter(col("rn") === 1).select(col("vec_id"), col("cluster"))
+    val probe = ranked.filter(col("vec_id") < 5 && col("rn") <= 2)
+      .select(col("vec_id").as("qid"), col("cluster").as("pcluster"))
+    // per-query ADC lookup table: M×K rows per query — broadcast side
+    val cb = sub.filter(col("vec_id") < K)
+      .select(col("vec_id").as("code"), col("m").as("cm"), col("sv").as("cv"))
+    val qd = sub.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("lqid"), col("m").as("qm"), col("sv").as("qv"))
+      .join(broadcast(cb), col("cm") === col("qm"))
+      .select(col("lqid"), col("qm"), col("code").as("qcode"),
+        QuantizedL2Expr.column(col("qv"), col("cv"), 45).as("qd2"))
+    val adc = codes
+      .join(s1, "vec_id")
+      .join(broadcast(probe), col("pcluster") === col("cluster"))
+      .join(broadcast(qd),
+        col("lqid") === col("qid") && col("qm") === col("m") && col("qcode") === col("code"))
+      .filter(col("vec_id") =!= col("qid"))
+      .groupBy(col("qid"), col("vec_id"))
+      .agg(sum(col("qd2")).cast("long").as("ad2"))
+    val wq = Window.partitionBy(col("qid")).orderBy(col("ad2").asc, col("vec_id").asc)
+    adc.withColumn("rank", row_number().over(wq))
+      .filter(col("rank") <= 5)
+      .select(col("qid"), col("rank").cast("long").as("rank"),
+        col("vec_id").as("nid"), col("ad2"))
+  }
+
+  /** ARTIFACT-BACKED PQ encode — `q_pq_codes` split at the
+    * deployment seam, the PQ sibling of `q_ivf_probe_artifact`: derive
+    * the codebook, PERSIST it
+    * ([[graft.pipelines.ModelArtifacts.savePqCodebook]]), and encode
+    * the corpus against the LOADED copy. Oracle = `q_pq_codes`'s SQL
+    * verbatim, so the driver's hash gate proves the double round-trip
+    * exact. SCALE: the artifact is M×K×(D/M) values at any corpus
+    * size; the encode is the same broadcast-argmin map pass.
+    */
+  val pqCodesArtifact: QueryDef = QueryDef.sql(
+    "q_pq_codes_artifact",
+    pqCodes.oracle.get) { (spark, dir) =>
+    val base = s"/tmp/graft_artifacts/${spark.sparkContext.applicationId}/" +
+      dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    val sub = subspaces(emb)
+    graft.pipelines.ModelArtifacts.savePqCodebook(spark,
+      codebookOf(sub), s"$base/pq_codebook.parquet")
+    pqAssignWith(sub, graft.pipelines.ModelArtifacts
+      .loadPqCodebook(spark, s"$base/pq_codebook.parquet"))
+  }
+
+  val all: Seq[QueryDef] = Seq(
+    topkCosine, hammingTopk, sqlSurface, quantizeInt8, int8Recall, randomProj, projRecall,
+    matryoshkaRecall, dimCorr, embedAnisotropy, embedDimStats, pqCodes, pqRecall, hardNegatives,
+    ivfPq, pqCodesArtifact)
 }

@@ -175,7 +175,7 @@ object DedupStreams {
   case class PhashDup(media_id: Long, anchor_id: Long, hamming: Int, band: Int)
 
   /** Streaming IMAGE near-dup detection — the streaming face of
-    * `q_image_neardup` ([[graft.queries.PerceptualQueries]]), with the
+    * `q_image_neardup` ([[graft.queries.MultimodalQueries]]), with the
     * REAL codec in the stream: each micro-batch row carries PNG bytes,
     * decoded per-row by `javax.imageio` inside a map-only projection
     * (bytes never enter state or a shuffle — only the 56-bit dHash and

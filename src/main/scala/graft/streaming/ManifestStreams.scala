@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.functions.TextFunctions.polyHash
 
 /** Streaming shard-manifest maintenance — the unbounded-stream face of
-  * `q_shard_manifest` ([[graft.queries.CurationQueries15]]): as
+  * `q_shard_manifest` ([[graft.queries.MixingQueries]]): as
   * documents arrive, each shard's standing integrity record (count,
   * token mass, XOR of content hashes, id range) is folded forward and
   * re-emitted, so a continuously-ingested corpus always has a current

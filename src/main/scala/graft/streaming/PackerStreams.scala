@@ -14,10 +14,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * has the same carry: load-texts.c:37-105 keeps the window remainder
   * across reads of the concatenated token stream.)
   *
-  * Semantics match `q_seq_pack_bpe` ([[graft.queries.TextStatsQueries2]])
+  * Semantics match `q_seq_pack_bpe` ([[graft.queries.TokenizerQueries]])
   * exactly: per shard (= lang), documents enter the shard's contiguous
   * id stream in doc_id order and are cut into
-  * [[graft.queries.TextStatsQueries2.CtxLen]]-token blocks with the
+  * [[graft.queries.TokenizerQueries.CtxLen]]-token blocks with the
   * same boundary bookkeeping (contributing-doc count, first/last doc,
   * plain and offset-weighted id checksums). A FULL block is emitted the
   * moment its last token arrives (Append mode — a full block is
@@ -43,7 +43,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object PackerStreams {
 
-  private val CtxLen: Long = graft.queries.TextStatsQueries2.CtxLen.toLong
+  private val CtxLen: Long = graft.queries.TokenizerQueries.CtxLen.toLong
 
   /** End-of-stream FLUSH sentinel (round-13 ADVICE): Append mode with
     * NoTimeout never emits a shard's trailing partial block, so a
@@ -79,7 +79,7 @@ object PackerStreams {
 
   /** Fold a (lang, doc_id, text) document stream into completed
     * context blocks. `merges`/`vocab` are the batch tokenizer artifacts
-    * ([[graft.queries.TextStatsQueries.tokenizerArtifacts]] /
+    * ([[graft.queries.TokenizerQueries.tokenizerArtifacts]] /
     * [[graft.pipelines.ModelArtifacts]]), entering as literals.
     */
   def packedBlocks(docs: DataFrame, merges: Seq[(String, String)],

@@ -1,12 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Streaming inference for the trained quality classifier — the
   * score-as-you-crawl face of the batch train→infer pair
   * (`q_quality_train` / `q_quality_logreg`,
-  * [[graft.queries.CurationQueries33]]).
+  * [[graft.queries.QualityQueries]]).
   *
   * The deployment shape of a learned filter at crawl time: weights are
   * TRAINED in a batch session (16 exact Q20 gradient steps over the
@@ -18,7 +17,7 @@ import org.apache.spark.sql.functions._
   * NO watermark: each micro-batch is embarrassingly parallel at any
   * crawl rate, and the scorer's arithmetic is the batch scorer's
   * arithmetic by construction (same feature projection —
-  * [[graft.queries.CurationQueries33.featuresOf]] — same Q20 grid), so
+  * [[graft.queries.QualityQueries.featuresOf]] — same Q20 grid), so
   * streamed scores equal batch scores EXACTLY, which StreamingSpec
   * pins against `q_quality_logreg`.
   */
@@ -26,16 +25,12 @@ object QualityStreams {
 
   /** (doc_id, text) stream → (doc_id, logit_q, keep): the learned
     * linear scorer as one map-only projection. `w` is the final
-    * weight vector from [[graft.queries.CurationQueries33.learnedWeights]]
+    * weight vector from [[graft.queries.QualityQueries.learnedWeights]]
     * (or any persisted training artifact on the same grid).
     */
   def scoredDocs(docs: DataFrame, w: Seq[Long]): DataFrame = {
-    val wc = typedLit(graft.GraftLimits.requireBoundedWeights(w,
-      "QualityStreams.scoredDocs"))
-    graft.queries.CurationQueries33.featuresOf(docs)
-      .withColumn("dot",
-        aggregate(zip_with(col("f"), wc, (x, y) => x * y), lit(0L), (a, b) => a + b))
-      .select(col("doc_id"), expr("dot DIV 10000").as("logit_q"),
-        (expr("dot DIV 10000") >= 0).as("keep"))
+    import graft.queries.QualityQueries.{featuresOf, verdicts, weightsLit}
+    val wc = weightsLit(w, "QualityStreams.scoredDocs")
+    verdicts(featuresOf(docs), wc)
   }
 }

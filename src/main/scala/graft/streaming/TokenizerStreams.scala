@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Streaming inference for the trained BPE tokenizer — the
   * tokenize-as-you-crawl face of the batch train→infer pair
   * (`q_bpe_learn` / `q_bpe_encode`,
-  * [[graft.queries.TextStatsQueries]]), the same deployment shape as
+  * [[graft.queries.TokenizerQueries]]), the same deployment shape as
   * [[QualityStreams]]: both tokenizer artifacts (the ordered merge
   * table and the token→id vocabulary) are learned in a batch session
   * and enter the stream as LITERALS folded into one map-only
@@ -26,7 +26,7 @@ object TokenizerStreams {
     * projection, emitting exactly `q_bpe_encode`'s per-document schema.
     * `merges` is the ordered merge table; `vocab` the token→id map
     * (both from the batch training loop —
-    * [[graft.queries.TextStatsQueries.learnedMergeRows]] plus the
+    * [[graft.queries.TokenizerQueries.learnedMergeRows]] plus the
     * encode pass's vocabulary rank). Documents that tokenize to zero
     * tokens are dropped, matching the batch pass. The per-doc
     * aggregates are HOF folds over the row's OWN token array — no

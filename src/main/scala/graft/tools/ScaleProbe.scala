@@ -151,8 +151,8 @@ object ScaleProbe {
     * memo-cold on both sides.
     */
   private def clearMemos(): Unit = {
-    graft.queries.CurationQueries33.clearSessionMemo()
-    graft.queries.TextStatsQueries.clearSessionMemo()
+    graft.queries.QualityQueries.clearSessionMemo()
+    graft.queries.TokenizerQueries.clearSessionMemo()
   }
 
   def slope(spark: SparkSession, src: String, dst: String, factor: Int,

@@ -26,7 +26,7 @@ class AnnSpec2 extends SparkSpec {
   }
 
   test("filtered_ann: post-filter recall never beats pre-filter; accounting exact") {
-    val rows = graft.queries.AnnQueries2.filteredAnn.fn(spark, sf0001)
+    val rows = graft.queries.AnnQueries.filteredAnn.fn(spark, sf0001)
       .orderBy("qid").collect()
     assert(rows.length == 10)
     val labelCounts = Tables.embeddings(spark, sf0001)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class CorpusSpec extends SparkSpec {
 
   test("stratified sample is unchanged when unsampled documents are removed") {
-    val full = graft.queries.CorpusQueries.stratifiedK.fn(spark, sf0001).collect()
+    val full = graft.queries.MixingQueries.stratifiedK.fn(spark, sf0001).collect()
     val sampled = full.map(_.getLong(0)).toSet
     // drop 50 documents that are NOT in the sample; the hash-order pick
     // must not move (the property that lets a curation run re-sample a
@@ -21,13 +21,13 @@ class CorpusSpec extends SparkSpec {
     val dir = Files.createTempDirectory("docs-shrunk").toString
     docs.filter(!col("doc_id").isin(victims.toSeq: _*))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val shrunk = graft.queries.CorpusQueries.stratifiedK.fn(spark, dir).collect()
+    val shrunk = graft.queries.MixingQueries.stratifiedK.fn(spark, dir).collect()
     assert(shrunk.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq ==
       full.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq)
   }
 
   test("posting df matches a brute-force recount for spot-checked tokens") {
-    val out = graft.queries.CorpusQueries.postings.fn(spark, sf0001).collect()
+    val out = graft.queries.RagQueries.postings.fn(spark, sf0001).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
     val docs = Tables(spark, sf0001, "documents").select("doc_id", "text").collect()
     for (tok <- Seq("a", "table", "spark")) {

@@ -34,7 +34,7 @@ class CurationSpec14 extends SparkSpec {
     // at sf0.001 only ~9% of cells are hit and file envelopes are
     // sampling noise, not curve geometry (60k rows collect fine)
     val sf001 = "/root/testdata/sf0.01"
-    val rows = graft.queries.CurationQueries14.hilbertLayout.fn(spark, sf001)
+    val rows = graft.queries.MixingQueries.hilbertLayout.fn(spark, sf001)
       .orderBy("probe_id").collect()
     assert(rows.length == 8)
     val li = Tables(spark, sf001, "lineitem")
@@ -69,7 +69,7 @@ class CurationSpec14 extends SparkSpec {
   }
 
   test("kneser_ney: exact Scala recompute of the smoothed top-30") {
-    val rows = graft.queries.CurationQueries14.kneserNey.fn(spark, sf0001).collect()
+    val rows = graft.queries.TextStatsQueries.kneserNey.fn(spark, sf0001).collect()
     assert(rows.length == 30)
     val docs = Tables(spark, sf0001, "documents")
       .select(col("text")).collect().map(_.getString(0).split(" ", -1))
@@ -95,7 +95,7 @@ class CurationSpec14 extends SparkSpec {
   }
 
   test("source_dup_matrix: brute-force simhash pairs grouped by source") {
-    val rows = graft.queries.CurationQueries14.sourceDupMatrix.fn(spark, sf0001).collect()
+    val rows = graft.queries.DecontamQueries.sourceDupMatrix.fn(spark, sf0001).collect()
     assert(rows.nonEmpty)
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), col("text"), col("source")).collect()
@@ -134,7 +134,7 @@ class CurationSpec14 extends SparkSpec {
   }
 
   test("ttr_curve: exact Scala recompute; pooled TTR falls with length") {
-    val rows = graft.queries.CurationQueries14.ttrCurve.fn(spark, sf0001)
+    val rows = graft.queries.TextStatsQueries.ttrCurve.fn(spark, sf0001)
       .orderBy("bucket").collect()
     assert(rows.nonEmpty)
     val docs = Tables(spark, sf0001, "documents")

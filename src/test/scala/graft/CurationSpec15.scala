@@ -83,7 +83,7 @@ class CurationSpec15 extends SparkSpec {
   }
 
   test("shard_manifest: exact recompute; manifests detect any content flip") {
-    val rows = graft.queries.CurationQueries15.shardManifest.fn(spark, sf0001)
+    val rows = graft.queries.MixingQueries.shardManifest.fn(spark, sf0001)
       .orderBy("shard").collect()
     assert(rows.length == 16)
     val docs = Tables(spark, sf0001, "documents")
@@ -106,7 +106,7 @@ class CurationSpec15 extends SparkSpec {
   }
 
   test("corpus_diff: exact recompute; all four statuses present") {
-    val rows = graft.queries.CurationQueries15.corpusDiff.fn(spark, sf0001).collect()
+    val rows = graft.queries.MixingQueries.corpusDiff.fn(spark, sf0001).collect()
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))

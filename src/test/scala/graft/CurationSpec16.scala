@@ -55,7 +55,7 @@ class CurationSpec16 extends SparkSpec {
   }
 
   test("winnow density sits near the theoretical 2/(w+1)") {
-    val rows = graft.queries.CurationQueries16.winnow.fn(spark, sf0001).collect()
+    val rows = graft.queries.DedupQueries.winnow.fn(spark, sf0001).collect()
     val nw = rows.map(_.getLong(2)).sum
     val nf = rows.map(_.getLong(3)).sum
     assert(nw > 0 && nf > 0)
@@ -67,7 +67,7 @@ class CurationSpec16 extends SparkSpec {
   }
 
   test("readability: exact integer recompute on the fixture head") {
-    val got = graft.queries.CurationQueries16.readability.fn(spark, sf0001)
+    val got = graft.queries.QualityQueries.readability.fn(spark, sf0001)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     val docs = Tables(spark, sf0001, "documents")
       .select(col("source"), col("text")).collect()
@@ -91,7 +91,7 @@ class CurationSpec16 extends SparkSpec {
   }
 
   test("nb_lang: confusion rows cover the held-out split; learned beats chance") {
-    val rows = graft.queries.CurationQueries16.nbLang.fn(spark, sf0001).collect()
+    val rows = graft.queries.QualityQueries.nbLang.fn(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val testDocs = Tables(spark, sf0001, "documents")
       .filter(pmod(col("doc_id"), lit(5L)) === 0)

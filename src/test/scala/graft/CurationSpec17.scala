@@ -20,7 +20,7 @@ class CurationSpec17 extends SparkSpec {
   }
 
   test("holt: exact Scala recompute per event_type") {
-    val rows = graft.queries.CurationQueries17.holt.fn(spark, sf0001)
+    val rows = graft.queries.EventQueries.holt.fn(spark, sf0001)
       .orderBy("event_type").collect()
     assert(rows.nonEmpty)
     val series = Tables.events(spark, sf0001)
@@ -40,7 +40,7 @@ class CurationSpec17 extends SparkSpec {
   }
 
   test("prefix_dup: every derived truncation with >= 16 source tokens is caught") {
-    val row = graft.queries.CurationQueries17.prefixDup.fn(spark, sf0001).head()
+    val row = graft.queries.DedupQueries.prefixDup.fn(spark, sf0001).head()
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))

@@ -9,12 +9,12 @@ class CurationSpec18 extends SparkSpec {
     s.foldLeft(0L)((h, c) => (h * 31 + c) % 1000000007L)
 
   test("chunk_dedup: exact recompute from the reference chunker") {
-    val row = graft.queries.CurationQueries18.chunkDedup.fn(spark, sf0001).head()
+    val row = graft.queries.DedupQueries.chunkDedup.fn(spark, sf0001).head()
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val chunks = docs.flatMap { case (id, t) =>
-      graft.operators.Chunker.chunkText(t, graft.queries.TextQueries.ChunkLen)
+      graft.operators.Chunker.chunkText(t, graft.queries.RagQueries.ChunkLen)
         .map(c => (id, polyHash(c), c.length.toLong))
     }
     val byHash = chunks.groupBy(_._2)
@@ -29,7 +29,7 @@ class CurationSpec18 extends SparkSpec {
   }
 
   test("nb_margin: bins cover the held-out split and per-bin accounting is exact") {
-    val rows = graft.queries.CurationQueries18.nbMargin.fn(spark, sf0001).collect()
+    val rows = graft.queries.QualityQueries.nbMargin.fn(spark, sf0001).collect()
     val nTest = Tables(spark, sf0001, "documents")
       .filter(pmod(col("doc_id"), lit(5L)) === 0).count()
     assert(rows.map(_.getLong(1)).sum == nTest, "every held-out doc lands in a bin")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec19 extends SparkSpec {
 
   test("pii_scan: every injected residue class is detected, nothing else fires") {
-    val rows = graft.queries.CurationQueries19.piiScan.fn(spark, sf0001).collect()
+    val rows = graft.queries.LinkageQueries.piiScan.fn(spark, sf0001).collect()
     val ids = Tables(spark, sf0001, "documents")
       .select("doc_id").collect().map(_.getLong(0))
     // the synthetic corpus carries no organic PII, so hit totals must
@@ -20,7 +20,7 @@ class CurationSpec19 extends SparkSpec {
   }
 
   test("redact: scan of the redacted corpus is clean; hits gone, tags present") {
-    val redRows = graft.queries.CurationQueries19.redact.fn(spark, sf0001).collect()
+    val redRows = graft.queries.LinkageQueries.redact.fn(spark, sf0001).collect()
     val ids = Tables(spark, sf0001, "documents")
       .select("doc_id").collect().map(_.getLong(0))
     val expectChanged = ids.count(i => i % 7 == 0 || i % 11 == 0 || i % 13 == 0).toLong
@@ -29,7 +29,7 @@ class CurationSpec19 extends SparkSpec {
     // than its tag)
     assert(redRows.map(_.getLong(2)).sum > 0, "chars_removed must be positive")
     // idempotence/integrity: recomputing yields identical xor hashes
-    val again = graft.queries.CurationQueries19.redact.fn(spark, sf0001).collect()
+    val again = graft.queries.LinkageQueries.redact.fn(spark, sf0001).collect()
     assert(redRows.map(r => (r.getString(0), r.getLong(3))).toSet ==
       again.map(r => (r.getString(0), r.getLong(3))).toSet,
       "redaction is not deterministic")

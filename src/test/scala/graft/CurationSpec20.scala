@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec20 extends SparkSpec {
 
   test("mmr_select: exact greedy recompute from raw embeddings; diversity binds") {
-    val picked = graft.queries.CurationQueries20.mmrSelect.fn(spark, sf0001)
+    val picked = graft.queries.MixingQueries.mmrSelect.fn(spark, sf0001)
       .orderBy("step").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(picked.length == 5 && picked.map(_._1).toSeq == Seq(1L, 2L, 3L, 4L, 5L))
     // independent recompute straight from the parquet floats

@@ -21,7 +21,7 @@ class CurationSpec21 extends SparkSpec {
   }
 
   test("winnow_containment: exact recompute; totals agree with q_winnow_overlap") {
-    val rows = graft.queries.CurationQueries21.winnowContainment.fn(spark, sf0001)
+    val rows = graft.queries.DecontamQueries.winnowContainment.fn(spark, sf0001)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), col("text")).collect()
@@ -48,7 +48,7 @@ class CurationSpec21 extends SparkSpec {
       assert(avgExact == grp.map(_._2._2).sum / grp.length, s"bucket $bucket exact")
     }
     // cross-query consistency: the candidate universe is q_winnow_overlap's
-    val overlapTotal = graft.queries.CurationQueries16.winnowOverlap.fn(spark, sf0001)
+    val overlapTotal = graft.queries.DedupQueries.winnowOverlap.fn(spark, sf0001)
       .agg(sum("n_pairs")).head().getLong(0)
     assert(rows.values.map(_._1).sum == overlapTotal,
       "containment eval must score exactly the overlap candidates")

@@ -9,7 +9,7 @@ class CurationSpec22 extends SparkSpec {
     s.foldLeft(0L)((h, c) => (h * 31 + c) % 1000000007L)
 
   test("suffix_dup: every derived tail with >= 16 source tokens is caught") {
-    val row = graft.queries.CurationQueries22.suffixDup.fn(spark, sf0001).head()
+    val row = graft.queries.DedupQueries.suffixDup.fn(spark, sf0001).head()
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
@@ -23,7 +23,7 @@ class CurationSpec22 extends SparkSpec {
   }
 
   test("shard_mix: exact recompute of per-shard composition deviations") {
-    val rows = graft.queries.CurationQueries22.shardMix.fn(spark, sf0001)
+    val rows = graft.queries.MixingQueries.shardMix.fn(spark, sf0001)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), col("source")).collect()

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 class CurationSpec23 extends SparkSpec {
 
   test("rule_attribution: consistency with q_gopher_rules' own verdicts") {
-    val rows = graft.queries.CurationQueries23.ruleAttribution.fn(spark, sf0001)
+    val rows = graft.queries.QualityQueries.ruleAttribution.fn(spark, sf0001)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(rows.keySet == Set("words", "mwl", "stopwords", "short_frac"))
-    val gopher = graft.queries.CurationQueries9.gopherRules.fn(spark, sf0001).collect()
+    val gopher = graft.queries.QualityQueries.gopherRules.fn(spark, sf0001).collect()
     val nDocs = gopher.length.toLong
     val nKept = gopher.count(_.getLong(5) == 1L).toLong
     // sole blockers are disjoint across rules and all sit outside the
@@ -28,7 +28,7 @@ class CurationSpec23 extends SparkSpec {
   }
 
   test("markup_strip: strip is exactly inverse to the injection") {
-    val rows = graft.queries.CurationQueries23.markupStrip.fn(spark, sf0001).collect()
+    val rows = graft.queries.QualityQueries.markupStrip.fn(spark, sf0001).collect()
     val ids = Tables(spark, sf0001, "documents").select("doc_id")
       .collect().map(_.getLong(0))
     val marked = ids.count(_ % 6 == 0).toLong

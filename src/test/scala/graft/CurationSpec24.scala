@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec24 extends SparkSpec {
 
   test("fk_audit: exact recompute of orphan and fan-out accounting") {
-    val rows = graft.queries.CurationQueries24.fkAudit.fn(spark, sf0001)
+    val rows = graft.queries.RelationalQueries.fkAudit.fn(spark, sf0001)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     assert(rows.keySet == Set("lineitem->orders", "orders->customer", "customer->nation"))

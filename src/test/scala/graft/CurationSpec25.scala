@@ -22,7 +22,7 @@ class CurationSpec25 extends SparkSpec {
     else Set(hs.min)
 
   test("winnow_decontam: exact recompute; sampled flags are a subset of exact") {
-    val row = graft.queries.CurationQueries25.winnowDecontam.fn(spark, sf0001).head()
+    val row = graft.queries.DecontamQueries.winnowDecontam.fn(spark, sf0001).head()
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
@@ -49,7 +49,7 @@ class CurationSpec25 extends SparkSpec {
   }
 
   test("format_detect: exact recompute of the routing") {
-    val rows = graft.queries.CurationQueries25.formatDetect.fn(spark, sf0001)
+    val rows = graft.queries.QualityQueries.formatDetect.fn(spark, sf0001)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), col("source"), col("text")).collect()

@@ -10,7 +10,7 @@ class CurationSpec26 extends SparkSpec {
     s.foldLeft(0L)((h, c) => (h * mul + c) % Mod)
 
   test("hash_collisions: exact recompute; the 37-hash is not affine in the 31-hash") {
-    val row = graft.queries.CurationQueries26.hashCollisions.fn(spark, sf0001).head()
+    val row = graft.queries.DedupQueries.hashCollisions.fn(spark, sf0001).head()
     val sh = Tables(spark, sf0001, "documents")
       .select(col("text")).collect().map(_.getString(0))
       .flatMap(t => t.split(" ", -1).sliding(3).filter(_.length == 3).map(_.mkString(" ")))

@@ -4,7 +4,7 @@ package graft
 class CurationSpec27 extends SparkSpec {
 
   test("winnow_tuning: density decreases in w and tracks 2/(w+1) from above") {
-    val rows = graft.queries.CurationQueries27.winnowTuning.fn(spark, sf0001)
+    val rows = graft.queries.DedupQueries.winnowTuning.fn(spark, sf0001)
       .orderBy("w").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(4), r.getLong(5)))
     assert(rows.map(_._1).toSeq == Seq(2L, 4L, 8L, 16L))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec28 extends SparkSpec {
 
   test("embed_anisotropy: exact recompute; fixture space is near-isotropic unit-norm") {
-    val row = graft.queries.CurationQueries28.embedAnisotropy.fn(spark, sf0001).head()
+    val row = graft.queries.VectorQueries.embedAnisotropy.fn(spark, sf0001).head()
     val vecs = Tables.embeddings(spark, sf0001)
       .select(col("embedding")).collect()
       .map(_.getSeq[Any](0).toArray.map(_.toString.toDouble))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec29 extends SparkSpec {
 
   test("norm_dedup: every derived case/punct variant collapses onto its source") {
-    val row = graft.queries.CurationQueries29.normDedup.fn(spark, sf0001).head()
+    val row = graft.queries.DedupQueries.normDedup.fn(spark, sf0001).head()
     val docs = Tables(spark, sf0001, "documents")
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
@@ -18,11 +18,11 @@ class CurationSpec29 extends SparkSpec {
   }
 
   test("filter_kappa: exact recompute against both filters' own verdicts") {
-    val row = graft.queries.CurationQueries29.filterKappa.fn(spark, sf0001).head()
-    val gopher = graft.queries.CurationQueries9.gopherRules.fn(spark, sf0001)
+    val row = graft.queries.QualityQueries.filterKappa.fn(spark, sf0001).head()
+    val gopher = graft.queries.QualityQueries.gopherRules.fn(spark, sf0001)
       .select(col("doc_id"), col("keep")).collect()
       .map(r => r.getLong(0) -> (r.getLong(1) == 1L)).toMap
-    val quality = graft.queries.CurationQueries.qualityFilter.fn(spark, sf0001)
+    val quality = graft.queries.QualityQueries.qualityFilter.fn(spark, sf0001)
       .select(col("doc_id"), col("keep")).collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     val n = gopher.size

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec30 extends SparkSpec {
 
   test("len_quality_corr: exact recompute; the fixture's diversity gate is length-confounded") {
-    val row = graft.queries.CurationQueries30.lenQualityCorr.fn(spark, sf0001).head()
+    val row = graft.queries.QualityQueries.lenQualityCorr.fn(spark, sf0001).head()
     val stats = Tables(spark, sf0001, "documents")
       .select(col("text")).collect().map(_.getString(0)).map { t =>
         val toks = t.split(" ", -1)

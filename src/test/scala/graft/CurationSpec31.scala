@@ -9,7 +9,7 @@ class CurationSpec31 extends SparkSpec {
     s.foldLeft(0L)((h, c) => (h * 31 + c) % 1000000007L)
 
   test("sketch_storage: exact recompute of every tier's unit count and bytes") {
-    val rows = graft.queries.CurationQueries31.sketchStorage.fn(spark, sf0001)
+    val rows = graft.queries.RelationalQueries.sketchStorage.fn(spark, sf0001)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val docs = Tables(spark, sf0001, "documents")
       .select(col("text")).collect().map(_.getString(0))

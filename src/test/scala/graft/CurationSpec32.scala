@@ -10,16 +10,16 @@ import org.apache.spark.sql.functions._
 class CurationSpec32 extends SparkSpec {
 
   test("k-center: literal and running-min-dist forms pick identical trajectories") {
-    val lit8 = graft.queries.CurationQueries32.kcenterRun(spark, sf0001, 8, incremental = false)
+    val lit8 = graft.queries.MixingQueries.kcenterRun(spark, sf0001, 8, incremental = false)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val inc8 = graft.queries.CurationQueries32.kcenterRun(spark, sf0001, 8, incremental = true)
+    val inc8 = graft.queries.MixingQueries.kcenterRun(spark, sf0001, 8, incremental = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     assert(lit8.sameElements(inc8), "trajectories must match pick-for-pick")
     // ...and at a deeper K than the registry query uses, so the parity
     // argument is exercised past the fixture configuration
-    val lit12 = graft.queries.CurationQueries32.kcenterRun(spark, sf0001, 12, incremental = false)
+    val lit12 = graft.queries.MixingQueries.kcenterRun(spark, sf0001, 12, incremental = false)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val inc12 = graft.queries.CurationQueries32.kcenterRun(spark, sf0001, 12, incremental = true)
+    val inc12 = graft.queries.MixingQueries.kcenterRun(spark, sf0001, 12, incremental = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     assert(lit12.sameElements(inc12))
     assert(lit12.take(8).map(t => (t._2, t._3)).sameElements(lit8.map(t => (t._2, t._3))),
@@ -27,16 +27,16 @@ class CurationSpec32 extends SparkSpec {
     // ...and ACROSS the lineage-truncation boundary (CkptEvery = 32):
     // round 33+ folds on a localCheckpointed generation, which must be
     // value-identical to the persisted one
-    val lit36 = graft.queries.CurationQueries32.kcenterRun(spark, sf0001, 36, incremental = false)
+    val lit36 = graft.queries.MixingQueries.kcenterRun(spark, sf0001, 36, incremental = false)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val inc36 = graft.queries.CurationQueries32.kcenterRun(spark, sf0001, 36, incremental = true)
+    val inc36 = graft.queries.MixingQueries.kcenterRun(spark, sf0001, 36, incremental = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     assert(lit36.sameElements(inc36),
       "trajectories must match across the localCheckpoint cadence")
   }
 
   test("k-center radius certificate is non-increasing and picks are distinct") {
-    val rows = graft.queries.CurationQueries32.kcenterRun(spark, sf0001, 8, incremental = true)
+    val rows = graft.queries.MixingQueries.kcenterRun(spark, sf0001, 8, incremental = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     val radii = rows.drop(1).map(_._3) // step 1 seeds with radius 0 by convention
     assert(radii.zip(radii.drop(1)).forall { case (a, b) => b <= a },

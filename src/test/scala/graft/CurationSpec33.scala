@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec33 extends SparkSpec {
 
   test("skyline equals the brute-force dominance set and keeps exact ties") {
-    val d = queries.CurationQueries35.skylineSelect.fn(spark, sf0001)
+    val d = queries.MixingQueries.skylineSelect.fn(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // independent brute force over the same (n_tok, q_bp) projection
     val all = Tables(spark, sf0001, "documents").select(
@@ -33,7 +33,7 @@ class CurationSpec33 extends SparkSpec {
   }
 
   test("record linkage equals the unblocked all-pairs replay restricted to blocks") {
-    val got = queries.CurationQueries35.recordLinkage.fn(spark, sf0001)
+    val got = queries.LinkageQueries.recordLinkage.fn(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(p => (p._1, p._2))
     val c = Tables(spark, sf0001, "customer")
@@ -71,9 +71,9 @@ class CurationSpec33 extends SparkSpec {
 
   test("linkage clusters: pairs share an entity, entity is the min member, endpoints only") {
     import spark.implicits._
-    val pairs = queries.CurationQueries35.recordLinkage.fn(spark, sf0001)
+    val pairs = queries.LinkageQueries.recordLinkage.fn(spark, sf0001)
       .select("key_a", "key_b").as[(Long, Long)].collect()
-    val comp = queries.CurationQueries35.linkageClusters.fn(spark, sf0001)
+    val comp = queries.LinkageQueries.linkageClusters.fn(spark, sf0001)
       .as[(Long, Long)].collect().toMap
     assert(pairs.nonEmpty)
     pairs.foreach { case (a, b) =>
@@ -85,7 +85,7 @@ class CurationSpec33 extends SparkSpec {
   }
 
   test("scd2 intervals are contiguous, change-only, and reconstruct as-of state") {
-    val rows = queries.CurationQueries35.scd2History.fn(spark, sf0001)
+    val rows = queries.RelationalQueries.scd2History.fn(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         if (r.isNullAt(3)) Long.MaxValue else r.getLong(3), r.getLong(4)))
     val byUser = rows.groupBy(_._1).view.mapValues(_.sortBy(_._3)).toMap
@@ -127,20 +127,20 @@ class CurationSpec33 extends SparkSpec {
       (4L, "plain words only", "en", "sB", 16L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = queries.CurationQueries35.encodingAudit.fn(spark, dir)
+    val got = queries.QualityQueries.encodingAudit.fn(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(_._1)
     assert(got.map(t => (t._1, t._2, t._3, t._4)).toSeq ==
       Seq(("sA", 2L, 1L, 0L), ("sB", 2L, 0L, 1L)))
     // and the fixture corpus is clean: zero anomalies, nonzero docs
-    val fix = queries.CurationQueries35.encodingAudit.fn(spark, sf0001)
+    val fix = queries.QualityQueries.encodingAudit.fn(spark, sf0001)
       .agg(sum("n_docs"), sum("n_nonascii"), sum("n_ctrl")).collect()(0)
     assert(fix.getLong(0) > 0 && fix.getLong(1) == 0 && fix.getLong(2) == 0)
   }
 
   test("waterfill: level solve invariants on the fixture and on a skewed corpus") {
     def check(dir: String): Unit = {
-      val rows = queries.CurationQueries35.mixWaterfill.fn(spark, dir)
+      val rows = queries.MixingQueries.mixWaterfill.fn(spark, dir)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       val nS = rows.length
       val total = rows.map(_._2).sum
@@ -169,7 +169,7 @@ class CurationSpec33 extends SparkSpec {
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
     check(dir)
-    val skew = queries.CurationQueries35.mixWaterfill.fn(spark, dir)
+    val skew = queries.MixingQueries.mixWaterfill.fn(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(3))).toMap
     assert(skew("tiny1") == 1L && skew("tiny2") == 1L && skew("big") == 0L)
   }

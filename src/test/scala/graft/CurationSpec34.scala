@@ -15,7 +15,7 @@ class CurationSpec34 extends SparkSpec {
     // sf0.01 — the oracle's SF, where QI group sizes straddle k=10
     // (5–21); at sf0.001 every group is tiny and only suppress=1 occurs
     val dir = "/root/testdata/sf0.01"
-    val got = queries.CurationQueries36.kanonAudit.fn(spark, dir)
+    val got = queries.LinkageQueries.kanonAudit.fn(spark, dir)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
     val want = Tables(spark, dir, "customer")
       .groupBy("c_nationkey", "c_mktsegment").count()
@@ -30,7 +30,7 @@ class CurationSpec34 extends SparkSpec {
   }
 
   test("dp counts: released = exact + keyed geometric noise, deterministic across runs") {
-    def run() = queries.CurationQueries36.dpCounts.fn(spark, sf0001)
+    def run() = queries.LinkageQueries.dpCounts.fn(spark, sf0001)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     val a = run()
     val exact = Tables.events(spark, sf0001).groupBy("event_type").count()

@@ -10,7 +10,7 @@ class CurationSpec35 extends SparkSpec {
   import spark.implicits._
 
   test("kanon release: every released group clears k and the ledger conserves records") {
-    val rel = graft.queries.CurationQueries37.kanonRelease.fn(spark, "/root/testdata/sf0.01").collect()
+    val rel = graft.queries.LinkageQueries.kanonRelease.fn(spark, "/root/testdata/sf0.01").collect()
     val released = rel.filter(_.getString(0) != "suppressed")
     assert(released.nonEmpty)
     // the re-audit: zero surviving sub-k groups in the release
@@ -37,7 +37,7 @@ class CurationSpec35 extends SparkSpec {
       .write.parquet(s"$dir/customer.parquet")
     Seq((0, 0), (1, 1), (2, 2), (3, 3)).toDF("n_nationkey", "n_regionkey")
       .write.parquet(s"$dir/nation.parquet")
-    val rel = graft.queries.CurationQueries37.kanonRelease.fn(spark, dir).collect()
+    val rel = graft.queries.LinkageQueries.kanonRelease.fn(spark, dir).collect()
     val sup = rel.filter(_.getString(0) == "suppressed")
     assert(sup.length == 1 && sup.head.getLong(3) == 4L,
       s"expected one withheld row covering the 4 scattered records, got ${rel.mkString(", ")}")
@@ -59,7 +59,7 @@ class CurationSpec35 extends SparkSpec {
       .write.parquet(s"$dir/customer.parquet")
     Seq((0, 0)).toDF("n_nationkey", "n_regionkey")
       .write.parquet(s"$dir/nation.parquet")
-    val rel = graft.queries.CurationQueries37.kanonRelease.fn(spark, dir).collect()
+    val rel = graft.queries.LinkageQueries.kanonRelease.fn(spark, dir).collect()
     val sup = rel.filter(_.getString(0) == "suppressed")
     assert(sup.length == 1 && sup.head.getLong(3) == 3L,
       s"orphaned records must be withheld, got ${rel.mkString(", ")}")
@@ -83,8 +83,8 @@ class CurationSpec35 extends SparkSpec {
       .write.parquet(s"$dir/customer.parquet")
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("key_a", "key_b").as[(Long, Long)].collect().toSet
-    val p1 = pairs(graft.queries.CurationQueries35.recordLinkage.fn(spark, dir))
-    val p2 = pairs(graft.queries.CurationQueries37.recordLinkage2.fn(spark, dir))
+    val p1 = pairs(graft.queries.LinkageQueries.recordLinkage.fn(spark, dir))
+    val p2 = pairs(graft.queries.LinkageQueries.recordLinkage2.fn(spark, dir))
     assert(!p1.contains((1L, 2L)), "pass 1 must miss the prefix typo (that's its stated gap)")
     assert(p1.contains((3L, 4L)))
     assert(p2 == p1 + ((1L, 2L)), s"union must add exactly the prefix-typo pair: $p2 vs $p1")
@@ -120,7 +120,7 @@ class CurationSpec35 extends SparkSpec {
       (2L, "Customer#000000001", 0, "AUTOMOBILE", 150.00)
     ).toDF("c_custkey", "c_name", "c_nationkey", "c_mktsegment", "c_acctbal")
       .write.parquet(s"$dir/customer.parquet")
-    val rows = graft.queries.CurationQueries37.recordLinkage2.fn(spark, dir).collect()
+    val rows = graft.queries.LinkageQueries.recordLinkage2.fn(spark, dir).collect()
     assert(rows.length == 1 && rows.head.getLong(0) == 1L && rows.head.getLong(1) == 2L
       && rows.head.getLong(2) == 0L)
   }

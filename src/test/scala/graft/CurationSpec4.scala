@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec4 extends SparkSpec {
 
   test("oov rate: brute-force recount against the top-20 vocabulary") {
-    val out = graft.queries.CurationQueries4.oovRate.fn(spark, sf0001).collect()
+    val out = graft.queries.TextStatsQueries.oovRate.fn(spark, sf0001).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val docs = Tables(spark, sf0001, "documents").select("doc_id", "text").collect()
     val counts = docs.flatMap(_.getString(1).split(" "))
@@ -25,7 +25,7 @@ class CurationSpec4 extends SparkSpec {
   }
 
   test("dup-ngram fraction: every doc emits one row with dup_bp in [0, 10000]") {
-    val rows = graft.queries.CurationQueries4.dupNgramFrac.fn(spark, sf0001).collect()
+    val rows = graft.queries.TextStatsQueries.dupNgramFrac.fn(spark, sf0001).collect()
     val nDocs = Tables(spark, sf0001, "documents").count()
     assert(rows.length == nDocs)
     assert(rows.forall(r => r.getLong(3) >= 0 && r.getLong(3) <= 10000))
@@ -33,7 +33,7 @@ class CurationSpec4 extends SparkSpec {
   }
 
   test("blocklist: hits equal a brute-force recount; keep iff zero hits") {
-    val out = graft.queries.CurationQueries4.blocklist.fn(spark, sf0001).collect()
+    val out = graft.queries.QualityQueries.blocklist.fn(spark, sf0001).collect()
       .map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
     val blocked = Set("slow", "crash", "deprecated")
     for (r <- Tables(spark, sf0001, "documents").select("doc_id", "text").collect()) {
@@ -46,7 +46,7 @@ class CurationSpec4 extends SparkSpec {
   }
 
   test("embedding dim stats: 64 rows; var nonnegative; min <= mean <= max") {
-    val rows = graft.queries.CurationQueries4.embedDimStats.fn(spark, sf0001).collect()
+    val rows = graft.queries.VectorQueries.embedDimStats.fn(spark, sf0001).collect()
     assert(rows.length == 64)
     for (r <- rows) {
       val (mean, v, mn, mx) = (r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))
@@ -58,7 +58,7 @@ class CurationSpec4 extends SparkSpec {
   }
 
   test("knn graph: ranks are 1..k per source, neighbors distinct, sim non-increasing") {
-    val rows = graft.queries.DedupQueries.knnGraph.fn(spark, sf0001).collect()
+    val rows = graft.queries.NearDupQueries.knnGraph.fn(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(rows.nonEmpty)
     for ((src, edges) <- rows.groupBy(_._1)) {
@@ -86,7 +86,7 @@ class CurationSpec4 extends SparkSpec {
         val sv = v.slice(m * 16, m * 16 + 16)
         m -> (0L until 8L).map(k => (qL2(sv, emb(k).slice(m * 16, m * 16 + 16)), k)).min._2
       }
-    val out = graft.queries.PqQueries.ivfPq.fn(spark, sf0001).collect()
+    val out = graft.queries.VectorQueries.ivfPq.fn(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.map(_._1).distinct.sorted.toSeq == (0L until 5L).toSeq)
     for ((qid, edges) <- out.groupBy(_._1)) {
@@ -107,7 +107,7 @@ class CurationSpec4 extends SparkSpec {
   }
 
   test("knn recall: hits <= n_edges <= 3, one row per probe") {
-    val rows = graft.queries.DedupQueries.knnRecall.fn(spark, sf0001).collect()
+    val rows = graft.queries.NearDupQueries.knnRecall.fn(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.map(_._1).sorted.toSeq == (0L until 10L).toSeq)
     for ((qid, nEdges, hits) <- rows) {
@@ -117,7 +117,7 @@ class CurationSpec4 extends SparkSpec {
   }
 
   test("boilerplate strip: exact duplicates are fully covered; coverage bounded") {
-    val rows = graft.queries.CurationQueries3.boilerplateStrip.fn(spark, sf0001).collect()
+    val rows = graft.queries.QualityQueries.boilerplateStrip.fn(spark, sf0001).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(4))).toMap
     val docs = Tables(spark, sf0001, "documents").select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec5 extends SparkSpec {
 
   test("retention: cohort sizes partition the user base; retained <= cohort size") {
-    val rows = graft.queries.CurationQueries5.retention.fn(spark, sf0001).collect()
+    val rows = graft.queries.EventQueries.retention.fn(spark, sf0001).collect()
     val nUsers = Tables.events(spark, sf0001).select("user_id").distinct().count()
     assert(rows.map(_.getLong(1)).sum == nUsers)
     for (r <- rows) {
@@ -18,7 +18,7 @@ class CurationSpec5 extends SparkSpec {
   }
 
   test("retention: d1 figure matches a brute-force recount") {
-    val rows = graft.queries.CurationQueries5.retention.fn(spark, sf0001).collect()
+    val rows = graft.queries.EventQueries.retention.fn(spark, sf0001).collect()
     val ud = Tables.events(spark, sf0001)
       .select(col("user_id"), to_date(col("ts")).as("d")).distinct().collect()
       .map(r => (r.getLong(0), r.getDate(1).toLocalDate))
@@ -31,7 +31,7 @@ class CurationSpec5 extends SparkSpec {
   }
 
   test("zipf fit: slope is negative and matches a driver-side OLS recount") {
-    val row = graft.queries.CurationQueries5.zipfFit.fn(spark, sf0001).collect().head
+    val row = graft.queries.TextStatsQueries.zipfFit.fn(spark, sf0001).collect().head
     val (n, slope, icept) = (row.getLong(0), row.getDouble(1), row.getDouble(2))
     assert(slope < 0, s"zipf slope $slope")
     val counts = Tables(spark, sf0001, "documents").select("text").collect()
@@ -53,12 +53,12 @@ class CurationSpec5 extends SparkSpec {
 
   test("quality logreg: keep iff learned logit >= 0; logit matches the feature recount") {
     // final-step learned weights from the training trajectory
-    val steps = graft.queries.CurationQueries33.qualityTrain.fn(spark, sf0001).collect()
+    val steps = graft.queries.QualityQueries.qualityTrain.fn(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val lastStep = steps.map(_._1).max
     val w = steps.filter(_._1 == lastStep).sortBy(_._2).map(_._3)
     assert(w.length == 68 && w.exists(_ != 0L), "trained weights must be non-trivial")
-    val out = graft.queries.CurationQueries33.qualityLogreg.fn(spark, sf0001).collect()
+    val out = graft.queries.QualityQueries.qualityLogreg.fn(spark, sf0001).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     def polyHash(s: String): Long =
       s.foldLeft(0L)((h, c) => (h * 31 + c) % 1000000007L)
@@ -84,7 +84,7 @@ class CurationSpec5 extends SparkSpec {
   }
 
   test("temperature mix: flattening moves every share toward the mean") {
-    val rows = graft.queries.CurationQueries5.temperatureMix.fn(spark, sf0001).collect()
+    val rows = graft.queries.MixingQueries.temperatureMix.fn(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val meanBp = 10000L / rows.length
     for ((src, _, shareBp, tempBp) <- rows) {
@@ -98,7 +98,7 @@ class CurationSpec5 extends SparkSpec {
   }
 
   test("pipeline funnel: monotone non-increasing stage counts, raw totals exact") {
-    val rows = graft.queries.CurationQueries5.pipelineFunnel.fn(spark, sf0001).collect()
+    val rows = graft.queries.QualityQueries.pipelineFunnel.fn(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     assert(rows.map(_._1).toSeq ==
       Seq("00_raw", "10_quality", "20_exact_dedup", "30_train_split", "40_decontam"))
@@ -125,7 +125,7 @@ class CurationSpec5 extends SparkSpec {
   }
 
   test("semdedup recall: within-cluster pairs are a subset; bp consistent") {
-    val Array(row) = graft.queries.DedupQueries.semdedupRecall.fn(spark, sf0001).collect()
+    val Array(row) = graft.queries.NearDupQueries.semdedupRecall.fn(spark, sf0001).collect()
     val (n, within, bp) = (row.getLong(0), row.getLong(1), row.getLong(2))
     assert(n > 0, "no ground-truth pairs at sf0.001")
     assert(within <= n)
@@ -166,7 +166,7 @@ class CurationSpec5 extends SparkSpec {
       val (sa, sb) = (src(a), src(b))
       (if (sa <= sb) sa else sb, if (sa <= sb) sb else sa)
     }.groupBy(identity).view.mapValues(_.length.toLong).toMap
-    val got = graft.queries.DedupQueries.sourceOverlap.fn(spark, sf0001).collect()
+    val got = graft.queries.DecontamQueries.sourceOverlap.fn(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == expected)
     assert(got.values.sum == pairs.length.toLong)

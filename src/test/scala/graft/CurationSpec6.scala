@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec6 extends SparkSpec {
 
   test("shard_assign: shards partition the corpus; deviations bounded") {
-    val rows = graft.queries.CurationQueries6.shardAssign.fn(spark, sf0001).collect()
+    val rows = graft.queries.MixingQueries.shardAssign.fn(spark, sf0001).collect()
     val docs = Tables(spark, sf0001, "documents")
     assert(rows.map(_.getLong(1)).sum == docs.count())
     val totTokens = docs.select(sum(size(split(col("text"), " ")).cast("long")))
@@ -19,18 +19,18 @@ class CurationSpec6 extends SparkSpec {
   }
 
   test("shard_assign is re-shard stable: same shard under any partitioning") {
-    val a = graft.queries.CurationQueries6.shardAssign.fn(spark, sf0001)
+    val a = graft.queries.MixingQueries.shardAssign.fn(spark, sf0001)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val repartitioned = spark.read.parquet(s"$sf0001/documents.parquet")
       .repartition(7)
     repartitioned.createOrReplaceTempView("ignored") // force a distinct lineage
-    val b = graft.queries.CurationQueries6.shardAssign.fn(spark, sf0001)
+    val b = graft.queries.MixingQueries.shardAssign.fn(spark, sf0001)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(a == b)
   }
 
   test("packing_waste: capacity conservation per source") {
-    val rows = graft.queries.CurationQueries6.packingWaste.fn(spark, sf0001).collect()
+    val rows = graft.queries.TokenizerQueries.packingWaste.fn(spark, sf0001).collect()
     for (r <- rows) {
       val (tok, seqs, pad, bp) = (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
       assert(seqs * 512 == tok + pad, s"capacity mismatch for ${r.getString(0)}")
@@ -40,7 +40,7 @@ class CurationSpec6 extends SparkSpec {
   }
 
   test("dedup_survivorship: keepers partition distinct texts; rates bounded") {
-    val rows = graft.queries.CurationQueries6.dedupSurvivorship.fn(spark, sf0001).collect()
+    val rows = graft.queries.DedupQueries.dedupSurvivorship.fn(spark, sf0001).collect()
     val docs = Tables(spark, sf0001, "documents")
     assert(rows.map(_.getLong(1)).sum == docs.count())
     assert(rows.map(_.getLong(2)).sum == docs.select("text").distinct().count())
@@ -51,7 +51,7 @@ class CurationSpec6 extends SparkSpec {
   }
 
   test("vocab_growth: new types partition the vocabulary; cumulative monotone") {
-    val rows = graft.queries.CurationQueries6.vocabGrowth.fn(spark, sf0001)
+    val rows = graft.queries.TextStatsQueries.vocabGrowth.fn(spark, sf0001)
       .orderBy("bucket").collect()
     val docs = Tables(spark, sf0001, "documents")
     val vocab = docs.select(explode(split(col("text"), " ")).as("t"))
@@ -66,7 +66,7 @@ class CurationSpec6 extends SparkSpec {
   }
 
   test("vocab_coverage: 20 ranks, counts non-increasing, cum_bp monotone <= 10000") {
-    val rows = graft.queries.CurationQueries6.vocabCoverage.fn(spark, sf0001)
+    val rows = graft.queries.TokenizerQueries.vocabCoverage.fn(spark, sf0001)
       .orderBy("rnk").collect()
     assert(rows.length == 20)
     assert(rows.map(_.getLong(0)).toSeq == (1L to 20L))

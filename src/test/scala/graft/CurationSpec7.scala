@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec7 extends SparkSpec {
 
   test("tfidf_neardup: pairs ordered, cosine grid bounded, shared terms positive") {
-    val rows = graft.queries.CurationQueries7.tfidfNeardup.fn(spark, sf0001).collect()
+    val rows = graft.queries.NearDupQueries.tfidfNeardup.fn(spark, sf0001).collect()
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (a, b, dot, shared) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
@@ -26,7 +26,7 @@ class CurationSpec7 extends SparkSpec {
     // capped-vocabulary tf-idf cosine of the best-scoring pair from raw
     // doubles and require the quantized metric to agree to ~1%. This
     // pins dot_q to the actual cosine definition, not just to itself.
-    val top = graft.queries.CurationQueries7.tfidfNeardup.fn(spark, sf0001)
+    val top = graft.queries.NearDupQueries.tfidfNeardup.fn(spark, sf0001)
       .orderBy(col("dot_q").desc, col("doc_a").asc, col("doc_b").asc).limit(1)
       .collect().head
     val (da, db, dotQ) = (top.getLong(0), top.getLong(1), top.getLong(2))
@@ -51,7 +51,7 @@ class CurationSpec7 extends SparkSpec {
   }
 
   test("quality_calibration: sources partition the corpus; nearest-rank bounds hold") {
-    val rows = graft.queries.CurationQueries7.qualityCalibration.fn(spark, sf0001).collect()
+    val rows = graft.queries.QualityQueries.qualityCalibration.fn(spark, sf0001).collect()
     val nDocs = Tables(spark, sf0001, "documents").count()
     assert(rows.map(_.getLong(1)).sum == nDocs)
     for (r <- rows) {
@@ -65,7 +65,7 @@ class CurationSpec7 extends SparkSpec {
   }
 
   test("quality_calibration: local calibration equalizes keep rates vs global") {
-    val rows = graft.queries.CurationQueries7.qualityCalibration.fn(spark, sf0001).collect()
+    val rows = graft.queries.QualityQueries.qualityCalibration.fn(spark, sf0001).collect()
     // local keep rate is ~90% for EVERY source by construction; global
     // keep rate varies with the source's score distribution. The spread
     // (max - min keep rate in basis points) must shrink under local
@@ -117,7 +117,7 @@ class CurationSpec7 extends SparkSpec {
   }
 
   test("epoch_plan: budget conservation and sqrt-temperature upweighting") {
-    val rows = graft.queries.CurationQueries7.epochPlan.fn(spark, sf0001).collect()
+    val rows = graft.queries.MixingQueries.epochPlan.fn(spark, sf0001).collect()
     val allocs = rows.map(_.getLong(2))
     assert(allocs.forall(_ > 0))
     // floors only lose < 1 token per source
@@ -130,7 +130,7 @@ class CurationSpec7 extends SparkSpec {
   }
 
   test("semdedup_prune: clusters partition the corpus; drops consistent with the pair stream") {
-    val prune = graft.queries.CurationQueries3.semDedupPrune.fn(spark, sf0001).collect()
+    val prune = graft.queries.NearDupQueries.semDedupPrune.fn(spark, sf0001).collect()
     val emb = Tables(spark, sf0001, "embeddings")
     assert(prune.map(_.getLong(1)).sum == emb.count(), "members must partition the corpus")
     for (r <- prune) {
@@ -138,7 +138,7 @@ class CurationSpec7 extends SparkSpec {
       assert(r.getLong(4) >= 0 && r.getLong(4) <= 10000)
     }
     // total dropped = distinct idb in the mine step's verified pairs
-    val pairs = graft.queries.CurationQueries3.semDedup.fn(spark, sf0001)
+    val pairs = graft.queries.NearDupQueries.semDedup.fn(spark, sf0001)
     val expectDropped = pairs.select("idb").distinct().count()
     assert(prune.map(_.getLong(2)).sum == expectDropped)
   }
@@ -200,11 +200,11 @@ class CurationSpec7 extends SparkSpec {
   }
 
   test("knn_hubness: node conservation and edge-mass identity with the knn graph") {
-    val rows = graft.queries.DedupQueries.knnHubness.fn(spark, sf0001).collect()
+    val rows = graft.queries.NearDupQueries.knnHubness.fn(spark, sf0001).collect()
     val emb = Tables(spark, sf0001, "embeddings")
     assert(rows.map(_.getLong(1)).sum == emb.count(), "histogram partitions the vector set")
     val edgeMass = rows.map(r => r.getLong(0) * r.getLong(1)).sum
-    val graphEdges = graft.queries.DedupQueries.knnGraph.fn(spark, sf0001).count()
+    val graphEdges = graft.queries.NearDupQueries.knnGraph.fn(spark, sf0001).count()
     assert(edgeMass == graphEdges, "sum(indeg * n_nodes) = total graph edges")
     assert(rows.exists(_.getLong(0) == 0L) || edgeMass >= emb.count(),
       "antihubs visible unless every node is referenced")
@@ -298,7 +298,7 @@ class CurationSpec7 extends SparkSpec {
   }
 
   test("neardup_sweep: full threshold grid, monotone pair and drop counts") {
-    val rows = graft.queries.DedupQueries.neardupSweep.fn(spark, sf0001)
+    val rows = graft.queries.NearDupQueries.neardupSweep.fn(spark, sf0001)
       .orderBy("thr").collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(40L, 50L, 60L, 70L, 80L, 90L))
     for (r <- rows) assert(r.getLong(2) <= r.getLong(1), "dropped docs <= surviving pairs")
@@ -306,18 +306,18 @@ class CurationSpec7 extends SparkSpec {
       assert(rows.map(_.getLong(c)).sliding(2).forall(p => p.length < 2 || p(0) >= p(1)),
         "counts are non-increasing in the threshold")
     // thr=40 matches the scaled near-dup pair stream's total
-    val total = graft.queries.DedupQueries.embedNearDupScaled.fn(spark, sf0001).count()
+    val total = graft.queries.NearDupQueries.embedNearDupScaled.fn(spark, sf0001).count()
     assert(rows.head.getLong(1) == total)
   }
 
   test("pagerank: independent Scala recompute of the 3-iteration integer ranks") {
-    val rows = graft.queries.DedupQueries.pagerank.fn(spark, sf0001)
+    val rows = graft.queries.NearDupQueries.pagerank.fn(spark, sf0001)
       .orderBy("rank").collect()
     assert(rows.nonEmpty && rows.length <= 20)
     assert(rows.map(_.getLong(0)).toSeq == (1L to rows.length).toSeq)
     assert(rows.map(_.getLong(3)).sliding(2).forall(p => p.length < 2 || p(0) >= p(1)))
     // rebuild the graph from the scaled pair stream and iterate in Scala
-    val prs = graft.queries.DedupQueries.embedNearDupScaled.fn(spark, sf0001)
+    val prs = graft.queries.NearDupQueries.embedNearDupScaled.fn(spark, sf0001)
       .select("ida", "idb").collect().map(r => (r.getLong(0), r.getLong(1)))
     val edges = prs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
     val deg = edges.groupBy(_._1).view.mapValues(_.length.toLong).toMap
@@ -333,7 +333,7 @@ class CurationSpec7 extends SparkSpec {
   }
 
   test("weighted_sample: keys recomputed exactly; selection is the global min-key set") {
-    val rows = graft.queries.TextStatsQueries.weightedSample.fn(spark, sf0001)
+    val rows = graft.queries.MixingQueries.weightedSample.fn(spark, sf0001)
       .orderBy("rank").collect()
     assert(rows.length == 100)
     assert(rows.map(_.getLong(0)).toSeq == (1L to 100L).toSeq)

@@ -13,7 +13,7 @@ class CurationSpec8 extends SparkSpec {
     (0 until 8).map(i => (((x >> i) & 1L) << (2 * i)) | (((y >> i) & 1L) << (2 * i + 1))).sum
 
   test("zorder_layout: exact Scala recompute of zone maps and probe pricing") {
-    val rows = graft.queries.CurationQueries8.zorderLayout.fn(spark, sf0001)
+    val rows = graft.queries.MixingQueries.zorderLayout.fn(spark, sf0001)
       .orderBy("probe_id").collect()
     assert(rows.length == 8)
     val li = Tables(spark, sf0001, "lineitem")
@@ -52,7 +52,7 @@ class CurationSpec8 extends SparkSpec {
   }
 
   test("snm_blocking: candidate set equals the naive within-w rank pairs") {
-    val rows = graft.queries.DedupQueries.snmBlocking.fn(spark, sf0001)
+    val rows = graft.queries.LinkageQueries.snmBlocking.fn(spark, sf0001)
       .orderBy("ida", "idb").collect()
     assert(rows.nonEmpty)
     // ranks recomputed naively: global sort by (first-3-token prefix, doc_id)
@@ -79,7 +79,7 @@ class CurationSpec8 extends SparkSpec {
   }
 
   test("repeated_spans: brute-force island recompute; spans are maximal") {
-    val rows = graft.queries.CurationQueries8.repeatedSpans.fn(spark, sf0001)
+    val rows = graft.queries.DedupQueries.repeatedSpans.fn(spark, sf0001)
       .orderBy("rank").collect()
     assert(rows.nonEmpty && rows.length <= 20)
     val docs = Tables(spark, sf0001, "documents")

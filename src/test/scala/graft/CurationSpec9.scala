@@ -76,7 +76,7 @@ class CurationSpec9 extends SparkSpec {
   }
 
   test("bpe_learn: all five rounds recomputed in Scala from raw documents") {
-    val rows = graft.queries.TextStatsQueries.bpeLearn.fn(spark, sf0001)
+    val rows = graft.queries.TokenizerQueries.bpeLearn.fn(spark, sf0001)
       .orderBy("iter").collect()
     assert(rows.length == 5)
     var corpus = Tables(spark, sf0001, "documents")
@@ -128,7 +128,7 @@ class CurationSpec9 extends SparkSpec {
       val df = docs.zipWithIndex
         .map { case (t, i) => (i.toLong, t.split(" ", -1).toSeq) }
         .toDF("doc_id", "toks")
-      graft.queries.TextStatsQueries.learnBpeMerges(spark, df, iters)
+      graft.queries.TokenizerQueries.learnBpeMerges(spark, df, iters)
         .orderBy("iter").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
         .toSeq
@@ -150,11 +150,11 @@ class CurationSpec9 extends SparkSpec {
   }
 
   test("split_leakage: consistent with the lsh-pair stream and split assignment") {
-    val rows = graft.queries.DedupQueries.splitLeakage.fn(spark, sf0001).collect()
+    val rows = graft.queries.DecontamQueries.splitLeakage.fn(spark, sf0001).collect()
     assert(rows.nonEmpty)
     val pairs = graft.queries.DedupQueries.minhashLshPairs.fn(spark, sf0001)
       .select("ida", "idb").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val split = graft.queries.TextStatsQueries.sampleSplit.fn(spark, sf0001)
+    val split = graft.queries.MixingQueries.sampleSplit.fn(spark, sf0001)
       .select("doc_id", "split").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val classes = pairs.groupBy { case (a, b) =>

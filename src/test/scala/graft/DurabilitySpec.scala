@@ -38,7 +38,7 @@ class DurabilitySpec extends SparkSpec {
   }
 
   test("reliable-checkpoint mode: same rows, same plan shape, one config line") {
-    val q = graft.queries.CurationQueries14.sourceDupMatrix
+    val q = graft.queries.DecontamQueries.sourceDupMatrix
     val local = q.fn(spark, sf0001)
     val localRows = local.orderBy("src_a", "src_b").collect().toSeq
     val localNodes = nodeProfile(local)

@@ -101,7 +101,7 @@ class GraftLimitsSparkSpec extends SparkSpec {
       .groupBy("doc_id").agg(concat_ws(" ", collect_list(col("tok"))).as("text"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val e = intercept[IllegalArgumentException] {
-      graft.queries.TextStatsQueries.tokenizerArtifacts(spark, dir)
+      graft.queries.TokenizerQueries.tokenizerArtifacts(spark, dir)
     }
     assert(e.getMessage.contains("refusing to collect"),
       s"guard must fire at the count, got: ${e.getMessage}")

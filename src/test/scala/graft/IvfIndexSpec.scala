@@ -159,9 +159,9 @@ class IvfIndexSpec extends SparkSpec {
     // in-session q_ivf_nprobe (both also share one DuckDB oracle, so
     // the driver's hash gate re-proves this at sf0.01)
     val a = graft.queries.AnnQueries.ivfNprobe.fn(spark, sf0001)
-    val b = graft.queries.AnnQueries2.ivfNprobeArtifact.fn(spark, sf0001)
+    val b = graft.queries.AnnQueries.ivfNprobeArtifact.fn(spark, sf0001)
     assert(a.collect().toSeq == b.collect().toSeq)
-    assert(graft.queries.AnnQueries2.ivfNprobeArtifact.oracle ==
+    assert(graft.queries.AnnQueries.ivfNprobeArtifact.oracle ==
       graft.queries.AnnQueries.ivfNprobe.oracle,
       "artifact twin must reuse the in-session oracle verbatim")
   }

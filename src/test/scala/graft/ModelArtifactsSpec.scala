@@ -12,8 +12,8 @@ class ModelArtifactsSpec extends SparkSpec {
 
   test("quality weights: save -> load -> score equals q_quality_logreg exactly") {
     val path = Files.createTempDirectory("qweights").toString + "/w.parquet"
-    val w = graft.queries.CurationQueries33.learnedWeights(
-      graft.queries.CurationQueries33.featuresOf(
+    val w = graft.queries.QualityQueries.learnedWeights(
+      graft.queries.QualityQueries.featuresOf(
         Tables(spark, sf0001, "documents")))
     graft.pipelines.ModelArtifacts.saveWeights(spark, w.toSeq, path)
     val loaded = graft.pipelines.ModelArtifacts.loadWeights(spark, path)
@@ -29,7 +29,7 @@ class ModelArtifactsSpec extends SparkSpec {
   test("tokenizer artifacts: save -> load -> encode equals q_bpe_encode exactly") {
     val base = Files.createTempDirectory("bpeart").toString
     val (merges, vocab) =
-      graft.queries.TextStatsQueries.tokenizerArtifacts(spark, sf0001)
+      graft.queries.TokenizerQueries.tokenizerArtifacts(spark, sf0001)
     graft.pipelines.ModelArtifacts.saveMerges(spark, merges, s"$base/merges.parquet")
     graft.pipelines.ModelArtifacts.saveVocab(spark, vocab, s"$base/vocab.parquet")
     val m2 = graft.pipelines.ModelArtifacts.loadMerges(spark, s"$base/merges.parquet")
@@ -83,8 +83,8 @@ class ModelArtifactsSpec extends SparkSpec {
   test("pq codebook: save -> load -> encode equals q_pq_codes exactly") {
     val path = Files.createTempDirectory("pqart").toString + "/codebook.parquet"
     val emb = Tables.embeddings(spark, sf0001).select(col("vec_id"), col("embedding"))
-    val sub = graft.queries.PqQueries.subspaces(emb)
-    val trained = graft.queries.PqQueries.codebookOf(sub)
+    val sub = graft.queries.VectorQueries.subspaces(emb)
+    val trained = graft.queries.VectorQueries.codebookOf(sub)
     graft.pipelines.ModelArtifacts.savePqCodebook(spark, trained, path)
     val loaded = graft.pipelines.ModelArtifacts.loadPqCodebook(spark, path)
     def canon(df: org.apache.spark.sql.DataFrame) =
@@ -93,7 +93,7 @@ class ModelArtifactsSpec extends SparkSpec {
     assert(canon(loaded.select(col("cm"), col("code"), col("cv")))
       == canon(trained.select(col("cm"), col("code"), col("cv"))),
       "PQ codebook must round-trip exactly")
-    val got = graft.queries.PqQueries.pqAssignWith(sub, loaded)
+    val got = graft.queries.VectorQueries.pqAssignWith(sub, loaded)
     val want = SparkEntry.queries("q_pq_codes")(spark, sf0001)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "loaded-codebook encode must equal the in-session encode")
@@ -143,7 +143,7 @@ class ModelArtifactsSpec extends SparkSpec {
     // retrain from scratch, demand bit-identical trajectories
     val w1 = SparkEntry.queries("q_quality_train")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(t => (t._1, t._2))
-    graft.queries.CurationQueries33.clearSessionMemo()
+    graft.queries.QualityQueries.clearSessionMemo()
     val w2 = SparkEntry.queries("q_quality_train")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(t => (t._1, t._2))
     assert(w1.sameElements(w2), "retraining must be deterministic")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.multimodal.Perceptual
-import graft.queries.PerceptualQueries
+import graft.queries.MultimodalQueries
 
 class PerceptualSpec extends SparkSpec {
   import spark.implicits._
@@ -97,17 +97,17 @@ class PerceptualSpec extends SparkSpec {
       (ai, ah) <- hashes; (bi, bh) <- hashes if ai < bi
       if hamming(ah, bh) <= 3
     } yield (ai, bi, hamming(ah, bh).toLong)).toSet
-    val got = PerceptualQueries.imageNeardup.fn(spark, sf0001)
+    val got = MultimodalQueries.imageNeardup.fn(spark, sf0001)
       .as[(Long, Long, Long)].collect().toSet
     assert(got == expected)
     assert(got.nonEmpty, "fixture is expected to contain at least one image near-dup")
   }
 
   test("q_image_dhash / q_audio_fingerprint run on the fixture with stable schemas") {
-    val img = PerceptualQueries.imageDhash.fn(spark, sf0001)
+    val img = MultimodalQueries.imageDhash.fn(spark, sf0001)
     assert(img.columns.toSeq == Seq("media_id", "dhash"))
     assert(img.count() == Tables(spark, sf0001, "documents").count())
-    val aud = PerceptualQueries.audioFingerprint.fn(spark, sf0001)
+    val aud = MultimodalQueries.audioFingerprint.fn(spark, sf0001)
     assert(aud.columns.toSeq == Seq("media_id", "n_frames", "fingerprint"))
     val row = aud.orderBy("media_id").head()
     assert(row.getLong(1) % 16 == 0 && row.getLong(2) < (1L << 15))

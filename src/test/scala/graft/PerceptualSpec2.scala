@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class PerceptualSpec2 extends SparkSpec {
 
   test("audio_fp_lift: exact recompute; signal clears chance at every distance") {
-    val rows = graft.queries.PerceptualQueries.audioFpLift.fn(spark, sf0001)
+    val rows = graft.queries.MultimodalQueries.audioFpLift.fn(spark, sf0001)
       .orderBy("hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(rows.map(_._1).toSeq == Seq(0L, 1L, 2L))

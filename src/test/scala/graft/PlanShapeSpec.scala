@@ -92,7 +92,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("neardup_sweep: the 6-row threshold table is the broadcast build side") {
-    val plan = staticPlan(graft.queries.DedupQueries.neardupSweep.fn(spark, sf0001))
+    val plan = staticPlan(graft.queries.NearDupQueries.neardupSweep.fn(spark, sf0001))
     assert(plan.collectFirst { case c: CartesianProductExec => c }.isEmpty,
       "sweep must not plan a cartesian product")
     val bnl = plan.collect { case b: BroadcastNestedLoopJoinExec => b }
@@ -121,7 +121,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q6_forecast: every predicate reaches the parquet scan") {
     val plan = staticPlan(
-      graft.queries.RelationalQueries3.q6Forecast.fn(spark, sf0001))
+      graft.queries.RelationalQueries.q6Forecast.fn(spark, sf0001))
     val scans = plan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
     assert(scans.nonEmpty, "expected a parquet scan")
@@ -136,7 +136,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q10_returned: dims broadcast at sandbox scale; customer never FORCED") {
     val plan = staticPlan(
-      graft.queries.RelationalQueries3.q10Returned.fn(spark, sf0001))
+      graft.queries.RelationalQueries.q10Returned.fn(spark, sf0001))
     val bhj = plan.collect {
       case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => b }
     // at sf0.001 both dims are KB-sized: auto-broadcast (customer) plus
@@ -151,7 +151,7 @@ class PlanShapeSpec extends SparkSpec {
     // broadcasts hard-fail at 8 GB). With auto-broadcast off, no
     // remaining BroadcastExchange may scan the customer table.
     val forced = forcedBroadcastPlan(
-      graft.queries.RelationalQueries3.q10Returned.fn(spark, sf0001))
+      graft.queries.RelationalQueries.q10Returned.fn(spark, sf0001))
     for (b <- forced.collect {
       case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b })
       assert(b.child.collectFirst {
@@ -164,14 +164,14 @@ class PlanShapeSpec extends SparkSpec {
     // vocab_coverage: numerator (top-20) and denominator (Σcnt) both hang
     // off ONE groupBy(tok) — one Generate (explode) in the whole plan,
     // and the second consumer reads the shuffle through ReusedExchange
-    val vc = staticPlan(graft.queries.CurationQueries6.vocabCoverage.fn(spark, sf0001))
+    val vc = staticPlan(graft.queries.TokenizerQueries.vocabCoverage.fn(spark, sf0001))
     val gens = vc.collect { case g if g.nodeName.contains("Generate") => g }
     assert(gens.length == 1, s"expected one explode over the corpus, got ${gens.length}")
     assert(vc.collectFirst { case r if r.nodeName.contains("ReusedExchange") => r }.nonEmpty,
       "denominator branch must reuse the token-count exchange")
     // token_cdf: both branches read the materialized 16-byte (doc_id, n)
     // frame — the text corpus does not appear in the final plan at all
-    val tc = staticPlan(graft.queries.CurationQueries3.tokenCdf.fn(spark, sf0001))
+    val tc = staticPlan(graft.queries.TextStatsQueries.tokenCdf.fn(spark, sf0001))
     val scans = tc.collect {
       case s if s.nodeName.contains("Scan") && s.toString.contains("parquet") => s }
     assert(scans.isEmpty,
@@ -188,7 +188,7 @@ class PlanShapeSpec extends SparkSpec {
     // Θ(pairs) stream twice; the interim card-branch+join form planned
     // a second corpus scan). Contract: corpus scanned once, zero
     // joins, and a Window node present for the cardinality.
-    val cj = staticPlan(graft.queries.CurationQueries.containment.fn(spark, sf0001))
+    val cj = staticPlan(graft.queries.DecontamQueries.containment.fn(spark, sf0001))
     val scans = cj.collect {
       case s if s.nodeName.contains("Scan") && s.toString.contains("documents") => s }
     assert(scans.length == 1,
@@ -212,7 +212,7 @@ class PlanShapeSpec extends SparkSpec {
     // forcing the PrefixSum scan dispatch (round-14: the size-estimate
     // fast path legitimately keeps a lazy rank window at sandbox SFs).
     spark.conf.set(graft.operators.PrefixSum.ThresholdConf, "-1")
-    val plan = try staticPlan(graft.queries.TextStatsQueries.bpeEncode.fn(spark, sf0001))
+    val plan = try staticPlan(graft.queries.TokenizerQueries.bpeEncode.fn(spark, sf0001))
       finally spark.conf.unset(graft.operators.PrefixSum.ThresholdConf)
     val smj = plan.collect {
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j }
@@ -250,7 +250,7 @@ class PlanShapeSpec extends SparkSpec {
     // size-estimate fast path legitimately keeps the lazy lang window
     // at sandbox SFs — PrefixSum.SmallInputBytes scaladoc).
     spark.conf.set(graft.operators.PrefixSum.ThresholdConf, "-1")
-    val plan = try staticPlan(graft.queries.TextStatsQueries2.seqPackBpe.fn(spark, sf0001))
+    val plan = try staticPlan(graft.queries.TokenizerQueries.seqPackBpe.fn(spark, sf0001))
       finally spark.conf.unset(graft.operators.PrefixSum.ThresholdConf)
     assert(plan.collectFirst { case w if w.nodeName.contains("Window") => w }.isEmpty,
       "per-lang shard window crept back (the #languages parallelism ceiling)")
@@ -279,9 +279,9 @@ class PlanShapeSpec extends SparkSpec {
     val fns = Seq(
       "q3_top_orders" -> graft.queries.RelationalQueries.q3TopOrders,
       "q5_region_revenue" -> graft.queries.RelationalQueries.q5RegionRevenue,
-      "q14_promo" -> graft.queries.RelationalQueries3.q14Promo,
-      "q_supplier_nation" -> graft.queries.RelationalQueries3.qSupplierNation,
-      "q_bloom_prejoin" -> graft.queries.CurationQueries10.bloomPrejoin)
+      "q14_promo" -> graft.queries.RelationalQueries.q14Promo,
+      "q_supplier_nation" -> graft.queries.RelationalQueries.qSupplierNation,
+      "q_bloom_prejoin" -> graft.queries.RelationalQueries.bloomPrejoin)
     // the criterion is CARDINALITY, not which table is scanned:
     // q_bloom_prejoin's bucket set reads orders but is value-bounded
     // (≤65536 distinct pmod buckets — legitimately broadcast), while a
@@ -308,10 +308,10 @@ class PlanShapeSpec extends SparkSpec {
     // hints dropped, the only broadcasts a hint still forces in these
     // plans are 1-row global aggregates (totals / scalar stats).
     val fns = Seq(
-      "q_source_dup_matrix" -> graft.queries.CurationQueries14.sourceDupMatrix,
-      "q_source_overlap" -> graft.queries.DedupQueries.sourceOverlap,
-      "q_split_leakage" -> graft.queries.DedupQueries.splitLeakage,
-      "q_triangle_count" -> graft.queries.CurationQueries11.triangleCount)
+      "q_source_dup_matrix" -> graft.queries.DecontamQueries.sourceDupMatrix,
+      "q_source_overlap" -> graft.queries.DecontamQueries.sourceOverlap,
+      "q_split_leakage" -> graft.queries.DecontamQueries.splitLeakage,
+      "q_triangle_count" -> graft.queries.NearDupQueries.triangleCount)
     for ((name, q) <- fns)
       assertForcedBroadcastsAreScalar(forcedBroadcastPlan(q.fn(spark, sf0001)), name)
   }
@@ -329,7 +329,7 @@ class PlanShapeSpec extends SparkSpec {
     // 1465801's OverlapProbe in PLANS.md round 13 — so no array
     // assertion here.)
     for ((name, q) <- Seq(
-      "q_overlap_join" -> graft.queries.CurationQueries13.overlapJoin)) {
+      "q_overlap_join" -> graft.queries.DecontamQueries.overlapJoin)) {
       val plan = staticPlan(q.fn(spark, sf0001))
       assert(plan.collectFirst {
         case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r }.nonEmpty,

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.PqQueries
+import graft.queries.VectorQueries
 
 /** Product-quantization family: structural invariants of the encoding and
   * the serving-fidelity eval, checked at sf0.001 (500 vectors, 64 dims).
@@ -9,7 +9,7 @@ import graft.queries.PqQueries
 class PqSpec extends SparkSpec {
 
   test("PQ codes: every vector gets exactly 4 subspace codes in [0,8)") {
-    val codes = PqQueries.pqCodes.fn(spark, sf0001).cache()
+    val codes = VectorQueries.pqCodes.fn(spark, sf0001).cache()
     val n = codes.select(countDistinct(col("vec_id"))).head().getLong(0)
     assert(n == 500)
     assert(codes.count() == 500 * 4)
@@ -20,14 +20,14 @@ class PqSpec extends SparkSpec {
   }
 
   test("PQ codes: a codebook seed encodes to itself with zero distance") {
-    val codes = PqQueries.pqCodes.fn(spark, sf0001)
+    val codes = VectorQueries.pqCodes.fn(spark, sf0001)
     val seeds = codes.filter(col("vec_id") < 8)
     assert(seeds.filter(col("code") =!= col("vec_id")).count() == 0)
     assert(seeds.filter(col("d2") =!= 0L).count() == 0)
   }
 
   test("PQ recall: 10 query rows, hits within [0,10], and ADC beats random") {
-    val rec = PqQueries.pqRecall.fn(spark, sf0001).cache()
+    val rec = VectorQueries.pqRecall.fn(spark, sf0001).cache()
     assert(rec.count() == 10)
     assert(rec.filter(col("hits") < 0 || col("hits") > 10).count() == 0)
     // the fixture vectors are near-isotropic noise — PQ's worst case —
@@ -38,7 +38,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("hard negatives: labels differ from the query's and ranks are 1..3") {
-    val hn = PqQueries.hardNegatives.fn(spark, sf0001).cache()
+    val hn = VectorQueries.hardNegatives.fn(spark, sf0001).cache()
     val emb = Tables.embeddings(spark, sf0001)
       .select(col("vec_id").as("qid"), col("label").cast("long").as("qlabel"))
     assert(hn.count() == 30)

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.types._
 
 /** Registry-wide output-shape guard: the driver's oracle harness hashes
@@ -71,5 +73,27 @@ class RegistrySchemaSpec extends SparkSpec {
       if (dups.nonEmpty || names.exists(_.isEmpty)) Some(s"${q.name}: $names") else None
     }
     assert(bad.isEmpty, s"duplicate/empty column names: ${bad.mkString("; ")}")
+  }
+
+  test("registry names are unique") {
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"duplicated registry names (the name map keeps only one): ${dups.mkString(", ")}")
+  }
+
+  /** The committed name list pins the registry, so moving a module or
+    * dropping one from `SparkEntry` cannot lose a query unnoticed. */
+  test("sorted registry names equal src/test/resources/registry-names.txt") {
+    val pinned = Files.readAllLines(Paths.get("src/test/resources/registry-names.txt")).asScala
+      .filter(_.nonEmpty).toSeq
+    val names = SparkEntry.registry.map(_.name).sorted
+    if (names != pinned)
+      fail(s"missing: ${pinned.diff(names).mkString(", ")}; unexpected: ${names.diff(pinned).mkString(", ")}")
+  }
+
+  test("no query module under queries/ is named by a batch number") {
+    val walk = Files.list(Paths.get("src/main/scala/graft/queries"))
+    val files = try walk.iterator().asScala.map(_.getFileName.toString).toList finally walk.close()
+    val batch = files.filter(f => f.matches(".*\\d+\\.scala") || f == "CurationQueries.scala")
+    assert(files.nonEmpty && batch.isEmpty, s"batch-numbered query files: ${batch.mkString(", ")}")
   }
 }

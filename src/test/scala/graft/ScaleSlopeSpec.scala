@@ -296,7 +296,7 @@ class ScaleSlopeSpec extends SparkSpec {
     // noise; the broken form measured ~2 and rising).
     def perRound(k: Int): Double = {
       val t0 = System.nanoTime()
-      graft.queries.CurationQueries32.kcenterRun(spark, src, k, incremental = true).count()
+      graft.queries.MixingQueries.kcenterRun(spark, src, k, incremental = true).count()
       (System.nanoTime() - t0) / 1e9 / (k - 1)
     }
     perRound(4) // warm codegen + scan

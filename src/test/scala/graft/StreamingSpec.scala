@@ -59,7 +59,7 @@ class StreamingSpec extends SparkSpec {
     // slice AT a known matching pair's click time, so at least one
     // click(slice 0) -> purchase(slice 1) match is forced to span
     // micro-batches through the buffered join state
-    val midRow = graft.queries.EventQueries2.intervalJoin.fn(spark, sf0001)
+    val midRow = graft.queries.EventQueries.intervalJoin.fn(spark, sf0001)
       .filter(col("gap_us") > 0)
       .join(Tables.events(spark, sf0001)
         .select(col("event_id").as("click_id"), col("ts")), "click_id")
@@ -85,12 +85,12 @@ class StreamingSpec extends SparkSpec {
       val streamed = spark.sql("SELECT user_id, click_id, purchase_id, gap_us FROM ssjoin")
       // the batch twin is the REGISTRY query — the oracle-checked
       // q_interval_join is what the stream must reproduce exactly
-      val batch = graft.queries.EventQueries2.intervalJoin.fn(spark, sf0001)
+      val batch = graft.queries.EventQueries.intervalJoin.fn(spark, sf0001)
       assert(streamed.count() == batch.count())
       assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
       // and pairs genuinely straddle the slice boundary (the state the
       // dual watermark exists to hold)
-      val straddleCount = graft.queries.EventQueries2.intervalJoin.fn(spark, sf0001)
+      val straddleCount = graft.queries.EventQueries.intervalJoin.fn(spark, sf0001)
         .join(Tables.events(spark, sf0001).select(col("event_id").as("click_id"),
           unix_micros(col("ts")).as("cus")), "click_id")
         .filter((col("cus") <= midUs && col("cus") + col("gap_us") > midUs) ||
@@ -126,7 +126,7 @@ class StreamingSpec extends SparkSpec {
       // matched rows must be the inner join, row-for-row (the registry
       // q_interval_join is the oracle-checked truth)
       val inner = out.filter(col("purchase_id").isNotNull)
-      val batchInner = graft.queries.EventQueries2.intervalJoin.fn(spark, sf0001)
+      val batchInner = graft.queries.EventQueries.intervalJoin.fn(spark, sf0001)
       assert(inner.count() == batchInner.count())
       assert(inner.exceptAll(batchInner).isEmpty && batchInner.exceptAll(inner).isEmpty)
       // null-padded rows: every one must be a genuinely unmatched click
@@ -134,7 +134,7 @@ class StreamingSpec extends SparkSpec {
       // click whose eviction point lies safely behind the final
       // watermark must have emitted exactly its one outer row
       val nulls = out.filter(col("purchase_id").isNull).select("click_id")
-      val um = graft.queries.EventQueries2.intervalUnmatched.fn(spark, sf0001)
+      val um = graft.queries.EventQueries.intervalUnmatched.fn(spark, sf0001)
       assert(nulls.count() > 0, "no outer row emitted — state eviction never fired")
       assert(nulls.count() == nulls.distinct().count(), "an outer row emitted twice")
       assert(nulls.exceptAll(um.select("click_id")).isEmpty,
@@ -526,8 +526,8 @@ class StreamingSpec extends SparkSpec {
     val srcDir = Files.createTempDirectory("qdocs-stream").toString
     Tables(spark, sf0001, "documents").select("doc_id", "text")
       .write.mode("overwrite").parquet(srcDir)
-    val w = graft.queries.CurationQueries33.learnedWeights(
-      graft.queries.CurationQueries33.featuresOf(
+    val w = graft.queries.QualityQueries.learnedWeights(
+      graft.queries.QualityQueries.featuresOf(
         Tables(spark, sf0001, "documents")))
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
@@ -550,7 +550,7 @@ class StreamingSpec extends SparkSpec {
     Tables(spark, sf0001, "documents").select("doc_id", "text")
       .write.mode("overwrite").parquet(srcDir)
     val (merges, vocab) =
-      graft.queries.TextStatsQueries.tokenizerArtifacts(spark, sf0001)
+      graft.queries.TokenizerQueries.tokenizerArtifacts(spark, sf0001)
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -627,7 +627,7 @@ class StreamingSpec extends SparkSpec {
       f.setLastModified(1700000000000L + i * 60000L)
     }
     val (merges, vocab) =
-      graft.queries.TextStatsQueries.tokenizerArtifacts(spark, sf0001)
+      graft.queries.TokenizerQueries.tokenizerArtifacts(spark, sf0001)
     val schema = docs.schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$srcDir/*")
@@ -838,7 +838,7 @@ class StreamingSpec extends SparkSpec {
       f.setLastModified(1700000000000L + i * 60000L)
     }
     val (merges, vocab) =
-      graft.queries.TextStatsQueries.tokenizerArtifacts(spark, sf0001)
+      graft.queries.TokenizerQueries.tokenizerArtifacts(spark, sf0001)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$srcDir/*")
     val q = graft.streaming.PackerStreams.packedBlocks(stream, merges, vocab)
@@ -885,7 +885,7 @@ class StreamingSpec extends SparkSpec {
       f.setLastModified(1700000000000L + i * 60000L)
     }
     val (merges, vocab) =
-      graft.queries.TextStatsQueries.tokenizerArtifacts(spark, sf0001)
+      graft.queries.TokenizerQueries.tokenizerArtifacts(spark, sf0001)
     val schema = docs.schema
     def start() = {
       val stream = spark.readStream.schema(schema)
@@ -987,7 +987,7 @@ class StreamingSpec extends SparkSpec {
       f.setLastModified(1700000000000L + i * 60000L)
     }
     val (merges, vocab) =
-      graft.queries.TextStatsQueries.tokenizerArtifacts(spark, sf0001)
+      graft.queries.TokenizerQueries.tokenizerArtifacts(spark, sf0001)
     // ---- stage 1: quality gate + exact dedup -> bronze ----
     val toks = split(col("text"), " ")
     def qualityGate(df: org.apache.spark.sql.DataFrame) = df
@@ -1065,7 +1065,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("nt", size(col("tids")).cast("long"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy("doc_id")
-    val ctx = graft.queries.TextStatsQueries2.CtxLen
+    val ctx = graft.queries.TokenizerQueries.CtxLen
     val want = enc
       .withColumn("cum0", sum("nt").over(w) - col("nt"))
       .select(col("lang"), col("doc_id"), col("cum0"),
@@ -1104,7 +1104,7 @@ class StreamingSpec extends SparkSpec {
         """SELECT shard, n_docs, n_tokens, xor_hash, min_id, max_id FROM (
           |  SELECT *, row_number() OVER (PARTITION BY shard ORDER BY seq DESC) AS rn
           |  FROM manifest) WHERE rn = 1""".stripMargin)
-      val batch = graft.queries.CurationQueries15.shardManifest.fn(spark, sf0001)
+      val batch = graft.queries.MixingQueries.shardManifest.fn(spark, sf0001)
       assert(latest.count() == 16)
       assert(latest.exceptAll(batch).isEmpty && batch.exceptAll(latest).isEmpty,
         "streaming manifest snapshots differ from the one-pass batch manifest")
@@ -1143,7 +1143,7 @@ class StreamingSpec extends SparkSpec {
     try q2.processAllAvailable() finally q2.stop()
     val got = spark.read.parquet(outDir)
       .as[(Long, Long, Long, Long)].collect().sorted
-    val batch = graft.queries.CurationQueries35.recordLinkage.fn(spark, sf0001)
+    val batch = graft.queries.LinkageQueries.recordLinkage.fn(spark, sf0001)
       .as[(Long, Long, Long, Long)].collect().sorted
     assert(got.length == batch.length && got.sameElements(batch),
       s"streamed pairs (${got.length}) diverge from batch (${batch.length})")
@@ -1227,7 +1227,7 @@ class StreamingSpec extends SparkSpec {
     val got = spark.read.parquet(outDir)
       .select("user_id", "event_type", "valid_from_us", "valid_to_us")
       .as[(Long, String, Long, Long)].collect().sorted
-    val batch = graft.queries.CurationQueries35.scd2History.fn(spark, sf0001)
+    val batch = graft.queries.RelationalQueries.scd2History.fn(spark, sf0001)
       .filter(col("is_current") === 0)
       .select(col("user_id"), col("event_type"), col("valid_from_us"), col("valid_to_us"))
       .as[(Long, String, Long, Long)].collect().sorted

@@ -20,12 +20,12 @@ class TimeSeriesSpec extends SparkSpec {
   }
 
   test("q_gapfill on an empty events table is empty, not a NULL-spine error") {
-    val out = graft.queries.TimeSeriesQueries.gapFill.fn(spark, emptyEventsDir)
+    val out = graft.queries.EventQueries.gapFill.fn(spark, emptyEventsDir)
     assert(out.count() == 0)
   }
 
   test("q_range_join on an empty events table keeps all intervals at zero") {
-    val out = graft.queries.TimeSeriesQueries.rangeJoin.fn(spark, emptyEventsDir)
+    val out = graft.queries.EventQueries.rangeJoin.fn(spark, emptyEventsDir)
       .orderBy("interval_id").collect()
     assert(out.length == 15)
     assert(out.forall(r => r.getLong(1) == 0L && r.getDouble(2) == 0.0))
@@ -36,7 +36,7 @@ class TimeSeriesSpec extends SparkSpec {
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
       .collect()
     val byUser = e.groupBy(_.getLong(1))
-    val out = graft.queries.TimeSeriesQueries.rollingHour.fn(spark, sf0001)
+    val out = graft.queries.EventQueries.rollingHour.fn(spark, sf0001)
       .select("event_id", "user_id", "n_1h").collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     // brute-force: count events of the same user within [us-1h, us]
