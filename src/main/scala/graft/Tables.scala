@@ -1,7 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table access. All queries take an sf directory and read the
   * driver's parquet tables from it (TESTDATA.md). Embeddings are stored as
@@ -9,8 +11,26 @@ import org.apache.spark.sql.functions._
   * reference's `DOUBLE_VECTOR` semantics (`vector-db.h:1`).
   */
 object Tables {
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Inferred schemas by table path, modification time and the session's
+    * parquet settings. Inferring a parquet schema reads a footer in a
+    * Spark job, so without this every read of an unchanged table, in
+    * every warm pass, would run one job more.
+    */
+  private val schemas = new ConcurrentHashMap[(String, Long, Seq[(String, String)]), StructType]()
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val parquetConf = spark.conf.getAll.filter(_._1.contains(".parquet.")).toSeq.sorted
+    val key = (path, new java.io.File(path).lastModified(), parquetConf)
+    Option(schemas.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.put(key, df.schema)
+        df
+    }
+  }
 
   /** embeddings with the vector cast to array<double>. */
   def embeddings(spark: SparkSession, dir: String): DataFrame =

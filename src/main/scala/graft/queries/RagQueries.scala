@@ -17,9 +17,9 @@ import graft.pipelines.{IndexBuild, MockEmbedder, Rag}
   *   as a recursive CTE — backward scan to the last space, hard cut when
   *   the window has none, the tail chunk dropping its final character,
   *   short texts passing through whole.
-  * - `q_rag_prompt` (`multirag.c:52-152`): top-3 nearest embeddings, text
-  *   gathered by id (an explicit broadcast join for the reference's
-  *   positional gather), folded into the Llama-3 instruct prompt in
+  * - `q_rag_prompt` (`multirag.c:52-152`): a RAG turn's path. Top-3
+  *   nearest embeddings ([[TopK.nearestRows]]), their texts gathered by
+  *   id, folded on the driver into the Llama-3 instruct prompt in
   *   ascending-distance order.
   * - `q_index_build` / `q_rag_e2e`: read → chunk → mock-embed, then embed
   *   query → cosine top-3 → gather → prompt. The mock embedder is pure
@@ -110,14 +110,13 @@ object RagQueries {
        |FROM ctx""".stripMargin) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
     val q = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    // ranks become positions in (dist, vec_id) order inside the assembly
-    // fold — no window over the 3-row top-k frame
-    val topk = TopK.nearest(emb, "embedding", "vec_id", q, 3)
-      .select("vec_id", "dist")
-    // gather text for the k winners: broadcast the tiny top-k side
-    val docs = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val ctx = docs.join(broadcast(topk), topk("vec_id") === docs("doc_id"))
-    Prompt.assembleByOrder(ctx, Seq(col("dist"), col("vec_id")), "text", "", UserInput)
+    // the turn's path: top-3 ids in (dist, vec_id) order, their texts
+    // gathered by id, and the fold on the driver. A missing or NULL text
+    // keeps its rank and adds nothing, as `string_agg` skips NULL
+    val ids = TopK.nearestRows(emb, "embedding", "vec_id", q, 3).map(_.getLong(0))
+    val text = Tables(spark, dir, "documents").filter(col("doc_id").isin(ids: _*))
+      .select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    Rag.promptFrame(spark, Prompt.assembleRanked(ids.map(text.getOrElse(_, null)).toSeq, "", UserInput))
   }
 
   private val L = ChunkLen

@@ -3,8 +3,10 @@ package graft
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructType}
 import graft.operators.{Prompt, TopK}
@@ -22,11 +24,15 @@ class RagTurnSpec extends SparkSpec {
   private def docs: DataFrame =
     spark.read.parquet(s"$sf0001/documents.parquet").select("doc_id", "text")
 
-  /** Built with `IndexBuild.run` and loaded as `Main rag-repl` loads it. */
-  private lazy val index: DataFrame = {
+  private lazy val indexDir: String = {
     val dir = Files.createTempDirectory("rag-turn").toString + "/idx"
     IndexBuild.run(docs, "doc_id", "text", ChunkLen, MockEmbedder, dir)
-    val idx = spark.read.parquet(dir)
+    dir
+  }
+
+  /** Built with `IndexBuild.run` and loaded as `Main rag-repl` loads it. */
+  private lazy val index: DataFrame = {
+    val idx = spark.read.parquet(indexDir)
       .selectExpr("doc_id * 1000 + chunk_idx AS chunk_id", "chunk", "embedding")
       .persist()
     idx.count()
@@ -34,7 +40,10 @@ class RagTurnSpec extends SparkSpec {
   }
 
   private def turn(query: String, conversation: String): String =
-    Rag.answer(spark, index, "chunk_id", "chunk", "embedding", MockEmbedder,
+    turn(index, query, conversation)
+
+  private def turn(idx: DataFrame, query: String, conversation: String = ""): String =
+    Rag.answer(spark, idx, "chunk_id", "chunk", "embedding", MockEmbedder,
       query, conversation, K).head().getString(0)
 
   /** The turn's prompt the distributed way: the query embedded by
@@ -51,14 +60,21 @@ class RagTurnSpec extends SparkSpec {
       conversation, query).head().getString(0)
   }
 
-  /** Jobs started under `group`, counted once the listener bus drains. */
+  /** Jobs started under `group`, and SQL executions started by anyone,
+    * counted once the listener bus drains.
+    */
   private final class JobCounter(group: String) extends SparkListener {
     @volatile var jobs = 0
     @volatile var stages = 0
+    @volatile var sqlExecutions = 0
     override def onJobStart(e: SparkListenerJobStart): Unit =
       if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
         jobs += 1; stages += e.stageInfos.size
       }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case _: SparkListenerSQLExecutionStart => sqlExecutions += 1
+      case _ =>
+    }
   }
 
   private def drainListenerBus(): Unit = {
@@ -123,16 +139,46 @@ class RagTurnSpec extends SparkSpec {
     val counter = new JobCounter("rag-turn-spec")
     spark.sparkContext.addSparkListener(counter)
     try {
+      drainListenerBus()
+      counter.sqlExecutions = 0
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       spark.sparkContext.setJobGroup("rag-turn-spec", "warm turn")
-      try turn("a different query vector", "")
+      val answer = try Rag.answer(spark, index, "chunk_id", "chunk", "embedding", MockEmbedder,
+        "a different query vector", "", K)
       finally spark.sparkContext.clearJobGroup()
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       drainListenerBus()
       assert(counter.jobs == 1, s"${counter.jobs} jobs")
       assert(counter.stages == 1, s"${counter.stages} stages")
       assert(compiles == 0, s"$compiles codegen compiles")
+      // no Catalyst execution: the scan is a job over the index's own RDD
+      assert(counter.sqlExecutions == 0, s"${counter.sqlExecutions} SQL executions")
+      assert(answer.head().getString(0).startsWith(Prompt.SystemMsgStart))
     } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("a turn on an index persisted before its first turn scans the cached relation") {
+    def scansCache(idx: DataFrame) = idx.queryExecution.executedPlan.collectFirst {
+      case s: InMemoryTableScanExec => s
+    }.isDefined
+    // a plan with no subtree of the shared index's plan, so neither cache
+    // stands in for the other
+    def fresh(): DataFrame = spark.read.parquet(indexDir).where("chunk_idx >= 0")
+      .selectExpr("doc_id * 1000 + chunk_idx AS chunk_id", "chunk", "embedding")
+    val persisted = fresh().persist()
+    try {
+      turn(persisted, "cached scan")
+      assert(scansCache(persisted))
+    } finally persisted.unpersist(blocking = true)
+    // the RDD a turn scans is fixed at the first turn: persisting later
+    // leaves every turn reading parquet
+    val late = fresh()
+    try {
+      turn(late, "source scan")
+      late.persist()
+      assert(turn(late, "source scan") == turn(index, "source scan"))
+      assert(!scansCache(late))
+    } finally late.unpersist(blocking = true)
   }
 
   test("IndexBuild.run spreads a one-row-group corpus over defaultParallelism files with build's rows") {

@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Every entry point runs on the session `GraftSession` builds, and the
-  * source tree keeps it that way: one builder site, six `main`s.
+  * source tree keeps it that way: one builder site, six `main`s. The
+  * session's codegen cache holds what a warm pass needs.
   */
 class SessionSpec extends SparkSpec {
 
@@ -21,6 +23,24 @@ class SessionSpec extends SparkSpec {
     assert(spark.sparkContext.master == "local[4]")
     assert(spark.conf.get("spark.sql.shuffle.partitions") ==
       spark.sparkContext.defaultParallelism.toString)
+  }
+
+  test("a second pass of the curation queries compiles no code") {
+    assert(spark.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    val names = Seq("q_pagerank", "q_rag_prompt", "q_longest_repeat", "q_containment")
+    def pass(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      names.foreach(n => SparkEntry.queries(n)(spark, sf0001).write.format("noop").mode("overwrite").save())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    // static plans: under AQE the physical plan, and so its generated
+    // classes, can change with the order in which query stages finish
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val (first, second) = try (pass(), pass())
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(second == 0, s"$second classes compiled again after $first in the first pass")
   }
 
   test("GraftSession is the only SparkSession.builder site in src/main") {

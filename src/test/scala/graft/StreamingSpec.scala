@@ -7,6 +7,23 @@ import graft.streaming.EventStreams
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Add `df` as one parquet file to a running stream's watched `srcDir`,
+    * with modification time `mtime`. The chunk is written and back-dated
+    * outside `srcDir`, then renamed in, so no trigger can list it with its
+    * wall-clock mtime: a file source that sees one file that new moves its
+    * max-file-age horizon (7 days) past every back-dated chunk after it,
+    * and never reads them.
+    */
+  private def landChunk(df: org.apache.spark.sql.DataFrame, srcDir: String, name: String,
+                        mtime: Long): Unit = {
+    val staged = Files.createTempDirectory("chunk").resolve(name)
+    df.coalesce(1).write.parquet(staged.toString)
+    staged.toFile.listFiles().foreach(_.setLastModified(mtime))
+    val target = java.nio.file.Paths.get(srcDir, name)
+    Files.createDirectories(target.getParent)
+    Files.move(staged, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   private lazy val batchEvents = {
     // events fixture re-encoded to µs timestamps for the streaming source
     val dir = Files.createTempDirectory("events-stream").toString
@@ -740,8 +757,7 @@ class StreamingSpec extends SparkSpec {
     val q01 = queries.filter(col("qid") < 2)
     val q23 = queries.filter(col("qid") >= 2)
     val srcDir = s"$root/qsrc"
-    q01.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/c0")
-    new java.io.File(s"$srcDir/c0").listFiles().foreach(_.setLastModified(1700000000000L))
+    landChunk(q01, srcDir, "c0", 1700000000000L)
     val stream = spark.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$srcDir/*")
     def replay(qs: org.apache.spark.sql.DataFrame, ver: String) =
@@ -758,8 +774,7 @@ class StreamingSpec extends SparkSpec {
       // rebuild + atomic swap while the stream is RUNNING
       IvfIndex.publishVersion(embV2, seeds, root, "v2")
       assert(IvfIndex.currentVersion(spark, root) == "v2")
-      q23.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/c1")
-      new java.io.File(s"$srcDir/c1").listFiles().foreach(_.setLastModified(1700000060000L))
+      landChunk(q23, srcDir, "c1", 1700000060000L)
       sq.processAllAvailable() // batch 2: q23 under v2
       rep2pre = replay(q23, "v2") // v2 replay BEFORE the hot-add lands
       // hot-add WITHOUT a swap: exact duplicates of the q23 queries
@@ -767,8 +782,7 @@ class StreamingSpec extends SparkSpec {
       // next trigger must find them (file listing per scan, no restart)
       val added = q23.select((col("qid") + 90000L).as("vec_id"), col("qv").as("embedding"))
       assert(IvfIndex.appendVectors(added, root) == "v2")
-      q23b.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/c2")
-      new java.io.File(s"$srcDir/c2").listFiles().foreach(_.setLastModified(1700000120000L))
+      landChunk(q23b, srcDir, "c2", 1700000120000L)
       sq.processAllAvailable() // batch 3: same vectors, post-append
     } finally sq.stop()
     val out = spark.read.parquet(s"$root/out")
@@ -1330,8 +1344,7 @@ class StreamingSpec extends SparkSpec {
     // cluster 0 (d2 0.4804 vs 0.5204 mirrored) — the stale-recall trap
     val queries = Seq((50L, Seq(0.5, 0.48))).toDF("qid", "qv")
     val srcDir = s"$root/qsrc"
-    queries.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/c0")
-    new java.io.File(s"$srcDir/c0").listFiles().foreach(_.setLastModified(1700000000000L))
+    landChunk(queries, srcDir, "c0", 1700000000000L)
     val stream = spark.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$srcDir/*")
     val sq = AnnStreams.serveRotating(stream, root, 3, 1, s"$root/out", s"$root/ckpt")
@@ -1347,9 +1360,8 @@ class StreamingSpec extends SparkSpec {
         Seq((2L, Seq(0.5, 0.5))).toDF("cluster", "cv"))
       IvfIndex.publishVersion(emb.unionByName(drifted), seeds2, root, "v2")
       assert(!IvfIndex.needsCompaction(spark, root), "retrain must re-arm the trigger")
-      queries.select((col("qid") + 100L).as("qid"), col("qv")).coalesce(1)
-        .write.mode("overwrite").parquet(s"$srcDir/c1")
-      new java.io.File(s"$srcDir/c1").listFiles().foreach(_.setLastModified(1700000060000L))
+      landChunk(queries.select((col("qid") + 100L).as("qid"), col("qv")), srcDir, "c1",
+        1700000060000L)
       sq.processAllAvailable() // batch 2: same query vector under v2
     } finally sq.stop()
     val out = spark.read.parquet(s"$root/out")
