@@ -14,8 +14,7 @@ object Bench {
     // cold first query otherwise books ~5 s that no steady-state run pays).
     // Three plan families, not one: a vector scan alone leaves hash-agg /
     // window / sort-merge codegen cold, and the alphabetically-first timed
-    // queries (q1/q3/q5) were booking that residual warmup as their own
-    // cost (round-6 judge note)
+    // queries (q1/q3/q5) would book that residual warmup as their own cost
     Seq("q_topk_cosine", "q1_pricing", "q_window_rank").foreach { n =>
       try run(n) catch { case _: Throwable => () }
     }
@@ -23,8 +22,8 @@ object Bench {
     // single-pass total 2-3x on a shared box; the min of two runs is the
     // steady-state number the engine actually delivers.
     // A query that throws must NOT book its time-to-exception as a timing
-    // (round-7 postmortem: four analysis-broken queries printed as fake
-    // 8-13x "speedups") — failed queries go to a "failed" list and are
+    // (an analysis-broken query would print as a fake 8-13x
+    // "speedup") — failed queries go to a "failed" list and are
     // excluded from the per-query map and the total.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     def timed(name: String): Double = {
@@ -36,11 +35,11 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     // SPARK_GRAFT_BENCH_ONLY: comma-separated query subset — the
-    // round-15 creep-decomposition knob (benching today's HEAD over an
-    // OLDER round's query set isolates registry-size JVM pressure from
-    // per-query cost accretion; see PLANS.md round 15).
+    // creep-decomposition knob (benching HEAD over an OLDER query set
+    // isolates registry-size JVM pressure from per-query cost
+    // accretion; see PLANS.md).
     // Every requested name must exist: a typo would otherwise produce a
-    // plausible-looking partial bench with no error (round-15 ADVICE).
+    // plausible-looking partial bench with no error.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { o =>
@@ -63,14 +62,9 @@ object Bench {
     // the query's own spread is noise by definition)
     val spreads = names.map(n => n -> math.abs(pass1(n) - pass2(n)))
       .filterNot { case (n, _) => failed.contains(n) }
-    // JSON-escape keys: a query name containing a quote/backslash/control
+    // JSON-encode keys: a query name containing a quote/backslash/control
     // char must not produce an invalid artifact
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+    import graft.pipelines.HttpEmbedder.jsonStr
     // CANARY: a pinned 10-query subset recorded verbatim in every bench
     // artifact, so any two benches are box-paired by construction — the
     // per-query drift rule (min-of-both-new vs max-of-both-old, +30% AND
@@ -86,16 +80,16 @@ object Bench {
       "q_topk_cosine", "q_window_rank", "q_chunk", "q_minhash_lsh_pairs",
       "q_asof_join", "q_pagerank", "q_mad_outliers")
     val resultMap = results.toMap
-    val qs = results.map { case (k, v) => "\"" + esc(k) + "\":" + v }
+    val qs = results.map { case (k, v) => jsonStr(k) + ":" + v }
       .mkString("{", ",", "}")
-    val canaryJson = canary.flatMap(n => resultMap.get(n).map(v => "\"" + esc(n) + "\":" + v))
+    val canaryJson = canary.flatMap(n => resultMap.get(n).map(v => jsonStr(n) + ":" + v))
       .mkString("{", ",", "}")
-    val sp = spreads.map { case (k, v) => "\"" + esc(k) + "\":" + v }
+    val sp = spreads.map { case (k, v) => jsonStr(k) + ":" + v }
       .mkString("{", ",", "}")
-    val failedJson = failed.toSeq.map("\"" + esc(_) + "\"").mkString("[", ",", "]")
+    val failedJson = failed.toSeq.map(jsonStr).mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$sp,"canary":$canaryJson,"failed":$failedJson,"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$sp,"canary":$canaryJson,"failed":$failedJson,"sf":${jsonStr(sfDir)}}"""
     println(json)
     // the driver captures a bounded stdout tail, which has truncated the
     // per-query map in past rounds — persist the full line as an artifact
@@ -108,8 +102,8 @@ object Bench {
     // failures, pointing at bench.json for the full per-query map
     def r3(v: Double): String = (math.rint(v * 1000) / 1000).toString
     val topJson = results.sortBy(-_._2).take(25)
-      .map { case (k, v) => "\"" + esc(k) + "\":" + r3(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$topJson,"canary":$canaryJson,"failed":$failedJson,"n_queries":${results.size},"sf":"${esc(sfDir)}","full":"bench.json"}""")
+      .map { case (k, v) => jsonStr(k) + ":" + r3(v) }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$topJson,"canary":$canaryJson,"failed":$failedJson,"n_queries":${results.size},"sf":${jsonStr(sfDir)},"full":"bench.json"}""")
     spark.stop()
   }
 }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** The durability escape hatch for lineage-severed stages (round-13
-  * verdict item 3 — the PLANS.md round-12 ledger rule, now executable).
+/** The durability escape hatch for lineage-severed stages (the
+  * PLANS.md ledger rule, executable).
   *
   * The iterative/contraction pipelines sever lineage with
   * `localCheckpoint`: materialized to executor-local blocks, fastest,
@@ -21,10 +21,10 @@ import org.apache.spark.sql.DataFrame
   * one config line, no query rewrite. DurabilitySpec pins both claims:
   * bit-equal output and node-identical physical plans across modes.
   *
-  * COVERAGE (round 17, stated explicitly): only the long-lived
+  * COVERAGE: only the long-lived
   * iterative/contraction stages route through [[stage]]. REGISTRY
   * QUERIES' in-query materializations call `localCheckpoint()` raw,
-  * DELIBERATELY, per the round-12 ledger rule: a bench/oracle query is
+  * DELIBERATELY, per the PLANS.md ledger rule: a bench/oracle query is
   * retried from scratch on failure, so replicating its intermediates
   * buys nothing and costs the checkpoint write every run — each such
   * site cites its ledger class at the call. Library WRITE-path

@@ -1,20 +1,18 @@
 package graft
 
-/** Runtime enforcement of the BOUNDED-LITERAL contract (round-13
-  * verdict item 4).
+/** Runtime enforcement of the BOUNDED-LITERAL contract.
   *
   * Several map-only paths ship a driver-side literal (`typedLit`) in
   * every task closure: the streaming tokenizer/packer vocabulary and
   * the quality scorer's weight vector. That design is right ONLY while
   * the literal is config-bounded — a trained tokenizer vocab is fixed
-  * by its merge budget, a weight vector by its feature grid. The
-  * round-12 decade probe PRICED the failure mode: feeding a
+  * by its merge budget, a weight vector by its feature grid. A decade
+  * probe PRICED the failure mode: feeding a
   * corpus-derived (Heaps-growing) vocabulary through the literal-map
   * encode measured decade slope 4.98 at the 1000x linear-vocab
   * adversary, where the broadcast-join form (`q_bpe_encode_artifact`,
-  * vocab-as-sharded-table) stays at 0.50. Until round 13 that
-  * precondition lived only in scaladoc; these guards fail fast at plan
-  * construction instead of melting down at task dispatch.
+  * vocab-as-sharded-table) stays at 0.50. These guards fail fast at
+  * plan construction instead of melting down at task dispatch.
   */
 object GraftLimits {
 
@@ -33,14 +31,14 @@ object GraftLimits {
   /** Count form of [[requireBoundedVocab]], for checking a DISTRIBUTED
     * `count()` BEFORE any driver-side materialization: the map form can
     * only fire after a Θ(vocab) collect has already landed on the
-    * driver (the round-13 watch item on `tokenizerArtifacts`) — this
+    * driver (as `tokenizerArtifacts` would) — this
     * one gates the collect itself.
     */
   def requireBoundedVocabCount(n: Long, what: String): Unit =
     require(n <= MaxLiteralVocab,
       s"$what: vocabulary has $n entries (cap $MaxLiteralVocab) — refusing to collect " +
         "it to the driver. A corpus-derived (Heaps-growing) vocabulary must NOT ship " +
-        "as a task-closure literal — the round-12 decade probe measured slope 4.98 for " +
+        "as a task-closure literal — a decade probe measured slope 4.98 for " +
         "the literal-map encode vs 0.50 for the vocab-as-table broadcast join. Persist " +
         "the vocabulary with ModelArtifacts.saveVocabFrame and join it instead " +
         "(q_bpe_encode_artifact).")
@@ -52,7 +50,7 @@ object GraftLimits {
     require(vocab.size <= MaxLiteralVocab,
       s"$what: literal vocabulary has ${vocab.size} entries (cap $MaxLiteralVocab). " +
         "A corpus-derived (Heaps-growing) vocabulary must NOT ship as a task-closure " +
-        "literal — the round-12 decade probe measured slope 4.98 for the literal-map " +
+        "literal — a decade probe measured slope 4.98 for the literal-map " +
         "encode vs 0.50 for the vocab-as-table broadcast join. Persist the vocabulary " +
         "with ModelArtifacts.saveVocabFrame and join it instead (q_bpe_encode_artifact).")
     vocab
@@ -99,14 +97,14 @@ object GraftLimits {
     */
   val KeyDomainMinDistinctPerRow: Double = 0.01
 
-  /** BLOCKING-KEY SATURATION GUARD (round-16, verdict item 5): assert
+  /** BLOCKING-KEY SATURATION GUARD: assert
     * that a linkage/dedup blocking key's distinct-count still tracks
     * the corpus — i.e. its domain has NOT saturated. A blocking key
     * only bounds a blocked self-join while distinct(key) grows with N;
     * a saturating key (low-order chars, small enums) silently turns
-    * the "blocked" join quadratic. Until round 16 that precondition
-    * lived in scaladoc (`LinkageQueries.linkagePairs2`); this makes
-    * the multi-pass blocking pattern self-policing like the vocab
+    * the "blocked" join quadratic. This turns that precondition of
+    * `LinkageQueries.linkagePairs2` into a check, making the
+    * multi-pass blocking pattern self-policing like the vocab
     * collect gate above.
     *
     * Cost: ONE map-side-combined aggregate over the key expression

@@ -28,9 +28,9 @@ object Verify {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     // a query that throws must be LOUD in the artifact, not silently absent
-    // (round-7 postmortem: five analysis-broken queries vanished from the
-    // driver ledger because no parquet dir appeared) — record every failure
-    // and mirror it into errors.json next to the parquet dumps
+    // (an analysis-broken query writes no parquet dir, so a reader of the
+    // dumps alone would never see it) — record every failure and mirror
+    // it into errors.json next to the parquet dumps
     val failures = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val futures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -48,24 +48,15 @@ object Verify {
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // jsonStr escapes ALL control chars (<0x20): a tab or CR in a
+    // query's SQL would otherwise make a json.load of the artifact fail
+    import graft.pipelines.HttpEmbedder.jsonStr
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     import scala.jdk.CollectionConverters._
     val errJson = failures.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     if (!failures.isEmpty)
       System.err.println(s"[verify] ${failures.size} queries FAILED: " +

@@ -16,63 +16,91 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object HashKernels {
 
+  /** fold(h*mul + codeunit) mod 1e9+7 over `s`'s UTF-16 code units,
+    * continuing from `h` — the one character fold behind every polyhash
+    * kernel here.
+    */
+  private def fold(h: Long, s: String, mul: Int): Long = {
+    var acc = h
+    var i = 0
+    while (i < s.length) {
+      acc = (acc * mul + s.charAt(i)) % TextFunctions.HashMod
+      i += 1
+    }
+    acc
+  }
+
   /** fold(h*31 + codeunit) mod 1e9+7 — same result as
     * [[TextFunctions.polyHash]] for any BMP text (fixtures are ASCII).
     */
-  def polyHash(s: UTF8String): Long = {
-    val str = s.toString
-    var h = 0L
-    var i = 0
-    while (i < str.length) {
-      h = (h * 31 + str.charAt(i)) % TextFunctions.HashMod
-      i += 1
+  def polyHash(s: UTF8String): Long = fold(0L, s.toString, 31)
+
+  /** polyHash of every n-token window joined by ' ', window start order
+    * (empty when there are fewer than n tokens; n >= 1). Rolling
+    * (Karp–Rabin) formulation: one O(chars) fold over the space-joined
+    * text records the running hash/position at every token boundary,
+    * then each window hash is O(1) via h(i..j) = pre(j) - pre(i)·31^(j-i)
+    * (mod 1e9+7) — O(chars) per document instead of O(n·chars), and no
+    * window strings are ever materialized.
+    */
+  private def windowHashes(toks: ArrayData, n: Int): Array[Long] = {
+    val m0 = toks.numElements()
+    val m = m0 - n + 1
+    if (m < 1) return Array.emptyLongArray
+    val startPre = new Array[Long](m0); val startPos = new Array[Int](m0)
+    val endPre = new Array[Long](m0); val endPos = new Array[Int](m0)
+    var h = 0L; var pos = 0
+    var t = 0
+    while (t < m0) {
+      if (t > 0) { h = fold(h, " ", 31); pos += 1 }
+      startPre(t) = h; startPos(t) = pos
+      val s = toks.getUTF8String(t).toString
+      h = fold(h, s, 31); pos += s.length
+      endPre(t) = h; endPos(t) = pos
+      t += 1
     }
-    h
+    val pow = new Array[Long](pos + 1)
+    pow(0) = 1L
+    var k = 1
+    while (k <= pos) { pow(k) = pow(k - 1) * 31 % TextFunctions.HashMod; k += 1 }
+    val out = new Array[Long](m)
+    var p = 0
+    while (p < m) {
+      val e = p + n - 1
+      val fp = (endPre(e) - startPre(p) * pow(endPos(e) - startPos(p))) % TextFunctions.HashMod
+      out(p) = if (fp < 0) fp + TextFunctions.HashMod else fp
+      p += 1
+    }
+    out
   }
 
-  /** Distinct hashes of n-token shingles (tokens joined by ' '), without
-    * materializing the shingle strings: the fold runs across token chars
-    * with a ' ' folded between tokens — identical to
-    * polyHash(tok1 + " " + ... + tokn).
-    */
-  def shingleHashes(toks: ArrayData, n: Int): ArrayData = {
-    val m = toks.numElements()
-    if (m < n) return new GenericArrayData(Array.empty[Long])
-    val strs = Array.tabulate(m)(i => toks.getUTF8String(i).toString)
+  /** The distinct values of `hs` in first-seen order. */
+  private def distinctInOrder(hs: Array[Long]): ArrayData = {
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    var start = 0
-    while (start + n <= m) {
-      var h = 0L
-      var t = 0
-      while (t < n) {
-        if (t > 0) h = (h * 31 + ' ') % TextFunctions.HashMod
-        val s = strs(start + t)
-        var i = 0
-        while (i < s.length) {
-          h = (h * 31 + s.charAt(i)) % TextFunctions.HashMod
-          i += 1
-        }
-        t += 1
-      }
-      seen.add(h)
-      start += 1
-    }
+    var i = 0
+    while (i < hs.length) { seen.add(hs(i)); i += 1 }
     val out = new Array[Long](seen.size)
-    val it = seen.iterator(); var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
+    val it = seen.iterator(); var k = 0
+    while (it.hasNext) { out(k) = it.next(); k += 1 }
     new GenericArrayData(out)
   }
+
+  /** Distinct hashes of n-token shingles (tokens joined by ' '), in
+    * first-seen order, without materializing the shingle strings —
+    * identical to polyHash(tok1 + " " + ... + tokn).
+    */
+  def shingleHashes(toks: ArrayData, n: Int): ArrayData =
+    distinctInOrder(windowHashes(toks, n))
 
   /** 60-bit dual-family SimHash: low 30 bits are the per-bit majority
     * vote over the 31-multiplier token polyhash, high 30 bits over the
     * 37-multiplier partner (the audit pair — a salted 31-hash is affine
     * in the original per length class, a different MULTIPLIER is the
-    * established independent second family). One pass over the tokens
-    * folds both hashes per token. The point of the width: 2 bands of 30
-    * bits keep the hamming<=1 pigeonhole guarantee while pushing band
-    * saturation (collision mass n²·nBands/2^bandBits) from ~2^15 docs
-    * to ~2^30, and 60-bit hamming is a far tighter match than 30-bit
-    * (third-decade decomposition in PLANS.md).
+    * established independent second family). The point of the width:
+    * 2 bands of 30 bits keep the hamming<=1 pigeonhole guarantee while
+    * pushing band saturation (collision mass n²·nBands/2^bandBits) from
+    * ~2^15 docs to ~2^30, and 60-bit hamming is a far tighter match
+    * than 30-bit (decomposition in PLANS.md).
     */
   def simhashDual(toks: ArrayData): Long = {
     val n = toks.numElements()
@@ -80,14 +108,8 @@ object HashKernels {
     var i = 0
     while (i < n) {
       val s = toks.getUTF8String(i).toString
-      var h1 = 0L; var h2 = 0L
-      var k = 0
-      while (k < s.length) {
-        val c = s.charAt(k)
-        h1 = (h1 * 31 + c) % TextFunctions.HashMod
-        h2 = (h2 * 37 + c) % TextFunctions.HashMod
-        k += 1
-      }
+      val h1 = fold(0L, s, 31)
+      val h2 = fold(0L, s, 37)
       var b = 0
       while (b < 30) {
         if (((h1 >> b) & 1L) == 1L) counts(b) += 1
@@ -116,14 +138,7 @@ object HashKernels {
     val out = new Array[Long](nBuckets)
     var i = 0
     while (i < n) {
-      val s = toks.getUTF8String(i).toString
-      var h = 0L
-      var k = 0
-      while (k < s.length) {
-        h = (h * 31 + s.charAt(k)) % TextFunctions.HashMod
-        k += 1
-      }
-      out((h % nBuckets).toInt) += 1
+      out((polyHash(toks.getUTF8String(i)) % nBuckets).toInt) += 1
       i += 1
     }
     new GenericArrayData(out)
@@ -132,44 +147,14 @@ object HashKernels {
   /** Positional n-token shingle hashes: one struct<p:int, fp:long> per
     * window start (1-based p), where fp == polyHash of the space-joined
     * window — identical to polyHash(array_join(slice(toks, p, n), ' ')).
-    * Rolling formulation: one O(chars) fold over the space-joined text
-    * records the running hash/position at every token boundary, then each
-    * window hash is O(1) via h(i..j) = pre(j) - pre(i)·31^(j-i) (mod
-    * 1e9+7) — total O(chars) per document instead of O(n·chars), and no
-    * window strings are ever materialized.
     */
   def positionalShingles(toks: ArrayData, n: Int): ArrayData = {
-    val m0 = toks.numElements()
-    val m = m0 - n + 1
-    if (m < 1) return new GenericArrayData(Array.empty[AnyRef])
-    val startPre = new Array[Long](m0); val startPos = new Array[Int](m0)
-    val endPre = new Array[Long](m0); val endPos = new Array[Int](m0)
-    var h = 0L; var pos = 0
-    var t = 0
-    while (t < m0) {
-      if (t > 0) { h = (h * 31 + ' ') % TextFunctions.HashMod; pos += 1 }
-      startPre(t) = h; startPos(t) = pos
-      val s = toks.getUTF8String(t).toString
-      var i = 0
-      while (i < s.length) {
-        h = (h * 31 + s.charAt(i)) % TextFunctions.HashMod; pos += 1; i += 1
-      }
-      endPre(t) = h; endPos(t) = pos
-      t += 1
-    }
-    val pow = new Array[Long](pos + 1)
-    pow(0) = 1L
-    var k = 1
-    while (k <= pos) { pow(k) = pow(k - 1) * 31 % TextFunctions.HashMod; k += 1 }
-    val out = new Array[AnyRef](m)
+    val hs = windowHashes(toks, n)
+    val out = new Array[AnyRef](hs.length)
     var p = 0
-    while (p < m) {
-      val e = p + n - 1
-      val len = endPos(e) - startPos(p)
-      var fp = (endPre(e) - startPre(p) * pow(len)) % TextFunctions.HashMod
-      if (fp < 0) fp += TextFunctions.HashMod
+    while (p < hs.length) {
       out(p) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](p + 1, fp))
+        Array[Any](p + 1, hs(p)))
       p += 1
     }
     new GenericArrayData(out)
@@ -187,43 +172,21 @@ object HashKernels {
     * materialized, codegen-friendly.
     */
   def winnowFingerprints(toks: ArrayData, n: Int, w: Int): ArrayData = {
-    val m0 = toks.numElements()
-    val m = m0 - n + 1
+    val hs = windowHashes(toks, n)
+    val m = hs.length
     if (m < 1) return new GenericArrayData(Array.empty[Long])
-    val strs = Array.tabulate(m0)(i => toks.getUTF8String(i).toString)
-    val hs = new Array[Long](m)
-    var start = 0
-    while (start < m) {
-      var h = 0L
-      var t = 0
-      while (t < n) {
-        if (t > 0) h = (h * 31 + ' ') % TextFunctions.HashMod
-        val s = strs(start + t)
-        var i = 0
-        while (i < s.length) {
-          h = (h * 31 + s.charAt(i)) % TextFunctions.HashMod
-          i += 1
-        }
-        t += 1
-      }
-      hs(start) = h
-      start += 1
-    }
     val nw = if (m >= w) m - w + 1 else 1
-    val seen = new java.util.LinkedHashSet[java.lang.Long]()
+    val mins = new Array[Long](nw)
     var j = 0
     while (j < nw) {
       var mn = Long.MaxValue
       var i = j
       val end = math.min(j + w, m)
       while (i < end) { if (hs(i) < mn) mn = hs(i); i += 1 }
-      seen.add(mn)
+      mins(j) = mn
       j += 1
     }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator(); var k = 0
-    while (it.hasNext) { out(k) = it.next(); k += 1 }
-    new GenericArrayData(out)
+    distinctInOrder(mins)
   }
 
   /** All ordered pairs (a < b) of an id array as struct<ida,idb> rows,

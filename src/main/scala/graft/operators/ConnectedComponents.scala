@@ -46,7 +46,7 @@ object ConnectedComponents {
     * milliseconds where the distributed loop pays O(log d) scheduler
     * round-trips. Near-dup pair graphs at petabyte corpus scale exceed
     * this immediately (the 10× fixture replica's ngram pair graph is
-    * already 248k edges — see PLANS.md §round-3), so the loop stays the
+    * already 248k edges — see PLANS.md), so the loop stays the
     * production path; the gate only short-circuits genuinely tiny
     * graphs (the sf0.1 fixtures: 256 and 92 edges).
     */

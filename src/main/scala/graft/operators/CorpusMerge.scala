@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** WRITE-SIDE MERGE/UPSERT for a parquet corpus — the missing write
-  * shape the round-15 verdict named: `q_latest_event` compacts CDC on
+/** WRITE-SIDE MERGE/UPSERT for a parquet corpus — the write shape the
+  * read-side queries lack: `q_latest_event` compacts CDC on
   * the READ side and SCD2 reconstructs history, but a real
   * training-data pipeline refreshes its corpus IN PLACE from a delta
   * (new documents, re-crawled revisions, takedown tombstones). The
@@ -102,7 +102,7 @@ object CorpusMerge {
     // the merge is atomic at bucket granularity (dynamic overwrite
     // commits whole buckets) and idempotent per delta, so the documented
     // recovery is RE-RUN THE MERGE — the retry-from-scratch class of the
-    // round-12 ledger. A deployment that cannot re-run (preemptible
+    // PLANS.md ledger. A deployment that cannot re-run (preemptible
     // fleet, non-replayable delta) should stage the delta to a reliable
     // store first and pass that frame in.
     val d = delta.withColumn("bucket", bucketOf(col(keyCol), nBuckets))
@@ -143,12 +143,10 @@ object CorpusMerge {
     // a bucket whose every key was tombstoned vanishes from `merged`,
     // and dynamic overwrite would silently leave its stale files in
     // place — the surviving-bucket set RIDES THE WRITE as an observe()
-    // metric (round 17, guide §1.5/§2.4): the write emits exactly the
+    // metric (guide §1.5/§2.4): the write emits exactly the
     // surviving rows, so collect_set(bucket) over the written stream IS
-    // the survivor set — ≤ nBuckets values, driver-bounded. (Round 16
-    // computed it from a column-pruned twin of the merge join — one
-    // extra join job re-reading the pruned base per merge; round 15 ran
-    // the full payload join twice.)
+    // the survivor set — ≤ nBuckets values, driver-bounded, with no
+    // extra join job re-reading the pruned base per merge.
     val obs = new org.apache.spark.sql.Observation()
     merged.observe(obs, collect_set(col("bucket")).as("buckets"))
       .write.mode("overwrite")

@@ -105,7 +105,7 @@ object Dedup {
     df.select(col(idCol), explode(shingleHashesFast(tokens(col(textCol)), n)).as("h"))
 
   /** Per-document SORTED shingle-hash SET: (id, hset) — the map-side
-    * form of [[shingleHashTable]] (round 9). One row per document, no
+    * form of [[shingleHashTable]]. One row per document, no
     * explode, so both LSH stages that consume shingles per-document —
     * signatures ([[minhashFromSets]]) and pair verification
     * ([[jaccardForPairsSets]]) — run with NO corpus exchange at all;
@@ -156,7 +156,7 @@ object Dedup {
   /** LSH candidate pairs from 8-value signatures, 4 bands of 2 rows:
     * (ida, idb) with ida < idb, distinct.
     *
-    * ROUND-16 SHAPE (guide §2.4): one BUCKET AGGREGATE, not a banded
+    * SHAPE (guide §2.4): one BUCKET AGGREGATE, not a banded
     * self-join. The join form shuffled the band rows TWICE (once per
     * side) and computed the entire signature chain (scan → shingle
     * kernel → minhash) twice — no exchange reuse fires across the
@@ -173,10 +173,10 @@ object Dedup {
       .groupBy("band", "x", "y")
       .agg(sort_array(collect_list(col("id"))).as("ids"))
       .filter(size(col("ids")) >= 2)
-      // PER-ANCHOR emission (round 17): posexplode the bucket once and
+      // PER-ANCHOR emission: posexplode the bucket once and
       // slice each anchor's ordered partners from the shared array —
-      // per-row state stays Θ(bucket). The previous single
-      // flatten(transform(...)) materialized the bucket's ENTIRE
+      // per-row state stays Θ(bucket). A single
+      // flatten(transform(...)) would materialize the bucket's ENTIRE
       // Θ(bucket²) pair array as one row value before exploding, which
       // on a degenerate hot bucket risks executor OOM / the 2^31
       // array-element cap where the streamed form merely runs long.
@@ -202,10 +202,9 @@ object Dedup {
   /** Verified Jaccard for candidate pairs against the shingle-hash
     * table. Inner-join semantics: zero-intersection candidates drop out.
     *
-    * PAIR-ARRAY FETCH, not posting re-join (the round-9 third-decade
-    * lesson): the first formulation joined the candidate pairs back to
-    * the posting table on each side and aggregated the matches —
-    * linear, but with a |doc|-row amplification PER PAIR (~27x) and a
+    * PAIR-ARRAY FETCH, not posting re-join: joining the candidate pairs
+    * back to the posting table on each side and aggregating the matches
+    * is linear, but with a |doc|-row amplification PER PAIR (~27x) and a
     * pair-keyed aggregate shuffle on the amplified stream; at the
     * 100x/15 GB replica that half-billion-row intermediate spilled and
     * `q_overlap_join`'s measured decade slope hit 1.73 despite every
@@ -267,11 +266,10 @@ object Dedup {
     */
   def ngramJaccardPairs(hs: DataFrame, idCol: String, threshold: Double,
                         maxDocFreq: Int = 64): DataFrame = {
-    // ONE corpus exchange (round 9; was three). The old shape counted
-    // df per h (exchange 1), anti-joined the hot keys off the shingle
-    // table, re-aggregated the kept rows per doc for cardinalities
-    // (exchange 2), and grouped by h again for pair generation
-    // (exchange 3). The fusion: a single groupBy(h) whose aggregate
+    // ONE corpus exchange, not three: the unfused shape counts df per
+    // h (exchange 1), anti-joins the hot keys off the shingle table,
+    // re-aggregates the kept rows per doc for cardinalities (exchange
+    // 2), and groups by h again for pair generation (exchange 3). The fusion: a single groupBy(h) whose aggregate
     // ([[TypedOps.CappedCollectAggregator]]) carries the EXACT df and
     // at most cap+1 collected ids — a hot corpus-stopword shingle
     // buffers O(cap) bytes instead of its whole posting list, which is
@@ -283,9 +281,8 @@ object Dedup {
     val cappedCollect = org.apache.spark.sql.functions.udaf(
       new TypedOps.CappedCollectAggregator(maxDocFreq),
       org.apache.spark.sql.Encoders.scalaLong)
-    // PARTITION SIZING (round 10, the round-9 verdict watch item): the
-    // post-shuffle object-agg task holds a map over its share of the
-    // shingle keyspace, so its working set is Θ(corpus / partitions) —
+    // PARTITION SIZING: the post-shuffle object-agg task holds a map
+    // over its share of the shingle keyspace, so its working set is Θ(corpus / partitions) —
     // a fixed session partition count that served one decade OOMs at
     // the next (measured: 1000x dies at the 100x-sized p=16 with
     // UNABLE_TO_ACQUIRE_MEMORY, completes at p=160). AQE sizes stages
@@ -310,9 +307,9 @@ object Dedup {
       .agg(cappedCollect(col(idCol)).as("g"))
       .filter(col("g.n") <= maxDocFreq)
       .select(col("h"), col("g.ids").as("ids"))
-    // CARDINALITY RIDES THE PAIR KEY (round 10). The old tail joined
-    // per-doc cardinalities onto the pair stream — at threshold 0 that
-    // re-shuffled the Θ(pairs) stream TWICE more after its groupBy
+    // CARDINALITY RIDES THE PAIR KEY. Joining per-doc cardinalities
+    // onto the pair stream would re-shuffle, at threshold 0, the
+    // Θ(pairs) stream TWICE more after its groupBy
     // (measured at the third decade: 1.16B pairs, ~32 GB per extra
     // exchange, the whole cost of the query's tail). Instead the
     // posting table (Θ(postings), 4.5x smaller here and smaller still
@@ -359,8 +356,7 @@ object Dedup {
   }
 
   /** 30-bit SimHash over token hashes (majority vote per bit):
-    * (id, simhash). FIXTURE-ONLY since round 10: its pair stream
-    * floods at corpus scale (15-bit band keyspace saturates past
+    * (id, simhash). FIXTURE-ONLY: its pair stream floods at corpus scale (15-bit band keyspace saturates past
     * ~2^15 docs; measured decade 3.85 / 141M hamming<=1 pairs at 5M
     * docs, 99.84% rejected by the wider signature) — every registry
     * query and graph consumer now builds on [[simhashWide]]. Kept as
@@ -368,7 +364,7 @@ object Dedup {
     * audits.
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    // map-side kernel (round 9): the explode → groupBy(30 bit-sums)
+    // map-side kernel: the explode → groupBy(30 bit-sums)
     // formulation pushed every token occurrence through a doc-keyed
     // 31-column aggregate shuffle; the per-bit majority vote is a pure
     // per-document function, so it now runs inside the scan projection —
@@ -404,7 +400,7 @@ object Dedup {
                    bandBits: Int = 15): DataFrame = {
     // one posexplode pass — a per-band unionAll would replicate the
     // signature projection per band per join side.
-    // ROUND-16 SHAPE (the lshCandidates cut): one BUCKET AGGREGATE on
+    // SHAPE (as in lshCandidates): one BUCKET AGGREGATE on
     // (band, key) instead of a banded self-join — the join form shuffled
     // the band rows twice and computed the signature chain (the 60-sum
     // simhash aggregate) twice. Per-group state is Θ(bucket) (id, sig)
@@ -468,7 +464,7 @@ object Dedup {
       packSignBits(col(vecCol), bitsPerBand * nBands).as("pack"))
     // one posexplode pass over the packed column (not a per-band
     // unionAll, which would re-scan + re-pack per band per join side)
-    // ROUND-16: the bucket-aggregate rewrite that won for the minhash/
+    // The bucket-aggregate rewrite that won for the minhash/
     // simhash families was MEASURED SLOWER here (ABAB subset bench:
     // q_embed_neardup 0.44 → 0.66, q_pagerank 1.75 → 1.93) — the sign
     // pack is one cheap codegen kernel over a narrow frame, so there is
@@ -476,7 +472,8 @@ object Dedup {
     // trades a codegen join for an interpreted ObjectHashAggregate.
     // Instead the packed frame is materialized once (id + one long) so
     // the kernel runs once and BOTH band sides read it — the join stays
-    // whole-stage-codegen (durability: round-12 ledger class).
+    // whole-stage-codegen (durability: the PLANS.md ledger class of
+    // lineage-severed, non-replicated frames).
     val packedCp = packed.localCheckpoint()
     val bands = packedCp.select(col("id"),
       posexplode(array((0 until nBands).map(b =>

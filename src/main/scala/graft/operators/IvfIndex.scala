@@ -101,9 +101,6 @@ object IvfIndex {
       .limit(nprobe).collect().map(_.getLong(0)).toSeq
   }
 
-  def nearestCluster(seeds: DataFrame, qvec: Seq[Double]): Long =
-    nearestClusters(seeds, qvec, 1).head
-
   /** Probe scan: ONLY the probed clusters' files are read — the literal
     * `IN` on the partition column prunes at planning time
     * (`PartitionFilters` in the scan node, see PLANS.md).
@@ -112,7 +109,7 @@ object IvfIndex {
     spark.read.parquet(indexDir)
       .filter(col("cluster").isin(clusters: _*))
 
-  // ---- versioned-manifest serving layout (round-14: index rotation) ----
+  // ---- versioned-manifest serving layout (index rotation) ----
   //
   //   <root>/<version>/index/      cluster-partitioned vector files
   //   <root>/<version>/centroids/  the k-row codebook that built them
@@ -138,13 +135,13 @@ object IvfIndex {
     * index as a second job — a listing + footer pass over every part
     * file per publish that the rotation query paid twice.)
     *
-    * DURABILITY CONTRACT (round-16 ADVICE): the assignment checkpoint
+    * DURABILITY CONTRACT: the assignment checkpoint
     * is executor-local and unreplicated, so an executor loss
     * mid-publish fails the publish job. That is safe BY CONSTRUCTION:
     * the manifest pointer swaps only after every write lands, so a
     * failed publish leaves the previous version serving intact and the
     * documented recovery is re-run the publish (retry-from-scratch,
-    * the round-12 ledger class — same contract in [[appendVectors]]
+    * the PLANS.md ledger class — same contract in [[appendVectors]]
     * and `CorpusMerge.merge`). On a preemptible fleet, stage the
     * assignment reliably and pass it via `precomputedAssign`.
     */
@@ -187,8 +184,7 @@ object IvfIndex {
     * `root/MANIFEST.prev` BEFORE the swap: pointer HISTORY, not
     * directory mtime, is what the in-flight-reader retention guarantee
     * of [[pruneVersions]] is stated over — mtime tracks creation order,
-    * which diverges from serving order the moment a pointer rolls back
-    * (the round-15 ADVICE finding).
+    * which diverges from serving order the moment a pointer rolls back.
     */
   def publishManifest(spark: SparkSession, root: String, version: String): Unit = {
     require(version.nonEmpty && !version.contains("/"),
@@ -228,13 +224,13 @@ object IvfIndex {
     * append write — Θ(new rows), regardless of index size.
     *
     * WHEN TO COMPACT (measured by the HotAddProbe of commit 91adee5,
-    * PLANS.md round 15): the trigger is DRIFT, not append fraction.
+    * PLANS.md): the trigger is DRIFT, not append fraction.
     * I.i.d. appends are recall-neutral at any measured fraction (stale
     * vs fresh codebook within ±5 recall points at 10/50/100% appends), but
     * DRIFTED appends cost 25–55 recall@10 points on drift-region
     * queries already at 10% — the stale codebook has no cells where
     * the new mode lives. The trigger is ENFORCED here, not just
-    * documented (round-16): each append persists its batch's cluster
+    * documented: each append persists its batch's cluster
     * histogram — a free byproduct of this function's own argmin,
     * Θ(nlist) rows — beside the index (`append_hist`); [[driftStat]]
     * compares the cumulative append distribution to the version's
@@ -314,7 +310,7 @@ object IvfIndex {
     }.sum / 2.0
   }
 
-  /** The enforced compaction rule the round-15 hot-add receipt derived:
+  /** The enforced compaction rule the hot-add measurement derived:
     * retrain (rebuild + [[publishVersion]] swap) when the appended
     * vectors' cluster distribution has drifted from the build-time
     * distribution by more than `threshold` total variation. The 0.25
@@ -333,15 +329,14 @@ object IvfIndex {
     * EXCEPT the `keep` most recently MODIFIED ones — and never, at any
     * age, the MANIFEST target or the PREVIOUSLY-SERVED version
     * (`MANIFEST.prev`, recorded by every pointer swap). Without this a
-    * serving root that retrains daily leaks its full index size per day
-    * (the round-14 verdict's missing item 3). The in-flight-reader
-    * guarantee is stated over POINTER HISTORY, not mtime: a reader
-    * whose plan was bound to the pre-swap pointer keeps reading intact
-    * files through a prune because that version IS `MANIFEST.prev` —
-    * this holds through rollbacks too, where creation order and serving
-    * order diverge and an mtime-only rule would delete the version
-    * adjacent to the rollback target (the round-15 ADVICE finding;
-    * IvfIndexSpec pins both orders). Single pruner assumed — the
+    * serving root that retrains daily leaks its full index size per
+    * day. The in-flight-reader guarantee is stated over POINTER
+    * HISTORY, not mtime: a reader whose plan was bound to the pre-swap
+    * pointer keeps reading intact files through a prune because that
+    * version IS `MANIFEST.prev` — this holds through rollbacks too,
+    * where creation order and serving order diverge and an mtime-only
+    * rule would delete the version adjacent to the rollback target
+    * (IvfIndexSpec pins both orders). Single pruner assumed — the
     * retrain owner, same as [[appendVectors]]'s single ingest owner.
     * Returns the version names deleted.
     */

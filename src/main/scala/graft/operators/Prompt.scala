@@ -111,13 +111,4 @@ object Prompt {
     }
     (sb ++= conversationWithUserTurn(conversation, userInput)).result()
   }
-
-  /** Fold a (rank, text) relation into the single-row instruct prompt.
-    * `rank` is 1-based ascending-distance rank (labels = positions in
-    * rank order, identical for any gap-free 1-based ranking).
-    */
-  def assemble(topk: DataFrame, rankCol: String, textCol: String,
-               conversation: String, userInput: String): DataFrame =
-    assembleByOrder(topk, Seq(col(rankCol).cast("long").as("rank")), textCol,
-      conversation, userInput)
 }

@@ -96,6 +96,9 @@ object HttpEmbedder {
     parseEmbedding(client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString()).body())
   }
 
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * char (< 0x20) escaped. The one JSON string encoder of the engine's
+    * requests and artifacts. */
   def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Persisted training artifacts — the CROSS-SESSION half of the
-  * train-once story (round-11; the in-session half is the
+  * train-once story (the in-session half is the
   * (dir, split)-keyed memo in [[graft.queries.QualityQueries]] /
   * [[graft.queries.TokenizerQueries]]). A real pipeline trains its
   * learned components once and ships them as small files; inference
@@ -71,7 +71,7 @@ object ModelArtifacts {
     * Map-shaped [[saveVocab]]/[[loadVocab]] pair collects to the driver
     * and is right for closure-riding consumers (the streaming scorer)
     * when the vocabulary is genuinely tokenizer-bounded; but THIS
-    * engine's word-level vocab grows with Heaps' law, and the round-12
+    * engine's word-level vocab grows with Heaps' law, and the
     * linear-vocab decade probe priced the literal-map encode at slope
     * 4.98 (2696 s at 1000x) where the broadcast-JOIN encode stays
     * sublinear. A corpus-scale vocabulary is a TABLE: it trains

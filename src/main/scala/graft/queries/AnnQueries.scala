@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.QuantizedL2Expr
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, TopK}
 import graft.functions.VectorFunctions._
 
 /** Approximate nearest-neighbour search and clustering over the
@@ -33,11 +33,8 @@ object AnnQueries {
 
   /** The 5 rows nearest to `q` by cosine distance, vector 0 (the query
     * itself) excluded, ties to the lower vec_id. */
-  private def nearest5(rows: DataFrame, q: Column): DataFrame =
-    rows.filter(col("vec_id") =!= 0)
-      .withColumn("dist", cosineDistance(col("embedding"), q))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(5)
+  private def nearest5(rows: DataFrame, q: Seq[Double]): DataFrame =
+    TopK.nearest(rows.filter(col("vec_id") =!= 0), "embedding", "vec_id", q, 5)
 
   /** Serve vector 0 from the IVF index at `indexDir`: only the files of
     * the `nprobe` cells whose `centroids` are nearest to it are scanned
@@ -46,7 +43,7 @@ object AnnQueries {
       indexDir: String, nprobe: Int): DataFrame = {
     val qvec = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
     nearest5(IvfIndex.probe(spark, indexDir, IvfIndex.nearestClusters(centroids, qvec, nprobe)),
-        array(qvec.map(lit): _*))
+        qvec)
       .select(col("cluster").cast("long").as("probe_cluster"),
         col("vec_id").as("nid"), col("dist"))
   }
@@ -167,7 +164,7 @@ object AnnQueries {
       .groupBy("label").agg(sum(col("t")).as("d2"))
       .orderBy(col("d2").asc, col("label").asc).limit(1)
       .select(col("label").as("probe_label"))
-    nearest5(emb.join(broadcast(best), emb("label") === col("probe_label")), qlit)
+    nearest5(emb.join(broadcast(best), emb("label") === col("probe_label")), q)
       .select(col("probe_label"), col("vec_id").as("nid"), col("dist"))
   }
 

@@ -322,7 +322,6 @@ object RagQueries {
        |         + coalesce(CAST(1 AS DOUBLE) / CAST(r_bm + 60 AS DOUBLE), CAST(0 AS DOUBLE)) AS rrf
        |FROM bmr FULL OUTER JOIN cosr USING (doc_id)
        |ORDER BY rrf DESC, doc_id""".stripMargin) { (spark, dir) =>
-    import graft.functions.VectorFunctions.cosineDistance
     val bmr = bm25Scores(spark, dir)
       .orderBy(col("score_q").desc, col("doc_id").asc).limit(10)
       // 10-row frame post-limit: the unpartitioned window is a single
@@ -332,11 +331,9 @@ object RagQueries {
       .select("doc_id", "r_bm")
     val emb = Tables.embeddings(spark, dir)
     val qv = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val qlit = array(qv.map(lit): _*)
-    val cosr = emb.filter(col("vec_id") =!= 0)
-      .select(col("vec_id").as("doc_id"),
-        cosineDistance(col("embedding"), qlit).as("dist"))
-      .orderBy(col("dist").asc, col("doc_id").asc).limit(10)
+    val cosr = TopK.nearest(emb.filter(col("vec_id") =!= 0),
+        "embedding", "vec_id", qv, 10)
+      .select(col("vec_id").as("doc_id"), col("dist"))
       .withColumn("r_cos", row_number()
         .over(Window.orderBy(col("dist").asc, col("doc_id").asc)).cast("long"))
       .select("doc_id", "r_cos")

@@ -190,9 +190,7 @@ object VectorQueries {
     val qv = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
     val qdv = dq.filter(col("vec_id") === 0).head().getSeq[Double](1)
     def top10(df: org.apache.spark.sql.DataFrame, c: String, q: Seq[Double]) =
-      df.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), cosineDistance(col(c), array(q.map(lit): _*)).as("dist"))
-        .orderBy(col("dist").asc, col("vec_id").asc).limit(10)
+      TopK.nearest(df.filter(col("vec_id") =!= 0), c, "vec_id", q, 10)
         .select("vec_id")
     top10(emb, "v", qv).join(top10(dq, "dv", qdv), "vec_id")
       .agg(count(lit(1)).as("recall10"))
@@ -274,21 +272,16 @@ object VectorQueries {
       graft.functions.RandomProjExpr.column(col("v"), 16).as("pv"))
     val qv = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
     val qpv = pv.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val coarse = pv.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), cosineDistance(col("pv"), array(qpv.map(lit): _*)).as("cd"))
-      .orderBy(col("cd").asc, col("vec_id").asc).limit(200)
+    val coarse = TopK.nearest(pv.filter(col("vec_id") =!= 0), "pv", "vec_id", qpv, 200)
       // global window is DELIBERATE: it runs after the TakeOrdered
       // top-200 prune, so at most 200 rows pass through one partition
       .select(col("vec_id"),
         row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("cd").asc, col("vec_id").asc)).as("crn"))
-    def rerank(k: Int) = coarse.filter(col("crn") <= k).join(emb, "vec_id")
-      .select(col("vec_id"), cosineDistance(col("v"), array(qv.map(lit): _*)).as("dist"))
-      .orderBy(col("dist").asc, col("vec_id").asc).limit(10)
+          .orderBy(col("dist").asc, col("vec_id").asc)).as("crn"))
+    def rerank(k: Int) = TopK.nearest(
+        coarse.filter(col("crn") <= k).join(emb, "vec_id"), "v", "vec_id", qv, 10)
       .select("vec_id")
-    val exact = emb.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), cosineDistance(col("v"), array(qv.map(lit): _*)).as("dist"))
-      .orderBy(col("dist").asc, col("vec_id").asc).limit(10)
+    val exact = TopK.nearest(emb.filter(col("vec_id") =!= 0), "v", "vec_id", qv, 10)
       .select("vec_id")
     rerank(50).join(exact, "vec_id").agg(count(lit(1)).as("recall10_c50"))
       .crossJoin(rerank(200).join(exact, "vec_id").agg(count(lit(1)).as("recall10_c200")))
@@ -332,11 +325,9 @@ object VectorQueries {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").as("v"))
       def top10(m: Int) = {
-        val qlit = array(q.take(m).map(lit): _*)
         val vm = if (m == 64) col("v") else slice(col("v"), 1, m)
-        emb.filter(col("vec_id") =!= 0)
-          .select(col("vec_id"), cosineDistance(vm, qlit).as("dist"))
-          .orderBy(col("dist").asc, col("vec_id").asc).limit(10)
+        TopK.nearest(emb.filter(col("vec_id") =!= 0).withColumn("vm", vm),
+            "vm", "vec_id", q.take(m), 10)
           .select("vec_id")
       }
       val exact = top10(64)

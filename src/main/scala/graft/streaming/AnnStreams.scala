@@ -88,7 +88,7 @@ object AnnStreams {
       }
       .start()
 
-  /** [[serve]] with INDEX ROTATION (round-14): instead of a fixed
+  /** [[serve]] with INDEX ROTATION: instead of a fixed
     * `indexDir`, each micro-batch re-reads the versioned-manifest
     * pointer at `root/MANIFEST` ([[graft.operators.IvfIndex
     * .currentVersion]] — one tiny driver-side read per trigger) and

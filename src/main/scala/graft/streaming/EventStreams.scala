@@ -72,7 +72,7 @@ object EventStreams {
     * stream side keeps NO state — unlike a stream-stream join there is
     * no watermark or buffer, which is why this is the preferred form
     * whenever the dimension fits in memory. PRECONDITION (broadcast
-    * ledger, PLANS.md round 12): the hint is forced because AQE does
+    * ledger, PLANS.md): the hint is forced because AQE does
     * not replan micro-batches — so the caller's dim must be bounded
     * (type/source enums, vocab, k-row artifacts), never a fact-scaled
     * frame. A corpus-sized dimension belongs in a batch join or a

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming sequence packing — the stateful missing stage of the
-  * crawl pipeline (round 12, verdict item 4): ingest → dedup → quality
+  * crawl pipeline: ingest → dedup → quality
   * → tokenize → decontam → sketches all had streaming twins, but
   * packing a crawl into fixed context-length blocks is the one stage
   * whose streaming form genuinely NEEDS keyed state: a block can end
@@ -45,7 +45,7 @@ object PackerStreams {
 
   private val CtxLen: Long = graft.queries.TokenizerQueries.CtxLen.toLong
 
-  /** End-of-stream FLUSH sentinel (round-13 ADVICE): Append mode with
+  /** End-of-stream FLUSH sentinel: Append mode with
     * NoTimeout never emits a shard's trailing partial block, so a
     * finite or quiescent stream would withhold its tail tokens
     * forever. A document row with this doc_id (per shard, any text)
@@ -101,7 +101,7 @@ object PackerStreams {
         (lang: String, rows: Iterator[EncDoc], state: GroupState[PackState]) =>
           var st = state.getOption.getOrElse(emptyBlock)
           val out = collection.mutable.Buffer.empty[PackedBlock]
-          // NOTE per-micro-batch bound (round-13 ADVICE): the seven-longs
+          // NOTE per-micro-batch bound: the seven-longs
           // claim is the STANDING state; the toSeq below additionally
           // holds one micro-batch's token-id arrays for this shard in
           // the folding task's heap. Bound ingestion accordingly on

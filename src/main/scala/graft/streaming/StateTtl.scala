@@ -6,9 +6,8 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.unsafe.types.UTF8String
 
 /** REPO-WIDE STATE-RETENTION POLICY for every stateful streaming
-  * ledger (the one scaladoc place the round-15 verdict asked for —
-  * per-operator docs state their OWN contract and point here for the
-  * classification; no more per-file production promises).
+  * ledger, stated in this one place: per-operator docs state their
+  * OWN contract and point here for the classification.
   *
   * Every `*GroupsWithState` ledger in this engine falls into exactly
   * one of three classes, and the class — not the operator — decides
@@ -26,9 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * TTL-wide window" — exact dedup becomes distinct-within-TTL, LSH
   * candidates become candidates-against-a-TTL-fresh-anchor, and
   * equality with the batch twin holds only when duplicate spacing fits
-  * inside the TTL. Members: [[DedupStreams.exactDedupDocs]] (TTL leg
-  * shipped round 15), [[DedupStreams.nearDupCandidates]] (the largest
-  * ledger — Θ(occupied buckets); TTL leg shipped round 16),
+  * inside the TTL. Members: [[DedupStreams.exactDedupDocs]] (TTL
+  * leg), [[DedupStreams.nearDupCandidates]] (the largest ledger —
+  * Θ(occupied buckets); TTL leg),
   * [[DedupStreams.imageNearDups]] and [[LinkageStreams.linkagePairs]]
   * (same class, same `idleTtl` recipe applies verbatim when a
   * deployment needs it — their ledgers are strictly smaller than the

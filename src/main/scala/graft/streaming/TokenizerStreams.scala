@@ -32,7 +32,7 @@ object TokenizerStreams {
     * aggregates are HOF folds over the row's OWN token array — no
     * explode, no shuffle: a document is a complete unit of work, which
     * is what makes the same expression correct on an unbounded stream.
-    * OOV handling (round 12, the ADVICE finding): a crawl stream WILL
+    * OOV handling: a crawl stream WILL
     * contain tokens absent from the batch-built vocab, and a bare
     * `element_at` returns null there — silently nulling `id_sum` /
     * `id_posw` while `n_tok` stays populated. Unknown tokens therefore
@@ -41,10 +41,10 @@ object TokenizerStreams {
     * cannot occur) the coalesce is a no-op and the batch pin is
     * unchanged. Because UNK adds 0 to both checksums, UNK mass would
     * otherwise be invisible downstream — so the output carries an
-    * `n_unk` column (count of UNK-mapped tokens, round 13 ADVICE):
+    * `n_unk` column (count of UNK-mapped tokens):
     * consumers detect vocabulary misses in-band, 0 on the training
     * corpus. Full miss diagnostics remain `q_oov_rate`'s shape.
-    * BOUNDED-VOCAB PRECONDITION (round 12, priced by the linear-vocab
+    * BOUNDED-VOCAB PRECONDITION (priced by the linear-vocab
     * decade probe): the closure-riding literal map is right only while
     * the vocabulary is tokenizer-bounded — a CORPUS vocabulary (Heaps-
     * growing) must take the batch broadcast-join path instead

@@ -4,13 +4,13 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 
-/** Registry-wide forced-broadcast audit (round-13 verdict item 1).
+/** Registry-wide forced-broadcast audit.
   *
   * Builds EVERY registry plan with AQE off and
   * `autoBroadcastJoinThreshold = -1`, so the only BroadcastExchanges
   * left are the ones a `broadcast()` hint FORCES, and classifies each
-  * forced operand's subtree into the boundedness classes the round-12
-  * ledger established (Spark hard-fails a forced broadcast at 8 GB, so
+  * forced operand's subtree into the boundedness classes of the
+  * PLANS.md hint ledger (Spark hard-fails a forced broadcast at 8 GB, so
   * any forced operand that scales with the corpus is a 100-TB query
   * killer even when sandbox receipts look fine):
   *
@@ -85,7 +85,7 @@ object BroadcastAudit {
   def signature(child: SparkPlan): String =
     child.output.map(_.name).sorted.mkString(",")
 
-  // ---- documented cap classes (the round-12 hint ledger, executable) ----
+  // ---- documented cap classes (the PLANS.md hint ledger, executable) ----
   // Each constant is ONE boundedness argument, shared by every operand
   // in its class; the allow-list below binds (query, operand-signature)
   // pairs to these arguments. An operand not plan-provably bounded and
@@ -144,11 +144,10 @@ object BroadcastAudit {
       "score-bucket rollup: ≤ 10001 basis-point buckets by construction",
     ("q_quality_auc", "logit,n,npos") ->
       "logit-grid rollup: bounded by the scorer's integer quantization grid",
-    // q_zipf_fit's vocabulary rank window — formerly the one entry that
-    // GREW (Heaps ~N^0.7) — was retired in round 13: the rank is the
-    // same unique total order (cnt DESC, tok) computed by range-sort +
-    // zipWithIndex, so the exact-fit semantics no longer need a window
-    // at all. Every remaining entry is a genuinely bounded rollup.
+    // q_zipf_fit's vocabulary rank needs no entry (its window would
+    // GROW, Heaps ~N^0.7): the rank is the same unique total order
+    // (cnt DESC, tok) computed by a range-sort prefix sum
+    // (PrefixSum.globalRowNumber), so the exact fit needs no window. Every remaining entry is a genuinely bounded rollup.
   )
 
   /** (query name, operand signature) → documented boundedness cap.
@@ -217,7 +216,7 @@ object BroadcastAudit {
     ("q_bloom_prejoin", "b") -> BloomBuckets,
   )
 
-  // ---- buffering-aggregate gate (round-13 aggkeys sweep, executable) ----
+  // ---- buffering-aggregate gate (the aggkeys sweep, executable) ----
 
   /** Aggregate functions whose buffer grows with the GROUP, not a
     * constant/config cap: the builtin collectors plus the exact
@@ -268,21 +267,20 @@ object BroadcastAudit {
     "rank-limited collect: a row_number ≤ k filter (map-side WindowGroupLimit) bounds " +
       "the rows entering the collect to k per group"
   private val BandBucket =
-    "LSH band-bucket collect (round-16 lshCandidates shape): per-group state is the " +
+    "LSH band-bucket collect (lshCandidates shape): per-group state is the " +
       "bucket's member-id list — Θ(bucket), while the candidate PAIRS the operator " +
       "exists to emit are Θ(bucket²), so the buffer is strictly dominated by the " +
       "query's own output class; the raw pair enumerators are the adjudicated " +
       "Θ(output) diagnostics, and the collapsed/df-capped variants bound bucket size " +
       "upstream (exact-dup collapse before any pair machinery). Pair EMISSION is " +
-      "per-anchor since round 17 (posexplode + ordered slice of the shared array): " +
-      "per-ROW state downstream of the aggregate is Θ(bucket) too — the former " +
-      "flatten(transform(...)) built the whole Θ(bucket²) pair array as one row " +
-      "value, an OOM/2^31-element exposure on a degenerate hot bucket (round-16 " +
-      "ADVICE item)"
+      "per-anchor (posexplode + ordered slice of the shared array): " +
+      "per-ROW state downstream of the aggregate is Θ(bucket) too — a " +
+      "flatten(transform(...)) would build the whole Θ(bucket²) pair array as one " +
+      "row value, an OOM/2^31-element exposure on a degenerate hot bucket"
 
   /** (query name, aggregate signature) → documented bound for
     * unbounded-buffer collectors over UNPROVEN-bounded inputs. The
-    * executable form of the round-13 aggkeys adjudication: a NEW
+    * executable form of the aggkeys adjudication: a NEW
     * collect_list/collect_set/exact-percentile site over corpus-fed
     * input fails the registry gate until its bound is argued here.
     */
@@ -318,7 +316,7 @@ object BroadcastAudit {
 
   /** The registry gate's PER-PLAN check, factored out of the
     * PlanShapeSpec sweep so the sweep and its ADVERSARIAL negative
-    * tests (round-14: the gates' false-negative risk was untested)
+    * tests (which price the gates' false-negative risk)
     * exercise the exact same code path. `plan` must be built with AQE
     * off and `autoBroadcastJoinThreshold = -1` (so the only
     * BroadcastExchanges are hint-forced and unhinted bounded joins
@@ -407,7 +405,7 @@ object BroadcastAudit {
     // hot-group class the winkeys sweep exposed for windows, but here
     // the failure is reducer OOM, not just a parallelism ceiling.
     // Prints every such aggregate's grouping keys + child signature
-    // for hand adjudication (PLANS.md round 13).
+    // for hand adjudication (PLANS.md).
     val aggKeysMode = args.drop(1).headOption.contains("aggkeys")
     for (q <- graft.SparkEntry.registry) {
       val t0 = System.nanoTime()

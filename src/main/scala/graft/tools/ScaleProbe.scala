@@ -21,7 +21,7 @@ object ScaleProbe {
     * perturbText=true suffixes every document token with the copy index,
     * so copies share NO shingles. The default (verbatim) replica models
     * an Nx-denser duplicate corpus — pairwise reporters are then
-    * output-bound by construction (see PLANS.md round-4 note); the
+    * output-bound by construction (see PLANS.md); the
     * perturbed replica models "Nx bigger corpus, same dup rate", the
     * honest scale model for measuring the detector MECHANISM.
     */
@@ -47,8 +47,8 @@ object ScaleProbe {
     * overlap is partial — a realistic near-dup texture rather than
     * all-or-nothing.
     */
-  /** `skewEventsPermille > 0` models the interval-join adversary the
-    * round-9 verdict asked to MEASURE rather than assert: a bot-burst
+  /** `skewEventsPermille > 0` models the interval-join adversary, to
+    * MEASURE rather than assert: a bot-burst
     * user — that permille of all events (hash-chosen, deterministic)
     * remapped to ONE user id AND compressed into ONE wall-clock hour.
     * A merely-hot user does NOT stress the (user, hour-bucket)
@@ -146,7 +146,7 @@ object ScaleProbe {
     * turn a slope into a cached-vs-uncached artifact: the warm run
     * populates the 1x side's memo, so its timed pass reads driver
     * state while the Nx side trains fresh (first observed as fake
-    * 6.4x "slopes" when the round-11 memos landed). Probes measure
+    * 6.4x "slopes" once the memos landed). Probes measure
     * the MECHANISM, training included, so every timed pass starts
     * memo-cold on both sides.
     */
@@ -217,7 +217,7 @@ object ScaleProbe {
     // side sits in page cache — measured on q_bpe_learn at the third
     // decade: 252 s cold vs 117 s warm, a 2x bias on the SLOPE itself
     // for scan-heavy queries. Slope probes measure the PLAN, so warm
-    // both sides. Round-11 note: some shuffle-heavy queries have a LONG
+    // both sides. Some shuffle-heavy queries have a LONG
     // JIT/GC warmup tail — q_ngram_jaccard at 100x measured
     // 46/24/19/15.7/15.3/15.3 s across six consecutive runs, so
     // passes=3 still lands anywhere on that curve (recorded decades

@@ -77,6 +77,22 @@ class KernelPropertySpec extends AnyFunSuite {
     })
   }
 
+  test("shingleHashes == distinct slice/join/polyHash values in first-seen order") {
+    // empty tokens (double spaces) and non-ASCII BMP chars; n past the
+    // token count yields no shingles
+    val wideTok: Gen[String] = Gen.chooseNum(0, 5).flatMap(k =>
+      Gen.stringOfN(k, Gen.oneOf(Gen.alphaNumChar, Gen.choose(' ', '퟿'))))
+    val params = for {
+      ts <- Gen.listOf(wideTok); n <- Gen.oneOf(1, 2, 3, 8)
+    } yield (ts, n)
+    check(forAll(params) { case (ts, n) =>
+      val got = functions.HashKernels.shingleHashes(arr(ts), n).toLongArray().toSeq
+      val expect = (0 to ts.length - n)
+        .map(p => polyHashRef(ts.slice(p, p + n).mkString(" "))).distinct
+      Prop(got == expect) :| s"toks=$ts n=$n got=$got expect=$expect"
+    })
+  }
+
   test("positionalShingles == per-position slice/join/polyHash reference") {
     val params = for { ts <- tokens; n <- Gen.chooseNum(1, 5) } yield (ts, n)
     check(forAll(params) { case (ts, n) =>

@@ -211,9 +211,8 @@ class PlanShapeSpec extends SparkSpec {
     // cache whale). The vocab rank's at-scale shape is pinned by
     // forcing the PrefixSum scan dispatch (round-14: the size-estimate
     // fast path legitimately keeps a lazy rank window at sandbox SFs).
-    spark.conf.set(graft.operators.PrefixSum.ThresholdConf, "-1")
-    val plan = try staticPlan(graft.queries.TokenizerQueries.bpeEncode.fn(spark, sf0001))
-      finally spark.conf.unset(graft.operators.PrefixSum.ThresholdConf)
+    val plan = withConf(graft.operators.PrefixSum.ThresholdConf -> "-1")(
+      staticPlan(graft.queries.TokenizerQueries.bpeEncode.fn(spark, sf0001)))
     val smj = plan.collect {
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j }
     assert(smj.isEmpty, "token->id join regressed to a corpus-sorted SMJ")
@@ -249,9 +248,8 @@ class PlanShapeSpec extends SparkSpec {
     // The at-scale shape is pinned by FORCING the scan dispatch (the
     // size-estimate fast path legitimately keeps the lazy lang window
     // at sandbox SFs — PrefixSum.SmallInputBytes scaladoc).
-    spark.conf.set(graft.operators.PrefixSum.ThresholdConf, "-1")
-    val plan = try staticPlan(graft.queries.TokenizerQueries.seqPackBpe.fn(spark, sf0001))
-      finally spark.conf.unset(graft.operators.PrefixSum.ThresholdConf)
+    val plan = withConf(graft.operators.PrefixSum.ThresholdConf -> "-1")(
+      staticPlan(graft.queries.TokenizerQueries.seqPackBpe.fn(spark, sf0001)))
     assert(plan.collectFirst { case w if w.nodeName.contains("Window") => w }.isEmpty,
       "per-lang shard window crept back (the #languages parallelism ceiling)")
     assert(plan.collectFirst {
@@ -357,30 +355,23 @@ class PlanShapeSpec extends SparkSpec {
     // pair. Reference analog: the only operand the reference ever
     // "broadcasts" is the single query vector (vector-db.c:165-168).
     import graft.tools.BroadcastAudit
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // pin the AT-SCALE shape of every PrefixSum call site: the
-    // size-estimate fast path legitimately keeps a lazy (possibly
-    // unpartitioned) window at sandbox SFs — the gate must judge the
-    // shape the dispatch produces at corpus scale (the seq_pack_bpe
-    // test's precedent, now registry-wide)
-    spark.conf.set(graft.operators.PrefixSum.ThresholdConf, "-1")
-    // the four offense classes (forced broadcast / cartesian /
+    // ThresholdConf = -1 pins the AT-SCALE shape of every PrefixSum call
+    // site: the size-estimate fast path legitimately keeps a lazy
+    // (possibly unpartitioned) window at sandbox SFs — the gate must
+    // judge the shape the dispatch produces at corpus scale (the
+    // seq_pack_bpe test's precedent, now registry-wide).
+    // The four offense classes (forced broadcast / cartesian /
     // buffering aggregate / unpartitioned window) live in ONE shared
     // checker — BroadcastAudit.planOffenders — so the adversarial
     // negative test below exercises exactly the code path this sweep
-    // enforces (round-14: the gates' false-negative risk was untested)
+    // enforces
     val offenders = Seq.newBuilder[String]
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        graft.operators.PrefixSum.ThresholdConf -> "-1") {
       for (q <- SparkEntry.registry)
         offenders ++= BroadcastAudit.planOffenders(q.name,
           q.fn(spark, sf0001).queryExecution.executedPlan)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.unset(graft.operators.PrefixSum.ThresholdConf)
     }
     val bad = offenders.result()
     assert(bad.isEmpty,

@@ -12,6 +12,10 @@ import graft.operators.PrefixSum
   */
 class PrefixSumSpec extends SparkSpec {
 
+  /** `body` with the scan dispatch forced ([[PrefixSum.ThresholdConf]]
+    * = -1): the at-scale path at sandbox sizes. */
+  private def scan[T](body: => T): T = withConf(PrefixSum.ThresholdConf -> "-1")(body)
+
   private def windowForm(df: org.apache.spark.sql.DataFrame) = {
     val w = Window.partitionBy(col("lang")).orderBy(col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -22,9 +26,8 @@ class PrefixSumSpec extends SparkSpec {
     val t = Tables(spark, sf0001, "documents")
       .select(col("lang"), col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
-    // smallInputBytes = -1 forces the two-pass scan — the at-scale path
-    val got = PrefixSum.byShard(t, "lang", Seq("doc_id"), "n_tok", "cum",
-        smallInputBytes = -1L)
+    // ThresholdConf = -1 forces the two-pass scan — the at-scale path
+    val got = scan(PrefixSum.byShard(t, "lang", Seq("doc_id"), "n_tok", "cum"))
       .select("lang", "doc_id", "cum").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     val want = windowForm(t)
@@ -38,8 +41,8 @@ class PrefixSumSpec extends SparkSpec {
     val t = Tables(spark, sf0001, "documents")
       .select(col("lang"), col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
-    def form(threshold: Long) =
-      PrefixSum.byShard(t, "lang", Seq("doc_id"), "n_tok", "cum", threshold)
+    def form(threshold: Long) = withConf(PrefixSum.ThresholdConf -> threshold.toString)(
+      PrefixSum.byShard(t, "lang", Seq("doc_id"), "n_tok", "cum"))
     def vals(df: org.apache.spark.sql.DataFrame) =
       df.select("lang", "doc_id", "cum").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -50,22 +53,21 @@ class PrefixSumSpec extends SparkSpec {
     // opaque AdaptiveSparkPlanExec that collect() does not descend into
     assert(fast.queryExecution.optimizedPlan.collectFirst {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.nonEmpty)
-    val scan = form(-1L)
-    assert(scan.queryExecution.optimizedPlan.collectFirst {
+    val scanned = form(-1L)
+    assert(scanned.queryExecution.optimizedPlan.collectFirst {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty)
-    assert(vals(fast) == vals(scan))
+    assert(vals(fast) == vals(scanned))
   }
 
   test("the conf override forces the scan through default call sites") {
     val t = Tables(spark, sf0001, "documents")
       .select(col("lang"), col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
-    spark.conf.set(PrefixSum.ThresholdConf, "-1")
-    try {
+    withConf(PrefixSum.ThresholdConf -> "-1") {
       val out = PrefixSum.byShard(t, "lang", Seq("doc_id"), "n_tok", "cum")
       assert(out.queryExecution.optimizedPlan.collectFirst {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty)
-    } finally spark.conf.unset(PrefixSum.ThresholdConf)
+    }
   }
 
   test("one dominant shard: sums still exact, all partitions used") {
@@ -74,8 +76,7 @@ class PrefixSumSpec extends SparkSpec {
     val df = (1L to 10000L).map(i =>
         (if (i % 100 == 0) "rare" else "hot", i, i % 7 + 1))
       .toDF("lang", "doc_id", "n_tok")
-    val got = PrefixSum.byShard(df, "lang", Seq("doc_id"), "n_tok", "cum",
-      smallInputBytes = -1L)
+    val got = scan(PrefixSum.byShard(df, "lang", Seq("doc_id"), "n_tok", "cum"))
     val want = windowForm(df)
     assert(got.select("lang", "doc_id", "cum").collect().toSet ==
       want.select("lang", "doc_id", "cum").collect().toSet)
@@ -92,31 +93,14 @@ class PrefixSumSpec extends SparkSpec {
     assert(out.count() == 0)
   }
 
-  test("explicit smallInputBytes beats the conf (the conf only covers default call sites)") {
-    val t = Tables(spark, sf0001, "documents")
-      .select(col("lang"), col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
-    // conf says "always window" (huge threshold); the caller explicitly
-    // dispatched to the scan — the explicit decision must win
-    spark.conf.set(PrefixSum.ThresholdConf, Long.MaxValue.toString)
-    try {
-      val out = PrefixSum.byShard(t, "lang", Seq("doc_id"), "n_tok", "cum",
-        smallInputBytes = -1L)
-      assert(out.queryExecution.optimizedPlan.collectFirst {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty,
-        "an explicit -1 parameter must not be overridden by the conf")
-    } finally spark.conf.unset(PrefixSum.ThresholdConf)
-  }
-
   test("both dispatch paths declare the same output schema") {
     val t = Tables(spark, sf0001, "documents")
       .select(col("lang"), col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
-    val fast = PrefixSum.byShard(t, "lang", Seq("doc_id"), "n_tok", "cum",
-      PrefixSum.SmallInputBytes)
-    val scan = PrefixSum.byShard(t, "lang", Seq("doc_id"), "n_tok", "cum", -1L)
-    assert(fast.schema == scan.schema,
-      s"schema must not flip with the size estimate:\n${fast.schema}\nvs\n${scan.schema}")
+    val fast = PrefixSum.byShard(t, "lang", Seq("doc_id"), "n_tok", "cum")
+    val scanned = scan(PrefixSum.byShard(t, "lang", Seq("doc_id"), "n_tok", "cum"))
+    assert(fast.schema == scanned.schema,
+      s"schema must not flip with the size estimate:\n${fast.schema}\nvs\n${scanned.schema}")
   }
 
   test("NULL shard key fails loudly on BOTH paths (no silent join-back row loss)") {
@@ -127,12 +111,11 @@ class PrefixSumSpec extends SparkSpec {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
         .exists(e => Option(e.getMessage).exists(_.contains(s)))
     val eScan = intercept[Exception] {
-      PrefixSum.byShard(df, "lang", Seq("doc_id"), "n_tok", "cum", -1L).collect()
+      scan(PrefixSum.byShard(df, "lang", Seq("doc_id"), "n_tok", "cum")).collect()
     }
     assert(chainContains(eScan, "NULL shard key"), s"scan path: $eScan")
     val eWin = intercept[Exception] {
-      PrefixSum.byShard(df, "lang", Seq("doc_id"), "n_tok", "cum",
-        PrefixSum.SmallInputBytes).collect()
+      PrefixSum.byShard(df, "lang", Seq("doc_id"), "n_tok", "cum").collect()
     }
     assert(chainContains(eWin, "NULL shard key"), s"window path: $eWin")
   }
@@ -141,7 +124,7 @@ class PrefixSumSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((Array[Byte](1), 1L, 2L)).toDF("lang", "doc_id", "n_tok")
     val e = intercept[IllegalArgumentException] {
-      PrefixSum.byShard(df, "lang", Seq("doc_id"), "n_tok", "cum", -1L)
+      scan(PrefixSum.byShard(df, "lang", Seq("doc_id"), "n_tok", "cum"))
     }
     assert(e.getMessage.contains("atomic column types only"))
   }
@@ -155,7 +138,7 @@ class PrefixSumSpec extends SparkSpec {
     val df = spark.range(n).select(col("id").as("shard"), col("id").as("o"),
       org.apache.spark.sql.functions.lit(1L).as("v"))
     val e = intercept[IllegalArgumentException] {
-      PrefixSum.byShard(df, "shard", Seq("o"), "v", "cum", -1L).collect()
+      scan(PrefixSum.byShard(df, "shard", Seq("o"), "v", "cum")).collect()
     }
     assert(e.getMessage.contains("few-valued"),
       s"cap message must name the contract, got: ${e.getMessage}")
@@ -164,8 +147,8 @@ class PrefixSumSpec extends SparkSpec {
   test("globalRowNumber (scan path) equals the unpartitioned row_number window") {
     val t = Tables(spark, sf0001, "documents")
       .select(col("lang"), col("doc_id"))
-    val got = PrefixSum.globalRowNumber(t,
-        Seq(col("lang").desc, col("doc_id").asc), "rn", smallInputBytes = -1L)
+    val got = scan(PrefixSum.globalRowNumber(t,
+        Seq(col("lang").desc, col("doc_id").asc), "rn"))
       .select("lang", "doc_id", "rn").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     val want = t.withColumn("rn", row_number().over(
@@ -182,14 +165,14 @@ class PrefixSumSpec extends SparkSpec {
     assert(fast.queryExecution.optimizedPlan.collectFirst {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.nonEmpty,
       "small input must stay a lazy window (no checkpoint, no extra jobs)")
-    val scan = PrefixSum.globalRowNumber(t, ord, "rn", smallInputBytes = -1L)
-    assert(scan.queryExecution.optimizedPlan.collectFirst {
+    val scanned = scan(PrefixSum.globalRowNumber(t, ord, "rn"))
+    assert(scanned.queryExecution.optimizedPlan.collectFirst {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty,
       "-1 must force the two-pass scan shape")
     // both paths: identical values AND identical declared schema
-    assert(fast.schema == scan.schema,
-      s"schema flips with the dispatch: ${fast.schema} vs ${scan.schema}")
-    assert(fast.collect().map(_.toSeq).toSet == scan.collect().map(_.toSeq).toSet)
+    assert(fast.schema == scanned.schema,
+      s"schema flips with the dispatch: ${fast.schema} vs ${scanned.schema}")
+    assert(fast.collect().map(_.toSeq).toSet == scanned.collect().map(_.toSeq).toSet)
   }
 
   test("globalRowNumber re-shard determinism: 3 vs 17 shuffle partitions") {
@@ -198,10 +181,10 @@ class PrefixSumSpec extends SparkSpec {
     def run(parts: String) = {
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.shuffle.partitions", parts)
+      s2.conf.set(PrefixSum.ThresholdConf, "-1")
       import org.apache.spark.sql.GraftShim
       val d2 = GraftShim.rebind(s2, df.localCheckpoint(true))
-      PrefixSum.globalRowNumber(d2, Seq(col("tok").asc, col("doc_id").asc), "rn",
-          smallInputBytes = -1L)
+      PrefixSum.globalRowNumber(d2, Seq(col("tok").asc, col("doc_id").asc), "rn")
         .select("tok", "doc_id", "rn").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     }
@@ -215,10 +198,10 @@ class PrefixSumSpec extends SparkSpec {
     def run(parts: String) = {
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.shuffle.partitions", parts)
+      s2.conf.set(PrefixSum.ThresholdConf, "-1")
       import org.apache.spark.sql.GraftShim
       val d2 = GraftShim.rebind(s2, df.localCheckpoint(true))
-      PrefixSum.byShard(d2, "lang", Seq("doc_id"), "n_tok", "cum",
-          smallInputBytes = -1L)
+      PrefixSum.byShard(d2, "lang", Seq("doc_id"), "n_tok", "cum")
         .select("lang", "doc_id", "cum").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     }

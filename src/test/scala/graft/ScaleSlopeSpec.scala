@@ -245,10 +245,11 @@ class ScaleSlopeSpec extends SparkSpec {
     // force the prefix-sum SCAN dispatch: these gates pin the at-scale
     // mechanism, and the size-estimate fast path would otherwise route
     // replica-scale inputs through the lazy window it replaces
-    spark.conf.set(graft.operators.PrefixSum.ThresholdConf, "-1")
-    val bad = try thresholds.flatMap { case (name, maxSlope) =>
-      gatedSlope(src, dst, name, maxSlope)
-    } finally spark.conf.unset(graft.operators.PrefixSum.ThresholdConf)
+    val bad = withConf(graft.operators.PrefixSum.ThresholdConf -> "-1") {
+      thresholds.flatMap { case (name, maxSlope) =>
+        gatedSlope(src, dst, name, maxSlope)
+      }
+    }
     assert(bad.isEmpty, s"super-linear scale slopes: ${bad.mkString("; ")}")
   }
 
