@@ -1,22 +1,44 @@
 package graft
+import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // SPARK_GRAFT_BENCH_ONLY: comma-separated query subset — the
+    // creep-decomposition knob (benching HEAD over an OLDER query set
+    // isolates registry-size JVM pressure from per-query cost
+    // accretion; see PLANS.md)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
     val spark = GraftSession()
-    // full-evaluation sink: count() lets Catalyst prune projections, so
-    // map-only queries would time the bare scan instead of their compute;
-    // the noop write evaluates every output column without adding an
-    // aggregation shuffle of its own
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    val (json, summary) = run(spark, sfDir, only)
+    println(json)
+    // a bounded stdout tail can truncate the per-query map — persist the
+    // full line as an artifact
+    val out = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json"))
+    java.nio.file.Files.write(out, (json + "\n").getBytes("UTF-8"))
+    println(summary)
+    spark.stop()
+  }
+
+  /** The bench itself, session-agnostic — `main` wraps it with its own
+    * session; HarnessSpec drives it on the shared test session to pin
+    * the failure contract. Returns the full JSON line (bench.json) and
+    * the compact summary line.
+    */
+  def run(spark: SparkSession, sfDir: String,
+          only: Option[Set[String]]): (String, String) = {
+    val qs = SparkEntry.select(only.getOrElse(Set.empty))
+    only.foreach(o => System.err.println(
+      s"[bench] SPARK_GRAFT_BENCH_ONLY active: ${o.size} of ${SparkEntry.registry.size} queries"))
     // untimed warmup: absorbs one-time JVM/codegen/classloader costs (a
     // cold first query otherwise books ~5 s that no steady-state run pays).
     // Three plan families, not one: a vector scan alone leaves hash-agg /
     // window / sort-merge codegen cold, and the alphabetically-first timed
     // queries (q1/q3/q5) would book that residual warmup as their own cost
     Seq("q_topk_cosine", "q1_pricing", "q_window_rank").foreach { n =>
-      try run(n) catch { case _: Throwable => () }
+      try SparkEntry.evaluate(SparkEntry.queries(n)(spark, sfDir))
+      catch { case _: Throwable => () }
     }
     // two timed passes, per-query MIN: machine-load contention swings a
     // single-pass total 2-3x on a shared box; the min of two runs is the
@@ -26,42 +48,24 @@ object Bench {
     // "speedup") — failed queries go to a "failed" list and are
     // excluded from the per-query map and the total.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def timed(name: String): Double = {
-      val t0 = System.nanoTime()
-      try run(name) catch { case e: Throwable =>
-        if (failed.add(name))
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
+    def pass(): Map[String, Double] = {
+      val times = Map.newBuilder[String, Double]
+      failed ++= SparkEntry.runEach(qs, "bench") { q =>
+        val t0 = System.nanoTime()
+        SparkEntry.evaluate(q.fn(spark, sfDir))
+        times += q.name -> (System.nanoTime() - t0) / 1e9
+      }.keys
+      times.result()
     }
-    // SPARK_GRAFT_BENCH_ONLY: comma-separated query subset — the
-    // creep-decomposition knob (benching HEAD over an OLDER query set
-    // isolates registry-size JVM pressure from per-query cost
-    // accretion; see PLANS.md).
-    // Every requested name must exist: a typo would otherwise produce a
-    // plausible-looking partial bench with no error.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { o =>
-      val unknown = (o -- SparkEntry.queries.keySet).toSeq.sorted
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in the registry: ${unknown.mkString(", ")}")
-      System.err.println(
-        s"[bench] SPARK_GRAFT_BENCH_ONLY active: ${o.size} of ${SparkEntry.queries.size} queries")
-    }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    val pass1 = names.map(n => n -> timed(n)).toMap
-    val pass2 = names.map(n => n -> timed(n)).toMap
+    val (pass1, pass2) = (pass(), pass())
+    val names = qs.map(_.name).filterNot(failed)
     val results = names.map(n => n -> math.min(pass1(n), pass2(n)))
-      .filterNot { case (n, _) => failed.contains(n) }
     // per-query run-to-run spread (|p1 - p2|): two same-HEAD r9 runs
     // differed by up to 30% on single queries, which is bigger than
     // most real regressions — recording the spread next to the min
     // turns round-over-round diffs into signal (a delta smaller than
     // the query's own spread is noise by definition)
     val spreads = names.map(n => n -> math.abs(pass1(n) - pass2(n)))
-      .filterNot { case (n, _) => failed.contains(n) }
     // JSON-encode keys: a query name containing a quote/backslash/control
     // char must not produce an invalid artifact
     import graft.pipelines.HttpEmbedder.jsonStr
@@ -80,7 +84,7 @@ object Bench {
       "q_topk_cosine", "q_window_rank", "q_chunk", "q_minhash_lsh_pairs",
       "q_asof_join", "q_pagerank", "q_mad_outliers")
     val resultMap = results.toMap
-    val qs = results.map { case (k, v) => jsonStr(k) + ":" + v }
+    val qsJson = results.map { case (k, v) => jsonStr(k) + ":" + v }
       .mkString("{", ",", "}")
     val canaryJson = canary.flatMap(n => resultMap.get(n).map(v => jsonStr(n) + ":" + v))
       .mkString("{", ",", "}")
@@ -89,21 +93,16 @@ object Bench {
     val failedJson = failed.toSeq.map(jsonStr).mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$sp,"canary":$canaryJson,"failed":$failedJson,"sf":${jsonStr(sfDir)}}"""
-    println(json)
-    // the driver captures a bounded stdout tail, which has truncated the
-    // per-query map in past rounds — persist the full line as an artifact
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json"))
-    java.nio.file.Files.write(out, (json + "\n").getBytes("UTF-8"))
-    // ...and make the LAST stdout line a compact, self-contained summary
-    // that fits inside that tail (r7's round artifact stored a mid-map
-    // truncation with parsed:null): total + the 25 slowest queries +
-    // failures, pointing at bench.json for the full per-query map
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsJson,"spread":$sp,"canary":$canaryJson,"failed":$failedJson,"sf":${jsonStr(sfDir)}}"""
+    // the LAST stdout line is a compact, self-contained summary that fits
+    // inside a bounded stdout tail (a map cut mid-line parses as nothing):
+    // total + the 25 slowest queries + failures, pointing at bench.json
+    // for the full map
     def r3(v: Double): String = (math.rint(v * 1000) / 1000).toString
     val topJson = results.sortBy(-_._2).take(25)
       .map { case (k, v) => jsonStr(k) + ":" + r3(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$topJson,"canary":$canaryJson,"failed":$failedJson,"n_queries":${results.size},"sf":${jsonStr(sfDir)},"full":"bench.json"}""")
-    spark.stop()
+    val summary =
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$topJson,"canary":$canaryJson,"failed":$failedJson,"n_queries":${results.size},"sf":${jsonStr(sfDir)},"full":"bench.json"}"""
+    (json, summary)
   }
 }

@@ -21,14 +21,16 @@ import org.apache.spark.sql.DataFrame
   * one config line, no query rewrite. DurabilitySpec pins both claims:
   * bit-equal output and node-identical physical plans across modes.
   *
-  * COVERAGE: only the long-lived
-  * iterative/contraction stages route through [[stage]]. REGISTRY
-  * QUERIES' in-query materializations call `localCheckpoint()` raw,
-  * DELIBERATELY, per the PLANS.md ledger rule: a bench/oracle query is
-  * retried from scratch on failure, so replicating its intermediates
-  * buys nothing and costs the checkpoint write every run — each such
-  * site cites its ledger class at the call. Library WRITE-path
-  * operators that checkpoint internally (`CorpusMerge.merge`,
+  * COVERAGE: two registry queries route through [[stage]]:
+  * q_skyline_select (its narrow per-document projection) and
+  * q_source_dup_matrix (its weight table and source matrix; the query
+  * DurabilitySpec runs in both modes). Every other in-query
+  * materialization in the registry calls `localCheckpoint()` raw, per
+  * the PLANS.md ledger rule: a bench/oracle query is retried from
+  * scratch on failure, so replicating its intermediates buys nothing
+  * and costs the checkpoint write every run — each such site cites its
+  * ledger class at the call. Library WRITE-path operators that
+  * checkpoint internally (`CorpusMerge.merge`,
   * `IvfIndex.publishVersion`/`appendVectors`) document the same
   * retry-from-scratch assumption in their own contracts.
   */

@@ -21,45 +21,21 @@ object Verify {
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
           only: Option[Set[String]]): Unit = {
+    val qs = SparkEntry.select(only.getOrElse(Set.empty))
     new java.io.File(outDir).mkdirs()
-    // queries are independent; run 4 at a time against the shared session
-    // (Spark schedules concurrent jobs fine) to cut gate wall time
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    // a query that throws must be LOUD in the artifact, not silently absent
-    // (an analysis-broken query writes no parquet dir, so a reader of the
-    // dumps alone would never see it) — record every failure and mirror
-    // it into errors.json next to the parquet dumps
-    val failures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val futures = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      scala.concurrent.Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          failures.put(name, Option(e.getMessage).getOrElse(e.getClass.getName))
-        }
-      }
+    // an analysis-broken query writes no parquet dir, so a reader of the
+    // dumps alone would never see it: every failure is mirrored into
+    // errors.json next to the parquet dumps. Four queries at a time cut
+    // the gate's wall time.
+    val failures = SparkEntry.runEach(qs, "verify", parallel = 4) { q =>
+      q.fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
     }
-    scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(futures),
-      scala.concurrent.duration.Duration.Inf)
-    pool.shutdown()
     // jsonStr escapes ALL control chars (<0x20): a tab or CR in a
     // query's SQL would otherwise make a json.load of the artifact fail
     import graft.pipelines.HttpEmbedder.jsonStr
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    import scala.jdk.CollectionConverters._
-    val errJson = failures.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
-    if (!failures.isEmpty)
-      System.err.println(s"[verify] ${failures.size} queries FAILED: " +
-        failures.keySet.asScala.toSeq.sorted.mkString(", "))
+    def obj(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), obj(failures))
   }
 }

@@ -4,15 +4,15 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 
-/** Registry-wide forced-broadcast audit.
+/** The plan-shape checks of the registry gate.
   *
-  * Builds EVERY registry plan with AQE off and
-  * `autoBroadcastJoinThreshold = -1`, so the only BroadcastExchanges
-  * left are the ones a `broadcast()` hint FORCES, and classifies each
-  * forced operand's subtree into the boundedness classes of the
-  * PLANS.md hint ledger (Spark hard-fails a forced broadcast at 8 GB, so
-  * any forced operand that scales with the corpus is a 100-TB query
-  * killer even when sandbox receipts look fine):
+  * Plans are built under [[BroadcastAudit.PlanConfs]] (AQE off,
+  * `autoBroadcastJoinThreshold = -1`), so the only BroadcastExchanges left are the ones a `broadcast()` hint
+  * FORCES. Each forced operand's subtree is classified into the
+  * boundedness classes of the PLANS.md hint ledger (Spark hard-fails a
+  * forced broadcast at 8 GB, so any forced operand that scales with the
+  * corpus is a 100-TB query killer even when sandbox receipts look
+  * fine):
   *
   *   - `scalar`   — zero-grouping-key aggregate below: provably 1 row.
   *   - `limit`    — a LIMIT-k / top-k operator below: provably ≤ k rows.
@@ -24,12 +24,23 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
   *
   * The reference analog: the only operand its scan ever "broadcasts" is
   * the single query vector (reference `vector-db.c:165-168`); everything
-  * corpus-sized streams. This audit is the measurement half; the CI
-  * gate in `PlanShapeSpec` ("registry-wide: every hint-forced broadcast
-  * is provably bounded") is the enforcement half — both share
-  * [[BroadcastAudit.classify]].
+  * corpus-sized streams. [[planOffenders]] is the one per-plan check:
+  * the CI gate in `PlanShapeSpec` ("registry-wide: every hint-forced
+  * broadcast is provably bounded") enforces it, and
+  * `graft.Explain <sf> offenders` prints it.
   */
 object BroadcastAudit {
+
+  /** The confs every plan the gate judges is built under: AQE off (the
+    * executed plan is the whole static tree), no size-based broadcasts
+    * (the only BroadcastExchanges left are hint-forced, and unhinted
+    * bounded joins surface as cartesians) and the prefix-sum scan forced
+    * (the shape its size dispatch picks at corpus scale).
+    */
+  val PlanConfs: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    graft.operators.PrefixSum.ThresholdConf -> "-1")
 
   /** Boundedness class of one forced-broadcast operand subtree. */
   def classify(raw: SparkPlan): String = {
@@ -362,133 +373,5 @@ object BroadcastAudit {
         out += s"$name UNPARTITIONED WINDOW over sig=[$sig]\n${head(w.child)}"
     }
     out.result()
-  }
-
-  /** One-line description of the operand for the audit report. */
-  private def describe(raw: SparkPlan): String = {
-    val child = raw.transform {
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r.child
-    }
-    val leaves = child.collectLeaves().map {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        val tail = s.relation.location.rootPaths.map(_.getName).mkString("|")
-        s"parquet($tail)"
-      case l => l.nodeName
-    }.distinct.mkString("+")
-    s"sig=[${signature(child)}] leaves=$leaves"
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession()
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-    var unbounded = 0
-    val windowMode = args.drop(1).headOption.contains("windows")
-    // winkeys: the PARTITIONED-window inventory — a window whose
-    // partition key has few distinct values (lang, source, band) caps
-    // parallelism at #groups even when the slope stays linear (one
-    // task per group processes its whole group: the SNM
-    // row_number-by-prefix class, which the empty-partitionSpec gate
-    // cannot see). Prints every WindowExec's partition keys so hot-able
-    // keys can be adjudicated by hand.
-    val winKeysMode = args.drop(1).headOption.contains("winkeys")
-    // aggkeys: the buffering-aggregate inventory — collect_list /
-    // collect_set (and any TypedImperativeAggregate) keep EVERY input
-    // value in the group's buffer, so partial aggregation shrinks
-    // nothing and the final merge holds a whole group's values in ONE
-    // task's heap. Grouped by a per-entity key (doc/user/token) the
-    // buffer is entity-bounded; grouped by a few-valued key (lang,
-    // event_type, source, band) it is Θ(corpus/#groups) — the same
-    // hot-group class the winkeys sweep exposed for windows, but here
-    // the failure is reducer OOM, not just a parallelism ceiling.
-    // Prints every such aggregate's grouping keys + child signature
-    // for hand adjudication (PLANS.md).
-    val aggKeysMode = args.drop(1).headOption.contains("aggkeys")
-    for (q <- graft.SparkEntry.registry) {
-      val t0 = System.nanoTime()
-      try {
-        val plan = q.fn(spark, sf).queryExecution.executedPlan
-        if (winKeysMode) {
-          for (w <- plan.collect {
-            case w: org.apache.spark.sql.execution.window.WindowExec
-              if w.partitionSpec.nonEmpty => w }) {
-            val keys = w.partitionSpec.map(_.sql).mkString(", ")
-            println(s"WINKEYS ${q.name}: partitionBy($keys) over [${signature(w.child)}]")
-          }
-          for (w <- plan.collect {
-            case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec => w }) {
-            val keys = w.partitionSpec.map(_.sql).mkString(", ")
-            println(s"WINLIM  ${q.name}: partitionBy($keys)")
-          }
-        }
-        if (aggKeysMode) {
-          import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final, TypedImperativeAggregate}
-          for (a <- plan.collect {
-            case o: ObjectHashAggregateExec => (o.groupingExpressions, o.aggregateExpressions, o.child)
-            case s: SortAggregateExec => (s.groupingExpressions, s.aggregateExpressions, s.child)
-          }) {
-            val (grouping, aggs, child) = a
-            // report the Final/Complete site only (each agg also plans a
-            // Partial twin upstream — same keys, same functions)
-            val buffering = aggs.filter(ae =>
-              (ae.mode == Final || ae.mode == Complete) &&
-                ae.aggregateFunction.isInstanceOf[TypedImperativeAggregate[_]])
-            if (buffering.nonEmpty) {
-              val keys = if (grouping.isEmpty) "<global>"
-                else grouping.map(_.name).mkString(", ")
-              val fns = buffering.map(_.aggregateFunction.prettyName).distinct.mkString(",")
-              println(s"AGGKEYS ${q.name}: groupBy($keys) agg[$fns] over [${signature(child)}]")
-            }
-          }
-          // gate view: unbounded-buffer collectors over unproven input
-          for ((sig, child) <- bufferingAggs(plan)
-               if classify(child) == "UNBOUNDED" &&
-                 !AggAllowed.contains((q.name, sig)))
-            println(s"AGG-UNLISTED ${q.name}: $sig over [${signature(child)}]")
-        }
-        if (windowMode) {
-          // unpartitioned Window/global Sort audit: every such operator
-          // funnels its whole input through ONE task — fine over a
-          // bounded frame, a query killer over a corpus frame
-          for (w <- plan.collect {
-            case w: org.apache.spark.sql.execution.window.WindowExec
-              if w.partitionSpec.isEmpty => w }) {
-            val cls = classify(w.child)
-            if (cls == "UNBOUNDED")
-              println(s"WINDOW ${q.name}: unpartitioned over [${signature(w.child)}]")
-          }
-          for (s <- plan.collect {
-            case s: org.apache.spark.sql.execution.SortExec if s.global => s }) {
-            val cls = classify(s.child)
-            if (cls == "UNBOUNDED")
-              println(s"SORT   ${q.name}: global sort over [${signature(s.child)}]")
-          }
-        }
-        val bx = plan.collect { case b: BroadcastExchangeExec => b }
-        val classes = bx.map { b =>
-          val c = classify(b.child)
-          if (c != "UNBOUNDED") c
-          else if (Allowed.contains((q.name, signature(b.child)))) "allowed"
-          else "UNBOUNDED"
-        }
-        val ms = (System.nanoTime() - t0) / 1e6
-        if (classes.contains("UNBOUNDED")) {
-          unbounded += 1
-          println(f"UNBOUNDED $ms%8.0fms ${q.name}")
-          for (b <- bx if classify(b.child) == "UNBOUNDED" &&
-              !Allowed.contains((q.name, signature(b.child))))
-            println(s"    ${describe(b.child)}")
-        } else if (bx.nonEmpty)
-          println(f"ok        $ms%8.0fms ${q.name} -> ${classes.mkString(",")}")
-      } catch {
-        case e: Throwable =>
-          println(s"ERR       ${q.name}: ${e.getClass.getSimpleName}: ${e.getMessage.take(120)}")
-      }
-    }
-    println(s"\nqueries with UNBOUNDED forced broadcasts: $unbounded")
-    spark.stop()
   }
 }

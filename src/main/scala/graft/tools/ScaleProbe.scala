@@ -140,7 +140,9 @@ object ScaleProbe {
 
   /** (t_1x, t_Nx, slope) for one registry query, min-of-`passes` per
     * scale after one untimed warm run — the same variance hedge Bench
-    * uses; slope ≈ t_Nx / (t_1x · N), ≤1 is linear-or-better.
+    * uses; slope ≈ t_Nx / (t_1x · N), ≤1 is linear-or-better. Every run
+    * goes through Bench's sink, [[graft.SparkEntry.evaluate]], so the
+    * slope times the whole plan, not the one `count()` prunes to.
     */
   /** Session-memoized trajectories (quality triad, BPE merges) would
     * turn a slope into a cached-vs-uncached artifact: the warm run
@@ -157,11 +159,12 @@ object ScaleProbe {
 
   def slope(spark: SparkSession, src: String, dst: String, factor: Int,
             name: String, passes: Int = 1): (Double, Double, Double) = {
+    import graft.SparkEntry.evaluate
     val fn = graft.SparkEntry.queries(name)
-    fn(spark, src).count() // warm
+    evaluate(fn(spark, src)) // warm
     def time(dir: String): Double = (1 to passes).map { _ =>
       clearMemos()
-      val t0 = System.nanoTime(); fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9
+      val t0 = System.nanoTime(); evaluate(fn(spark, dir)); (System.nanoTime() - t0) / 1e9
     }.min
     val t1 = time(src)
     val tn = time(dst)
@@ -170,6 +173,14 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
+    // q_embed_neardup_scaled probes UNEDITED: the query itself derives
+    // its band width from the corpus count (Dedup.scaledBitsPerBand), so
+    // the same registry entry that the oracle checks is what scales here
+    val probes = Seq("q1_pricing", "q_chunk", "q_token_stats", "q_minhash_sig",
+      "q_simhash", "q_ngram_jaccard", "q_embed_neardup", "q_embed_neardup_scaled",
+      "q_topk_cosine", "q_window_rank", "q_sessionize")
+    val named = args.drop(1).toSeq
+    val toProbe = graft.SparkEntry.select(if (named.isEmpty) probes else named)
     // GRAFT_PROBE_SRC lets a replica be the base of a FURTHER replica
     // (a decade stack: sf0.1 -> 100x -> 1000x). When nesting, set
     // GRAFT_PROBE_STEP to a multiple of the inner replica's id range
@@ -200,18 +211,7 @@ object ScaleProbe {
 
     buildReplica(spark, src, dst, factor, perturbText, idStep, zipfVocab,
       skewPermille, dupPermille)
-
-    // q_embed_neardup_scaled probes UNEDITED: the query itself derives
-    // its band width from the corpus count (Dedup.scaledBitsPerBand), so
-    // the same registry entry that the oracle checks is what scales here
-    val probes = Seq("q1_pricing", "q_chunk", "q_token_stats", "q_minhash_sig",
-      "q_simhash", "q_ngram_jaccard", "q_embed_neardup", "q_embed_neardup_scaled",
-      "q_topk_cosine", "q_window_rank", "q_sessionize")
-
     println(f"${"query"}%-20s ${"1x_s"}%8s ${s"${factor}x_s"}%8s ${"slope"}%7s")
-    val only = args.drop(1).toSet
-    val toProbe = if (only.isEmpty) probes
-      else only.toSeq.sorted.filter(graft.SparkEntry.queries.contains)
     // GRAFT_PROBE_PASSES>1: min-of-k warm timing per side. The single
     // cold pass reads the Nx side's files straight off disk while the 1x
     // side sits in page cache — measured on q_bpe_learn at the third
@@ -224,9 +224,9 @@ object ScaleProbe {
     // swung 0.10-0.25). passes=5 converges: two independent probe runs
     // both read decade 0.11. Use passes>=5 when pinning such a query.
     val passes = sys.env.get("GRAFT_PROBE_PASSES").map(_.toInt).getOrElse(1)
-    toProbe.foreach { name =>
-      val (t1, tn, s) = slope(spark, src, dst, factor, name, passes)
-      println(f"$name%-20s $t1%8.2f $tn%8.2f $s%7.2f")
+    graft.SparkEntry.runEach(toProbe, "probe") { q =>
+      val (t1, tn, s) = slope(spark, src, dst, factor, q.name, passes)
+      println(f"${q.name}%-20s $t1%8.2f $tn%8.2f $s%7.2f")
     }
     spark.stop()
   }

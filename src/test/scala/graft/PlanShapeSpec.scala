@@ -355,7 +355,9 @@ class PlanShapeSpec extends SparkSpec {
     // pair. Reference analog: the only operand the reference ever
     // "broadcasts" is the single query vector (vector-db.c:165-168).
     import graft.tools.BroadcastAudit
-    // ThresholdConf = -1 pins the AT-SCALE shape of every PrefixSum call
+    // PlanConfs (shared with `graft.Explain offenders`) sets AQE off,
+    // broadcast threshold -1 and PrefixSum's ThresholdConf = -1, which
+    // pins the AT-SCALE shape of every PrefixSum call
     // site: the size-estimate fast path legitimately keeps a lazy
     // (possibly unpartitioned) window at sandbox SFs — the gate must
     // judge the shape the dispatch produces at corpus scale (the
@@ -366,9 +368,7 @@ class PlanShapeSpec extends SparkSpec {
     // negative test below exercises exactly the code path this sweep
     // enforces
     val offenders = Seq.newBuilder[String]
-    withConf("spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        graft.operators.PrefixSum.ThresholdConf -> "-1") {
+    withConf(BroadcastAudit.PlanConfs: _*) {
       for (q <- SparkEntry.registry)
         offenders ++= BroadcastAudit.planOffenders(q.name,
           q.fn(spark, sf0001).queryExecution.executedPlan)
