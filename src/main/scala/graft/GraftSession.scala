@@ -10,7 +10,12 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions = `cores` unless the caller passes a count;
   *  - UTC session time zone (the oracle compares timestamps in UTC);
   *  - Spark UI off and log level WARN;
-  *  - a codegen cache of [[CodegenCacheEntries]] classes.
+  *  - a codegen cache of [[CodegenCacheEntries]] classes;
+  *  - generated class names without the whole-stage codegen id. Spark
+  *    names each whole-stage class after its stage id, which under AQE
+  *    follows the order in which query stages are planned, so two stages
+  *    with the same code would compile twice; without the id, the codegen
+  *    cache (keyed on the source) compiles them once.
   *
   * `getOrCreate` semantics: a second call in one JVM returns the live
   * session.
@@ -37,6 +42,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", false)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

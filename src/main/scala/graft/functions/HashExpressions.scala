@@ -147,9 +147,10 @@ object HashKernels {
   /** Positional n-token shingle hashes: one struct<p:int, fp:long> per
     * window start (1-based p), where fp == polyHash of the space-joined
     * window — identical to polyHash(array_join(slice(toks, p, n), ' ')).
+    * Empty for n < 1.
     */
   def positionalShingles(toks: ArrayData, n: Int): ArrayData = {
-    val hs = windowHashes(toks, n)
+    val hs = if (n < 1) Array.emptyLongArray else windowHashes(toks, n)
     val out = new Array[AnyRef](hs.length)
     var p = 0
     while (p < hs.length) {
@@ -158,6 +159,43 @@ object HashKernels {
       p += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** Run cuts for seed-and-extend repeat search. `ps` holds 1-based
+    * n-token window starts (any order, no duplicates). For each start p,
+    * in ascending order, one struct<p:int, len:int>: len counts the
+    * tokens from p to the end of p's run of consecutive starts plus
+    * n - 1. A repeat whose every n-window start is in `ps` cannot reach
+    * past that point, so a suffix cut there keeps every such repeat
+    * whole. O(|ps|) ints: the tokens are sliced per start by the caller.
+    */
+  def runCuts(ps: ArrayData, n: Int): ArrayData = {
+    val starts = ps.toIntArray()
+    java.util.Arrays.sort(starts)
+    val out = new Array[AnyRef](starts.length)
+    var i = 0
+    while (i < starts.length) {
+      var j = i
+      while (j + 1 < starts.length && starts(j + 1) == starts(j) + 1) j += 1
+      val last = starts(j) + n - 1
+      var k = i
+      while (k <= j) {
+        out(k) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+          Array[Any](starts(k), last - starts(k) + 1))
+        k += 1
+      }
+      i = j + 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Token LCP: the number of leading positions at which `a` and `b`
+    * hold equal tokens. */
+  def tokenLcp(a: ArrayData, b: ArrayData): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var i = 0
+    while (i < n && a.getUTF8String(i) == b.getUTF8String(i)) i += 1
+    i
   }
 
   /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken, MOSS): positional
@@ -384,19 +422,53 @@ case class ShingleHashesExpr(child: Expression, n: Int) extends UnaryExpression 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Positional n-gram shingle hashes, as array<struct<p:int,fp:long>>. */
-case class PositionalShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
+/** Positional n-gram shingle hashes, as array<struct<p:int,fp:long>>;
+  * the width is an int expression, so one class serves a literal width
+  * and a width column alike.
+  */
+case class PositionalShinglesExpr(left: Expression, right: Expression)
+    extends BinaryExpression {
   override def dataType: DataType = ArrayType(
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("p",
         org.apache.spark.sql.types.IntegerType, nullable = false),
       org.apache.spark.sql.types.StructField("fp", LongType, nullable = false))),
     containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.positionalShingles(v.asInstanceOf[ArrayData], n)
+  override protected def nullSafeEval(toks: Any, n: Any): Any =
+    HashKernels.positionalShingles(toks.asInstanceOf[ArrayData], n.asInstanceOf[Int])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.positionalShingles($c, $n)")
+    defineCodeGen(ctx, ev, (c, n) => s"graft.functions.HashKernels.positionalShingles($c, $n)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** Run cuts of an array of window starts, as
+  * array<struct<p:int, len:int>>.
+  */
+case class RunCutsExpr(child: Expression, n: Int) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("p",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      org.apache.spark.sql.types.StructField("len",
+        org.apache.spark.sql.types.IntegerType, nullable = false))),
+    containsNull = false)
+  override def nullSafeEval(v: Any): Any =
+    HashKernels.runCuts(v.asInstanceOf[ArrayData], n)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.runCuts($c, $n)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Token LCP of two token arrays, as an int. */
+case class TokenLcpExpr(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    HashKernels.tokenLcp(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.tokenLcp($a, $b)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 /** Winnowing fingerprints of a token array, as array<long>. */
@@ -521,8 +593,12 @@ object HashExpressions {
     GraftShim.column(PolyHashExpr(GraftShim.expression(c)))
   def shingleHashesFast(toks: Column, n: Int): Column =
     GraftShim.column(ShingleHashesExpr(GraftShim.expression(toks), n))
-  def positionalShinglesFast(toks: Column, n: Int): Column =
-    GraftShim.column(PositionalShinglesExpr(GraftShim.expression(toks), n))
+  def positionalShinglesFast(toks: Column, n: Column): Column =
+    GraftShim.column(PositionalShinglesExpr(GraftShim.expression(toks), GraftShim.expression(n)))
+  def runCutsFast(ps: Column, n: Int): Column =
+    GraftShim.column(RunCutsExpr(GraftShim.expression(ps), n))
+  def tokenLcpFast(a: Column, b: Column): Column =
+    GraftShim.column(TokenLcpExpr(GraftShim.expression(a), GraftShim.expression(b)))
   def orderedPairsFast(ids: Column): Column =
     GraftShim.column(OrderedPairsExpr(GraftShim.expression(ids)))
   def winnowFast(toks: Column, n: Int, w: Int): Column =

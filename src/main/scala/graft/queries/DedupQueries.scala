@@ -5,7 +5,8 @@ import graft.{QueryDef, Tables}
 import graft.functions.TextFunctions._
 import graft.operators.{Chunker, CorpusMerge, Dedup}
 import org.apache.spark.sql.expressions.Window
-import graft.functions.HashExpressions.{orderedPairsFast, positionalShinglesFast, winnowFast}
+import graft.functions.HashExpressions.{orderedPairsFast, positionalShinglesFast, runCutsFast,
+  tokenLcpFast, winnowFast}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.functions.VectorFunctions.{cosSimSql, cosineSimilarity}
 
@@ -1009,29 +1010,68 @@ object DedupQueries {
 
   /** LONGEST REPEATED SPAN — the exact answer to "what is the longest
     * token sequence this corpus contains twice?" (overlaps and
-    * same-document repeats count, spans never cross documents): binary
-    * search on the span width S with the monotone predicate "some
-    * width-S span occurs ≥2 times". Each probe is one corpus pass of
-    * the rolling prefix-hash kernel (every width-S window hash in
-    * O(chars) per doc), a fingerprint-keyed count, and a TEXT
-    * verification of the surviving candidates — fingerprints prune,
-    * never decide, so the 2^30 hash space cannot produce a phantom
-    * repeat (and verified truth keeps the predicate monotone, which
-    * collision noise alone would break). The winner is the
-    * lexicographically least maximal span with its exact occurrence
-    * count. Where `q_repeated_spans` mines per-document islands of
-    * duplicated fixed-width windows, this is the corpus-level suffix-
-    * array question answered in O(log L) passes — at 100 TB, log of
-    * the max DOCUMENT length (~dozens of rounds-free probes), each
-    * linear, map-side, and shuffle-bounded by the candidate set; a
-    * distributed suffix array would pay log N global sort rounds for
-    * the same answer.
+    * same-document repeats count, spans never cross documents), by
+    * seed-and-extend over 8-token seeds:
+    *
+    *  - SEEDS. One pass of the rolling prefix-hash kernel hashes every
+    *    t0-token window (t0 = 8) and keeps each window start whose
+    *    fingerprint occurs at least twice (a partial count, then a
+    *    semi-join). A repeat of length L >= t0 occurs at two or more
+    *    positions, so each of its L - t0 + 1 windows does too: every
+    *    window start inside every occurrence is a candidate.
+    *    Fingerprints only prune — a hash collision adds candidates,
+    *    never answers.
+    *  - RUN CUT. Each candidate start p ships its suffix cut at the end
+    *    of its run of consecutive candidate starts plus t0 - 1 tokens
+    *    (`runCuts`, one row per start), and capped at k = 128 tokens.
+    *    A repeat starting at p has all its window starts in that run,
+    *    so the cut keeps it whole, and a cut suffix is a prefix of the
+    *    true one, so the cut never lengthens a common prefix either. A
+    *    row ships at most k tokens, whatever the length of its run.
+    *  - SORT. Suffixes sharing t0 or more tokens share their seed, so a
+    *    window partitioned by the seed and ordered by the cut suffix
+    *    gives each row its token LCP with the next row, as in a suffix
+    *    array; the largest is min(L*, k). Below k it is L*: the witness
+    *    is the least space-joined L*-prefix among rows with LCP L*, and
+    *    since the suffixes with that prefix are contiguous, its n_occ is
+    *    one more than the rows with LCP L* and that prefix.
+    *  - EXTEND, only when some pair shares all k tokens. Classes of
+    *    equal windows replace tokens: each k-window that occurs twice
+    *    gets a class id (the least position holding it). Doubling joins
+    *    the class at p with the class at p + h into the 2h-window class
+    *    (equal pairs, equal text), while any class has two members; a
+    *    binary descent over the same levels then gives the widest
+    *    repeated multiple of k, L <= L* < L + k. Each member of a
+    *    repeated L-window class then ships its next k - 1 tokens, and a
+    *    window per class, ordered by those, gives L* and n_occ as in
+    *    SORT; the witness is sliced from one member per class. Rows
+    *    carry ids, never text, so a long duplicate document or a long
+    *    one-token run costs O(positions · log L*), not O(L*²).
+    *  - FALLBACK. Only when no pair of cut suffixes shares t0 tokens
+    *    (L* < t0, which includes corpora whose documents are all shorter
+    *    than t0) does one pass over widths 1..t0-1 decide: every window
+    *    of every width, fingerprint-pruned, then verified on text; the
+    *    answer is the widest verified width and its least span. The
+    *    widths are one exploded array literal read by the same shingle
+    *    kernel, so one plan serves them all.
+    *
+    * Two Spark actions in the usual case (the token checkpoint and the
+    * seed pass), three with the fallback, and two or three per level
+    * when extending. Every shuffle is keyed by a fingerprint, a
+    * document, a seed or a class. Shipped suffix tokens are at most k
+    * per candidate start. A seed or a class that occurs m times is
+    * sorted in one task: m rows of at most k tokens, or of ids. The
+    * answer is a local one-row frame, and every checkpoint the query
+    * takes is released before it returns.
     *
     * Oracle: the real suffix-sort construction — every token suffix,
     * char-sorted (the space separator sorts below all token chars, so
     * equal-token-prefix groups stay contiguous), adjacent-pair token
-    * LCP via the first-mismatch position of the zipped lists, max LCP
-    * = the span width, then the least witness and its prefix count.
+    * LCP via the first-mismatch position of the zipped lists (no
+    * mismatch: the shorter length; DuckDB's `list_position` gives 0 or
+    * NULL for a missing value, by version, so both are read as none),
+    * max LCP = the span width, then the least witness and its prefix
+    * count.
     */
   val longestRepeat: QueryDef = QueryDef.sql(
     "q_longest_repeat",
@@ -1041,8 +1081,8 @@ object DedupQueries {
        |srt AS (SELECT st, lead(st) OVER (ORDER BY array_to_string(st, ' ')) AS nx FROM suf),
        |l AS (SELECT st,
        |             CASE WHEN nx IS NULL THEN 0
-       |                  ELSE coalesce(list_position(list_transform(list_zip(st, nx),
-       |                         p -> coalesce(p[1] = p[2], false)), false) - 1,
+       |                  ELSE coalesce(nullif(list_position(list_transform(list_zip(st, nx),
+       |                         p -> coalesce(p[1] = p[2], false)), false), 0) - 1,
        |                       least(len(st), len(nx))) END AS lcp
        |      FROM srt),
        |best AS (SELECT max(lcp) AS len FROM l),
@@ -1053,95 +1093,98 @@ object DedupQueries {
        |SELECT CAST(best.len AS BIGINT) AS lrs_len, CAST(occ.n AS BIGINT) AS n_occ, win.span
        |FROM best, win, occ WHERE best.len >= 1""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    // one materialization feeds all ~log L probes (each probe reads tk
-    // twice: window pass + verify re-slice) — the q_bpe_learn pattern;
-    // without it every probe re-scans parquet and re-tokenizes
-    val tk = Tables(spark, dir, "documents")
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .localCheckpoint()
+    // every frame the query checkpoints, released before it returns
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { val c = df.localCheckpoint(); held += c; c }
+    // read by every pass (durability: lineage-severed, non-replicated);
+    // `rid` keys the per-document joins, so NULL and repeated doc_ids
+    // stay distinct documents, as in the oracle
+    val tk = hold(Tables(spark, dir, "documents")
+      .select(monotonically_increasing_id().as("rid"), tokens(col("text")).as("toks")))
+    val t0 = 8
+    val k = 128
+    // the rows of `w` whose `key` occurs at least twice
+    def repeated(w: DataFrame, key: String*): DataFrame =
+      w.join(w.groupBy(key.map(col): _*).count().filter(col("count") >= 2), key, "left_semi")
+    def best(rows: DataFrame): Option[(Long, Long, String)] =
+      rows.orderBy(col("len").desc, col("span")).limit(1).collect().headOption
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
 
-    // width-S spans occurring ≥2 times, verified on text: fingerprint
-    // groups prune to candidates, a re-slice groups the actual spans
-    def verifiedSpans(s: Int): DataFrame = {
-      val w = tk.filter(size(col("toks")) >= s)
-        .select(col("doc_id"),
-          explode(positionalShinglesFast(col("toks"), s)).as("pf"))
-        .select(col("doc_id"), col("pf.p").as("p"), col("pf.fp").as("fp"))
-      val cand = w.groupBy("fp").agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-      w.join(cand, "fp")
-        .join(tk, "doc_id")
-        .select(array_join(slice(col("toks"), col("p"), lit(s)), " ").as("span"))
-        .groupBy("span").agg(count(lit(1)).as("n_occ"))
-        .filter(col("n_occ") >= 2)
-    }
-    // BATCHED PROBES (guide §1/§2: fewer driver round-trips,
-    // no duplicate kernel runs): each bisection step evaluates up to
-    // `ProbesPerPass` candidate widths in ONE pass. The per-width
-    // window frames are unioned and materialized once, so the rolling
-    // shingle kernel runs ONCE per width per pass — the lazy
-    // per-probe shape computed it twice (once under the candidate
-    // aggregate, once again as the join-back side; no exchange reuse
-    // fires across those differently-shaped subtrees) and paid a
-    // scheduler round-trip per width. The interval shrinks ~4x per
-    // pass instead of 2x. Monotonicity of the verified predicate
-    // makes the multi-point update sound: lo := max(repeating
-    // probes), hi := min(non-repeating) - 1. Durability of the
-    // per-pass checkpoint: lineage-severed (a lost executor restarts
-    // the query).
-    // Width 7: the exchange/join count of a pass is INDEPENDENT of the
-    // batch width (one unioned frame), so widening the batch trades
-    // map-side kernel work (cheap, embarrassingly parallel) for whole
-    // passes: ~log8(L) passes instead of log2(L) probes, with total
-    // kernel work ~unchanged (7 widths x log8 ~= 2 x log2 evaluations).
-    val ProbesPerPass = 7
-    def repeatedIn(ss: Seq[Int]): Set[Int] = {
-      val wAll = ss.map { s =>
-        tk.filter(size(col("toks")) >= s)
-          .select(lit(s).as("s"), col("doc_id"),
-            explode(positionalShinglesFast(col("toks"), s)).as("pf"))
-          .select(col("s"), col("doc_id"), col("pf.p").as("p"), col("pf.fp").as("fp"))
-      }.reduce(_ unionAll _).localCheckpoint()
-      val cand = wAll.groupBy("s", "fp").agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2)
-      wAll.join(cand, Seq("s", "fp"))
-        .join(tk, "doc_id")
-        .select(col("s"),
-          array_join(slice(col("toks"), col("p"), col("s")), " ").as("span"))
-        .groupBy("s", "span").agg(count(lit(1)).as("n_occ"))
-        .filter(col("n_occ") >= 2)
-        .select("s").distinct()
-        .collect().map(_.getInt(0)).toSet
-    }
+    val sufs = repeated(tk.select(col("rid"),
+        explode(positionalShinglesFast(col("toks"), lit(t0))).as("pf"))
+        .select(col("rid"), col("pf.p").as("p"), col("pf.fp").as("fp")), "fp")
+      .groupBy("rid").agg(collect_list(col("p")).as("ps"))
+      .join(tk, "rid")
+      .select(col("rid"), col("toks"), explode(runCutsFast(col("ps"), t0)).as("r"))
+      .select(col("rid"), col("r.p").as("p"),
+        slice(col("toks"), col("r.p"), least(col("r.len"), lit(k))).as("suf"))
+    val seeds = sufs
+      .select(col("suf"), tokenLcpFast(col("suf"), lead(col("suf"), 1).over(
+        Window.partitionBy(slice(col("suf"), lit(1), lit(t0))).orderBy("suf"))).as("lcp"))
+      .filter(col("lcp") >= t0)
+      .groupBy(col("lcp").cast("long").as("len"),
+        array_join(slice(col("suf"), lit(1), col("lcp")), " ").as("span"))
+      .agg((count(lit(1)) + 1).as("n_occ"))
+      .select("len", "n_occ", "span")
 
-    val empty = Seq.empty[(Long, Long, String)].toDF("lrs_len", "n_occ", "span")
-    val maxLen = tk.agg(max(size(col("toks"))).as("m")).collect()(0).getInt(0)
-    if (maxLen < 1) empty
-    else {
-      // no upfront repeatedAt(1) guard: S=1 is the most EXPENSIVE probe
-      // (every token a candidate), and bisection doesn't need it — if no
-      // width repeats, every probe is false, lo converges to 1, and the
-      // final verifiedSpans(1) comes back empty
-      var lo = 1; var hi = maxLen
-      while (lo < hi) {
-        val w = hi - lo
-        val n = math.min(ProbesPerPass, w)
-        val ps = (1 to n)
-          .map(i => lo + math.max(1L, w.toLong * i / (n + 1)).toInt)
-          .distinct.filter(p => p > lo && p <= hi)
-        val reps = repeatedIn(ps)
-        if (reps.nonEmpty) lo = reps.max
-        val nonRep = ps.filterNot(reps)
-        if (nonRep.nonEmpty) hi = nonRep.min - 1
+    // (rid, p, c) for each start whose window, keyed by `key`, occurs at
+    // least twice; c, the least (rid, p) holding that window, names it
+    def classes(w: DataFrame, key: String*): DataFrame = {
+      val same = Window.partitionBy(key.map(col): _*)
+      hold(w.select(col("rid"), col("p"), count(lit(1)).over(same).as("n"),
+          min(struct(col("rid"), col("p"))).over(same).as("c"))
+        .filter(col("n") >= 2).select("rid", "p", "c"))
+    }
+    // classes of (a + b)-token windows: an a-window class at p, then a
+    // b-window class at p + a
+    def concat(x: DataFrame, a: Int, y: DataFrame): DataFrame =
+      classes(x.join(y.select(col("rid"), (col("p") - a).as("p"), col("c").as("c2")),
+        Seq("rid", "p")), "c", "c2")
+    def extend(): (Long, Long, String) = {
+      // window classes of width k, 2k, 4k, ... while any class repeats
+      val levels = Iterator.iterate((k, classes(sufs.filter(size(col("suf")) === k), "suf"))) {
+        case (h, t) => (2 * h, concat(t, h, t))
+      }.takeWhile(!_._2.isEmpty).toVector
+      // binary descent: the widest repeated multiple of k, len <= L* < len + k
+      val (len, q) = levels.init.reverseIterator.foldLeft(levels.last) {
+        case ((l, q), (h, t)) =>
+          val wider = concat(q, l, t)
+          if (wider.isEmpty) (l, q) else (l + h, wider)
       }
-      // materialize the 1-row answer: the lo==1 emptiness check and the
-      // caller's own evaluation would otherwise each replay the full
-      // width-lo verification pass (durability: lineage-severed)
-      val win = verifiedSpans(lo)
-        .orderBy("span").limit(1)
-        .select(lit(lo.toLong).as("lrs_len"), col("n_occ"), col("span"))
-        .localCheckpoint()
-      if (lo == 1 && win.isEmpty) empty else win
+      // the last < k tokens as in the seed sort, per class
+      val pairs = hold(q.join(tk, "rid")
+        .select(col("rid"), col("p"), col("c"),
+          slice(col("toks"), col("p") + len, lit(k - 1)).as("nxt"))
+        .select(col("rid"), col("p"), col("c"), col("nxt"),
+          (tokenLcpFast(col("nxt"), lead(col("nxt"), 1).over(
+            Window.partitionBy("c").orderBy("nxt"))) + len).as("lcp"))
+        .filter(col("lcp").isNotNull)
+        .groupBy(col("lcp"), col("c"), slice(col("nxt"), lit(1), col("lcp") - len).as("sub"))
+        .agg((count(lit(1)) + 1).as("n_occ"), min(struct(col("rid"), col("p"))).as("at")))
+      val lrs = pairs.agg(max("lcp")).head().getInt(0)
+      val r = pairs.filter(col("lcp") === lrs)
+        .join(tk, col("at.rid") === col("rid"))
+        .select(col("n_occ"), array_join(slice(col("toks"), col("at.p"), lit(lrs)), " ").as("span"))
+        .orderBy("span").limit(1).head()
+      (lrs.toLong, r.getLong(0), r.getString(1))
     }
+    def short = repeated(tk.select(col("rid"), col("toks"),
+        explode(typedLit((1 until t0).toArray)).as("s"))
+        .select(col("rid"), col("s"),
+          explode(positionalShinglesFast(col("toks"), col("s"))).as("pf"))
+        .select(col("rid"), col("s"), col("pf.p").as("p"), col("pf.fp").as("fp")), "s", "fp")
+      .join(tk, "rid")
+      .groupBy(col("s").cast("long").as("len"),
+        array_join(slice(col("toks"), col("p"), col("s")), " ").as("span"))
+      .agg(count(lit(1)).as("n_occ"))
+      .filter(col("n_occ") >= 2)
+      .select("len", "n_occ", "span")
+
+    try (best(seeds) match {
+      case Some((l, _, _)) if l == k => Some(extend())
+      case found => found.orElse(best(short))
+    }).toSeq.toDF("lrs_len", "n_occ", "span")
+    finally held.foreach(org.apache.spark.sql.GraftShim.releaseCheckpoint)
   }
 
   /** DEDUP COLLISION AUDIT — [[graft.operators.Dedup.collisionAudit]]
@@ -1323,7 +1366,7 @@ object DedupQueries {
     // cluster-safe — no executor-local blocks) side of that trade.
     val w = tk
       .select(col("doc_id"),
-        explode(graft.functions.HashExpressions.positionalShinglesFast(col("toks"), 8)).as("pf"))
+        explode(positionalShinglesFast(col("toks"), lit(8))).as("pf"))
       .select(col("doc_id"), col("pf.p").as("p"), col("pf.fp").as("fp"))
     val b = w.groupBy("fp").agg(countDistinct("doc_id").as("nd"))
       .filter(col("nd") >= 2).select("fp")

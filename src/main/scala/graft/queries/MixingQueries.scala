@@ -7,7 +7,6 @@ import graft.functions.TextFunctions._
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.VectorFunctions.{cosDistSql, cosineDistance}
-import graft.functions.HashExpressions.positionalShinglesFast
 
 /** Mixing, sampling, selection and sharding: stratified and weighted
   * samples, domain and temperature mixing, rebalancing, epochs and

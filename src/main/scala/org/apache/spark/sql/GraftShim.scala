@@ -30,6 +30,16 @@ object GraftShim {
       org.apache.spark.sql.catalyst.InternalRow] =
     df.queryExecution.toRdd
 
+  /** Drop the blocks behind a `localCheckpoint()`ed DataFrame. Its
+    * plan is a LogicalRDD over the persisted RDD, which `unpersist` on
+    * the DataFrame does not reach (that only uncaches `cache()`d plans).
+    * A no-op for any other plan.
+    */
+  def releaseCheckpoint(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
+
   /** Wrap an InternalRow RDD back into a DataFrame (the package-private
     * `internalCreateDataFrame`). Rows must match `schema` exactly.
     */

@@ -3,10 +3,8 @@ package graft
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructType}
 import graft.operators.{Prompt, TopK}
@@ -58,29 +56,6 @@ class RagTurnSpec extends SparkSpec {
     val topk = spark.createDataFrame(rows.toSeq.asJava, idx.schema.add("dist", "double"))
     Prompt.assembleByOrder(topk, Seq(col("dist"), col("chunk_id")), "chunk",
       conversation, query).head().getString(0)
-  }
-
-  /** Jobs started under `group`, and SQL executions started by anyone,
-    * counted once the listener bus drains.
-    */
-  private final class JobCounter(group: String) extends SparkListener {
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var sqlExecutions = 0
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-        jobs += 1; stages += e.stageInfos.size
-      }
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case _: SparkListenerSQLExecutionStart => sqlExecutions += 1
-      case _ =>
-    }
-  }
-
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
   }
 
   test("each turn's prompt equals TopK.nearest + assembleByOrder on collected rows") {

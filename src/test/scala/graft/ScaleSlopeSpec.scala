@@ -150,10 +150,11 @@ class ScaleSlopeSpec extends SparkSpec {
     // index build) so serving can't regress to a full-index scan
     "q_ann_serve_batch" -> 1.5,
     // round-9 batch 32: k-center is K map-only scans + TakeOrdered(1)
-    // per round (no shuffle, no distance matrix) and the LRS binary
-    // search is O(log maxDocLen) verified shingle passes — both pinned
-    // so a round can't grow a corpus-sized shuffle or the verify step
-    // a corpus-wide span materialization
+    // per round (no shuffle, no distance matrix), and the longest repeat
+    // is one 8-token seed pass whose shipped suffixes are cut at the end
+    // of each run of repeated windows and capped at 128 tokens — both
+    // pinned so a round can't grow a corpus-sized shuffle, nor the seed
+    // pass ship whole-document suffixes for unrepeated text
     "q_kcenter_coreset" -> 1.5,
     // round-10: the running-min-dist twin — same picks, one persisted
     // column, O(d) per point per round; pinned so the fold-in can't

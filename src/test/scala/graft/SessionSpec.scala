@@ -25,6 +25,10 @@ class SessionSpec extends SparkSpec {
       spark.sparkContext.defaultParallelism.toString)
   }
 
+  test("generated class names carry no codegen stage id") {
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+  }
+
   test("a second pass of the curation queries compiles no code") {
     assert(spark.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") ==
       GraftSession.CodegenCacheEntries.toString)
