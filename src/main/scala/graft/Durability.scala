@@ -29,10 +29,9 @@ import org.apache.spark.sql.DataFrame
   * the PLANS.md ledger rule: a bench/oracle query is retried from
   * scratch on failure, so replicating its intermediates buys nothing
   * and costs the checkpoint write every run — each such site cites its
-  * ledger class at the call. Library WRITE-path operators that
-  * checkpoint internally (`CorpusMerge.merge`,
-  * `IvfIndex.publishVersion`/`appendVectors`) document the same
-  * retry-from-scratch assumption in their own contracts.
+  * ledger class at the call. `CorpusMerge.merge`, a library
+  * WRITE-path operator that checkpoints internally, documents the same
+  * retry-from-scratch assumption in its own contract.
   */
 object Durability {
 

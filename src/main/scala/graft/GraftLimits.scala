@@ -2,17 +2,20 @@ package graft
 
 /** Runtime enforcement of the BOUNDED-LITERAL contract.
   *
-  * Several map-only paths ship a driver-side literal (`typedLit`) in
-  * every task closure: the streaming tokenizer/packer vocabulary and
-  * the quality scorer's weight vector. That design is right ONLY while
-  * the literal is config-bounded — a trained tokenizer vocab is fixed
-  * by its merge budget, a weight vector by its feature grid. A decade
-  * probe PRICED the failure mode: feeding a
+  * Two batch paths put a driver-side value in every task closure or on
+  * the driver: `tokenizerArtifacts` collects the BPE vocabulary to the
+  * driver as a map, and the quality scorer folds its weight vector into
+  * the plan as a literal (`QualityQueries.weightsLit`). That design is
+  * right ONLY while the value is config-bounded: a trained tokenizer
+  * vocab is fixed by its merge budget, a weight vector by its feature
+  * grid. A decade probe PRICED the failure mode: feeding a
   * corpus-derived (Heaps-growing) vocabulary through the literal-map
   * encode measured decade slope 4.98 at the 1000x linear-vocab
   * adversary, where the broadcast-join form (`q_bpe_encode_artifact`,
-  * vocab-as-sharded-table) stays at 0.50. These guards fail fast at
-  * plan construction instead of melting down at task dispatch.
+  * vocab-as-sharded-table) stays at 0.50. These guards fail fast
+  * before the collect or the plan, instead of melting down at task
+  * dispatch. [[requireGrowingKeyDomain]] guards a second precondition:
+  * a blocking key whose domain still grows with the corpus.
   */
 object GraftLimits {
 
@@ -28,11 +31,9 @@ object GraftLimits {
     */
   val MaxLiteralWeights: Int = 4096
 
-  /** Count form of [[requireBoundedVocab]], for checking a DISTRIBUTED
-    * `count()` BEFORE any driver-side materialization: the map form can
-    * only fire after a Θ(vocab) collect has already landed on the
-    * driver (as `tokenizerArtifacts` would) — this
-    * one gates the collect itself.
+  /** Assert a vocabulary of `n` entries is tokenizer-bounded, on a
+    * DISTRIBUTED `count()` BEFORE any driver-side materialization, so
+    * the guard gates the Θ(vocab) collect itself.
     */
   def requireBoundedVocabCount(n: Long, what: String): Unit =
     require(n <= MaxLiteralVocab,
@@ -43,8 +44,11 @@ object GraftLimits {
         "the vocabulary with ModelArtifacts.saveVocabFrame and join it instead " +
         "(q_bpe_encode_artifact).")
 
-  /** Assert `vocab` is tokenizer-bounded before it rides a task
-    * closure. Returns the vocab so call sites stay expressions.
+  /** Map form of [[requireBoundedVocabCount]], for a vocabulary that is
+    * already on the driver (a loaded or hand-built map) before it rides
+    * a task closure. It can only fire after the map exists, so a
+    * distributed vocabulary takes the count form instead. Returns the
+    * vocab so call sites stay expressions.
     */
   def requireBoundedVocab(vocab: Map[String, Long], what: String): Map[String, Long] = {
     require(vocab.size <= MaxLiteralVocab,
@@ -56,29 +60,26 @@ object GraftLimits {
     vocab
   }
 
-  /** Ceiling for a stream-static dimension that a micro-batch join
-    * force-broadcasts (AQE does not replan streams, so the hint is
-    * structural): 1 GiB of ESTIMATED plan size — two orders of
-    * magnitude above any enum/artifact dim, well under Spark's own
-    * 8 GB forced-broadcast hard-fail.
+  /** Ceiling for a dimension that a join hint-FORCES to broadcast:
+    * 1 GiB of ESTIMATED plan size — two orders of magnitude above any
+    * enum/artifact dim, well under Spark's own 8 GB forced-broadcast
+    * hard-fail.
     */
-  val MaxStreamStaticDimBytes: BigInt = BigInt(1L << 30)
+  val MaxBroadcastDimBytes: BigInt = BigInt(1L << 30)
 
-  /** Assert a stream-static dimension is artifact-sized before it is
-    * hint-broadcast into every micro-batch. Uses Catalyst's
-    * plan-statistics estimate — a driver-side check at plan
-    * construction, no job. A fact-scaled dim must take a batch join or
-    * a pre-bucketed store instead.
+  /** Assert a dimension is artifact-sized before it is hint-broadcast
+    * into a join. Uses Catalyst's plan-statistics estimate — a
+    * driver-side check at plan construction, no job. A fact-scaled dim
+    * must take a shuffle join or a pre-bucketed store instead.
     */
   def requireBoundedDim(dim: org.apache.spark.sql.DataFrame,
                         what: String): org.apache.spark.sql.DataFrame = {
     val est = dim.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(est <= MaxStreamStaticDimBytes,
-      s"$what: stream-static dimension estimated at $est bytes (cap " +
-        s"$MaxStreamStaticDimBytes). The dim is hint-FORCED to broadcast into every " +
-        "micro-batch (AQE cannot replan streams) and Spark hard-fails forced " +
-        "broadcasts at 8 GB — a fact-scaled dimension needs a batch-side join or a " +
-        "pre-bucketed store, not a per-batch broadcast.")
+    require(est <= MaxBroadcastDimBytes,
+      s"$what: dimension estimated at $est bytes (cap $MaxBroadcastDimBytes). " +
+        "The dim is hint-FORCED to broadcast and Spark hard-fails forced broadcasts " +
+        "at 8 GB — a fact-scaled dimension needs a shuffle join or a pre-bucketed " +
+        "store, not a broadcast.")
     dim
   }
 

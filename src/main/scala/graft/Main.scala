@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.pipelines.{Completion, Embedder, HttpEmbedder, IndexBuild, MockEmbedder, Rag}
+import graft.pipelines.{Completion, Embedder, Http, HttpEmbedder, IndexBuild, MockEmbedder, Rag}
 import graft.sources.Vdb
 
 /** CLI mirroring the reference's four binaries (`makefile:14-17`):
@@ -61,17 +61,12 @@ object Main {
     */
   private def streamedCompletion(host: String, port: Int, prompt: String,
                                  nPredict: Int): String = {
-    val client = java.net.http.HttpClient.newHttpClient()
-    val req = java.net.http.HttpRequest
-      .newBuilder(java.net.URI.create(s"http://$host:$port/completion"))
-      .header("Content-Type", "application/json")
-      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
-        Completion.requestJson(prompt, nPredict, stream = true))).build()
     import scala.jdk.CollectionConverters._
-    val lines = client.send(req,
-      java.net.http.HttpResponse.BodyHandlers.ofLines()).body()
-    val answer = Completion.accumulateStream(lines.iterator().asScala,
-      t => { print(t); Console.flush() })
+    val lines = Http.postJson(Http.client(), s"http://$host:$port/completion",
+      Completion.requestJson(prompt, nPredict, stream = true),
+      java.net.http.HttpResponse.BodyHandlers.ofLines())
+    val answer = try Completion.accumulateStream(lines.iterator().asScala,
+      t => { print(t); Console.flush() }) finally lines.close()
     println()
     answer
   }

@@ -8,15 +8,18 @@ import org.apache.spark.sql.types._
   * `binary` columns with typed metadata; decode/feature-extract runs in
   * batched per-partition workers.
   *
-  * IMAGE decode/resize is REAL — [[ImageIODecoder]] and [[resizePng]]
-  * run on `javax.imageio` (PNG/JPEG/GIF/BMP readers ship with the JDK,
-  * no external dependency). AUDIO decode is REAL too —
-  * [[AudioDecoder]] runs on `javax.sound.sampled` (WAV/AIFF/AU PCM).
-  * Video container demuxers genuinely aren't in this environment, so
-  * video stays behind the clearly-marked deterministic [[StubDecoder]];
+  * All three decoders are REAL and JDK-only: [[ImageIODecoder]] and
+  * [[resizePng]] run on `javax.imageio` (PNG/JPEG/GIF/BMP),
+  * [[AudioDecoder]] on `javax.sound.sampled` (WAV/AIFF/AU PCM), and
+  * [[Mp4Decoder]] on the ISO-BMFF box parser in [[Mp4]]. The
+  * deterministic [[StubDecoder]] stands in for media no decoder reads;
   * the surrounding contract — schema, partitioning, batch shape, the
-  * worker loop — is identical for all three, so productionizing video
-  * means swapping the [[Decoder]] only.
+  * worker loop — is identical for all of them.
+  *
+  * The registry reaches this object only through [[fromText]]
+  * (`q_binary_meta`, `q_media_batches`); the decoders, [[featurize]],
+  * [[thumbnails]] and [[sampleFrames]] are library surface that
+  * `MultimodalSpec` pins on generated PNG/WAV/MP4 payloads.
   *
   * Scale notes: media bytes never pass through a shuffle (featurize is a
   * mapPartitions in the scan stage); at 100 TB keep media in its own

@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.LongType
   * billion-edge pair graph gets ~100k partitions' worth of real work,
   * a million-edge one doesn't get 100k near-empty tasks. The sized conf
   * lives in an isolated `newSession()` (same SparkContext), so
-  * concurrent queries on the caller's session — streaming micro-batches,
-  * parallel gate threads — never see the graph-sized setting.
+  * concurrent queries on the caller's session (parallel gate threads)
+  * never see the graph-sized setting.
   *
   * Driver round-trips: each iteration is ONE job — the convergence
   * checksum rides the checkpoint materialization as an `observe()`

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * the READ side and SCD2 reconstructs history, but a real
   * training-data pipeline refreshes its corpus IN PLACE from a delta
   * (new documents, re-crawled revisions, takedown tombstones). The
-  * engine's other write shapes are full overwrite and append
-  * (`sources/Vdb.scala`, `IvfIndex.appendVectors`); this adds
+  * engine's other write shapes are full overwrite
+  * (`sources/Vdb.scala`, `IvfIndex.publishVersion`); this adds
   * copy-on-write upsert at FILE-BUCKET granularity.
   *
   * LAYOUT CONTRACT: the base corpus is parquet `PARTITIONED BY
@@ -39,8 +39,8 @@ import org.apache.spark.sql.functions._
   *   - tombstone (`deleted = true`) with winning version → DELETE;
   *     a stale tombstone is ignored like any stale delta
   *
-  * CONCURRENCY: single merge owner per corpus root (the ingest owner,
-  * same assumption as `IvfIndex.appendVectors`); readers are unlimited
+  * CONCURRENCY: single merge owner per corpus root (the ingest
+  * owner); readers are unlimited
   * — a concurrent reader sees whole files only (task-commit renames),
   * though a scan spanning the swap can mix old and new buckets; a
   * reader needing a consistent snapshot reads a versioned root (the

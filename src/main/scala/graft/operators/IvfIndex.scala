@@ -118,10 +118,10 @@ object IvfIndex {
   // A rebuild/compaction writes its version directory COMPLETELY, then
   // swaps the pointer atomically — so a concurrent reader either sees
   // the old version (still intact on disk) or the new one, never a
-  // half-written index. The streaming ANN server re-reads the pointer
-  // per micro-batch (driver-side, one tiny file — trigger-bounded), so
-  // a retrain swaps in WITHOUT restarting the stream; the reference's
-  // only analog is restart-to-reload (`multirag.c:359`).
+  // half-written index. A reader that resolves the pointer per query
+  // ([[currentVersion]]; `q_ann_rotate` serves through it after each of
+  // two publishes) picks up a retrain WITHOUT a restart; the
+  // reference's only analog is restart-to-reload (`multirag.c:359`).
 
   /** Build index + codebook under `root/version/` and atomically point
     * `root/MANIFEST` at it. Also freezes the version's BUILD-TIME
@@ -212,9 +212,8 @@ object IvfIndex {
     * codebook (so routing stays consistent — a query probing cluster c
     * finds every vector whose nearest seed is c, old or new) and
     * appended as new cluster-partitioned part files into the version's
-    * index directory. Readers list files per scan — the streaming
-    * server picks appends up at its next trigger, batch probes on
-    * their next run; a reader mid-append sees whole files only (task
+    * index directory. Readers list files per scan — a probe picks
+    * appends up on its next run; a reader mid-append sees whole files only (task
     * commit renames them in atomically). Retrain/compaction still goes
     * through [[publishVersion]] + swap; append covers the ingest-time
     * trickle between rebuilds — the reference's only analog is a full

@@ -43,8 +43,7 @@ object PrefixSum {
     * subtotal collect, and a second pass: +0.3-1.1 s PER RANK PASS at
     * sf0.1 (PLANS.md), pure scheduler latency that is also pure waste
     * when a hot shard fits one task trivially. Dispatch reads
-    * `optimizedPlan.stats.sizeInBytes` — plan-time, NO job (the
-    * GraftLimits stream-static precedent); deciding by
+    * `optimizedPlan.stats.sizeInBytes` — plan-time, NO job; deciding by
     * localCheckpoint + count recovers nothing, because the
     * materialization IS the tax. 256 MB through one window task is
     * well inside any executor; misestimation is a performance wobble,

@@ -78,23 +78,22 @@ class HttpEmbedder(host: String, port: Int, val dim: Int = 768) extends Embedder
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
     val idx = df.schema.fieldIndex(textCol)
     df.mapPartitions { rows =>
-      val client = java.net.http.HttpClient.newHttpClient()
+      val client = Http.client()
       rows.map(r => Row.fromSeq(r.toSeq :+ HttpEmbedder.request(client, url, r.getString(idx))))
     }(enc)
   }
 
   def embedText(text: String): Seq[Double] =
-    HttpEmbedder.request(java.net.http.HttpClient.newHttpClient(), url, text)
+    HttpEmbedder.request(Http.client(), url, text)
 }
 
 object HttpEmbedder {
-  /** One `/embedding` POST of `text` to `url` on `client`, parsed. */
-  def request(client: java.net.http.HttpClient, url: String, text: String): Seq[Double] = {
-    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-      .header("Content-Type", "application/json")
-      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(s"""{"content": ${jsonStr(text)}}""")).build()
-    parseEmbedding(client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString()).body())
-  }
+  /** One `/embedding` POST of `text` to `url` on `client`, parsed
+    * ([[Http.postJson]]: bounded waits, a non-2xx status fails). */
+  def request(client: java.net.http.HttpClient, url: String, text: String,
+              headersTimeout: java.time.Duration = Http.HeadersTimeout): Seq[Double] =
+    parseEmbedding(Http.postJson(client, url, s"""{"content": ${jsonStr(text)}}""",
+      java.net.http.HttpResponse.BodyHandlers.ofString(), headersTimeout))
 
   /** `s` as a JSON string literal: quote, backslash and every control
     * char (< 0x20) escaped. The one JSON string encoder of the engine's

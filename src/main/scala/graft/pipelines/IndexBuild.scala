@@ -14,7 +14,7 @@ import graft.operators.Chunker
   * per-partition parallel region.
   *
   * [[build]] never shuffles: it keeps the input's partitioning and row
-  * order, which streaming callers and the `.vdb` writer rely on. The
+  * order, which the `.vdb` writer relies on. The
   * CPU/HTTP-bound chunk and embed stage is only as wide as the input's
   * partitions, and a corpus file with a single row group reads as one:
   * one task would chunk, embed (one HTTP request in flight) and write

@@ -8,15 +8,15 @@ import org.apache.spark.sql.functions._
   * (dir, split)-keyed memo in [[graft.queries.QualityQueries]] /
   * [[graft.queries.TokenizerQueries]]). A real pipeline trains its
   * learned components once and ships them as small files; inference
-  * sessions — batch or streaming — load them and never touch the
-  * training corpus (the reference's pluggable-metric extension point,
-  * vector-db.h:16-18, implies exactly this "bring your own scorer"
-  * artifact). Everything here is tokenizer/model-sized (dozens to ~1M
-  * rows), so artifacts are single-digit-KB parquet: the LOAD side
-  * collects to the driver and hands literals to the map-only scoring /
-  * tokenizing projections ([[graft.streaming.QualityStreams]],
-  * [[graft.streaming.TokenizerStreams]]) — no join against the
-  * artifact at any corpus size.
+  * sessions load them and never touch the training corpus (the
+  * reference's pluggable-metric extension point, vector-db.h:16-18,
+  * implies exactly this "bring your own scorer" artifact). Weights,
+  * merge tables and codebooks are model-sized, so their LOAD side
+  * collects to the driver and hands literals to map-only projections
+  * (`q_quality_score_artifact`, `q_bpe_encode_artifact`'s merge fold,
+  * the IVF and PQ artifact queries) — no join against the artifact at
+  * any corpus size. The vocabulary is corpus-sized and stays a frame
+  * ([[saveVocabFrame]]).
   *
   * Round-trips are exact by construction (integer weights on the Q20
   * grid; merge/vocab tables are strings + longs — no floats anywhere),
@@ -54,23 +54,7 @@ object ModelArtifacts {
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
 
   /** Token→id vocabulary (lexicographic 1-based rank, the
-    * `q_bpe_encode` convention).
-    */
-  def saveVocab(spark: SparkSession, vocab: Map[String, Long], path: String): Unit = {
-    import spark.implicits._
-    vocab.toSeq.toDF("tok", "id")
-      .repartition(1).sortWithinPartitions("id")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  def loadVocab(spark: SparkSession, path: String): Map[String, Long] =
-    spark.read.parquet(path)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  /** Vocabulary as a DISTRIBUTED frame — for corpus vocabularies. The
-    * Map-shaped [[saveVocab]]/[[loadVocab]] pair collects to the driver
-    * and is right for closure-riding consumers (the streaming scorer)
-    * when the vocabulary is genuinely tokenizer-bounded; but THIS
+    * `q_bpe_encode` convention) as a DISTRIBUTED frame. THIS
     * engine's word-level vocab grows with Heaps' law, and the
     * linear-vocab decade probe priced the literal-map encode at slope
     * 4.98 (2696 s at 1000x) where the broadcast-JOIN encode stays

@@ -32,18 +32,22 @@ object AnnQueries {
       .select(col("vec_id").as("cluster"), col("embedding").as("cv"))
 
   /** The 5 rows nearest to `q` by cosine distance, vector 0 (the query
-    * itself) excluded, ties to the lower vec_id. */
-  private def nearest5(rows: DataFrame, q: Seq[Double]): DataFrame =
-    TopK.nearest(rows.filter(col("vec_id") =!= 0), "embedding", "vec_id", q, 5)
+    * itself) excluded, ties to the lower vec_id; none without `q`. */
+  private def nearest5(rows: DataFrame, q: Option[Seq[Double]]): DataFrame =
+    nearestTo(rows.filter(col("vec_id") =!= 0), "embedding", "vec_id", q, 5)
 
   /** Serve vector 0 from the IVF index at `indexDir`: only the files of
     * the `nprobe` cells whose `centroids` are nearest to it are scanned
-    * (the literal `IN` on the partition column prunes at planning). */
+    * (the literal `IN` on the partition column prunes at planning).
+    * Without vector 0 no cell is probed and the index is not read (an
+    * index of no vectors has no file to read a schema from): `emb`
+    * stands in for it, and the answer has no rows. */
   private def probeTop5(spark: SparkSession, emb: DataFrame, centroids: DataFrame,
       indexDir: String, nprobe: Int): DataFrame = {
-    val qvec = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    nearest5(IvfIndex.probe(spark, indexDir, IvfIndex.nearestClusters(centroids, qvec, nprobe)),
-        qvec)
+    val q = queryVector(emb)
+    val probed = q.fold(emb.withColumn("cluster", lit(0L)))(v =>
+      IvfIndex.probe(spark, indexDir, IvfIndex.nearestClusters(centroids, v, nprobe)))
+    nearest5(probed, q)
       .select(col("cluster").cast("long").as("probe_cluster"),
         col("vec_id").as("nid"), col("dist"))
   }
@@ -148,8 +152,8 @@ object AnnQueries {
        |ORDER BY dist, e.vec_id
        |LIMIT 5""".stripMargin) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val qlit = array(q.map(lit): _*)
+    val q = queryVector(emb)
+    val qlit = TopK.vecLit(q.getOrElse(Nil))
     val ed = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("i0", "x")))
       .select(col("label"), (col("i0") + 1).cast("long").as("i"),
@@ -962,8 +966,47 @@ object AnnQueries {
     probeTop5(spark, emb, loaded, s"$base/ivf_np_idx", 2)
   }
 
-  /** BATCHED IVF serving — the [[graft.streaming.AnnStreams]] per-batch
-    * kernel as an oracle-gated registry query: FOUR query vectors
+  /** Serve a batch of queries `(qid, qv)` from the IVF index at
+    * `indexDir` built with codebook `centroids` `(cluster, cv)`: the
+    * top-`k` neighbours `(qid, rank, nid, dist)` of each query.
+    *
+    *   1. Each query is routed to its `nprobe` nearest clusters against
+    *      the broadcast k-row codebook (quantized L2, ties to the lower
+    *      cluster id; the per-query top-nprobe is a window over k rows).
+    *   2. The probed-cluster set (≤ queries·nprobe ids, ≤ nlist) is
+    *      collected to the driver and becomes a literal `IN` partition
+    *      filter, so only the probed clusters' files are read.
+    *   3. Candidates are the probed members of each query's clusters
+    *      (queries broadcast), scored by the codegen cosine kernel, and
+    *      the top-k per query is rank-over-(dist, nid), which Spark runs
+    *      as WindowGroupLimit. A query never matches itself
+    *      (`nid <> qid`).
+    */
+  def servedTopK(queries: DataFrame, centroids: DataFrame, indexDir: String,
+                 k: Int, nprobe: Int): DataFrame = {
+    val probes = queries.crossJoin(broadcast(centroids))
+      .select(col("qid"), col("qv"), col("cluster"),
+        QuantizedL2Expr.column(col("qv"), col("cv"), 45).as("d2"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("d2"), col("cluster"))))
+      .filter(col("rn") <= nprobe)
+      .select(col("qid"), col("qv"), col("cluster"))
+    val clusters = probes.select("cluster").distinct()
+      .collect().map(_.getLong(0)).toSeq
+    IvfIndex.probe(queries.sparkSession, indexDir, clusters)
+      .join(broadcast(probes), "cluster")
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id").as("nid"),
+        cosineDistance(col("embedding"), col("qv")).as("dist"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("dist"), col("nid"))))
+      .filter(col("rank") <= k)
+      .select(col("qid"), col("rank").cast("long").as("rank"),
+        col("nid"), col("dist"))
+  }
+
+  /** BATCHED IVF serving — [[servedTopK]] as an oracle-gated registry
+    * query: FOUR query vectors
     * (vec_id 0..3) each routed to their nprobe=2 nearest clusters and
     * served top-5 from the partition-pruned index in ONE plan (the
     * single-query `q_ivf_nprobe` generalizes to a query BATCH — the
@@ -975,7 +1018,7 @@ object AnnQueries {
     * routing, self-match exclusion, (dist, nid) tie-break — bit-exact
     * cross-engine. SCALE: routing fans each query over the k-row
     * broadcast codebook; the probe reads nprobe/nlist of the index
-    * files (StreamingSpec pins the literal partition filter); the
+    * files (IvfIndexSpec pins the literal partition filter); the
     * per-query top-5 is rank-over-(dist,nid) = WindowGroupLimit, and
     * every per-qid partition is one probed cluster's members, never
     * the corpus.
@@ -1014,8 +1057,7 @@ object AnnQueries {
       val queries = emb.filter(col("vec_id") < 4)
         .select(col("vec_id").as("qid"),
           col("embedding").cast("array<double>").as("qv"))
-      graft.streaming.AnnStreams.servedTopK(
-        queries, seeds, s"$base/serve_idx", 5, 2)
+      servedTopK(queries, seeds, s"$base/serve_idx", 5, 2)
   }
 
   /** One serving pipeline per index version for the [[annRotate]]
@@ -1050,12 +1092,10 @@ object AnnQueries {
     * .currentVersion]] after each publish — so the driver's hash gate
     * proves the atomic-swap read path AND both versions' full serving
     * algebra (assignment, routing, pruned probe, ranking) bit-exact
-    * cross-engine. StreamingSpec proves the same swap on a LIVE
-    * stream; this makes it part of the 246-query oracle surface.
-    * SCALE: identical to `q_ann_serve_batch` per version — k-row
-    * codebook broadcasts, the probe reads nprobe/nlist of the files,
+    * cross-engine. SCALE: identical to `q_ann_serve_batch` per
+    * version — k-row codebook broadcasts, the probe reads nprobe/nlist of the files,
     * WindowGroupLimit top-k; the manifest read is one tiny driver-side
-    * file per trigger. Old versions stay intact on disk, so in-flight
+    * file per serve. Old versions stay intact on disk, so in-flight
     * plans against the previous pointer stay consistent.
     */
   val annRotate: QueryDef = QueryDef.sql(
@@ -1104,7 +1144,7 @@ object AnnQueries {
       def serveCurrent() = {
         val ver = IvfIndex.currentVersion(spark, base)
         val cents = spark.read.parquet(s"$base/$ver/centroids")
-        graft.streaming.AnnStreams.servedTopK(queries, cents, s"$base/$ver/index", 5, 2)
+        servedTopK(queries, cents, s"$base/$ver/index", 5, 2)
           .withColumn("index_version", lit(ver))
       }
       IvfIndex.publishVersion(emb, seeds(col("vec_id") < 8), base, "v1",

@@ -19,9 +19,7 @@ import org.apache.spark.sql.expressions.Window
   */
 object EventQueries {
 
-  /** Tumbling 1-hour window aggregation — batch form of the streaming
-    * `groupBy(window($"ts", "1 hour"))` (same Catalyst operator).
-    */
+  /** Tumbling 1-hour window aggregation. */
   val hourly: QueryDef = QueryDef.sql(
     "q_events_hourly",
     """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_ts,
@@ -735,9 +733,8 @@ object EventQueries {
   }
 
   /** EVENT INTERVAL JOIN — click→purchase pairs for the same user
-    * within ±1 hour: the batch twin of the streaming dual-watermark
-    * interval join ([[graft.streaming.EventStreams.intervalJoins]]),
-    * and the attribution primitive every event pipeline ships.
+    * within ±1 hour: the attribution primitive every event pipeline
+    * ships.
     *
     * SCALE: NOT a per-user non-equi join (per-user candidate mass is
     * clicks×purchases — a hot user goes quadratic, and the range
@@ -782,10 +779,7 @@ object EventQueries {
 
   /** INTERVAL ANTI-JOIN — clicks with NO purchase from the same user
     * within ±1 hour: the attribution-gap report (what share of ad
-    * clicks never converted inside the window), and the batch twin of
-    * the null-padded rows the streaming LEFT OUTER interval join
-    * ([[graft.streaming.EventStreams.intervalJoinsLeftOuter]]) emits
-    * at state-eviction time.
+    * clicks never converted inside the window).
     *
     * SCALE: the same (user, hour-bucket) EQUI-join blocking as
     * `q_interval_join` — never a nested-loop range anti-join. A click
@@ -894,9 +888,7 @@ object EventQueries {
     * across connections; scalar accumulators like q_ewma's are fine),
     * so the oracle runs the coupled fold as a RECURSIVE CTE instead —
     * one row per (event_type, step), plain column arithmetic, no
-    * lambda machinery. `EventStreams.holtLevels` maintains the same
-    * fold incrementally under a watermark; StreamingSpec pins
-    * batch==stream equality.
+    * lambda machinery.
     */
   val holt: QueryDef = QueryDef.sql(
     "q_holt",

@@ -743,10 +743,9 @@ object QualityQueries {
   private val Steps = 16
 
   /** The feature projection over an explicit (doc_id, text) frame —
-    * map-only (tokenize + codegen bucket histogram + integer ratios),
-    * so the SAME expression scores a batch corpus or an unbounded
-    * document stream ([[graft.streaming.QualityStreams]]): no shuffle,
-    * no state, identical values by construction.
+    * map-only (tokenize + codegen bucket histogram + integer ratios):
+    * no shuffle, so training and every scorer read identical values by
+    * construction.
     */
   private[graft] def featuresOf(docs: DataFrame): DataFrame = {
     val toks = tokens(col("text"))
@@ -809,9 +808,9 @@ object QualityQueries {
       aggregate(zip_with(col("f"), wc, (x, y) => x * y), lit(0L), (a, b) => a + b))
 
   /** (doc_id, logit_q, keep): the linear classifier's verdict per
-    * document of `feats` under the weights literal `wc` — the batch and
-    * the streaming scorer share it, so their scores are equal by
-    * construction. */
+    * document of `feats` under the weights literal `wc` — the
+    * in-session and the artifact-backed scorer share it, so their
+    * scores are equal by construction. */
   private[graft] def verdicts(feats: DataFrame, wc: Column): DataFrame =
     withDot(feats, wc).select(col("doc_id"), expr("dot DIV 10000").as("logit_q"),
       (expr("dot DIV 10000") >= 0).as("keep"))
@@ -841,8 +840,9 @@ object QualityQueries {
   }
 
   /** Final learned weights over an explicit feature frame — the
-    * artifact a batch session hands to the streaming scorer. Persists
-    * the frame for the 16 training reads, releases it before returning.
+    * artifact [[graft.pipelines.ModelArtifacts.saveWeights]] persists.
+    * Persists the frame for the 16 training reads, releases it before
+    * returning.
     */
   private[graft] def learnedWeights(feats: DataFrame): Array[Long] = {
     val p = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -859,9 +859,9 @@ object QualityQueries {
     * first query to need a trajectory train it and the other two reuse
     * it — the in-session analog of the deployment shape where training
     * WRITES a weights artifact and inference/eval READ it (exactly how
-    * [[graft.streaming.QualityStreams]] already consumes
-    * [[learnedWeights]]). Correctness is untouched: on a cold session
-    * every query still trains from scratch, and the DuckDB oracle
+    * `q_quality_score_artifact` consumes its saved weights).
+    * Correctness is untouched: on a cold session every query still
+    * trains from scratch, and the DuckDB oracle
     * replays the full recursion regardless. The testdata dirs this
     * engine reads are immutable fixtures; a corpus that mutates in
     * place under a live session is outside the contract (same
@@ -983,7 +983,7 @@ object QualityQueries {
        |FROM feat f, wf""".stripMargin) { (spark, dir) =>
     // memoized weights (trained by whichever triad member ran first);
     // inference is then ONE map-only scoring pass over the scan — no
-    // persist, no checkpoint, the same posture as the streaming scorer
+    // persist, no checkpoint
     val w = trajectory(spark, dir, "full", identity).last
     val wc = weightsLit(w.toSeq, "q_quality_logreg")
     verdicts(features(spark, dir), wc)

@@ -109,14 +109,17 @@ object RagQueries {
        |       || ${sqlStr(Prompt.conversationWithUserTurn("", UserInput))} AS prompt
        |FROM ctx""".stripMargin) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
     // the turn's path: top-3 ids in (dist, vec_id) order, their texts
     // gathered by id, and the fold on the driver. A missing or NULL text
-    // keeps its rank and adds nothing, as `string_agg` skips NULL
-    val ids = TopK.nearestRows(emb, "embedding", "vec_id", q, 3).map(_.getLong(0))
-    val text = Tables(spark, dir, "documents").filter(col("doc_id").isin(ids: _*))
-      .select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    Rag.promptFrame(spark, Prompt.assembleRanked(ids.map(text.getOrElse(_, null)).toSeq, "", UserInput))
+    // keeps its rank and adds nothing, as `string_agg` skips NULL.
+    // Without vector 0 the prompt is NULL: DuckDB's `||` with the empty
+    // `string_agg`
+    Rag.promptFrame(spark, queryVector(emb).map { q =>
+      val ids = TopK.nearestRows(emb, "embedding", "vec_id", q, 3).map(_.getLong(0))
+      val text = Tables(spark, dir, "documents").filter(col("doc_id").isin(ids: _*))
+        .select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      Prompt.assembleRanked(ids.map(text.getOrElse(_, null)).toSeq, "", UserInput)
+    }.orNull)
   }
 
   private val L = ChunkLen
@@ -330,9 +333,8 @@ object RagQueries {
         .over(Window.orderBy(col("score_q").desc, col("doc_id").asc)).cast("long"))
       .select("doc_id", "r_bm")
     val emb = Tables.embeddings(spark, dir)
-    val qv = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val cosr = TopK.nearest(emb.filter(col("vec_id") =!= 0),
-        "embedding", "vec_id", qv, 10)
+    val cosr = nearestTo(emb.filter(col("vec_id") =!= 0),
+        "embedding", "vec_id", queryVector(emb), 10)
       .select(col("vec_id").as("doc_id"), col("dist"))
       .withColumn("r_cos", row_number()
         .over(Window.orderBy(col("dist").asc, col("doc_id").asc)).cast("long"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -715,6 +715,22 @@ object RelationalQueries {
           .otherwise(floor(alphaM2 / col("s")).cast("long")).as(out))
   }
 
+  /** The HLL cell of each event: the `keep` columns, `key` = user@day,
+    * register `idx` (m = 256) and `rho`, the leading-1 position in a
+    * 2^22 window, each from its own square-mixed salted polyhash of the
+    * key (see [[hllSketch]] for why). */
+  private def hllCells(events: DataFrame, keep: Column*): DataFrame = {
+    val key = concat(col("user_id").cast("string"), lit("@"),
+      date_format(col("ts"), "yyyy-MM-dd"))
+    def sqMix(salt: String) = {
+      val x = polyHash(concat(lit(salt), key))
+      pmod(x * x, lit(1000000007L))
+    }
+    events.select(keep ++ Seq(key.as("key"), pmod(sqMix("i#"), lit(256L)).as("idx"),
+      when(pmod(sqMix("r#"), lit(4194304L)) === 0, lit(23))
+        .otherwise(lit(23) - length(bin(pmod(sqMix("r#"), lit(4194304L))))).as("rho")): _*)
+  }
+
   /** Deterministic HYPERLOGLOG (m=256 registers) per event_type over
     * distinct active user-days, with the published small-range (linear
     * counting) correction — estimate vs exact, error in basis points
@@ -769,20 +785,10 @@ object RelationalQueries {
        |SELECT est.event_type, est.est, ex.exact,
        |       CAST((abs(est.est - ex.exact) * 10000) // ex.exact AS BIGINT) AS err_bp
        |FROM est JOIN ex USING (event_type)""".stripMargin) { (spark, dir) =>
-    val k = Tables.events(spark, dir)
-      .select(col("event_type"),
-        concat(col("user_id").cast("string"), lit("@"),
-          date_format(col("ts"), "yyyy-MM-dd")).as("key"))
-    def sqMix(salt: String) =
-      pmod(polyHash(concat(lit(salt), col("key"))) * polyHash(concat(lit(salt), col("key"))),
-        lit(1000000007L))
-    val r = k.select(col("event_type"),
-      pmod(sqMix("i#"), lit(256L)).as("idx"),
-      when(pmod(sqMix("r#"), lit(4194304L)) === 0, lit(23))
-        .otherwise(lit(23) - length(bin(pmod(sqMix("r#"), lit(4194304L))))).as("rho"))
+    val r = hllCells(Tables.events(spark, dir), col("event_type"))
     val reg = r.groupBy("event_type", "idx").agg(max("rho").as("m"))
-    val est = hllEstimate(spark, k.select("event_type"), reg, "est")
-    val ex = k.groupBy("event_type").agg(countDistinct("key").as("exact"))
+    val est = hllEstimate(spark, r.select("event_type"), reg, "est")
+    val ex = r.groupBy("event_type").agg(countDistinct("key").as("exact"))
     est.join(ex, "event_type")
       .select(col("event_type"), col("est"), col("exact"),
         expr("abs(est - exact) * 10000 DIV exact").as("err_bp"))
@@ -967,10 +973,9 @@ object RelationalQueries {
        |SELECT d.event_type, CAST(d.n_regs AS BIGINT) AS n_regs,
        |       CAST(d.n_diff AS BIGINT) AS n_reg_diff, est.est AS est_whole
        |FROM diff d JOIN est USING (event_type)""".stripMargin) { (spark, dir) =>
-    val ev = Tables.events(spark, dir)
-    // same hash algebra as q_hll_sketch / SketchStreams, with event_id
-    // carried through for the parity split
-    val r = graft.streaming.SketchStreams.hllPrepWithId(ev)
+    // q_hll_sketch's cells, with event_id carried through for the
+    // parity split
+    val r = hllCells(Tables.events(spark, dir), col("event_type"), col("event_id"))
     // SHAPE (guide §2.3/§2.4): ONE corpus pass computes all
     // three register sets as conditional maxes of one (type, idx)
     // aggregate — the half-split registers are max(rho) over the even/

@@ -489,12 +489,12 @@ object TokenizerQueries {
   /** See [[graft.queries.QualityQueries.clearSessionMemo]]. */
   private[graft] def clearSessionMemo(): Unit = mergeCache.clear()
 
-  /** The two artifacts a batch session hands to the streaming
-    * tokenizer ([[graft.streaming.TokenizerStreams]]): the ordered
+  /** The tokenizer's two artifacts as driver-side values: the ordered
     * merge table and the token→id vocabulary of the encoded corpus
     * (same rank as the encode pass: lexicographic, 1-based). The vocab
-    * collects to the driver — tokenizer-sized by the `q_bpe_encode`
-    * broadcast rationale.
+    * collects to the driver only after
+    * [[graft.GraftLimits.requireBoundedVocabCount]] has passed on its
+    * distributed count.
     */
   private[graft] def tokenizerArtifacts(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Seq[(String, String)], Map[String, Long]) = {
@@ -640,9 +640,7 @@ object TokenizerQueries {
         expr("nc * 1048576 DIV n_tok").as("chars_per_tok_q"))
   }
 
-  /** Fixed context length (BPE tokens per packed block); shared with
-    * the streaming packer ([[graft.streaming.PackerStreams]]).
-    */
+  /** Fixed context length (BPE tokens per packed block). */
   private[graft] val CtxLen = 256
 
   /** BPE-ID SEQUENCE PACKING — train the merge table (memoized,
@@ -757,11 +755,9 @@ object TokenizerQueries {
     * law), so it trains distributed, persists as a sharded frame
     * ([[graft.pipelines.ModelArtifacts.saveVocabFrame]]), and re-enters
     * the encode as a broadcast JOIN — exactly `q_bpe_encode`'s tail.
-    * A first cut routed the vocab through the streaming projection's
-    * driver-literal map and the linear-vocab decade probe priced it at
-    * slope 4.98 (2696 s at 1000x) — the join form is the survival
-    * path, and the streaming scorer's scaladoc now states its
-    * bounded-vocab precondition. Oracle = `q_bpe_encode` SQL verbatim:
+    * A driver-literal vocabulary map was priced by the linear-vocab
+    * decade probe at slope 4.98 (2696 s at 1000x) — the join form is
+    * the survival path. Oracle = `q_bpe_encode` SQL verbatim:
     * merges must round-trip IN ORDER and vocab ids exactly.
     */
   val bpeEncodeArtifact: QueryDef = QueryDef.sql(

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.TextFunctions.{polyHashSql, shinglesSql}
-import graft.operators.{Dedup, TopK}
+import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import graft.functions.QuantizedL2Expr
@@ -30,15 +30,6 @@ import graft.functions.VectorFunctions._
   */
 object VectorQueries {
 
-  /** The query vector: row vec_id=0, collected once (a single tiny row —
-    * the only driver-side materialization; the scan side never collects).
-    */
-  private def queryVec(spark: org.apache.spark.sql.SparkSession, dir: String): Seq[Double] =
-    Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === 0)
-      .head()
-      .getSeq[Double](1)
-
   val topkCosine: QueryDef = QueryDef.sql(
     "q_topk_cosine",
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -47,8 +38,8 @@ object VectorQueries {
        |FROM e, q
        |ORDER BY dist, vec_id
        |LIMIT 10""".stripMargin) { (spark, dir) =>
-    val q = queryVec(spark, dir)
-    TopK.nearest(Tables.embeddings(spark, dir), "embedding", "vec_id", q, 10)
+    val emb = Tables.embeddings(spark, dir)
+    nearestTo(emb, "embedding", "vec_id", queryVector(emb), 10)
       .select(col("vec_id"), col("dist"))
   }
 
@@ -187,12 +178,10 @@ object VectorQueries {
       .filter(col("mx") > 0)
       .select(col("vec_id"),
         transform(v, x => qi(x).cast("double") * col("mx") / lit(127.0)).as("dv"))
-    val qv = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val qdv = dq.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    def top10(df: org.apache.spark.sql.DataFrame, c: String, q: Seq[Double]) =
-      TopK.nearest(df.filter(col("vec_id") =!= 0), c, "vec_id", q, 10)
+    def top10(df: org.apache.spark.sql.DataFrame, c: String) =
+      nearestTo(df.filter(col("vec_id") =!= 0), c, "vec_id", queryVector(df, c), 10)
         .select("vec_id")
-    top10(emb, "v", qv).join(top10(dq, "dv", qdv), "vec_id")
+    top10(emb, "v").join(top10(dq, "dv"), "vec_id")
       .agg(count(lit(1)).as("recall10"))
   }
 
@@ -270,18 +259,18 @@ object VectorQueries {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding").as("v"))
     val pv = emb.select(col("vec_id"),
       graft.functions.RandomProjExpr.column(col("v"), 16).as("pv"))
-    val qv = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val qpv = pv.filter(col("vec_id") === 0).head().getSeq[Double](1)
-    val coarse = TopK.nearest(pv.filter(col("vec_id") =!= 0), "pv", "vec_id", qpv, 200)
+    val qv = queryVector(emb, "v")
+    val coarse = nearestTo(pv.filter(col("vec_id") =!= 0), "pv", "vec_id",
+        queryVector(pv, "pv"), 200)
       // global window is DELIBERATE: it runs after the TakeOrdered
       // top-200 prune, so at most 200 rows pass through one partition
       .select(col("vec_id"),
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("dist").asc, col("vec_id").asc)).as("crn"))
-    def rerank(k: Int) = TopK.nearest(
+    def rerank(k: Int) = nearestTo(
         coarse.filter(col("crn") <= k).join(emb, "vec_id"), "v", "vec_id", qv, 10)
       .select("vec_id")
-    val exact = TopK.nearest(emb.filter(col("vec_id") =!= 0), "v", "vec_id", qv, 10)
+    val exact = nearestTo(emb.filter(col("vec_id") =!= 0), "v", "vec_id", qv, 10)
       .select("vec_id")
     rerank(50).join(exact, "vec_id").agg(count(lit(1)).as("recall10_c50"))
       .crossJoin(rerank(200).join(exact, "vec_id").agg(count(lit(1)).as("recall10_c200")))
@@ -321,13 +310,13 @@ object VectorQueries {
        |UNION ALL
        |SELECT CAST(64 AS BIGINT), CAST((SELECT count(*) FROM ex) AS BIGINT)""".stripMargin) {
     (spark, dir) =>
-      val q = queryVec(spark, dir)
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").as("v"))
+      val q = queryVector(emb, "v")
       def top10(m: Int) = {
         val vm = if (m == 64) col("v") else slice(col("v"), 1, m)
-        TopK.nearest(emb.filter(col("vec_id") =!= 0).withColumn("vm", vm),
-            "vm", "vec_id", q.take(m), 10)
+        nearestTo(emb.filter(col("vec_id") =!= 0).withColumn("vm", vm),
+            "vm", "vec_id", q.map(_.take(m)), 10)
           .select("vec_id")
       }
       val exact = top10(64)

@@ -88,20 +88,4 @@ class DedupSpec extends SparkSpec {
     val rows = sig.orderBy("id").collect()
     assert(rows(0).toSeq.tail == rows(1).toSeq.tail)
   }
-
-  test("streaming map-only band keys equal the batch aggregation's bands") {
-    // DedupStreams derives signatures with array_min(transform(...)) so
-    // the streaming query has a single stateful operator; this pins the
-    // "identical by construction" claim to the batch groupBy(min) path
-    val docs = Tables(spark, sf0001, "documents").select("doc_id", "text")
-    val streamSide = graft.streaming.DedupStreams.bandKeys(docs)
-    val sig = Dedup.minhashSignatures(
-      Dedup.shingleHashTable(docs, "doc_id", "text", 3), "doc_id")
-    val batchSide = (0 until 4).map { b =>
-      sig.select(lit(b).as("band"), col(s"m${2 * b}").as("x"),
-        col(s"m${2 * b + 1}").as("y"), col("doc_id"))
-    }.reduce(_ unionAll _)
-    assert(streamSide.exceptAll(batchSide).isEmpty
-      && batchSide.exceptAll(streamSide).isEmpty)
-  }
 }

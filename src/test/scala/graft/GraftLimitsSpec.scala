@@ -45,27 +45,22 @@ class GraftLimitsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("joined table"))
   }
 
-  test("streaming entry points route through the guard") {
-    // the guard must sit ON the stream constructors, not only exist:
-    // an oversized vocab must abort packedBlocks/encodedDocs before any
-    // plan is built (no Spark session needed — failure is driver-side)
-    val big = (0 to GraftLimits.MaxLiteralVocab).map(i => s"tok$i" -> i.toLong).toMap
-    intercept[IllegalArgumentException] {
-      graft.streaming.TokenizerStreams.encodedDocs(null, Seq.empty, big)
+  test("the weights literal routes through the guard") {
+    // the guard must sit ON the literal builder the scorers call, not
+    // only exist: an oversized weight vector aborts before any plan is
+    // built (no Spark session needed — failure is driver-side)
+    val e = intercept[IllegalArgumentException] {
+      graft.queries.QualityQueries.weightsLit(
+        Seq.fill(GraftLimits.MaxLiteralWeights + 1)(0L), "spec")
     }
-    intercept[IllegalArgumentException] {
-      graft.streaming.PackerStreams.packedBlocks(null, Seq.empty, big)
-    }
-    intercept[IllegalArgumentException] {
-      graft.streaming.QualityStreams.scoredDocs(null,
-        Seq.fill(GraftLimits.MaxLiteralWeights + 1)(0L))
-    }
+    assert(e.getMessage.contains("spec: literal weight vector"), "message must name the caller")
   }
 }
 
-/** Session-backed half of the bounded-literal contract: the
-  * stream-static dim guard reads Catalyst plan statistics, so it needs
-  * a session (but never runs a job — the check is plan-time).
+/** Session-backed half of the bounded-literal contract: the dim guard
+  * reads Catalyst plan statistics (a plan-time check, never a job) and
+  * the vocabulary guard runs on a distributed count, so both need a
+  * session.
   */
 class GraftLimitsSparkSpec extends SparkSpec {
   test("artifact-sized dim passes; estimated fact-scaled dim fails fast") {
@@ -86,12 +81,10 @@ class GraftLimitsSparkSpec extends SparkSpec {
   }
 
   test("tokenizerArtifacts refuses a corpus-derived vocabulary before collecting it") {
-    // round-13 watch item: the Θ(vocab) driver collect used to happen
-    // BEFORE any guard fired (the map-form guard sat at the stream
-    // constructor, after the allocation). A corpus whose post-merge
-    // vocabulary exceeds the literal cap must now fail at the
-    // distributed count, with the refusal message — not OOM the driver
-    // and not fail only downstream.
+    // a corpus whose post-merge vocabulary exceeds the literal cap must
+    // fail at the distributed count, BEFORE the Θ(vocab) driver
+    // collect, with the refusal message — not OOM the driver and not
+    // fail only downstream
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("vocab-guard").toString
     val n = GraftLimits.MaxLiteralVocab + 2048

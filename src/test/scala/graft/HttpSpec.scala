@@ -1,9 +1,11 @@
 package graft
 
 import java.net.InetSocketAddress
+import java.time.Duration
+import java.util.concurrent.{CountDownLatch, Executors}
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.functions._
-import graft.pipelines.{Completion, HttpEmbedder, IndexBuild, Rag}
+import graft.pipelines.{Completion, Http, HttpEmbedder, IndexBuild, Rag}
 
 /** Loopback integration test for the two live-egress paths the sandbox
   * can't otherwise exercise: `HttpEmbedder`'s per-partition socket loop
@@ -95,19 +97,84 @@ class HttpSpec extends SparkSpec {
       assert(prompt.contains("Context 1:"))
 
       // the same streamed-completion consumption Main.streamedCompletion runs
-      val client = java.net.http.HttpClient.newHttpClient()
-      val req = java.net.http.HttpRequest
-        .newBuilder(java.net.URI.create(s"http://$host:$port/completion"))
-        .header("Content-Type", "application/json")
-        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
-          Completion.requestJson(prompt, -1, stream = true))).build()
-      import scala.jdk.CollectionConverters._
-      val lines = client.send(req,
-        java.net.http.HttpResponse.BodyHandlers.ofLines()).body()
       val tokens = scala.collection.mutable.ArrayBuffer.empty[String]
-      val answer = Completion.accumulateStream(lines.iterator().asScala, tokens += _)
+      val answer = complete(s"http://$host:$port/completion", prompt, tokens += _)
       assert(answer == "Streamed answer.")
       assert(tokens.toSeq == Seq("Stream", "ed ", "answer."))
+    }
+  }
+
+  /** Main.streamedCompletion's consumption of a `/completion` stream. */
+  private def complete(url: String, prompt: String, onToken: String => Unit,
+                       headersTimeout: Duration = Http.HeadersTimeout): String = {
+    import scala.jdk.CollectionConverters._
+    val lines = Http.postJson(Http.client(), url,
+      Completion.requestJson(prompt, -1, stream = true),
+      java.net.http.HttpResponse.BodyHandlers.ofLines(), headersTimeout)
+    try Completion.accumulateStream(lines.iterator().asScala, onToken) finally lines.close()
+  }
+
+  /** A loopback server whose one `path` runs `respond`; each exchange
+    * runs on its own thread, and `release` is counted down before the
+    * server stops, so a handler that waits on it ends with the test. */
+  private def withStub(path: String)(respond: (HttpExchange, CountDownLatch) => Unit)(
+      test: String => Unit): Unit = {
+    val release = new CountDownLatch(1)
+    val pool = Executors.newCachedThreadPool()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.setExecutor(pool)
+    server.createContext(path, new HttpHandler {
+      def handle(ex: HttpExchange): Unit = respond(ex, release)
+    })
+    server.start()
+    try test(s"http://127.0.0.1:${server.getAddress.getPort}$path")
+    finally { release.countDown(); server.stop(0); pool.shutdown() }
+  }
+
+  test("a never-answering embed server fails the call in bounded time") {
+    withStub("/embedding") { (ex, release) =>
+      readBody(ex)
+      release.await() // accepts the request, never sends headers
+      ex.close()
+    } { url =>
+      val t0 = System.nanoTime()
+      val e = intercept[java.io.IOException] {
+        HttpEmbedder.request(Http.client(), url, "alpha", Duration.ofMillis(500))
+      }
+      val s = (System.nanoTime() - t0) / 1e9
+      assert(s < 10, s"the call waited $s s")
+      assert(e.getMessage.contains(url) && e.getMessage.contains("no response headers"),
+        e.getMessage)
+    }
+  }
+
+  test("a non-2xx embed reply fails with the URL and the status") {
+    withStub("/embedding") { (ex, _) =>
+      readBody(ex)
+      ex.sendResponseHeaders(503, -1)
+      ex.close()
+    } { url =>
+      val e = intercept[java.io.IOException](HttpEmbedder.request(Http.client(), url, "alpha"))
+      assert(e.getMessage.contains(url) && e.getMessage.contains("503"), e.getMessage)
+    }
+  }
+
+  test("a streamed completion that outlasts the headers timeout is not cut") {
+    withStub("/completion") { (ex, _) =>
+      readBody(ex)
+      ex.sendResponseHeaders(200, 0) // headers at once, then a slow body
+      val os = ex.getResponseBody
+      for (t <- Seq("Slow", "ly ", "streamed.")) {
+        Thread.sleep(400)
+        os.write(s"""data: {"content":"$t"}""".getBytes("UTF-8") ++ "\n".getBytes("UTF-8"))
+        os.flush()
+      }
+      ex.close()
+    } { url =>
+      val t0 = System.nanoTime()
+      val answer = complete(url, "q", _ => (), Duration.ofMillis(300))
+      assert((System.nanoTime() - t0) / 1e6 > 1000, "the body must take longer than the timeout")
+      assert(answer == "Slowly streamed.")
     }
   }
 }

@@ -11,38 +11,36 @@ import org.apache.spark.sql.functions._
 class ModelArtifactsSpec extends SparkSpec {
 
   test("quality weights: save -> load -> score equals q_quality_logreg exactly") {
+    import graft.queries.QualityQueries.{featuresOf, learnedWeights, verdicts, weightsLit}
     val path = Files.createTempDirectory("qweights").toString + "/w.parquet"
-    val w = graft.queries.QualityQueries.learnedWeights(
-      graft.queries.QualityQueries.featuresOf(
-        Tables(spark, sf0001, "documents")))
+    val docs = Tables(spark, sf0001, "documents").select("doc_id", "text")
+    val w = learnedWeights(featuresOf(docs))
     graft.pipelines.ModelArtifacts.saveWeights(spark, w.toSeq, path)
     val loaded = graft.pipelines.ModelArtifacts.loadWeights(spark, path)
     assert(loaded.sameElements(w), "weights must round-trip bit-for-bit")
-    // a "different session" consumer: the streaming scorer fed the
-    // LOADED artifact must equal the registry inference query
-    val got = graft.streaming.QualityStreams.scoredDocs(
-      Tables(spark, sf0001, "documents").select("doc_id", "text"), loaded.toSeq)
+    // a "different session" consumer: the batch scorer fed the LOADED
+    // artifact must equal the registry inference query
+    val got = verdicts(featuresOf(docs), weightsLit(loaded.toSeq, "spec"))
     val want = SparkEntry.queries("q_quality_logreg")(spark, sf0001)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
   test("tokenizer artifacts: save -> load -> encode equals q_bpe_encode exactly") {
+    import spark.implicits._
     val base = Files.createTempDirectory("bpeart").toString
     val (merges, vocab) =
       graft.queries.TokenizerQueries.tokenizerArtifacts(spark, sf0001)
     graft.pipelines.ModelArtifacts.saveMerges(spark, merges, s"$base/merges.parquet")
-    graft.pipelines.ModelArtifacts.saveVocab(spark, vocab, s"$base/vocab.parquet")
+    graft.pipelines.ModelArtifacts.saveVocabFrame(spark,
+      vocab.toSeq.toDF("tok", "id"), s"$base/vocab.parquet")
     val m2 = graft.pipelines.ModelArtifacts.loadMerges(spark, s"$base/merges.parquet")
-    val v2 = graft.pipelines.ModelArtifacts.loadVocab(spark, s"$base/vocab.parquet")
+    val v2 = graft.pipelines.ModelArtifacts.loadVocabFrame(spark, s"$base/vocab.parquet")
+      .as[(String, Long)].collect().toMap
     assert(m2 == merges, "merge table must round-trip in learned order")
     assert(v2 == vocab, "vocab must round-trip")
-    // n_unk is streaming-only observability (round 13); the batch
-    // columns must still match q_bpe_encode exactly, and the training
-    // corpus carries no OOV so n_unk is identically zero
-    val enc = graft.streaming.TokenizerStreams.encodedDocs(
-      Tables(spark, sf0001, "documents").select("doc_id", "text"), m2, v2)
-    assert(enc.filter(org.apache.spark.sql.functions.col("n_unk") =!= 0).count() == 0)
-    val got = enc.select("doc_id", "n_tok", "id_sum", "id_posw", "chars_per_tok_q")
+    // the batch consumer: the encode from a saved merge table and a
+    // saved vocabulary frame equals the in-session encode
+    val got = SparkEntry.queries("q_bpe_encode_artifact")(spark, sf0001)
     val want = SparkEntry.queries("q_bpe_encode")(spark, sf0001)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
