@@ -2,19 +2,17 @@ package graft
 
 /** Runtime enforcement of the BOUNDED-LITERAL contract.
   *
-  * Two batch paths put a driver-side value in every task closure or on
-  * the driver: `tokenizerArtifacts` collects the BPE vocabulary to the
-  * driver as a map, and the quality scorer folds its weight vector into
-  * the plan as a literal (`QualityQueries.weightsLit`). That design is
-  * right ONLY while the value is config-bounded: a trained tokenizer
-  * vocab is fixed by its merge budget, a weight vector by its feature
-  * grid. A decade probe PRICED the failure mode: feeding a
-  * corpus-derived (Heaps-growing) vocabulary through the literal-map
-  * encode measured decade slope 4.98 at the 1000x linear-vocab
-  * adversary, where the broadcast-join form (`q_bpe_encode_artifact`,
-  * vocab-as-sharded-table) stays at 0.50. These guards fail fast
-  * before the collect or the plan, instead of melting down at task
-  * dispatch. [[requireGrowingKeyDomain]] guards a second precondition:
+  * A driver-side value that rides every task closure is right ONLY
+  * while it is config-bounded: a trained tokenizer vocab is fixed by its
+  * merge budget, a weight vector by its feature grid (the quality
+  * scorer folds its weights into the plan as a literal,
+  * `QualityQueries.weightsLit`). A decade probe PRICED the failure
+  * mode: feeding a corpus-derived (Heaps-growing) vocabulary through
+  * the literal-map encode measured decade slope 4.98 at the 1000x
+  * linear-vocab adversary, where the broadcast-join form
+  * (`q_bpe_encode_artifact`, vocab-as-sharded-table) stays at 0.50.
+  * These guards fail fast before the plan is built, instead of melting
+  * down at task dispatch. [[requireGrowingKeyDomain]] guards a second precondition:
   * a blocking key whose domain still grows with the corpus.
   */
 object GraftLimits {
@@ -31,24 +29,9 @@ object GraftLimits {
     */
   val MaxLiteralWeights: Int = 4096
 
-  /** Assert a vocabulary of `n` entries is tokenizer-bounded, on a
-    * DISTRIBUTED `count()` BEFORE any driver-side materialization, so
-    * the guard gates the Θ(vocab) collect itself.
-    */
-  def requireBoundedVocabCount(n: Long, what: String): Unit =
-    require(n <= MaxLiteralVocab,
-      s"$what: vocabulary has $n entries (cap $MaxLiteralVocab) — refusing to collect " +
-        "it to the driver. A corpus-derived (Heaps-growing) vocabulary must NOT ship " +
-        "as a task-closure literal — a decade probe measured slope 4.98 for " +
-        "the literal-map encode vs 0.50 for the vocab-as-table broadcast join. Persist " +
-        "the vocabulary with ModelArtifacts.saveVocabFrame and join it instead " +
-        "(q_bpe_encode_artifact).")
-
-  /** Map form of [[requireBoundedVocabCount]], for a vocabulary that is
-    * already on the driver (a loaded or hand-built map) before it rides
-    * a task closure. It can only fire after the map exists, so a
-    * distributed vocabulary takes the count form instead. Returns the
-    * vocab so call sites stay expressions.
+  /** Assert a vocabulary that is already on the driver (a loaded or
+    * hand-built map) is tokenizer-bounded before it rides a task
+    * closure. Returns the vocab so call sites stay expressions.
     */
   def requireBoundedVocab(vocab: Map[String, Long], what: String): Map[String, Long] = {
     require(vocab.size <= MaxLiteralVocab,

@@ -466,7 +466,7 @@ object Dedup {
     // unionAll, which would re-scan + re-pack per band per join side)
     // The bucket-aggregate rewrite that won for the minhash/
     // simhash families was MEASURED SLOWER here (ABAB subset bench:
-    // q_embed_neardup 0.44 → 0.66, q_pagerank 1.75 → 1.93) — the sign
+    // q_embed_neardup 0.44 → 0.66 s) — the sign
     // pack is one cheap codegen kernel over a narrow frame, so there is
     // no expensive chain to deduplicate, and the collect+HOF emission
     // trades a codegen join for an interpreted ObjectHashAggregate.

@@ -460,13 +460,18 @@ object MixingQueries {
     }
     var sel = Vector.empty[(Long, Array[Long])]
     for (_ <- 1 to MmrK) {
-      val best = cand.filter(c => !sel.exists(_._1 == c._1)).map { c =>
-        val maxSim = if (sel.isEmpty) 0L else sel.map(s => dot(c._2, s._2)).max
-        (2 * c._3 - maxSim, c._1, c._2)
-      }.minBy(t => (-t._1, t._2))
-      sel = sel :+ ((best._2, best._3))
+      val left = cand.filter(c => !sel.exists(_._1 == c._1))
+      if (left.nonEmpty) {
+        val best = left.map { c =>
+          val maxSim = if (sel.isEmpty) 0L else sel.map(s => dot(c._2, s._2)).max
+          (2 * c._3 - maxSim, c._1, c._2)
+        }.minBy(t => (-t._1, t._2))
+        sel = sel :+ ((best._2, best._3))
+      }
     }
-    sel.zipWithIndex.map { case ((id, _), i) => ((i + 1).toLong, id) }
+    // a step past the end of the shortlist picks NULL, as the oracle's
+    // empty subquery does
+    (1 to MmrK).map(i => (i.toLong, sel.lift(i - 1).map(_._1)))
       .toDF("step", "picked")
   }
 
@@ -586,16 +591,18 @@ object MixingQueries {
       .select(col("vec_id"), transform(col("embedding"),
         x => floor(x.cast("double") * lit(Q20d)).cast("long")).as("e"))
       .localCheckpoint()
-    val seed = emb.orderBy("vec_id").limit(1).collect()(0)
-    var centers = Vector((seed.getLong(0), seed.getSeq[Long](1).toArray))
-    var out = Vector((1L, seed.getLong(0), 0L))
+    var centers = emb.orderBy("vec_id").limit(1).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toVector
+    var out = Vector((1L, centers.headOption.map(_._1), Option(0L)))
     def dist2To(c: Array[Long]) =
       aggregate(zip_with(col("e"), typedLit(c.toSeq),
         (x, y) => (x - y) * (x - y)), lit(0L), (a, b) => a + b)
     var frame = emb.withColumn("mind", lit(Long.MaxValue))
     var prevGen: Option[DataFrame] = None
     var sinceCkpt = 0
-    for (step <- 2 to k) {
+    // a round that finds no point left ends the selection; the oracle
+    // picks NULL at every later step
+    for (step <- 2 to k if centers.size == step - 1) {
       val newest = centers.last._2
       if (incremental) {
         val folded = frame.withColumn("mind", least(col("mind"), dist2To(newest)))
@@ -621,7 +628,7 @@ object MixingQueries {
       val far = frame.filter(!col("vec_id").isInCollection(centers.map(_._1)))
         .select(col("vec_id"), col("e"), col("mind"))
         .orderBy(col("mind").desc, col("vec_id")).limit(1)
-        .collect()(0)
+        .collect()
       // the argmax above MATERIALIZED this generation into cache — only
       // now is the previous one safe to drop (unpersisting before the
       // action would force every round to recompute the whole fold
@@ -631,11 +638,14 @@ object MixingQueries {
         prevGen.foreach(_.unpersist(false))
         prevGen = Some(frame)
       }
-      centers = centers :+ ((far.getLong(0), far.getSeq[Long](1).toArray))
-      out = out :+ ((step.toLong, far.getLong(0), far.getLong(2)))
+      for (r <- far) {
+        centers = centers :+ ((r.getLong(0), r.getSeq[Long](1).toArray))
+        out = out :+ ((step.toLong, Option(r.getLong(0)), Option(r.getLong(2))))
+      }
     }
     prevGen.foreach(_.unpersist(false))
-    out.toDF("step", "picked", "radius_q")
+    (out ++ (out.size + 1 to k).map(s => (s.toLong, None, None)))
+      .toDF("step", "picked", "radius_q")
   }
 
   /** K-CENTER CORESET — greedy farthest-first traversal: seed with the

@@ -5,6 +5,7 @@ import graft.{QueryDef, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions.{cosDistSql, cosSimSql, cosineDistance, cosineSimilarity}
 import graft.operators.Dedup
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 
@@ -690,12 +691,17 @@ object NearDupQueries {
     * INTEGER-EXACT: pr₀ = 2^20, each per-edge contribution is
     * (pr·85) DIV (100·deg) (the 0.85 damping as integral arithmetic),
     * plus the floor(0.15·2^20) teleport — so three unrolled iterations
-    * agree bit-for-bit across engines with no quantization step. SCALE:
-    * the classic Pregel shape — each iteration is one hash join of the
-    * edge list with the rank vector and one keyed sum (graph-sized
-    * shuffles, never corpus²); the edge list is `localCheckpoint`ed so
-    * three iterations don't re-run candidate generation (executor-local
-    * lineage truncation — the q_ivf_kmeans trade, re-derivable on loss).
+    * agree bit-for-bit across engines with no quantization step.
+    *
+    * SCALE: the Pregel shape (Malewicz et al., SIGMOD 2010) as one RDD
+    * lineage run by one job. Both edge directions are grouped by `src`
+    * into an adjacency list under one hash partitioner, and the ranks
+    * stay on that partitioner, so each round's adjacency ⋈ ranks join
+    * is narrow and its only shuffle is the map-side-combined sum of
+    * contributions keyed by `dst` (graph-sized, never corpus²). The
+    * adjacency's shuffle output is written once and read by every
+    * round. One `takeOrdered` over ranks ⋈ degree ends the job; the 20
+    * rows come back as a local frame.
     */
   val pagerank: QueryDef = {
     def iterSql(prev: String, next: String): String =
@@ -723,32 +729,32 @@ object NearDupQueries {
          |       r.pr AS pr_q20
          |FROM r JOIN deg ON deg.src = r.id
          |WHERE r.rank <= 20""".stripMargin) { (spark, dir) =>
+      import spark.implicits._
       val emb = Tables.embeddings(spark, dir)
       val prs = scaledPairs(emb, emb.count())
         .filter(col("sim") >= 0.4)
         .select(col("ida"), col("idb"))
-      // three iterations re-read the edges: truncate the candidate-gen
-      // lineage once instead of re-running the banded join per iteration
-      val ed = prs.select(col("ida").as("src"), col("idb").as("dst"))
-        .unionAll(prs.select(col("idb").as("src"), col("ida").as("dst")))
-        .localCheckpoint()
-      val deg = ed.groupBy("src").agg(count(lit(1)).as("d"))
-      var pr = deg.select(col("src").as("id"), lit(1048576L).as("pr"))
+      val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      val adj = prs.queryExecution.toRdd
+        .flatMap { r => val a = r.getLong(0); val b = r.getLong(1); Iterator(a -> b, b -> a) }
+        .groupByKey(part)
+        .mapValues(_.toArray)
+      var pr = adj.mapValues(_ => 1048576L)
       for (_ <- 1 to 3) {
-        pr = ed.join(pr, col("id") === col("src")).drop("id")
-          .join(deg.select(col("src").as("dsrc"), col("d")), col("dsrc") === col("src"))
-          .groupBy(col("dst"))
-          .agg((lit(157286L) + sum(expr("(pr * 85) DIV (100 * d)"))).as("pr"))
-          .select(col("dst").as("id"), col("pr"))
+        pr = adj.join(pr)
+          .flatMap { case (_, (dsts, p)) =>
+            // non-negative operands: `/` truncates exactly as DIV does
+            val c = p * 85 / (100L * dsts.length)
+            dsts.iterator.map(_ -> c)
+          }
+          .reduceByKey(part, _ + _)
+          .mapValues(157286L + _)
       }
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("pr").desc, col("id"))
-      // rank window runs on the graph's node set (pair-bounded), not the corpus
-      pr.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 20)
-        .join(deg, col("src") === col("id"))
-        .select(col("rank").cast("long").as("rank"), col("id").as("vec_id"),
-          col("d").as("degree"), col("pr").as("pr_q20"))
+      val top = pr.join(adj.mapValues(_.length.toLong))
+        .takeOrdered(20)(Ordering.by { case (id, (p, _)) => (-p, id) })
+      top.toSeq.zipWithIndex
+        .map { case ((id, (p, d)), i) => (i + 1L, id, d, p) }
+        .toDF("rank", "vec_id", "degree", "pr_q20")
     }
   }
 

@@ -815,7 +815,11 @@ object QualityQueries {
     withDot(feats, wc).select(col("doc_id"), expr("dot DIV 10000").as("logit_q"),
       (expr("dot DIV 10000") >= 0).as("keep"))
 
-  /** One batch-gradient step: w → w′. */
+  /** One batch-gradient step: w → w′. Over zero training rows every
+    * gradient sum is NULL, and so is every weight of the oracle's
+    * recursion: w′ is then the empty vector, whose literal makes each
+    * dot product NULL (`zip_with` pads the shorter array with NULLs).
+    */
   private def gradientStep(feats: DataFrame, w: Array[Long]): Array[Long] = {
     val scored = withDot(feats, weightsLit(w.toSeq, "gradientStep"))
       .withColumn("err",
@@ -826,7 +830,8 @@ object QualityQueries {
       count(lit(1)).cast("long").as("n")
     val row = scored.agg(aggs.head, aggs.tail: _*).collect()(0)
     val n = row.getLong(F)
-    Array.tabulate(F)(j => w(j) + row.getLong(j) / (n * 2000L))
+    if (n == 0) Array.empty
+    else Array.tabulate(F)(j => w(j) + row.getLong(j) / (n * 2000L))
   }
 
   private def train(feats: DataFrame): Seq[Array[Long]] = {
@@ -957,7 +962,7 @@ object QualityQueries {
     import spark.implicits._
     val traj = trajectory(spark, dir, "full", identity)
     traj.zipWithIndex.flatMap { case (w, i) =>
-      w.zipWithIndex.map { case (wq, j) => ((i + 1).toLong, j.toLong, wq) }
+      (0 until F).map(j => ((i + 1).toLong, j.toLong, w.lift(j)))
     }.toDF("step", "j", "w_q")
   }
 

@@ -1180,19 +1180,23 @@ object RelationalQueries {
     val per = Tables(spark, dir, "documents")
       .select(size(shingleHashesFast(toks, 3)).cast("long").as("np"),
         size(winnowFast(toks, 3, 4)).cast("long").as("nf"))
-      .agg(count(lit(1)).as("n_docs"), sum("np").as("n_postings"), sum("nf").as("n_fp"))
+      .agg(count(lit(1)).as("n_docs"), coalesce(sum("np"), lit(0L)).as("n_postings"),
+        sum("nf").as("n_fp"))
     val v = Tables.embeddings(spark, dir)
       .agg(count(lit(1)).as("n_vecs"), max(size(col("embedding"))).cast("long").as("dim"))
     val counts = per.crossJoin(broadcast(v)).head()
-    val (nd, np, nf, nv, dim) = (counts.getLong(0), counts.getLong(1),
-      counts.getLong(2), counts.getLong(3), counts.getLong(4))
+    // over no documents or vectors the oracle's sum and max are NULL,
+    // and so is every size derived from them
+    def opt(i: Int): Option[Long] = if (counts.isNullAt(i)) None else Some(counts.getLong(i))
+    val (nd, np, nf, nv, dim) = (counts.getLong(0), counts.getLong(1), opt(2),
+      counts.getLong(3), opt(4))
     Seq(
-      ("minhash_sigs", nd, nd * 64),
-      ("simhash", nd, nd * 8),
-      ("winnow_index", nf, nf * 8),
-      ("shingle_postings", np, np * 16),
-      ("int8_vectors", nv, nv * (dim + 8)),
-      ("pq_codes", nv, nv * 4)
+      ("minhash_sigs", Some(nd), Some(nd * 64)),
+      ("simhash", Some(nd), Some(nd * 8)),
+      ("winnow_index", nf, nf.map(_ * 8)),
+      ("shingle_postings", Some(np), Some(np * 16)),
+      ("int8_vectors", Some(nv), dim.map(d => nv * (d + 8))),
+      ("pq_codes", Some(nv), Some(nv * 4))
     ).toDF("tier", "n_units", "bytes")
   }
 

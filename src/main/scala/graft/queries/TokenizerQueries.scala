@@ -489,38 +489,6 @@ object TokenizerQueries {
   /** See [[graft.queries.QualityQueries.clearSessionMemo]]. */
   private[graft] def clearSessionMemo(): Unit = mergeCache.clear()
 
-  /** The tokenizer's two artifacts as driver-side values: the ordered
-    * merge table and the token→id vocabulary of the encoded corpus
-    * (same rank as the encode pass: lexicographic, 1-based). The vocab
-    * collects to the driver only after
-    * [[graft.GraftLimits.requireBoundedVocabCount]] has passed on its
-    * distributed count.
-    */
-  private[graft] def tokenizerArtifacts(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Seq[(String, String)], Map[String, Long]) = {
-    import spark.implicits._
-    val merges = learnedMergeRows(spark, dir, BpeIters)
-      .map { case (_, l, r, _, _) => (l, r) }
-    val distinctToks = Tables(spark, dir, "documents")
-      .select(merges.foldLeft(tokens(col("text"))) { case (c, (l, r)) =>
-        graft.functions.HashExpressions.bpeMergeFast(c, l, r)
-      }.as("toks"))
-      .select(explode(col("toks")).as("tok")).distinct()
-      // Θ(vocab) DISTRIBUTED materialization (executor blocks), so the
-      // boundedness gate below runs on a cheap count BEFORE any driver
-      // allocation — a corpus-derived (Heaps-growing) vocabulary fails
-      // fast here, not after a Θ(vocab) collect has already landed;
-      // it also keeps the BPE encode fold from
-      // running twice (once for the count, once for the collect)
-      .localCheckpoint(true)
-    graft.GraftLimits.requireBoundedVocabCount(distinctToks.count(),
-      "tokenizerArtifacts")
-    val vocab = distinctToks
-      .orderBy("tok").as[String].collect().zipWithIndex
-      .map { case (t, i) => t -> (i + 1L) }.toMap
-    (merges, vocab)
-  }
-
   val bpeLearn: QueryDef = {
     val iters = BpeIters
     val rounds = bpeRoundCtes(iters)

@@ -120,7 +120,7 @@ object BroadcastAudit {
     "document-frequency rows for the literal BM25 query-term list — ≤ |terms| rows"
   private val VocabCap =
     "trained tokenizer vocab: ≤ 256 + merges rows by construction (merge count fixed " +
-      "by config; runtime-guarded before the collect by GraftLimits.requireBoundedVocabCount)"
+      "by config)"
   private val LenHistogram =
     "token-length histogram: cardinality ≤ max document token count (truncation-capped), " +
       "corpus-independent — the q_token_cdf rank-algebra spine"

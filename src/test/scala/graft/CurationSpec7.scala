@@ -332,6 +332,37 @@ class CurationSpec7 extends SparkSpec {
     for (r <- rows) assert(r.getLong(2) == deg(r.getLong(1)), "degree column")
   }
 
+  /** The three rounds run inside one job over a src-partitioned
+    * adjacency; the rest is candidate generation and the caller's
+    * evaluation of the 20-row answer. Three DataFrame rounds ran 17.
+    */
+  test("pagerank: a warm evaluation at sf0.001 runs at most 8 jobs") {
+    def evaluate(): Unit = SparkEntry.evaluate(SparkEntry.queries("q_pagerank")(spark, sf0001))
+    evaluate()
+    val counter = new JobCounter("pagerank-shape")
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      drainListenerBus()
+      spark.sparkContext.setJobGroup("pagerank-shape", "q_pagerank")
+      try evaluate()
+      finally spark.sparkContext.clearJobGroup()
+      drainListenerBus()
+      assert(counter.jobs <= 8, s"${counter.jobs} jobs")
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("pagerank: empty and one-row embeddings give no rows, four BIGINT columns") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    for (n <- Seq(0, 1)) {
+      val dir = java.nio.file.Files.createTempDirectory(s"pagerank-$n").toString
+      emb.limit(n).write.parquet(s"$dir/embeddings.parquet")
+      val out = graft.queries.NearDupQueries.pagerank.fn(spark, dir)
+      assert(out.schema.map(f => f.name -> f.dataType.sql) ==
+        Seq("rank", "vec_id", "degree", "pr_q20").map(_ -> "BIGINT"))
+      assert(out.collect().isEmpty, s"$n embeddings")
+    }
+  }
+
   test("weighted_sample: keys recomputed exactly; selection is the global min-key set") {
     val rows = graft.queries.MixingQueries.weightedSample.fn(spark, sf0001)
       .orderBy("rank").collect()

@@ -25,16 +25,6 @@ class GraftLimitsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("saveVocabFrame"), "message must name the cure")
   }
 
-  test("count form gates BEFORE the driver materialization") {
-    GraftLimits.requireBoundedVocabCount(GraftLimits.MaxLiteralVocab.toLong, "spec")
-    val e = intercept[IllegalArgumentException] {
-      GraftLimits.requireBoundedVocabCount(GraftLimits.MaxLiteralVocab + 1L, "spec")
-    }
-    assert(e.getMessage.contains("refusing to collect"),
-      "message must state the collect is being refused, not just the literal")
-    assert(e.getMessage.contains("4.98") && e.getMessage.contains("saveVocabFrame"))
-  }
-
   test("feature-grid weight vector passes; corpus-sized frame fails") {
     val w = Seq(1L, 2L, 3L)
     assert(GraftLimits.requireBoundedWeights(w, "spec") eq w)
@@ -58,9 +48,8 @@ class GraftLimitsSpec extends AnyFunSuite {
 }
 
 /** Session-backed half of the bounded-literal contract: the dim guard
-  * reads Catalyst plan statistics (a plan-time check, never a job) and
-  * the vocabulary guard runs on a distributed count, so both need a
-  * session.
+  * reads Catalyst plan statistics (a plan-time check, never a job), so
+  * it needs a session.
   */
 class GraftLimitsSparkSpec extends SparkSpec {
   test("artifact-sized dim passes; estimated fact-scaled dim fails fast") {
@@ -78,25 +67,5 @@ class GraftLimitsSparkSpec extends SparkSpec {
       GraftLimits.requireBoundedDim(huge, "spec")
     }
     assert(e.getMessage.contains("pre-bucketed store"))
-  }
-
-  test("tokenizerArtifacts refuses a corpus-derived vocabulary before collecting it") {
-    // a corpus whose post-merge vocabulary exceeds the literal cap must
-    // fail at the distributed count, BEFORE the Θ(vocab) driver
-    // collect, with the refusal message — not OOM the driver and not
-    // fail only downstream
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("vocab-guard").toString
-    val n = GraftLimits.MaxLiteralVocab + 2048
-    spark.range(n)
-      .select((col("id") / 100).cast("long").as("doc_id"),
-        concat(lit("tok"), col("id")).as("tok"))
-      .groupBy("doc_id").agg(concat_ws(" ", collect_list(col("tok"))).as("text"))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val e = intercept[IllegalArgumentException] {
-      graft.queries.TokenizerQueries.tokenizerArtifacts(spark, dir)
-    }
-    assert(e.getMessage.contains("refusing to collect"),
-      s"guard must fire at the count, got: ${e.getMessage}")
   }
 }

@@ -25,26 +25,6 @@ class ModelArtifactsSpec extends SparkSpec {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
-  test("tokenizer artifacts: save -> load -> encode equals q_bpe_encode exactly") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("bpeart").toString
-    val (merges, vocab) =
-      graft.queries.TokenizerQueries.tokenizerArtifacts(spark, sf0001)
-    graft.pipelines.ModelArtifacts.saveMerges(spark, merges, s"$base/merges.parquet")
-    graft.pipelines.ModelArtifacts.saveVocabFrame(spark,
-      vocab.toSeq.toDF("tok", "id"), s"$base/vocab.parquet")
-    val m2 = graft.pipelines.ModelArtifacts.loadMerges(spark, s"$base/merges.parquet")
-    val v2 = graft.pipelines.ModelArtifacts.loadVocabFrame(spark, s"$base/vocab.parquet")
-      .as[(String, Long)].collect().toMap
-    assert(m2 == merges, "merge table must round-trip in learned order")
-    assert(v2 == vocab, "vocab must round-trip")
-    // the batch consumer: the encode from a saved merge table and a
-    // saved vocabulary frame equals the in-session encode
-    val got = SparkEntry.queries("q_bpe_encode_artifact")(spark, sf0001)
-    val want = SparkEntry.queries("q_bpe_encode")(spark, sf0001)
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-  }
-
   test("ivf codebook: save -> load -> probe equals q_ivf_kmeans exactly") {
     // the build-once serve-many split for the coarse quantizer: the
     // probe session builds its index and answers from the LOADED
